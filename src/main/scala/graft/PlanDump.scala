@@ -1,13 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (r18 optimization round): dump `.explain("formatted")` for a
   * set of declared queries into per-query text files — the before/after
   * plan evidence `plans/r18/` commits alongside OPTIMIZATION_r18.md.
-  * Session shape mirrors Bench's (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions = cpus) so the captured static plans are the ones
-  * the bench actually runs.
+  * Same [[Session]] shape as Bench, so the captured static plans are the
+  * ones the bench actually runs.
   *
   * Usage: graft.PlanDump <sfDir> <outDir> <q1,q2,...> [suffix]
   *   writes <outDir>/<query><suffix>.txt  (suffix e.g. "_before")
@@ -21,14 +18,7 @@ object PlanDump {
     }
     val Array(sfDir, outDir, csv) = args.take(3)
     val suffix = if (args.length > 3) args(3) else ""
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val qs = SparkEntry.queries
     csv.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>

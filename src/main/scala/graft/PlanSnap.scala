@@ -203,13 +203,7 @@ object PlanSnap {
     * PLANSNAP_SF01.json. With args: `sfDir out [ALL|BENCH30|q1,q2,…]`
     * for ad-hoc runs. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(4)
     val all = SparkEntry.queries.keys.toSeq
     if (args.isEmpty) {
       generate(spark, "/root/testdata/sf0.001", "PLANSNAP.json", all)

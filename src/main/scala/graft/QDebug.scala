@@ -1,17 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev-only: run one named query (args: name [sfDir]) and show rows + plan. */
 object QDebug {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     val df =
       if (name == "entry") SparkEntry.entry(spark)
       else SparkEntry.queries(name)(spark, sfDir)

@@ -94,13 +94,7 @@ object ScaleProbe {
     "graph_pagerank", "graph_ppr", "embed_pca_power", "sim_mmr")
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     val sf1ish = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1ish")
     buildStack(spark, "/root/testdata/sf0.1", sf1ish)

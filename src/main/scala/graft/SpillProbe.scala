@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-side SPILL probe (not part of the driver contract, not CI): measured
   * backing for the 100 TB posture claims. ScaleProbe shows TIME scaling per
@@ -70,16 +69,9 @@ object SpillProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus
     val memFraction = sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.05")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.memory.fraction", memFraction)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus, "spark.memory.fraction" -> memFraction)
 
     val sf1ish = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1ish")
     ScaleProbe.buildStack(spark, "/root/testdata/sf0.1", sf1ish)

@@ -677,7 +677,10 @@ object Graph {
         .distinct()
       val sym = edges0
         .union(edges0.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(false) // edge base computed once, like pageRank's sym
+        // edge base computed once, like pageRank's sym. Eager: with the
+        // lazy form one LPA join's broadcast choice varied between runs
+        // of a shared session (PlanSnapSpec's graph_label_prop entry).
+        .localCheckpoint()
       labelPropagate(sym, 3)
         .withColumn("comm_size", count(lit(1)).over(
           Window.partitionBy("lbl")))

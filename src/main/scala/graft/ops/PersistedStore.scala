@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.hadoop.fs.FileUtil
+
 /** Shared commit protocol for the engine's persisted derived stores —
   * the near-dup candidate edge list (TextSim.ensureEdgeStore), the
   * snapshot dedup index (TextSim.ensureSnapshotStore) and the CDC
@@ -98,10 +100,10 @@ private[graft] object PersistedStore {
         val tmp = new java.io.File(dirF.getParentFile,
           s"${dirF.getName}.build.${java.util.UUID.randomUUID()}")
         try build(tmp.getAbsolutePath)
-        catch { case t: Throwable => deleteRecursively(tmp); throw t }
+        catch { case t: Throwable => FileUtil.fullyDelete(tmp); throw t }
         new java.io.File(tmp, "_DONE").createNewFile()
         if (tmp.renameTo(dirF)) true
-        else { deleteRecursively(tmp); false }
+        else { FileUtil.fullyDelete(tmp); false }
       }
     }
     if (!published) {
@@ -120,10 +122,5 @@ private[graft] object PersistedStore {
       }
     }
     storeDir
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
   }
 }

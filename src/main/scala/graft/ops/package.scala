@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{round, sum}
 import org.apache.spark.sql.types.DecimalType
@@ -70,10 +71,7 @@ package object ops {
     // verify/bench runs don't accumulate table copies in /tmp
     // (ADVICE r2 — there was no cleanup at all).
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-      }
-      rm(p.toFile)
+      FileUtil.fullyDelete(p.toFile): Unit
     }))
     p.toString
   }

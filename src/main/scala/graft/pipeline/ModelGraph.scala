@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -252,7 +253,7 @@ object ModelGraph {
     df.write.mode("overwrite").parquet(tmp.getAbsolutePath)
     val commit = new java.io.File(dir, s"commit_$n")
     if (!tmp.renameTo(commit)) {
-      deleteRecursively(tmp)
+      FileUtil.fullyDelete(tmp)
       throw new IllegalStateException(
         s"model $name: commit_$n already exists — the state store is " +
           "single-writer per model (concurrent runs are a config error)")
@@ -266,7 +267,7 @@ object ModelGraph {
     // prune superseded commits (best-effort; the pointer already moved)
     Option(dir.listFiles()).getOrElse(Array.empty).foreach { f =>
       val m = "commit_(\\d+)$".r.findFirstMatchIn(f.getName)
-      if (m.exists(_.group(1).toInt < n)) deleteRecursively(f)
+      if (m.exists(_.group(1).toInt < n)) FileUtil.fullyDelete(f)
     }
     spark.read.parquet(commit.getAbsolutePath)
   }
@@ -274,13 +275,8 @@ object ModelGraph {
   /** dbt's `--full-refresh`: drop a stateful model's durable state (and
     * its session view) so the next run first-loads. */
   def reset(spark: SparkSession, name: String): Unit = {
-    deleteRecursively(stateDir(spark, name))
+    FileUtil.fullyDelete(stateDir(spark, name))
     spark.catalog.dropTempView(name): Unit
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
   }
 
   /** Resume guard: the persisted state must still match the model

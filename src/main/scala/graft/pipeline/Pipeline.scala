@@ -82,24 +82,29 @@ object Pipeline {
     val ran = Seq.newBuilder[java.time.LocalDate]
     dates.foreach { day =>
       if (!isDone(day)) {
-        var attempt = 0
-        var last: Throwable = null
-        var ok = false
-        while (!ok && attempt <= retries) {
-          try { run(day); ok = true }
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              last = e; attempt += 1
-              if (attempt <= retries)
-                System.err.println(
-                  s"[backfill] $day failed (attempt $attempt), retrying")
-          }
-        }
-        if (!ok) throw last
+        withRetry(retries, s"[backfill] $day")(run(day))
         ran += day
       }
     }
     ran.result()
+  }
+
+  /** K3: run `body`, re-running it after a failure up to `retries` more
+    * times; the last failure propagates. NonFatal only: OOM / interrupts
+    * propagate at once, never retried against a possibly-corrupted JVM.
+    * Each retry prints `<label> failed (attempt n), retrying` to stderr. */
+  private def withRetry[T](retries: Int, label: String)(body: => T): T = {
+    var attempt = 0
+    var result: Option[T] = None
+    while (result.isEmpty) {
+      try result = Some(body)
+      catch {
+        case scala.util.control.NonFatal(_) if attempt < retries =>
+          attempt += 1
+          System.err.println(s"$label failed (attempt $attempt), retrying")
+      }
+    }
+    result.get
   }
 
   /** The standard `isDone` probe for a partitioned long-format store
@@ -121,27 +126,9 @@ final class Pipeline(
     retries: Int = 1,
     checkpointDir: Option[String] = None) {
 
-  private def withRetry[T](name: String)(body: => T): T = {
-    var attempt = 0
-    var last: Throwable = null
-    while (attempt <= retries) {
-      try return body
-      catch {
-        // NonFatal only: OOM / interrupts must propagate, not be retried
-        // against a possibly-corrupted JVM
-        case scala.util.control.NonFatal(e) =>
-          last = e; attempt += 1
-          if (attempt <= retries)
-            System.err.println(
-              s"[pipeline] stage '$name' failed (attempt $attempt), retrying")
-      }
-    }
-    throw last
-  }
-
   def run(input: DataFrame): DataFrame =
     stages.foldLeft(input) { (df, stage) =>
-      withRetry(stage.name) {
+      Pipeline.withRetry(retries, s"[pipeline] stage '${stage.name}'") {
         val out = stage.f(df)
         checkpointDir match {
           case Some(dir) =>

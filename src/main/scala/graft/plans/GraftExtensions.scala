@@ -12,7 +12,7 @@ import graft.functions.DotProductExpr
   *   spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions
   *   ... SELECT graft_dot(embedding, probe) FROM ...
   *
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * or `.withExtensions(new GraftExtensions)` on a session builder.
   *
   * One optimizer Rule ships: AnnRewriteRule, the opt-in (conf-gated,
   * default OFF) rewrite of a naive cross-join cosine-threshold search into

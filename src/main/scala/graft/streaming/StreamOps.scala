@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.dsum
@@ -433,12 +434,7 @@ object StreamOps {
         f.isDirectory && f.getName.matches("epoch=[0-9]+") &&
           f.getName.stripPrefix("epoch=").toLong < keepFrom
       }
-      .foreach(deleteTree)
-  }
-
-  private def deleteTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteTree)
-    f.delete(): Unit
+      .foreach(FileUtil.fullyDelete(_))
   }
 
   /** Reader for [[exactlyOnceSink]] output: only epochs whose ledger

@@ -1,0 +1,118 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-scan gate that keeps harness plumbing at one copy each:
+  * [[Session]] builds every session and is the one reader of
+  * `SPARK_GRAFT_CPUS`, Hadoop's `FileUtil.fullyDelete` does every
+  * recursive delete. Copies drift apart (session confs did), so this spec
+  * fails when one comes back, and when a script or run doc names a main
+  * that no longer exists.
+  */
+class OneCopySpec extends AnyFunSuite {
+
+  private def mainSources: Seq[(Path, String)] = {
+    val s = Files.walk(Paths.get("src/main/scala"))
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .sortBy(_.toString).map(p => p -> Files.readString(p))
+    finally s.close()
+  }
+
+  /** A `def name(x: File)` that lists the directory and recurses into
+    * `name` within its first few lines: the hand-written recursive
+    * delete that `FileUtil.fullyDelete` replaces. */
+  private val recursiveDelete =
+    ("""def (\w+)\(\w+: (?:java\.io\.)?File\)[^\n]*\n(?:[^\n]*\n){0,3}?""" +
+      """[^\n]*listFiles\b[^\n]*\b\1\b""").r
+
+  test("src/main/scala has one SparkSession builder, one reader of " +
+      "SPARK_GRAFT_CPUS, and no hand-written recursive delete") {
+    val srcs = mainSources
+    def filesWith(needle: String) = srcs.collect {
+      case (p, text) if text.contains(needle) =>
+        s"$p (${java.util.regex.Pattern.quote(needle).r
+          .findAllMatchIn(text).size}x)"
+    }
+    val builders = filesWith("SparkSession.builder(")
+    assert(builders == Seq("src/main/scala/graft/Session.scala (1x)"),
+      s"build sessions with graft.Session.local; builders found: $builders")
+    val cpuReaders = filesWith("\"SPARK_GRAFT_CPUS\"")
+    assert(cpuReaders == Seq("src/main/scala/graft/Session.scala (1x)"),
+      s"read the core count through graft.Session.cpus; found: $cpuReaders")
+    val deletes = srcs.flatMap { case (p, text) =>
+      recursiveDelete.findAllMatchIn(text).map(m => s"$p: def ${m.group(1)}")
+    }
+    assert(deletes.isEmpty,
+      s"use org.apache.hadoop.fs.FileUtil.fullyDelete; found: $deletes")
+  }
+
+  test("the recursive-delete scan has teeth: the old helper is flagged, " +
+      "a plain directory listing is not") {
+    val helper =
+      """  private def deleteRecursively(f: java.io.File): Unit = {
+        |    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
+        |    f.delete(): Unit
+        |  }
+        |""".stripMargin
+    assert(recursiveDelete.findFirstIn(helper).nonEmpty)
+    val inline =
+      """      def rm(f: java.io.File): Unit = {
+        |        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
+        |      }
+        |""".stripMargin
+    assert(recursiveDelete.findFirstIn(inline).nonEmpty)
+    val listing =
+      """  def sizes(dir: java.io.File): Seq[Long] = {
+        |    Option(dir.listFiles()).getOrElse(Array.empty).map(_.length).toSeq
+        |  }
+        |""".stripMargin
+    assert(recursiveDelete.findFirstIn(listing).isEmpty)
+  }
+
+  /** `graft.<Name>` references in the run instructions: every script,
+    * README's "Running" block and the verify skill notes. */
+  private def namedMains: Seq[(String, String)] = {
+    val scripts = {
+      val s = Files.list(Paths.get("scripts"))
+      try s.iterator().asScala.filter(_.toString.endsWith(".sh")).toSeq
+      finally s.close()
+    }
+    val readme = Files.readString(Paths.get("README.md"))
+    val running = readme.split("\n## Running\n", 2).lift(1)
+      .map(_.split("```").lift(1).getOrElse("")).getOrElse("")
+    assert(running.contains("graft."), "README.md lost its Running block")
+    val skill = Paths.get(".claude/skills/verify/SKILL.md")
+    val docs = scripts.sortBy(_.toString).map(p =>
+      p.toString -> Files.readString(p)) ++
+      Seq("README.md#Running" -> running) ++
+      (if (Files.exists(skill)) Seq(skill.toString -> Files.readString(skill))
+       else Nil)
+    docs.flatMap { case (where, text) =>
+      // `graft.Session.local` names a method, not a main
+      """\bgraft\.([A-Z]\w*)(?![.\w])""".r.findAllMatchIn(text)
+        .map(m => where -> m.group(1))
+    }.distinct
+  }
+
+  private def isMain(name: String): Boolean =
+    try {
+      Class.forName(s"graft.$name", false, getClass.getClassLoader)
+        .getMethod("main", classOf[Array[String]])
+      true
+    } catch {
+      case _: ClassNotFoundException | _: NoSuchMethodException => false
+    }
+
+  test("every graft.<Main> that a script, README's Running block or the " +
+      "verify skill names exists as an object with a main") {
+    val refs = namedMains
+    assert(refs.exists(_._2 == "Bench") && refs.exists(_._2 == "Verify"),
+      s"scan found too little to be meaningful: $refs")
+    val stale = refs.filterNot { case (_, n) => isMain(n) }
+      .map { case (where, n) => s"$where: graft.$n" }
+    assert(stale.isEmpty, s"references to mains that no longer exist: $stale")
+    assert(!isMain("StoreBuild"), "control broken: a deleted main resolves")
+  }
+}

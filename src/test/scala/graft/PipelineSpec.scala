@@ -173,6 +173,16 @@ class PipelineSpec extends SparkSpec {
     intercept[RuntimeException] { bad.run(Seq(1).toDF("v")) }
   }
 
+  test("K3: a fatal stage error propagates after exactly one attempt") {
+    var attempts = 0
+    val p = new Pipeline(Seq(Stage("interrupted", _ => {
+      attempts += 1
+      throw new InterruptedException("stop")
+    })), retries = 3)
+    intercept[InterruptedException] { p.run(Seq(1).toDF("v")) }
+    assert(attempts === 1, "fatal errors are never retried")
+  }
+
   test("toWide reproduces dailyTable's exact column ORDER (positional safety)") {
     val (_, wide) = dailyTables.head
     val roundTripped = Ingest.toWide(Ingest.toLong(wide, "20250113"), "20250113")
@@ -425,6 +435,22 @@ class PipelineSpec extends SparkSpec {
     assert(attempts(jan(3)) === 2, "permanent failure exhausted retries")
     // days 1 and 2 survived the abort; resuming runs only 3 and 4
     assert(isDone(jan(1)) && isDone(jan(2)) && !isDone(jan(4)))
+  }
+
+  test("K2: a fatal error in a backfill day job propagates after exactly " +
+    "one attempt and stops the backfill") {
+    val jan = (d: Int) => LocalDate.of(2025, 4, d)
+    val attempts = scala.collection.mutable.Map.empty[LocalDate, Int]
+    def interrupted(day: LocalDate): Unit = {
+      attempts(day) = attempts.getOrElse(day, 0) + 1
+      if (day == jan(2)) throw new InterruptedException("stop")
+    }
+    intercept[InterruptedException] {
+      pipeline.Pipeline.backfill(jan(1), jan(3), _ => false, interrupted,
+        retries = 3)
+    }
+    assert(attempts.toMap === Map(jan(1) -> 1, jan(2) -> 1),
+      "the fatal day ran once and no later day ran")
   }
 
   test("K2: a failure AFTER the day's write commits does not duplicate " +

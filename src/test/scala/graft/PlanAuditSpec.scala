@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.window.WindowExec
   * broadcast nested-loop join, and a window over the WHOLE dataset (empty
   * partition spec: one task sorts everything) — may never appear in a
   * declared plan unless that query's row documents why its instance is
-  * benign. This is the dev-side PlanAudit sweep promoted to CI: a new
+  * benign. This is the former dev-side PlanAudit sweep as a CI gate: a new
   * operator that trips a red flag fails the build, not a later round's
   * judge pass.
   *

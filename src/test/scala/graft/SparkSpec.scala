@@ -12,14 +12,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   // One session for the whole forked test JVM — Spark startup is ~5s.
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // local[4]: the shape the committed plan snapshots (PLANSNAP*.json)
+  // were taken at — PlanSnap's generator main passes the same 4.
+  lazy val session: SparkSession = Session.local(4)
 }
