@@ -227,15 +227,18 @@ object Embeddings {
     // Chunked like powerIterate (r19 — see its note): 8 slice-chunks of
     // ≤8 dims instead of a 64× posexplode; each chunk group carries 8
     // decimal sums over exactly the addends the per-j groups summed
-    // (decimal addition exact, order-free ⇒ identical means), and
-    // count(element_at(seg, i)) counts non-null elements exactly as
-    // posexplode's per-position group counts did, so ragged embeddings
-    // keep their per-position denominators.
+    // (decimal addition exact, order-free ⇒ identical means);
+    // try_element_at reads a ragged tail chunk's missing slots as null
+    // (element_at throws on them under ANSI), and sum() skips them. The
+    // denominator counts the vectors that HAVE position i — null
+    // elements included, the oracle's count(*) over unnest — so ragged
+    // embeddings keep their per-position denominators and a null
+    // element counts without adding to the sum.
     val cw = 8
     val mAggs = (1 to cw).map(i =>
-      (sum(element_at(col("seg"), i).cast("double").cast(dec))
+      (sum(try_element_at(col("seg"), lit(i)).cast("double").cast(dec))
         .cast("double") /
-        count(element_at(col("seg"), i))).as(s"m$i"))
+        count(when(size(col("seg")) >= i, 1))).as(s"m$i"))
     val mu: Seq[Double] = emb
       .select(posexplode(transform(
         sequence(lit(0),
@@ -261,7 +264,7 @@ object Embeddings {
     * second pass. Same uniform seed, same decimal accumulation and norm
     * contract as always (see [[centeredCheckpoint]] for why the
     * explode/group shape stays). */
-  private def powerIterate(cloud: DataFrame, dim: Int): Seq[Double] = {
+  private[graft] def powerIterate(cloud: DataFrame, dim: Int): Seq[Double] = {
     val s = cloud.sparkSession
     val dec = org.apache.spark.sql.types.DecimalType(30, 8)
     // CHUNKED accumulation (r19, re-probing the r16 adjudication): the
@@ -274,7 +277,8 @@ object Embeddings {
     // are bit-identical: each w_j still sums the same CAST(e_j·c AS
     // DECIMAL(30,8)) addends (decimal addition is exact and
     // order-independent), so the oracle contract is untouched. sum()
-    // ignores the nulls a ragged tail chunk pads with; those (ci, i)
+    // ignores the nulls try_element_at reads past a ragged tail chunk's
+    // end (element_at would throw under ANSI); those (ci, i)
     // slots fall outside j < dim and are dropped on reassembly.
     val cw = 8
     val nCh = (dim + cw - 1) / cw
@@ -286,7 +290,7 @@ object Embeddings {
             ci => slice(col("ce"), ci * cw + 1, lit(cw))))
             .as(Seq("ci", "seg")))
       val sums = (1 to cw).map(i =>
-        sum((element_at(col("seg"), i) * col("c")).cast(dec))
+        sum((try_element_at(col("seg"), lit(i)) * col("c")).cast(dec))
           .cast("double").as(s"w$i"))
       val w: Seq[Double] = segs.groupBy("ci").agg(sums.head, sums.tail: _*)
         .orderBy("ci").collect().toSeq
@@ -294,6 +298,11 @@ object Embeddings {
           val ci = r.getInt(0)
           (1 to cw).collect {
             case i if ci * cw + (i - 1) < dim =>
+              if (r.isNullAt(i)) throw new IllegalStateException(
+                s"power iteration: chunk $ci position ${i - 1} (dimension " +
+                  s"${ci * cw + (i - 1)}) summed to null — every vector's " +
+                  "term there was null (a null element nulls its vector's " +
+                  "coefficient)")
               (ci * cw + (i - 1)) -> r.getDouble(i)
           }
         }.sortBy(_._1).map(_._2)

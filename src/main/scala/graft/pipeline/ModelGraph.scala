@@ -78,7 +78,21 @@ import org.apache.spark.sql.functions._
   * write, the M8 shape), stateful models pay one parquet write per
   * commit (the table format's commit cost). Ordering and cycle
   * detection are |models|-sized driver work on names only; each schema
-  * test is one map-side-combinable aggregate.
+  * test is one map-side-combinable aggregate. Materialization is
+  * level-parallel, dbt's `threads` semantics: [[topoLevels]] groups the
+  * models whose refs are all built, and no model of a level refs
+  * another, so a wider level builds its models at the same time — the
+  * bodies rendered on the caller in declaration order, then one thread
+  * per model on a fixed pool made for that level and shut down after
+  * it (a fresh pool, because Spark copies local properties into a
+  * thread at its creation). The level's width is the parallelism, with
+  * no knob: Spark's scheduler shares the cores among the siblings'
+  * jobs, so the per-job driver gaps of one model (planning, commit,
+  * listing) overlap another's tasks. A level of one model builds on the
+  * calling thread with no pool. On failure every sibling still
+  * finishes, the first failure in declaration order is rethrown as
+  * itself, and no later level starts — dbt's skip of the models
+  * downstream of an error.
   *
   * Cited reference behavior: dbt_dags.py:48-78 (ordered `dbt run` per
   * model), box_office_data.sql / box_office_showrange.sql (the two
@@ -169,7 +183,13 @@ object ModelGraph {
   /** Dependency-order the set: Kahn's algorithm, stable w.r.t.
     * declaration order among ready models. Unknown refs and cycles
     * throw with the offenders named. */
-  def topoOrder(models: Seq[Model]): Seq[Model] = {
+  def topoOrder(models: Seq[Model]): Seq[Model] = topoLevels(models).flatten
+
+  /** The Kahn walk behind [[topoOrder]], one batch per round: level k
+    * holds the models whose refs all sit in levels < k, in declaration
+    * order. No model refs a sibling, so a level's models can build side
+    * by side ([[run]]). Unknown refs and cycles throw as [[topoOrder]]. */
+  def topoLevels(models: Seq[Model]): Seq[Seq[Model]] = {
     val names = models.map(_.name)
     val dupNames = names.diff(names.distinct).distinct
     require(dupNames.isEmpty,
@@ -183,7 +203,7 @@ object ModelGraph {
           s"${unknown.mkString(", ")} — ref() must name a model in the " +
           "set; non-model relations are read by bare name (source())")
     }
-    val ordered = Seq.newBuilder[Model]
+    val levels = Seq.newBuilder[Seq[Model]]
     var done = Set.empty[String]
     var remaining = models
     while (remaining.nonEmpty) {
@@ -202,11 +222,11 @@ object ModelGraph {
         throw new IllegalArgumentException(
           s"model graph has a cycle: ${(path.result() :+ cur).mkString(" -> ")}")
       }
-      ordered ++= ready
+      levels += ready
       done ++= ready.map(_.name)
       remaining = blocked
     }
-    ordered.result()
+    levels.result()
   }
 
   // ---------------------------------------------------------------
@@ -301,8 +321,11 @@ object ModelGraph {
   }
 
   /** Materialize every model in dependency order; returns each model's
-    * relation read back from the session catalog. Single-writer per
-    * session, like dbt's one-process run.
+    * relation read back from the session catalog. Models build level by
+    * level ([[topoLevels]]): a level of one model builds on the calling
+    * thread, the models of a wider level build at the same time (dbt's
+    * `threads`), and a failure stops the run after its level. Single
+    * writer per model, like dbt's one-process run.
     *
     * `incremental` (r17, durable r18) is dbt's incremental
     * materialization, carried by the M11 MERGE interpreter it was built
@@ -325,106 +348,141 @@ object ModelGraph {
   def run(spark: SparkSession, models: Seq[Model],
       snapshotAt: Column = current_timestamp()): Map[String, DataFrame] = {
     val ephemerals = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    topoOrder(models).map { m =>
-      val body = inlineEphemerals(m, ephemerals.toSeq)
-      val rel: DataFrame = m.materialized match {
-        case "ephemeral" =>
-          // dbt's ephemeral: never materialized anywhere — the body
-          // compiles into each consumer as a CTE; the returned frame
-          // is the lazy standalone form (no view, no catalog entry)
-          ephemerals += m.name -> body
-          spark.sql(body)
-        case "view" =>
-          spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${m.name} AS $body")
-          spark.table(m.name)
-        case "table" => // dbt's table materialization: drop + CTAS
-          if (spark.sessionState.catalog.isTempView(Seq(m.name)))
-            throw new IllegalArgumentException(
-              s"model ${m.name}: a temp view with this name exists and " +
-                "would SHADOW the table for every downstream reader — " +
-                "drop the view or rename the model (never silently read " +
-                "stale relations)")
-          spark.sql(s"DROP TABLE IF EXISTS ${m.name}")
-          spark.sql(s"CREATE TABLE ${m.name} USING PARQUET AS $body")
-          spark.table(m.name)
-        case "incremental" =>
-          require(m.uniqueKey.nonEmpty, s"model ${m.name}: incremental " +
-            "materialization requires a non-empty uniqueKey")
-          require(Set("merge", "delete+insert")(m.incrementalStrategy),
-            s"model ${m.name}: unsupported incrementalStrategy " +
-              s"'${m.incrementalStrategy}' (merge | delete+insert)")
-          statefulGuard(spark, m.name)
-          latestCommit(spark, m.name) match {
-            case None => // first run = full refresh into the store
-              commitState(spark, m.name, spark.sql(body))
-                .createOrReplaceTempView(m.name)
-            case Some((_, commit)) =>
-              val state = spark.read.parquet(commit.getAbsolutePath)
-              validateResume(m.name, state, spark.sql(body), Set.empty)
-              state.createOrReplaceTempView(m.name)
-              m.incrementalStrategy match {
-                case "merge" =>
-                  val on = m.uniqueKey
-                    .map(k => s"t.`$k` = s.`$k`").mkString(" AND ")
-                  graft.plans.MergeIntoViews.mergeSql(spark,
-                    s"""MERGE INTO ${m.name} t USING ($body) s ON $on
-                       |WHEN MATCHED THEN UPDATE SET *
-                       |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-                case "delete+insert" =>
-                  // dbt's delete+insert strategy (its DEFAULT on
-                  // Redshift — the reference's warehouse): DELETE state
-                  // rows whose uniqueKey appears in the batch, then
-                  // APPEND the whole batch — two M12 DML statements,
-                  // exactly the SQL dbt compiles. Semantics differ from
-                  // merge on dirty batches, faithfully: duplicate-key
-                  // batch rows all insert (no cardinality error — the
-                  // dup-key model dbt ships with this strategy), where
-                  // merge raises. Clean batches converge (spec-pinned).
-                  val bv = s"__graft_mg_batch_${m.name}"
-                  spark.sql(body).localCheckpoint(true)
-                    .createOrReplaceTempView(bv)
-                  val keys = m.uniqueKey.map(k => s"`$k`").mkString(", ")
-                  graft.plans.DmlViews.sql(spark,
-                    s"""DELETE FROM ${m.name}
-                       |WHERE ($keys) IN (SELECT $keys FROM $bv)"""
-                      .stripMargin)
-                  graft.plans.DmlViews.sql(spark,
-                    s"INSERT INTO ${m.name} BY NAME SELECT * FROM $bv")
-                  spark.catalog.dropTempView(bv): Unit
-              }
-              commitState(spark, m.name, spark.table(m.name))
-                .createOrReplaceTempView(m.name)
-          }
-          spark.table(m.name)
-        case "snapshot" =>
-          require(m.uniqueKey.nonEmpty, s"model ${m.name}: snapshot " +
-            "materialization requires a non-empty uniqueKey")
-          statefulGuard(spark, m.name)
-          val batch = spark.sql(body)
-          val tracked =
-            if (m.checkCols.nonEmpty) m.checkCols
-            else batch.columns.toSeq.filterNot(m.uniqueKey.contains)
-          require(tracked.nonEmpty, s"model ${m.name}: snapshot needs " +
-            "at least one tracked (non-key) column")
-          val next = latestCommit(spark, m.name) match {
-            case None => graft.ops.Scd2.init(batch, snapshotAt)
-            case Some((_, commit)) =>
-              val state = spark.read.parquet(commit.getAbsolutePath)
-              validateResume(m.name, state, batch,
-                Set("valid_from", "valid_to", "is_current"))
-              graft.ops.Scd2.apply(state, batch, m.uniqueKey, tracked,
-                snapshotAt)
-          }
-          commitState(spark, m.name, next)
-            .createOrReplaceTempView(m.name)
-          spark.table(m.name)
-        case other => throw new IllegalArgumentException(
-          s"model ${m.name}: unsupported materialization '$other' " +
-            "(view | table | incremental | snapshot | ephemeral)")
+    topoLevels(models).flatMap { level =>
+      // render on the caller, in declaration order: the ephemeral CTE
+      // bookkeeping stays sequential (no sibling refs another, so a
+      // body never needs an ephemeral recorded in its own level)
+      val builds = level.map { m =>
+        val body = inlineEphemerals(m, ephemerals.toSeq)
+        if (m.materialized == "ephemeral") ephemerals += m.name -> body
+        () => materialize(spark, m, body, snapshotAt)
       }
-      m.name -> rel
+      val rels =
+        if (builds.size == 1) Seq(builds.head()) else inParallel(builds)
+      level.map(_.name).zip(rels)
     }.toMap
   }
+
+  /** Run a level's builds side by side, one thread per build, on a pool
+    * made for this level: Spark copies its local properties (job group,
+    * scheduler pool, tracing tags) into a thread when the thread is
+    * created, so a pool kept across levels or runs would carry stale
+    * ones. Every build is awaited; then the first failure in
+    * declaration order is rethrown as itself, unwrapped from the
+    * ExecutionException, and the caller starts no later level. */
+  private def inParallel[T](builds: Seq[() => T]): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(builds.size)
+    val futures =
+      try builds.map(b => pool.submit(new java.util.concurrent.Callable[T] {
+        def call(): T = b()
+      }))
+      finally pool.shutdown()
+    val outcomes = futures.map(f => scala.util.Try(f.get()))
+    outcomes.foreach {
+      case scala.util.Failure(e: java.util.concurrent.ExecutionException) =>
+        throw e.getCause
+      case _ => ()
+    }
+    outcomes.map(_.get)
+  }
+
+  /** Materialize one rendered model under its own name (see [[run]]). */
+  private def materialize(spark: SparkSession, m: Model, body: String,
+      snapshotAt: Column): DataFrame =
+    m.materialized match {
+      case "ephemeral" =>
+        // dbt's ephemeral: never materialized anywhere — the body
+        // compiles into each consumer as a CTE; the returned frame
+        // is the lazy standalone form (no view, no catalog entry)
+        spark.sql(body)
+      case "view" =>
+        spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${m.name} AS $body")
+        spark.table(m.name)
+      case "table" => // dbt's table materialization: drop + CTAS
+        if (spark.sessionState.catalog.isTempView(Seq(m.name)))
+          throw new IllegalArgumentException(
+            s"model ${m.name}: a temp view with this name exists and " +
+              "would SHADOW the table for every downstream reader — " +
+              "drop the view or rename the model (never silently read " +
+              "stale relations)")
+        spark.sql(s"DROP TABLE IF EXISTS ${m.name}")
+        spark.sql(s"CREATE TABLE ${m.name} USING PARQUET AS $body")
+        spark.table(m.name)
+      case "incremental" =>
+        require(m.uniqueKey.nonEmpty, s"model ${m.name}: incremental " +
+          "materialization requires a non-empty uniqueKey")
+        require(Set("merge", "delete+insert")(m.incrementalStrategy),
+          s"model ${m.name}: unsupported incrementalStrategy " +
+            s"'${m.incrementalStrategy}' (merge | delete+insert)")
+        statefulGuard(spark, m.name)
+        latestCommit(spark, m.name) match {
+          case None => // first run = full refresh into the store
+            commitState(spark, m.name, spark.sql(body))
+              .createOrReplaceTempView(m.name)
+          case Some((_, commit)) =>
+            val state = spark.read.parquet(commit.getAbsolutePath)
+            validateResume(m.name, state, spark.sql(body), Set.empty)
+            state.createOrReplaceTempView(m.name)
+            m.incrementalStrategy match {
+              case "merge" =>
+                val on = m.uniqueKey
+                  .map(k => s"t.`$k` = s.`$k`").mkString(" AND ")
+                graft.plans.MergeIntoViews.mergeSql(spark,
+                  s"""MERGE INTO ${m.name} t USING ($body) s ON $on
+                     |WHEN MATCHED THEN UPDATE SET *
+                     |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+              case "delete+insert" =>
+                // dbt's delete+insert strategy (its DEFAULT on
+                // Redshift — the reference's warehouse): DELETE state
+                // rows whose uniqueKey appears in the batch, then
+                // APPEND the whole batch — two M12 DML statements,
+                // exactly the SQL dbt compiles. Semantics differ from
+                // merge on dirty batches, faithfully: duplicate-key
+                // batch rows all insert (no cardinality error — the
+                // dup-key model dbt ships with this strategy), where
+                // merge raises. Clean batches converge (spec-pinned).
+                val bv = s"__graft_mg_batch_${m.name}"
+                spark.sql(body).localCheckpoint(true)
+                  .createOrReplaceTempView(bv)
+                val keys = m.uniqueKey.map(k => s"`$k`").mkString(", ")
+                graft.plans.DmlViews.sql(spark,
+                  s"""DELETE FROM ${m.name}
+                     |WHERE ($keys) IN (SELECT $keys FROM $bv)"""
+                    .stripMargin)
+                graft.plans.DmlViews.sql(spark,
+                  s"INSERT INTO ${m.name} BY NAME SELECT * FROM $bv")
+                spark.catalog.dropTempView(bv): Unit
+            }
+            commitState(spark, m.name, spark.table(m.name))
+              .createOrReplaceTempView(m.name)
+        }
+        spark.table(m.name)
+      case "snapshot" =>
+        require(m.uniqueKey.nonEmpty, s"model ${m.name}: snapshot " +
+          "materialization requires a non-empty uniqueKey")
+        statefulGuard(spark, m.name)
+        val batch = spark.sql(body)
+        val tracked =
+          if (m.checkCols.nonEmpty) m.checkCols
+          else batch.columns.toSeq.filterNot(m.uniqueKey.contains)
+        require(tracked.nonEmpty, s"model ${m.name}: snapshot needs " +
+          "at least one tracked (non-key) column")
+        val next = latestCommit(spark, m.name) match {
+          case None => graft.ops.Scd2.init(batch, snapshotAt)
+          case Some((_, commit)) =>
+            val state = spark.read.parquet(commit.getAbsolutePath)
+            validateResume(m.name, state, batch,
+              Set("valid_from", "valid_to", "is_current"))
+            graft.ops.Scd2.apply(state, batch, m.uniqueKey, tracked,
+              snapshotAt)
+        }
+        commitState(spark, m.name, next)
+          .createOrReplaceTempView(m.name)
+        spark.table(m.name)
+      case other => throw new IllegalArgumentException(
+        s"model ${m.name}: unsupported materialization '$other' " +
+          "(view | table | incremental | snapshot | ephemeral)")
+    }
 
   /** A stateful model's view must not silently shadow a catalog table
     * of the same name (the mirror of the `table` temp-view guard). */

@@ -231,4 +231,27 @@ class EmbeddingsSpec extends SparkSpec {
       "residual cross-correlation out of bound")
   }
 
+  test("pcaFit means: a null element counts in its position's " +
+    "denominator (the oracle's count(*) over unnest), adding nothing to " +
+    "the sum") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_emb_null")
+      .toFile
+    try {
+      Seq((1L, 0, Seq(Some(1f), Some(2f))), (2L, 0, Seq(Some(3f), None)),
+        (3L, 1, Seq(Some(5f), Some(6f))))
+        .toDF("vec_id", "label", "embedding")
+        .write.parquet(s"$dir/embeddings.parquet")
+      val (mu, _) = ops.Embeddings.pcaFit(spark, dir.getPath)
+      assert(mu === Seq(9.0 / 3, 8.0 / 3))
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(dir)
+  }
+
+  test("powerIterate: a null in-range sum fails naming its chunk and " +
+    "position, not with a NullPointerException") {
+    val cloud = Seq(Seq(Some(1.0), None)).toDF("ce")
+    val e = intercept[IllegalStateException] {
+      ops.Embeddings.powerIterate(cloud, 2)
+    }
+    assert(e.getMessage.contains("chunk 0 position 0"))
+  }
 }

@@ -3,13 +3,15 @@ package graft
 import graft.pipeline.ModelGraph
 import graft.pipeline.ModelGraph.{AcceptedValues, Model, NotNull,
   Relationships, Unique}
-import org.apache.spark.sql.functions.lit
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.functions.{lit, udf}
 
 /** The dbt-shaped model-graph runner (K7): ref() edge extraction, stable
-  * topological ordering, cycle/unknown-ref rejection, and both
-  * materializations. The reference two-model reproduction lives in
-  * PipelineSpec (it needs the ingest fixture); this spec pins the
-  * runner's mechanics on micro-models.
+  * topological ordering, cycle/unknown-ref rejection, the
+  * materializations, and level-parallel builds. The reference two-model
+  * reproduction lives in PipelineSpec (it needs the ingest fixture);
+  * this spec pins the runner's mechanics on micro-models.
   */
 class ModelGraphSpec extends SparkSpec {
   import spark.implicits._
@@ -33,6 +35,10 @@ class ModelGraphSpec extends SparkSpec {
       Model("base", "SELECT 1 AS k"))
     assert(ModelGraph.topoOrder(ms).map(_.name) ===
       Seq("base", "mid2", "mid1", "final"))
+    // the same walk by level, declaration order within a level
+    assert(ModelGraph.topoLevels(ms).map(_.map(_.name)) ===
+      Seq(Seq("base"), Seq("mid2", "mid1"), Seq("final")))
+    assert(ModelGraph.topoOrder(ms) === ModelGraph.topoLevels(ms).flatten)
   }
 
   test("a cycle is rejected with the offending path named") {
@@ -332,4 +338,63 @@ class ModelGraphSpec extends SparkSpec {
       assert(e.getMessage.contains("materialized_view"))
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
+
+  test("run: sibling models of one level build at the same time — each " +
+      "table's only row waits for the other's at a two-party rendezvous") {
+    ModelGraphSpec.rendezvous = new CountDownLatch(2)
+    spark.udf.register("mg_rendezvous", udf { (k: Long) =>
+      val latch = ModelGraphSpec.rendezvous
+      latch.countDown()
+      if (!latch.await(60, TimeUnit.SECONDS))
+        throw new IllegalStateException(
+          "rendezvous timed out: the sibling model was not building")
+      k
+    }.asNondeterministic())
+    val (a, b) = (uniq("mg_rv_a"), uniq("mg_rv_b"))
+    try {
+      val out = ModelGraph.run(spark, Seq(
+        Model(a, "SELECT mg_rendezvous(id) AS k FROM range(1)",
+          materialized = "table"),
+        Model(b, "SELECT mg_rendezvous(id + 1) AS k FROM range(1)",
+          materialized = "table")))
+      assert(out(a).as[Long].collect().toSeq === Seq(0L))
+      assert(out(b).as[Long].collect().toSeq === Seq(1L))
+    } finally Seq(a, b).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("run: a failing sibling surfaces its own exception after the " +
+      "level finishes — the other sibling is built, the failed " +
+      "model's consumers never start") {
+    val (bad, ok, down) =
+      (uniq("mg_fail_bad"), uniq("mg_fail_ok"), uniq("mg_fail_down"))
+    Seq(1).toDF("k").createOrReplaceTempView(bad)
+    val cat = spark.sessionState.catalog
+    try {
+      val e = intercept[IllegalArgumentException] {
+        ModelGraph.run(spark, Seq(
+          Model(bad, "SELECT 1 AS k", materialized = "table"),
+          Model(ok, "SELECT 2 AS k", materialized = "table"),
+          Model(down, s"SELECT k FROM {{ ref('$bad') }}",
+            materialized = "table")))
+      }
+      assert(e.getMessage.contains(s"model $bad: a temp view with this " +
+        "name exists and would SHADOW the table"))
+      assert(cat.tableExists(TableIdentifier(ok)))
+      assert(spark.table(ok).as[Int].collect().toSeq === Seq(2))
+      assert(!cat.tableExists(TableIdentifier(down)))
+    } finally {
+      spark.catalog.dropTempView(bad)
+      Seq(ok, down).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
+  private def uniq(prefix: String): String =
+    prefix + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      .take(12)
+}
+
+object ModelGraphSpec {
+  /** The rendezvous the sibling-concurrency test's UDF meets at: held
+    * statically so task closures reach it without serializing it. */
+  @volatile var rendezvous: CountDownLatch = new CountDownLatch(0)
 }
