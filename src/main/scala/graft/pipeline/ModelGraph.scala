@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** dbt-shaped model-graph runner (K5/K7 completion, r17; r18 adds
   * durable incremental state, the `snapshot` materialization, and the
@@ -92,7 +93,10 @@ import org.apache.spark.sql.functions._
   * calling thread with no pool. On failure every sibling still
   * finishes, the first failure in declaration order is rethrown as
   * itself, and no later level starts — dbt's skip of the models
-  * downstream of an error.
+  * downstream of an error. Compile count is per distinct operator, not
+  * per branch: a run names its generated classes without the codegen
+  * stage id, so the same-typed branches of an N-way UNION ALL share one
+  * compiled class (see [[sharedCodegenClasses]]).
   *
   * Cited reference behavior: dbt_dags.py:48-78 (ordered `dbt run` per
   * model), box_office_data.sql / box_office_showrange.sql (the two
@@ -346,21 +350,44 @@ object ModelGraph {
     * the run's wall clock, which is the default; deterministic replays
     * pass an explicit literal. */
   def run(spark: SparkSession, models: Seq[Model],
-      snapshotAt: Column = current_timestamp()): Map[String, DataFrame] = {
-    val ephemerals = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    topoLevels(models).flatMap { level =>
-      // render on the caller, in declaration order: the ephemeral CTE
-      // bookkeeping stays sequential (no sibling refs another, so a
-      // body never needs an ephemeral recorded in its own level)
-      val builds = level.map { m =>
-        val body = inlineEphemerals(m, ephemerals.toSeq)
-        if (m.materialized == "ephemeral") ephemerals += m.name -> body
-        () => materialize(spark, m, body, snapshotAt)
-      }
-      val rels =
-        if (builds.size == 1) Seq(builds.head()) else inParallel(builds)
-      level.map(_.name).zip(rels)
-    }.toMap
+      snapshotAt: Column = current_timestamp()): Map[String, DataFrame] =
+    sharedCodegenClasses(spark) {
+      val ephemerals = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      topoLevels(models).flatMap { level =>
+        // render on the caller, in declaration order: the ephemeral CTE
+        // bookkeeping stays sequential (no sibling refs another, so a
+        // body never needs an ephemeral recorded in its own level)
+        val builds = level.map { m =>
+          val body = inlineEphemerals(m, ephemerals.toSeq)
+          if (m.materialized == "ephemeral") ephemerals += m.name -> body
+          () => materialize(spark, m, body, snapshotAt)
+        }
+        val rels =
+          if (builds.size == 1) Seq(builds.head()) else inParallel(builds)
+        level.map(_.name).zip(rels)
+      }.toMap
+    }
+
+  /** Run `body` with whole-stage codegen classes named without their
+    * stage id (`spark.sql.codegen.useIdInClassName=false`), then restore
+    * the caller's exact setting: a value the caller set comes back, an
+    * unset key is unset again. The N branches of a model's UNION ALL
+    * generate the same Java source apart from that id, so named without
+    * it they share one entry of Spark's codegen cache (100 entries, a
+    * static conf) and compile once instead of N times. The setting only
+    * names generated classes, never plans or results, so concurrent
+    * callers on one session, which could see each other's value or
+    * restore over it, can only rename classes, never change a result
+    * (and a model has one writer anyway, see [[run]]). */
+  private def sharedCodegenClasses[T](spark: SparkSession)(body: => T): T = {
+    val key = SQLConf.WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME.key
+    val callers = spark.conf.getAll.get(key) // only explicitly set keys
+    spark.conf.set(key, "false")
+    try body
+    finally callers match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   /** Run a level's builds side by side, one thread per build, on a pool
@@ -498,7 +525,9 @@ object ModelGraph {
 
   /** Run every declared schema test over the ALREADY-materialized
     * models (call after [[run]]); one row per test, dbt's
-    * failure-count semantics (scaladoc above). */
+    * failure-count semantics (scaladoc above). The report is lazy: its
+    * aggregates compile when the caller runs it, under the caller's
+    * codegen settings. */
   def test(spark: SparkSession, models: Seq[Model]): DataFrame = {
     val names = models.map(_.name).toSet
     // validate the whole battery BEFORE touching any relation — a

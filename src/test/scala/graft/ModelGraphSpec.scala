@@ -4,8 +4,10 @@ import graft.pipeline.ModelGraph
 import graft.pipeline.ModelGraph.{AcceptedValues, Model, NotNull,
   Relationships, Unique}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions.{lit, udf}
+import org.apache.spark.sql.internal.SQLConf
 
 /** The dbt-shaped model-graph runner (K7): ref() edge extraction, stable
   * topological ordering, cycle/unknown-ref rejection, the
@@ -386,6 +388,76 @@ class ModelGraphSpec extends SparkSpec {
       spark.catalog.dropTempView(bad)
       Seq(ok, down).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
+  }
+
+  test("run: restores the caller's codegen class-name setting — an " +
+      "unset key stays unset, an explicit value survives, also when the " +
+      "run fails") {
+    val key = SQLConf.WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME.key
+    def setting = spark.conf.getAll.get(key) // None when unset
+    val tbl = uniq("mg_cg_restore")
+    try {
+      spark.conf.unset(key)
+      ModelGraph.run(spark, Seq(Model(tbl, "SELECT 1 AS k", "table")))
+      assert(setting === None)
+      spark.conf.set(key, "true")
+      ModelGraph.run(spark, Seq(Model(tbl, "SELECT 2 AS k", "table")))
+      assert(setting === Some("true"))
+      assert(spark.table(tbl).as[Int].collect().toSeq === Seq(2))
+      // a failing run (the temp-view shadow guard) restores it too
+      spark.sql(s"DROP TABLE $tbl")
+      Seq(1).toDF("k").createOrReplaceTempView(tbl)
+      for (callers <- Seq(Some("true"), None)) {
+        callers.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        val e = intercept[IllegalArgumentException] {
+          ModelGraph.run(spark, Seq(Model(tbl, "SELECT 1 AS k", "table")))
+        }
+        assert(e.getMessage.contains("SHADOW"))
+        assert(setting === callers)
+      }
+    } finally {
+      spark.conf.unset(key)
+      spark.catalog.dropTempView(tbl)
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    }
+  }
+
+  test("run: compiles per distinct operator, not per UNION ALL branch — " +
+      "a nine-way union of same-typed tables adds at most a few " +
+      "compiles over a three-way one") {
+    val made = scala.collection.mutable.ArrayBuffer.empty[String]
+    def unionSum(n: Int): Model = {
+      val ts = (1 to n).map { i =>
+        val t = uniq(s"mg_cg_src$i")
+        made += t
+        spark.sql(s"CREATE TABLE $t USING PARQUET AS " +
+          s"SELECT id AS k, CAST(id * $i AS DOUBLE) AS v FROM range(4)")
+        t
+      }
+      val name = uniq(s"mg_cg_sum$n")
+      made += name
+      // a GROUP BY per branch, as box_office_showrange has: each
+      // branch plans its own codegen stages (a bare scan's ColumnarToRow
+      // would sit above the Union, one stage for every branch)
+      Model(name, ts.map(t => s"SELECT k, SUM(v) AS v FROM $t GROUP BY k")
+        .mkString("SELECT SUM(v) AS total FROM (", " UNION ALL ", ")"),
+        "table")
+    }
+    def compiles(m: Model): (Long, Double) = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = ModelGraph.run(spark, Seq(m))(m.name)
+      val added = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      (added, out.as[Double].head())
+    }
+    try {
+      val (m3, m9) = (unionSum(3), unionSum(9))
+      assert(compiles(m3)._2 === 6.0 * (1 + 2 + 3))
+      val (added, total9) = compiles(m9)
+      assert(total9 === 6.0 * (1 to 9).sum)
+      assert(added <= 2, s"the nine-way union compiled $added new " +
+        "classes after the three-way one: its branches did not share " +
+        "their generated class")
+    } finally made.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   private def uniq(prefix: String): String =
