@@ -272,7 +272,7 @@ object SqlSurface {
     // PARSES the statement for any relation but its analyzer accepts it
     // only against v2 row-level-operation catalog tables (probed:
     // UNSUPPORTED_FEATURE.TABLE_OPERATION on a temp view, pinned in
-    // SqlMergeSpec), so the verb runs through MergeIntoViews: Spark's
+    // SqlMergeSpec), so the verb runs through DmlViews: Spark's
     // own parser → ANSI-MERGE interpretation over the session catalog →
     // temp-view re-point (sessions built with spark.sql.extensions run
     // the same text straight through spark.sql — ExtensionsSpec).
@@ -293,7 +293,7 @@ object SqlSurface {
       s.sql("""CREATE OR REPLACE TEMPORARY VIEW sqv_merge_src AS
         |SELECT o_orderkey AS s_key, o_totalprice + 1000.0 AS new_price
         |FROM sqv_orders WHERE o_orderkey % 4 IN (1, 2)""".stripMargin)
-      graft.plans.MergeIntoViews.mergeSql(s,
+      graft.plans.DmlViews.sql(s,
         """MERGE INTO sqv_merge_tgt t
           |USING sqv_merge_src s
           |ON t.o_orderkey = s.s_key

@@ -82,11 +82,11 @@ import org.apache.spark.sql.internal.SQLConf
   * test is one map-side-combinable aggregate. Materialization is
   * level-parallel, dbt's `threads` semantics: [[topoLevels]] groups the
   * models whose refs are all built, and no model of a level refs
-  * another, so a wider level builds its models at the same time — the
-  * bodies rendered on the caller in declaration order, then one thread
-  * per model on a fixed pool made for that level and shut down after
-  * it (a fresh pool, because Spark copies local properties into a
-  * thread at its creation). The level's width is the parallelism, with
+  * another, so a wider level builds its models at the same time — every
+  * body is rendered on the caller before the first level builds, then a
+  * wider level takes one thread per model on a fixed pool made for that
+  * level and shut down after it (a fresh pool, because Spark copies
+  * local properties into a thread at its creation). The level's width is the parallelism, with
   * no knob: Spark's scheduler shares the cores among the siblings'
   * jobs, so the per-job driver gaps of one model (planning, commit,
   * listing) overlap another's tasks. A level of one model builds on the
@@ -352,21 +352,29 @@ object ModelGraph {
   def run(spark: SparkSession, models: Seq[Model],
       snapshotAt: Column = current_timestamp()): Map[String, DataFrame] =
     sharedCodegenClasses(spark) {
-      val ephemerals = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      topoLevels(models).flatMap { level =>
-        // render on the caller, in declaration order: the ephemeral CTE
-        // bookkeeping stays sequential (no sibling refs another, so a
-        // body never needs an ephemeral recorded in its own level)
-        val builds = level.map { m =>
-          val body = inlineEphemerals(m, ephemerals.toSeq)
-          if (m.materialized == "ephemeral") ephemerals += m.name -> body
+      compiled(models).flatMap { level =>
+        val builds = level.map { case (m, body) =>
           () => materialize(spark, m, body, snapshotAt)
         }
         val rels =
           if (builds.size == 1) Seq(builds.head()) else inParallel(builds)
-        level.map(_.name).zip(rels)
+        level.map(_._1.name).zip(rels)
       }.toMap
     }
+
+  /** Every model's compiled body, grouped as [[topoLevels]]: refs
+    * substituted, direct ephemeral refs inlined as a CTE prelude. Text
+    * only, rendered on the caller in [[topoOrder]], so each ephemeral
+    * body is recorded before any consumer renders. [[run]] builds from
+    * these bodies and [[test]] recompiles ephemeral models from them. */
+  private def compiled(models: Seq[Model]): Seq[Seq[(Model, String)]] = {
+    val ephemerals = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    topoLevels(models).map(_.map { m =>
+      val body = inlineEphemerals(m, ephemerals.toSeq)
+      if (m.materialized == "ephemeral") ephemerals += m.name -> body
+      m -> body
+    })
+  }
 
   /** Run `body` with whole-stage codegen classes named without their
     * stage id (`spark.sql.codegen.useIdInClassName=false`), then restore
@@ -454,7 +462,7 @@ object ModelGraph {
               case "merge" =>
                 val on = m.uniqueKey
                   .map(k => s"t.`$k` = s.`$k`").mkString(" AND ")
-                graft.plans.MergeIntoViews.mergeSql(spark,
+                graft.plans.DmlViews.sql(spark,
                   s"""MERGE INTO ${m.name} t USING ($body) s ON $on
                      |WHEN MATCHED THEN UPDATE SET *
                      |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
@@ -540,16 +548,11 @@ object ModelGraph {
       case _ => ()
     }
     // ephemeral models have no relation to read back — recompile their
-    // inlined bodies (the same text run() built), exactly as dbt tests
-    // an ephemeral model against its compiled CTE form
-    val ephem = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      topoOrder(models).foreach { m =>
-        if (m.materialized == "ephemeral")
-          buf += m.name -> inlineEphemerals(m, buf.toSeq)
-      }
-      buf.toMap
-    }
+    // inlined bodies (the text run() built), exactly as dbt tests an
+    // ephemeral model against its compiled CTE form
+    val ephem = compiled(models).flatten.collect {
+      case (m, body) if m.materialized == "ephemeral" => m.name -> body
+    }.toMap
     def relOf(name: String): DataFrame =
       ephem.get(name).map(spark.sql).getOrElse(spark.table(name))
     val reports = for (m <- models; t <- m.tests) yield {

@@ -1,48 +1,82 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, NamedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, InsertIntoStatement, LogicalPlan, MergeIntoTable, UpdateTable}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, InsertIntoStatement, LogicalPlan, MergeIntoTable, SubqueryAlias, UpdateTable}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim
 import org.apache.spark.sql.types.StructType
 
-/** SQL-text UPDATE / DELETE / INSERT over temp views (M12, r18) — the
-  * rest of the warehouse-DML quartet around M11's MERGE.
+/** SQL-text DML over temp views: the warehouse-DML quartet MERGE (M11,
+  * r16) and UPDATE / DELETE / INSERT (M12, r18). This module holds what
+  * the four verbs share: the entry point, the target guard and re-point,
+  * the assignment-key validator and the parser hook. It interprets
+  * UPDATE, DELETE and INSERT itself; MERGE's own semantics live in
+  * [[MergeIntoViews]].
   *
   * These are the verbs the reference's warehouse layer actually runs:
   * the daily load is an APPEND (`COPY raw_data."{table}"` —
   * daily_csv_pipeline.py:165, daily_parquet_pipeline.py:152 — the
-  * Redshift spelling of `INSERT INTO … SELECT`), and dbt's DEFAULT
-  * incremental strategy on Redshift compiles each incremental model to
-  * exactly `DELETE FROM tgt USING batch WHERE key-match` + `INSERT INTO
-  * tgt SELECT …` (the stock dbt_project.yml the reference ships
-  * documents the incremental materialization this pair backs). A SQL
-  * user switching from the reference brings statements in all four
-  * verbs; M11 carried only MERGE.
+  * Redshift spelling of `INSERT INTO … SELECT`), and dbt's incremental
+  * models on Redshift compile either to `DELETE FROM tgt USING batch
+  * WHERE key-match` + `INSERT INTO tgt SELECT …` (dbt's DEFAULT
+  * incremental strategy there) or to `MERGE INTO` (the stock
+  * dbt_project.yml the reference ships documents the incremental
+  * materialization this quartet backs).
   *
-  * Like MERGE (see MergeIntoViews' scaladoc for the full rationale),
-  * Spark 4 PARSES all three statements for any relation but analysis
-  * requires a v2 catalog table — against a temp view they die with
-  * UNSUPPORTED_FEATURE.TABLE_OPERATION / NOT_SUPPORTED_COMMAND_FOR_V2_TABLE
-  * (probed in SqlDmlSpec). So the same extension-library pattern
-  * carries them: Spark's own parser produces `UpdateTable` /
-  * `DeleteFromTable` / `InsertIntoStatement`, this module interprets
-  * the plan over the session catalog, and [[GraftSqlParser]] rewrites
-  * temp-view-target statements to the Graft*ViewCommand leaves so raw
-  * `spark.sql` text runs end-to-end under GraftExtensions. Catalog
-  * tables pass through untouched to Spark's native paths.
+  * Spark 4 PARSES all four statements for any relation, but analysis
+  * requires a v2 catalog table with `SupportsRowLevelOperations` —
+  * against a temp view they die with UNSUPPORTED_FEATURE.TABLE_OPERATION
+  * / NOT_SUPPORTED_COMMAND_FOR_V2_TABLE (probed in SqlMergeSpec and
+  * SqlDmlSpec, which pin the refusals so a Spark release that lifts them
+  * is noticed). The engine runs without a v2 catalog, and its tables
+  * are parquet-backed temp views, so the verbs are carried the
+  * extension-library way: Spark's OWN parser produces `MergeIntoTable` /
+  * `UpdateTable` / `DeleteFromTable` / `InsertIntoStatement`, [[run]]
+  * interprets the plan over the session catalog — [[sql]] is the direct
+  * API — and [[GraftSqlParser]] (injected by [[GraftExtensions]])
+  * rewrites a temp-view-target statement to [[GraftDmlViewCommand]], so
+  * a session built with `spark.sql.extensions=graft.plans.GraftExtensions`
+  * runs raw `spark.sql` DML text end-to-end. Catalog tables pass through
+  * untouched to Spark's native paths.
   *
-  * SEMANTICS (ANSI):
+  * The "table mutation" is a temp-view re-point: the new table value is
+  * eagerly materialized (`localCheckpoint`, same discipline as
+  * sql_ctas's read-back) and `createOrReplaceTempView`d over the target
+  * name — the lazy-view equivalent of an atomic table swap.
+  *
+  * SCOPE: the TARGET must be a session-local temp view — enforced in
+  * [[run]], because the re-point is `createOrReplaceTempView`: against a
+  * real catalog table it would silently SHADOW the table (underlying
+  * data unchanged) — catalog tables belong to Spark's native v2
+  * row-level-operation path, which [[GraftSqlParser]] passes through
+  * untouched — and a global temp view is not a valid
+  * `createOrReplaceTempView` name.
+  *
+  * ASSIGNMENTS (UPDATE SET and MERGE's UPDATE / INSERT clauses) are
+  * validated up front by one validator: a key that resolves
+  * (case-insensitively, like the analyzer) to no target column, is
+  * assigned twice in one clause, or is qualified by anything other than
+  * the target alias (Spark's native MERGE rejects source-qualified keys
+  * the same way) throws IllegalArgumentException naming the offender —
+  * where silence would mean a typo'd UPDATE becoming a no-op. Schema
+  * evolution (assigning a column the target lacks) is REFUSED
+  * deliberately: a temp-view target could trivially grow a NULL column,
+  * but Delta requires an explicit `spark.databricks.delta.schema.autoMerge`
+  * opt-in for the same reason we refuse — a typo'd column name and an
+  * intended evolution are indistinguishable in the statement, and the
+  * silent default (insert NULLs, drop the new values) is the worst of
+  * the three. Widen the target first (`SELECT *, CAST(NULL AS t) AS
+  * newcol`), then run the statement — probed and pinned in SqlMergeSpec.
+  *
+  * SEMANTICS (ANSI; MERGE's in [[MergeIntoViews]]):
   *  - UPDATE: rows where the WHERE predicate is TRUE take the
   *    assignments (unassigned columns keep their value); FALSE and
-  *    NULL rows are untouched. Assignment keys are validated exactly
-  *    like MERGE's (unknown column, duplicate assignment, or a
-  *    non-target qualifier throw; schema evolution refused).
-  *    Assignment values may reference the row's (pre-update) columns —
-  *    all assignments read the OLD row, per standard UPDATE semantics.
+  *    NULL rows are untouched. Assignment values may reference the
+  *    row's (pre-update) columns — all assignments read the OLD row,
+  *    per standard UPDATE semantics.
   *  - DELETE: rows where the predicate is TRUE are removed; FALSE and
   *    NULL rows survive (three-valued logic — `WHERE v > k` keeps
   *    NULL-v rows, pinned in SqlDmlSpec and the sql_delete oracle).
@@ -56,21 +90,15 @@ import org.apache.spark.sql.types.StructType
   *    the target column type, the same type-alignment MERGE applies.
   *    `PARTITION (…)` specs are refused — a view has no partitions.
   *
-  * The "mutation" is the MERGE discipline verbatim: the new table
-  * value is eagerly materialized (`localCheckpoint`) and
-  * `createOrReplaceTempView`d over the target name — an atomic
-  * pointer swap. Targets must be session-local temp views for the
-  * same reason MERGE requires it (a catalog table would be silently
-  * shadowed, not written).
-  *
   * Scale posture: UPDATE and DELETE are ONE codegen'd projection /
   * filter over the target scan — no join, no shuffle; predicate and
   * assignment expressions run inside whole-stage codegen. INSERT is a
   * union of the target with the (cast) query result — no shuffle
   * beyond what the query itself does. At 100 TB these become the
   * copy-on-write file rewrites Delta/Iceberg run for the same
-  * statements; the per-row semantics — and everything these
-  * interpreters validate — are identical.
+  * statements, and the view re-point becomes the table format's commit
+  * (a manifest pointer swap); the per-row semantics — and everything
+  * these interpreters validate — are identical.
   */
 object DmlViews {
 
@@ -78,36 +106,16 @@ object DmlViews {
     * Spark's SQL parser, execute it against the session's temp views,
     * and return the (re-pointed) target table. */
   def sql(s: SparkSession, sqlText: String): DataFrame =
-    s.sessionState.sqlParser.parsePlan(sqlText) match {
-      case u: UpdateTable =>
-        runUpdate(s, u)
-        s.table(MergeIntoViews.relOf(u.table)._1.mkString("."))
-      case dl: DeleteFromTable =>
-        runDelete(s, dl)
-        s.table(MergeIntoViews.relOf(dl.table)._1.mkString("."))
-      case i: InsertIntoStatement =>
-        runInsert(s, i)
-        s.table(MergeIntoViews.relOf(i.table)._1.mkString("."))
-      case m: MergeIntoTable =>
-        MergeIntoViews.run(s, m)
-        s.table(MergeIntoViews.relOf(m.targetTable)._1.mkString("."))
-      case other => throw new IllegalArgumentException(
-        s"not a DML statement: ${other.nodeName}")
-    }
+    s.table(run(s, s.sessionState.sqlParser.parsePlan(sqlText)))
 
-  def runUpdate(s: SparkSession, u: UpdateTable): Unit =
-    repoint(s, u.table, interpretUpdate(s, u))
-
-  def runDelete(s: SparkSession, dl: DeleteFromTable): Unit =
-    repoint(s, dl.table, interpretDelete(s, dl))
-
-  def runInsert(s: SparkSession, i: InsertIntoStatement): Unit =
-    repoint(s, i.table, interpretInsert(s, i))
-
-  /** The MERGE target guard + atomic re-point, shared by all three. */
-  private def repoint(s: SparkSession, table: LogicalPlan,
-      result: DataFrame): Unit = {
-    val (parts, _) = MergeIntoViews.relOf(table)
+  /** Execute a parsed DML statement: check the target kind (see SCOPE
+    * above), materialize the target's new rows, re-point the target temp
+    * view at them, and return the target's name. */
+  def run(s: SparkSession, plan: LogicalPlan): String = {
+    val (table, interpret) = statement(s, plan).getOrElse(
+      throw new IllegalArgumentException(
+        s"not a DML statement: ${plan.nodeName}"))
+    val (parts, _) = relOf(table)
     if (parts.size != 1 || !s.sessionState.catalog.isTempView(parts))
       throw new IllegalArgumentException(
         s"DML target ${parts.mkString(".")} must be a session-local " +
@@ -115,58 +123,88 @@ object DmlViews {
           "temp-view re-point (catalog tables take Spark's native v2 " +
           "row-level-operation path), and a global temp view cannot be " +
           "re-pointed by createOrReplaceTempView")
-    result.localCheckpoint(true).createOrReplaceTempView(parts.head)
+    interpret().localCheckpoint(true).createOrReplaceTempView(parts.head)
+    parts.head
   }
 
-  /** Assignment-key resolution + validation, the M11 contract verbatim:
-    * a key may be bare or target-qualified; unknown names, duplicate
-    * assignments, and non-target qualifiers throw. */
-  private def keyName(e: Expression, tAlias: String): String = e match {
-    case ua: UnresolvedAttribute =>
-      if (ua.nameParts.size > 1 && !(ua.nameParts.size == 2 &&
-          ua.nameParts.head.equalsIgnoreCase(tAlias)))
-        throw new IllegalArgumentException(
-          s"UPDATE assignment key ${ua.nameParts.mkString(".")} must be " +
-            "a bare target column or qualified by the target alias " +
-            s"'$tAlias'")
-      ua.nameParts.last
-    case n: NamedExpression => n.name
-    case other => other.sql
+  /** A DML statement's target relation and its interpreter (which builds
+    * the target's new rows, no side effects); None for any other plan.
+    * Under [[GraftExtensions]] the session parser already wraps a
+    * temp-view-target statement in its command, which [[sql]] unwraps. */
+  private[plans] def statement(s: SparkSession, plan: LogicalPlan)
+      : Option[(LogicalPlan, () => DataFrame)] = plan match {
+    case GraftDmlViewCommand(wrapped) => statement(s, wrapped)
+    case u: UpdateTable => Some((u.table, () => interpretUpdate(s, u)))
+    case dl: DeleteFromTable => Some((dl.table, () => interpretDelete(s, dl)))
+    case i: InsertIntoStatement => Some((i.table, () => interpretInsert(s, i)))
+    case m: MergeIntoTable =>
+      Some((m.targetTable, () => MergeIntoViews.interpret(s, m)))
+    case _ => None
   }
 
-  private def validated(as: Seq[Assignment], tAlias: String,
-      schema: StructType): Seq[Assignment] = {
-    val names = as.map(a => keyName(a.key, tAlias))
+  /** (relation name parts, alias) of a parsed statement's target, or of
+    * a MERGE source that names a relation. */
+  private[plans] def relOf(p: LogicalPlan): (Seq[String], String) = p match {
+    case sa: SubqueryAlias => (relOf(sa.child)._1, sa.alias)
+    case u: UnresolvedRelation =>
+      (u.multipartIdentifier, u.multipartIdentifier.last)
+    case other => throw new IllegalArgumentException(
+      "a DML target or MERGE source must be a named relation (temp view " +
+        s"or table), got: ${other.nodeName}")
+  }
+
+  /** Validate one clause's assignments (see ASSIGNMENTS above) and return
+    * them as (target column name, value) pairs. A key may be bare or
+    * qualified by the target alias. */
+  private[plans] def assigned(clause: String, as: Seq[Assignment],
+      tAlias: String, schema: StructType): Seq[(String, Expression)] = {
+    val named = as.map { a =>
+      val name = a.key match {
+        case ua: UnresolvedAttribute =>
+          if (ua.nameParts.size > 1 && !(ua.nameParts.size == 2 &&
+              ua.nameParts.head.equalsIgnoreCase(tAlias)))
+            throw new IllegalArgumentException(
+              s"$clause assignment key ${ua.nameParts.mkString(".")} must " +
+                "be a bare target column or qualified by the target alias " +
+                s"'$tAlias'")
+          ua.nameParts.last
+        case n: NamedExpression => n.name
+        case other => other.sql
+      }
+      name -> a.value
+    }
+    val names = named.map(_._1)
     val unknown = names
       .filterNot(n => schema.fieldNames.exists(_.equalsIgnoreCase(n)))
     if (unknown.nonEmpty) throw new IllegalArgumentException(
-      s"UPDATE SET references unknown target column(s) " +
+      s"$clause references unknown target column(s) " +
         s"${unknown.mkString(", ")}; target columns are " +
         s"${schema.fieldNames.mkString(", ")}. Schema evolution is " +
-        "not supported — widen the target view first, then update")
+        "not supported — widen the target view first, then run the " +
+        "statement")
     val lower = names.map(_.toLowerCase)
     val dups = lower.diff(lower.distinct).distinct
     if (dups.nonEmpty) throw new IllegalArgumentException(
-      s"UPDATE SET assigns target column(s) ${dups.mkString(", ")} " +
+      s"$clause assigns target column(s) ${dups.mkString(", ")} " +
         "more than once")
-    as
+    named
   }
 
   /** Build the updated rows (no side effects): one projection over the
     * target scan, `when(hit, assigned).otherwise(old)` per column. */
   private[graft] def interpretUpdate(s: SparkSession, u: UpdateTable)
       : DataFrame = {
-    val (tName, tAlias) = MergeIntoViews.relOf(u.table)
+    val (tName, tAlias) = relOf(u.table)
     val target = s.table(tName.mkString("."))
     val schema = target.schema
-    val as = validated(u.assignments, tAlias, schema)
+    val as = assigned("UPDATE SET", u.assignments, tAlias, schema)
     // WHERE is three-valued: only predicate-TRUE rows update
     val hit = u.condition.map(c => graftshim.column(c) <=> lit(true))
       .getOrElse(lit(true))
     val outCols = schema.fields.toSeq.map { f =>
-      as.find(a => keyName(a.key, tAlias).equalsIgnoreCase(f.name)) match {
-        case Some(a) => when(hit,
-            graftshim.column(a.value).cast(f.dataType))
+      as.find(_._1.equalsIgnoreCase(f.name)) match {
+        case Some((_, value)) => when(hit,
+            graftshim.column(value).cast(f.dataType))
           .otherwise(col(s"$tAlias.${f.name}")).as(f.name)
         case None => col(s"$tAlias.${f.name}").as(f.name)
       }
@@ -187,7 +225,7 @@ object DmlViews {
     * captured constraint — self-consistent. */
   private[graft] def interpretDelete(s: SparkSession, dl: DeleteFromTable)
       : DataFrame = {
-    val (tName, tAlias) = MergeIntoViews.relOf(dl.table)
+    val (tName, tAlias) = relOf(dl.table)
     val target = s.table(tName.mkString("."))
     target.as(tAlias)
       .filter(!(graftshim.column(dl.condition) <=> lit(true)))
@@ -201,7 +239,7 @@ object DmlViews {
       throw new IllegalArgumentException(
         "INSERT ... PARTITION is not supported on a temp view — a view " +
           "has no partitions; write the partition columns in the SELECT")
-    val (tName, _) = MergeIntoViews.relOf(i.table)
+    val (tName, _) = relOf(i.table)
     val target = s.table(tName.mkString("."))
     val schema = target.schema
     val src = graftshim.ofRows(s, i.query)
@@ -272,33 +310,76 @@ object DmlViews {
   }
 }
 
-/** Command leaves [[GraftSqlParser]] rewrites temp-view-target DML to —
-  * the GraftMergeIntoViewCommand pattern (leaf so the still-unresolved
-  * embedded plan is invisible to checkAnalysis; the interpreter
-  * re-resolves through the session catalog at run time). */
-final case class GraftUpdateViewCommand(update: UpdateTable)
+/** Executes a parsed DML statement over temp views at command-execution
+  * time — the leaf [[GraftSqlParser]] rewrites a temp-view-target
+  * statement to at parse time. A leaf so the embedded (still-unresolved)
+  * statement is invisible to checkAnalysis; [[DmlViews.run]] re-resolves
+  * it through the session catalog when the command runs — the same move
+  * Spark's own CreateViewCommand makes with its unresolved child plan. */
+final case class GraftDmlViewCommand(statement: LogicalPlan)
     extends LeafRunnableCommand {
   override def output: Seq[Attribute] = Nil
   override def run(session: SparkSession): Seq[Row] = {
-    DmlViews.runUpdate(session, update)
+    DmlViews.run(session, statement)
     Seq.empty
   }
 }
 
-final case class GraftDeleteViewCommand(delete: DeleteFromTable)
-    extends LeafRunnableCommand {
-  override def output: Seq[Attribute] = Nil
-  override def run(session: SparkSession): Seq[Row] = {
-    DmlViews.runDelete(session, delete)
-    Seq.empty
-  }
-}
+/** Parser wrapper: `spark.sql("MERGE INTO <temp view> …")` (or UPDATE /
+  * DELETE / INSERT) executes through [[DmlViews]] instead of dying in the
+  * planner with UNSUPPORTED_FEATURE.TABLE_OPERATION. The interception
+  * point is the PARSER (not a resolution rule) deliberately: by the time
+  * an extendedResolutionRules entry sees the node, the analyzer has
+  * already substituted the temp-view plans and rebound every action
+  * expression to their attribute ids (probed — the rule form left the
+  * resolved MergeIntoTable for the planner to reject), whereas the
+  * parse-time plan still carries the raw names the interpreter
+  * re-resolves through the session catalog. Scoped STRICTLY to
+  * temp-view targets, checked at parse-CALL time against the live
+  * catalog — a statement against a real v2 catalog table passes through
+  * untouched to Spark's native row-level-operation path. */
+final class GraftSqlParser(session: SparkSession,
+    delegate: org.apache.spark.sql.catalyst.parser.ParserInterface)
+    extends org.apache.spark.sql.catalyst.parser.ParserInterface {
 
-final case class GraftInsertViewCommand(insert: InsertIntoStatement)
-    extends LeafRunnableCommand {
-  override def output: Seq[Attribute] = Nil
-  override def run(session: SparkSession): Seq[Row] = {
-    DmlViews.runInsert(session, insert)
-    Seq.empty
+  private def rewrite(plan: LogicalPlan): LogicalPlan =
+    DmlViews.statement(session, plan) match {
+      case Some((target, _)) if isTempView(target) => GraftDmlViewCommand(plan)
+      case _ => plan
+    }
+  private def isTempView(p: LogicalPlan): Boolean = p match {
+    case sa: SubqueryAlias => isTempView(sa.child)
+    case u: UnresolvedRelation =>
+      session.sessionState.catalog.isTempView(u.multipartIdentifier)
+    case _ => false
   }
+
+  override def parsePlan(sqlText: String): LogicalPlan =
+    rewrite(delegate.parsePlan(sqlText))
+  override def parsePlanWithParameters(sqlText: String,
+      ctx: org.apache.spark.sql.catalyst.parser.ParameterContext)
+      : LogicalPlan =
+    rewrite(delegate.parsePlanWithParameters(sqlText, ctx))
+  override def parseQuery(sqlText: String): LogicalPlan =
+    delegate.parseQuery(sqlText)
+  override def parseExpression(sqlText: String)
+      : org.apache.spark.sql.catalyst.expressions.Expression =
+    delegate.parseExpression(sqlText)
+  override def parseTableIdentifier(sqlText: String)
+      : org.apache.spark.sql.catalyst.TableIdentifier =
+    delegate.parseTableIdentifier(sqlText)
+  override def parseFunctionIdentifier(sqlText: String)
+      : org.apache.spark.sql.catalyst.FunctionIdentifier =
+    delegate.parseFunctionIdentifier(sqlText)
+  override def parseMultipartIdentifier(sqlText: String): Seq[String] =
+    delegate.parseMultipartIdentifier(sqlText)
+  override def parseTableSchema(sqlText: String)
+      : org.apache.spark.sql.types.StructType =
+    delegate.parseTableSchema(sqlText)
+  override def parseDataType(sqlText: String)
+      : org.apache.spark.sql.types.DataType =
+    delegate.parseDataType(sqlText)
+  override def parseRoutineParam(sqlText: String)
+      : org.apache.spark.sql.types.StructType =
+    delegate.parseRoutineParam(sqlText)
 }

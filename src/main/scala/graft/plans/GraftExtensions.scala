@@ -27,11 +27,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.dotFunction)
     ext.injectOptimizerRule(_ => AnnRewriteRule)
-    // SQL-text MERGE INTO over temp views (M11): Spark's planner only
-    // accepts MERGE against v2 row-level-operation tables; this parser
-    // wrapper routes temp-view targets through the graft interpreter
-    // instead — see MergeIntoViews' scaladoc for semantics, scope, and
-    // why the hook is the parser rather than a resolution rule.
+    // SQL-text MERGE / UPDATE / DELETE / INSERT over temp views (M11,
+    // M12): Spark's planner only accepts them against v2
+    // row-level-operation tables; this parser wrapper routes temp-view
+    // targets through the graft interpreters instead — see DmlViews'
+    // scaladoc for scope, and GraftSqlParser's for why the hook is the
+    // parser rather than a resolution rule.
     ext.injectParser((s, p) => new GraftSqlParser(s, p))
   }
 }

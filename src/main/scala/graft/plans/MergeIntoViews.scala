@@ -1,31 +1,19 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, NamedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.command.LeafRunnableCommand
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, InsertAction, InsertStarAction, LogicalPlan, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateStarAction}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim
 
-/** SQL-text `MERGE INTO` over temp views (M11, r16) — the dbt
-  * incremental-materialization verb, the last §2.M stone.
-  *
-  * Spark 4 parses MERGE for any relation, but ANALYSIS requires a v2
-  * catalog table with `SupportsRowLevelOperations` — against a temp view
-  * or v1 table `spark.sql("MERGE INTO …")` fails with
-  * `UNSUPPORTED_FEATURE.TABLE_OPERATION` / "does not support MERGE"
-  * (probed in SqlMergeSpec, which pins that refusal so a Spark release
-  * that lifts it is noticed). This sandbox cannot host a v2 catalog, and
-  * the engine's tables are parquet-backed temp views, so the verb is
-  * carried the extension-library way: Spark's OWN parser produces the
-  * `MergeIntoTable` logical plan, and this module interprets it over the
-  * session catalog — [[MergeIntoViews.mergeSql]] as the direct API, and
-  * [[GraftSqlParser]] (injected by [[GraftExtensions]]) rewriting a
-  * temp-view-target MERGE to [[GraftMergeIntoViewCommand]] so a session
-  * built with `spark.sql.extensions=graft.plans.GraftExtensions` runs
-  * the raw `spark.sql("MERGE INTO view …")` text end-to-end.
+/** MERGE INTO's own semantics (M11, r16) — the dbt
+  * incremental-materialization verb, the last §2.M stone. The plumbing
+  * MERGE shares with UPDATE / DELETE / INSERT (the entry point
+  * [[DmlViews.sql]], the temp-view target guard and re-point, the
+  * assignment-key validator and the parser hook) lives in [[DmlViews]],
+  * whose scaladoc says why the verbs run as interpreters over temp
+  * views; this object only builds the merged rows.
   *
   * SEMANTICS (ANSI MERGE, the same contract Delta/Iceberg implement):
   * one full-outer join of target and source on the merge condition; for
@@ -52,39 +40,14 @@ import org.apache.spark.sql.graftshim
   * source clauses still enforces the guard (Delta would not), because
   * the full-outer plan would otherwise emit a matched target row once
   * per source match — stricter than Delta, never wrong. Assignments
-  * are validated up front: a SET / INSERT column that resolves
-  * (case-insensitively) to no target column, is assigned twice in one
-  * clause, or is qualified by anything other than the target alias
-  * (Spark's native MERGE rejects source-qualified assignment keys the
-  * same way) throws IllegalArgumentException naming the offender — the
-  * same analysis error Spark's native MERGE raises, where silence
-  * would mean a typo'd UPDATE becoming a no-op.
+  * are validated up front by [[DmlViews]]' validator (unknown,
+  * duplicate or wrongly qualified keys throw; schema evolution is
+  * refused).
   *
-  * The "table mutation" is a temp-view re-point: the merged result is
-  * eagerly materialized (`localCheckpoint`, same discipline as
-  * sql_ctas's read-back) and `createOrReplaceTempView`d over the target
-  * name — the lazy-view equivalent of an atomic table swap.
-  *
-  * SCOPE: the TARGET must be a session-local temp view — enforced in
-  * [[run]], because the re-point "mutation" is `createOrReplaceTempView`:
-  * against a real catalog table that would silently SHADOW the table
-  * (underlying data unchanged) — catalog tables belong to Spark's native
-  * v2 row-level-operation path, which [[GraftSqlParser]] passes through
-  * untouched — and a global temp view is not a valid
-  * `createOrReplaceTempView` name. The source may be any named relation
-  * readable via `spark.table` OR an aliased subquery
-  * (`USING (SELECT …) s`, r17) — the form dbt's incremental
-  * materialization compiles to, analyzed through the session like any
-  * `spark.sql` text. Schema evolution (`WHEN NOT MATCHED INSERT`
-  * naming a column the target lacks) is REFUSED by the assignment
-  * validation above, deliberately: a temp-view target could trivially
-  * grow a NULL column, but Delta requires an explicit
-  * `spark.databricks.delta.schema.autoMerge` opt-in for the same reason
-  * we refuse — a typo'd column name and an intended evolution are
-  * indistinguishable in the statement, and the silent default (insert
-  * NULLs, drop the new values) is the worst of the three. Widen the
-  * target first (`SELECT *, CAST(NULL AS t) AS newcol`), then merge —
-  * probed and pinned in SqlMergeSpec.
+  * The source may be any named relation readable via `spark.table` OR
+  * an aliased subquery (`USING (SELECT …) s`, r17) — the form dbt's
+  * incremental materialization compiles to, analyzed through the
+  * session like any `spark.sql` text.
   *
   * Scale posture: the physical plan is ONE shuffle join on the merge
   * keys (broadcast if one side is small — Spark's stats decide), the
@@ -109,50 +72,9 @@ import org.apache.spark.sql.graftshim
   * Insert-only merges skip the full-outer join entirely: target rows
   * pass through untouched and the inserts come from a LEFT ANTI join
   * of source against target — strictly cheaper, and the reason the
-  * guard is unnecessary there. At 100 TB the view re-point becomes the
-  * table format's commit (Delta/Iceberg swap a manifest pointer the
-  * same way).
+  * guard is unnecessary there.
   */
 object MergeIntoViews {
-
-  /** Parse a MERGE INTO statement with Spark's SQL parser, execute it
-    * against the session's temp views, and return the merged target. */
-  def mergeSql(s: SparkSession, sqlText: String): DataFrame = {
-    s.sessionState.sqlParser.parsePlan(sqlText) match {
-      case m: MergeIntoTable =>
-        run(s, m)
-        s.table(relOf(m.targetTable)._1.mkString("."))
-      case other => throw new IllegalArgumentException(
-        s"not a MERGE INTO statement: ${other.nodeName}")
-    }
-  }
-
-  /** Execute a parsed MERGE: materialize the merged rows, then re-point
-    * the target temp view at them. Guarded on target kind — see the
-    * SCOPE paragraph above. */
-  def run(s: SparkSession, m: MergeIntoTable): Unit = {
-    val (parts, _) = relOf(m.targetTable)
-    if (parts.size != 1 || !s.sessionState.catalog.isTempView(parts))
-      throw new IllegalArgumentException(
-        s"MERGE target ${parts.mkString(".")} must be a session-local " +
-          "temp view: a catalog table would be silently SHADOWED by the " +
-          "temp-view re-point (catalog tables take Spark's native v2 " +
-          "MERGE path), and a global temp view cannot be re-pointed by " +
-          "createOrReplaceTempView")
-    val merged = interpret(s, m).localCheckpoint(true)
-    merged.createOrReplaceTempView(parts.head)
-  }
-
-  /** (relation name parts, alias) of a parsed MERGE side. Shared with
-    * the UPDATE/DELETE/INSERT interpreters ([[DmlViews]], r18). */
-  private[plans] def relOf(p: LogicalPlan): (Seq[String], String) = p match {
-    case sa: SubqueryAlias => (relOf(sa.child)._1, sa.alias)
-    case u: UnresolvedRelation =>
-      (u.multipartIdentifier, u.multipartIdentifier.last)
-    case other => throw new IllegalArgumentException(
-      "MERGE target/source must be a named relation (temp view or " +
-        s"table), got: ${other.nodeName}")
-  }
 
   /** The SOURCE side additionally accepts an aliased subquery
     * (`USING (SELECT …) s`, r17) — the form dbt's incremental
@@ -163,7 +85,7 @@ object MergeIntoViews {
       : (org.apache.spark.sql.DataFrame, String) = p match {
     case sa: SubqueryAlias => sa.child match {
       case _: UnresolvedRelation | _: SubqueryAlias =>
-        val (n, _) = relOf(p); (s.table(n.mkString(".")), sa.alias)
+        val (n, _) = DmlViews.relOf(p); (s.table(n.mkString(".")), sa.alias)
       case subquery => (graftshim.ofRows(s, subquery), sa.alias)
     }
     case u: UnresolvedRelation =>
@@ -223,7 +145,7 @@ object MergeIntoViews {
   /** Build the merged-rows DataFrame (no side effects). */
   private[graft] def interpret(s: SparkSession, m: MergeIntoTable)
       : DataFrame = {
-    val (tName, tAlias) = relOf(m.targetTable)
+    val (tName, tAlias) = DmlViews.relOf(m.targetTable)
     val (source, sAlias) = sourceOf(s, m.sourceTable)
     val target = s.table(tName.mkString("."))
     val schema = target.schema
@@ -233,58 +155,24 @@ object MergeIntoViews {
       col(s"$sAlias.$c").cast(schema(c).dataType)
     def condOf(c: Option[Expression]): Column =
       c.map(graftshim.column).getOrElse(lit(true))
-    def keyName(e: Expression): String = e match {
-      case u: UnresolvedAttribute =>
-        // an assignment key may be bare or target-qualified; a source
-        // (or wrong-alias) qualifier silently rebinding to a target
-        // column is the analyzer error Spark's native MERGE raises
-        if (u.nameParts.size > 1 && !(u.nameParts.size == 2 &&
-            u.nameParts.head.equalsIgnoreCase(tAlias)))
-          throw new IllegalArgumentException(
-            s"MERGE assignment key ${u.nameParts.mkString(".")} must be " +
-              "a bare target column or qualified by the target " +
-              s"alias '$tAlias'")
-        u.nameParts.last
-      case n: NamedExpression => n.name
-      case other => other.sql
-    }
-    // every assignment key must resolve (case-insensitively, like the
-    // analyzer) to exactly one target column, exactly once — an unknown
-    // name is either a typo (a silent no-op update / NULL insert
-    // otherwise) or attempted schema evolution (refused; see SCOPE)
-    def validated(clause: String, as: Seq[Assignment]): Seq[Assignment] = {
-      val names = as.map(a => keyName(a.key))
-      val unknown = names
-        .filterNot(n => schema.fieldNames.exists(_.equalsIgnoreCase(n)))
-      if (unknown.nonEmpty) throw new IllegalArgumentException(
-        s"MERGE $clause references unknown target column(s) " +
-          s"${unknown.mkString(", ")}; target columns are " +
-          s"${schema.fieldNames.mkString(", ")}. Schema evolution is " +
-          "not supported — widen the target view first, then merge")
-      val lower = names.map(_.toLowerCase)
-      val dups = lower.diff(lower.distinct).distinct
-      if (dups.nonEmpty) throw new IllegalArgumentException(
-        s"MERGE $clause assigns target column(s) ${dups.mkString(", ")} " +
-          "more than once")
-      as
-    }
     // assigned columns take the (type-aligned) assignment value;
     // unassigned columns take `miss` — target value for UPDATE, NULL
     // for INSERT. Name match is case-insensitive, like the analyzer's.
-    def fromAssignments(as: Seq[Assignment], miss: String => Column)
-        (c: String): Column =
-      as.find(a => keyName(a.key).equalsIgnoreCase(c))
-        .map(a => graftshim.column(a.value).cast(schema(c).dataType))
+    def fromAssignments(clause: String, as: Seq[Assignment],
+        miss: String => Column): String => Column = {
+      val named = DmlViews.assigned(s"MERGE $clause", as, tAlias, schema)
+      c => named.find(_._1.equalsIgnoreCase(c))
+        .map(a => graftshim.column(a._2).cast(schema(c).dataType))
         .getOrElse(miss(c))
+    }
 
     def insertClauses(srcOnly: Column): Seq[Clause] =
       m.notMatchedActions.map {
         case InsertStarAction(c) => Clause(srcOnly && condOf(c),
           keep = true, scolCast)
         case i: InsertAction => Clause(srcOnly && condOf(i.condition),
-          keep = true, fromAssignments(
-            validated("WHEN NOT MATCHED INSERT", i.assignments),
-            c => lit(null).cast(schema(c).dataType)))
+          keep = true, fromAssignments("WHEN NOT MATCHED INSERT",
+            i.assignments, c => lit(null).cast(schema(c).dataType)))
         case other => throw new IllegalArgumentException(
           s"unsupported WHEN NOT MATCHED action: ${other.nodeName}")
       }
@@ -361,8 +249,8 @@ object MergeIntoViews {
         case u: UpdateAction if u.fromStar && u.assignments.isEmpty =>
           Clause(matched && condOf(u.condition), keep = true, scolCast)
         case u: UpdateAction => Clause(matched && condOf(u.condition),
-          keep = true, fromAssignments(
-            validated("WHEN MATCHED UPDATE", u.assignments), tcol))
+          keep = true,
+          fromAssignments("WHEN MATCHED UPDATE", u.assignments, tcol))
         case DeleteAction(c) => Clause(matched && condOf(c),
           keep = false, tcol)
         case other => throw new IllegalArgumentException(
@@ -371,9 +259,8 @@ object MergeIntoViews {
       insertClauses(srcOnly) ++
       m.notMatchedBySourceActions.map {
         case u: UpdateAction => Clause(tgtOnly && condOf(u.condition),
-          keep = true, fromAssignments(
-            validated("WHEN NOT MATCHED BY SOURCE UPDATE", u.assignments),
-            tcol))
+          keep = true, fromAssignments("WHEN NOT MATCHED BY SOURCE UPDATE",
+            u.assignments, tcol))
         case DeleteAction(c) => Clause(tgtOnly && condOf(c),
           keep = false, tcol)
         case other => throw new IllegalArgumentException(
@@ -421,87 +308,4 @@ object MergeIntoViews {
     joined.select(outCols :+ keep.as("__graft_keep"): _*)
       .filter(col("__graft_keep")).drop("__graft_keep")
   }
-}
-
-/** Executes a parsed MERGE over temp views at command-execution time —
-  * the leaf [[GraftSqlParser]] rewrites a temp-view-target MERGE to at
-  * parse time. A leaf so the
-  * embedded (still-unresolved) MergeIntoTable is invisible to
-  * checkAnalysis; [[MergeIntoViews.run]] re-resolves both sides through
-  * the session catalog when the command runs — the same move Spark's
-  * own CreateViewCommand makes with its unresolved child plan. */
-final case class GraftMergeIntoViewCommand(merge: MergeIntoTable)
-    extends LeafRunnableCommand {
-  override def output: Seq[Attribute] = Nil
-  override def run(session: SparkSession): Seq[Row] = {
-    MergeIntoViews.run(session, merge)
-    Seq.empty
-  }
-}
-
-/** Parser wrapper: `spark.sql("MERGE INTO <temp view> …")` executes
-  * through [[MergeIntoViews]] instead of dying in the planner with
-  * UNSUPPORTED_FEATURE.TABLE_OPERATION. The interception point is the
-  * PARSER (not a resolution rule) deliberately: by the time an
-  * extendedResolutionRules entry sees the node, the analyzer has
-  * already substituted the temp-view plans and rebound every action
-  * expression to their attribute ids (probed — the rule form left the
-  * resolved MergeIntoTable for the planner to reject), whereas the
-  * parse-time plan still carries the raw names the interpreter
-  * re-resolves through the session catalog. Scoped STRICTLY to
-  * temp-view targets, checked at parse-CALL time against the live
-  * catalog — a MERGE against a real v2 catalog table passes through
-  * untouched to Spark's native row-level-operation path. */
-final class GraftSqlParser(session: SparkSession,
-    delegate: org.apache.spark.sql.catalyst.parser.ParserInterface)
-    extends org.apache.spark.sql.catalyst.parser.ParserInterface {
-
-  private def rewrite(plan: LogicalPlan): LogicalPlan = plan match {
-    case m: MergeIntoTable if isTempView(m.targetTable) =>
-      GraftMergeIntoViewCommand(m)
-    // the rest of the DML quartet over temp views (r18) — same
-    // interception point, same catalog-table pass-through
-    case u: UpdateTable if isTempView(u.table) =>
-      GraftUpdateViewCommand(u)
-    case dl: DeleteFromTable if isTempView(dl.table) =>
-      GraftDeleteViewCommand(dl)
-    case i: InsertIntoStatement if isTempView(i.table) =>
-      GraftInsertViewCommand(i)
-    case p => p
-  }
-  private def isTempView(p: LogicalPlan): Boolean = p match {
-    case sa: SubqueryAlias => isTempView(sa.child)
-    case u: UnresolvedRelation =>
-      session.sessionState.catalog.isTempView(u.multipartIdentifier)
-    case _ => false
-  }
-
-  override def parsePlan(sqlText: String): LogicalPlan =
-    rewrite(delegate.parsePlan(sqlText))
-  override def parsePlanWithParameters(sqlText: String,
-      ctx: org.apache.spark.sql.catalyst.parser.ParameterContext)
-      : LogicalPlan =
-    rewrite(delegate.parsePlanWithParameters(sqlText, ctx))
-  override def parseQuery(sqlText: String): LogicalPlan =
-    delegate.parseQuery(sqlText)
-  override def parseExpression(sqlText: String)
-      : org.apache.spark.sql.catalyst.expressions.Expression =
-    delegate.parseExpression(sqlText)
-  override def parseTableIdentifier(sqlText: String)
-      : org.apache.spark.sql.catalyst.TableIdentifier =
-    delegate.parseTableIdentifier(sqlText)
-  override def parseFunctionIdentifier(sqlText: String)
-      : org.apache.spark.sql.catalyst.FunctionIdentifier =
-    delegate.parseFunctionIdentifier(sqlText)
-  override def parseMultipartIdentifier(sqlText: String): Seq[String] =
-    delegate.parseMultipartIdentifier(sqlText)
-  override def parseTableSchema(sqlText: String)
-      : org.apache.spark.sql.types.StructType =
-    delegate.parseTableSchema(sqlText)
-  override def parseDataType(sqlText: String)
-      : org.apache.spark.sql.types.DataType =
-    delegate.parseDataType(sqlText)
-  override def parseRoutineParam(sqlText: String)
-      : org.apache.spark.sql.types.StructType =
-    delegate.parseRoutineParam(sqlText)
 }

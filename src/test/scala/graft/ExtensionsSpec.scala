@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.plans.{AnnRewriteRule, GraftExtensions}
+import graft.plans.{AnnRewriteRule, DmlViews, GraftDmlViewCommand, GraftExtensions}
 
 /** The `spark.sql.extensions` DEPLOYMENT path (SURVEY §4.3): everything
   * else in the suite wires graft functions via runtime `register()` or
@@ -13,8 +13,10 @@ import graft.plans.{AnnRewriteRule, GraftExtensions}
   */
 class ExtensionsSpec extends SparkSpec {
 
-  test("withExtensions session: graft_dot resolves from SQL text and " +
-      "AnnRewriteRule is injected (fires when conf-enabled)") {
+  /** Run `body` on a NEW session built through
+    * `withExtensions(new GraftExtensions)`; the shared session is the
+    * active and default one again afterwards. */
+  private def withExtensionSession(body: SparkSession => Unit): Unit = {
     val base = spark // realize the shared session/context first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -23,6 +25,16 @@ class ExtensionsSpec extends SparkSpec {
     try {
       assert(s2 ne base, "builder must yield a NEW session, else the " +
         "extension injection silently tested nothing")
+      body(s2)
+    } finally {
+      SparkSession.setActiveSession(base)
+      SparkSession.setDefaultSession(base)
+    }
+  }
+
+  test("withExtensions session: graft_dot resolves from SQL text and " +
+      "AnnRewriteRule is injected (fires when conf-enabled)") {
+    withExtensionSession { s2 =>
       // 1. the function registry injection: no GraftExtensions.register()
       //    has run on s2 — SQL-text resolution must come from the extension
       val d = s2.sql(
@@ -50,7 +62,7 @@ class ExtensionsSpec extends SparkSpec {
         !phys.contains("BroadcastNestedLoopJoin"),
         s"injected AnnRewriteRule did not fire:\n${phys.take(600)}")
       // 3. the parser injection (M11, GraftSqlParser →
-      //    GraftMergeIntoViewCommand): raw MERGE INTO text over
+      //    GraftDmlViewCommand): raw MERGE INTO text over
       //    a temp view executes through spark.sql — the statement that
       //    FAILS analysis on a plain session (SqlMergeSpec pins the
       //    refusal) runs end-to-end here
@@ -90,9 +102,37 @@ class ExtensionsSpec extends SparkSpec {
       assert(dml === Seq((1L, 10.5), (2L, 990.0), (9L, 90.0)),
         "injected GraftSqlParser did not execute the UPDATE/DELETE/" +
           "INSERT text")
-    } finally {
-      SparkSession.setActiveSession(base)
-      SparkSession.setDefaultSession(base)
+    }
+  }
+
+  test("GraftSqlParser: all four DML verbs parse to GraftDmlViewCommand " +
+      "on a temp-view target and to Spark's own node on a catalog table") {
+    withExtensionSession { s2 =>
+      s2.sql("SELECT 1L AS k, CAST(1.0 AS DOUBLE) AS v")
+        .createOrReplaceTempView("ext_pp_view")
+      s2.sql("DROP TABLE IF EXISTS ext_pp_table")
+      s2.sql("CREATE TABLE ext_pp_table (k BIGINT, v DOUBLE) USING parquet")
+      try {
+        def parsed(target: String) = Seq(
+          s"UPDATE $target SET v = 2.0 WHERE k = 1",
+          s"DELETE FROM $target WHERE k = 1",
+          s"INSERT INTO $target SELECT 2L, 2.0",
+          s"""MERGE INTO $target t USING ext_pp_view s ON t.k = s.k
+             |WHEN MATCHED THEN UPDATE SET v = s.v""".stripMargin)
+          .map(s2.sessionState.sqlParser.parsePlan)
+        val spark4 = Seq("UpdateTable", "DeleteFromTable",
+          "InsertIntoStatement", "MergeIntoTable")
+        val onView = parsed("ext_pp_view")
+        assert(onView.map(_.getClass.getSimpleName) ===
+          Seq.fill(4)("GraftDmlViewCommand"))
+        assert(onView.collect { case GraftDmlViewCommand(p) =>
+          p.getClass.getSimpleName } === spark4)
+        assert(parsed("ext_pp_table").map(_.getClass.getSimpleName) === spark4)
+        // the direct API parses with the same session parser
+        assert(DmlViews.sql(s2, "UPDATE ext_pp_view SET v = 3.0")
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ===
+          Seq((1L, 3.0)))
+      } finally s2.sql("DROP TABLE IF EXISTS ext_pp_table")
     }
   }
 }

@@ -2,13 +2,16 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-scan gate that keeps harness plumbing at one copy each:
   * [[Session]] builds every session and is the one reader of
   * `SPARK_GRAFT_CPUS`, Hadoop's `FileUtil.fullyDelete` does every
-  * recursive delete. Copies drift apart (session confs did), so this spec
-  * fails when one comes back, and when a script or run doc names a main
+  * recursive delete, and [[graft.plans.DmlViews]] holds the one entry
+  * point, target guard and parser command of the four DML verbs.
+  * Copies drift apart (session confs did), so this spec fails when one
+  * comes back, and when a script or run doc names a main
   * that no longer exists.
   */
 class OneCopySpec extends AnyFunSuite {
@@ -69,6 +72,64 @@ class OneCopySpec extends AnyFunSuite {
         |  }
         |""".stripMargin
     assert(recursiveDelete.findFirstIn(listing).isEmpty)
+  }
+
+  /** The DML quartet's shared plumbing, which MERGE once carried a copy
+    * of: the parser's command leaf, the temp-view target guard (matched
+    * in a string literal, so the scaladoc that explains it does not
+    * count) and MERGE's own SQL entry point. */
+  private val commandLeaf = """\bextends LeafRunnableCommand\b""".r
+  private val targetGuard = """"[^"\n]*\bmust be a session-local\b""".r
+  private val mergeSqlDef = """\bdef mergeSql\b""".r
+
+  /** One line per DML plumbing rule that `srcs` break, naming where the
+    * copies are. */
+  private def dmlPlumbingCopies(srcs: Seq[(String, String)]): Seq[String] = {
+    def rule(re: Regex, want: Int, what: String) = {
+      val found = srcs.map { case (p, text) => p -> re.findAllMatchIn(text).size }
+        .filter(_._2 > 0)
+      if (found.map(_._2).sum == want) None
+      else Some(s"$what: want $want, found " +
+        found.map { case (p, n) => s"$p (${n}x)" }.mkString("[", ", ", "]"))
+    }
+    Seq(
+      rule(commandLeaf, 1, "classes extending LeafRunnableCommand " +
+        "(GraftDmlViewCommand carries every DML verb)"),
+      rule(targetGuard, 1, "temp-view target guards (DmlViews.run)"),
+      rule(mergeSqlDef, 0, "MERGE-only entry points (use DmlViews.sql)")
+    ).flatten
+  }
+
+  test("src/main/scala has one DML command leaf, one temp-view target " +
+      "guard and no MERGE-only entry point") {
+    val found = dmlPlumbingCopies(mainSources.map { case (p, text) =>
+      p.toString -> text })
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the DML plumbing scan has teeth: MERGE's own command, guard and " +
+      "entry point beside the shared ones are flagged; one copy each, " +
+      "with the guard explained in a comment, is not") {
+    val shared = "DmlViews.scala" ->
+      """  * SCOPE: the TARGET must be a session-local temp view — enforced
+        |  def run(s: SparkSession, plan: LogicalPlan): String = {
+        |      throw new IllegalArgumentException(
+        |        s"DML target ${parts.mkString(".")} must be a session-local " +
+        |final case class GraftDmlViewCommand(statement: LogicalPlan)
+        |    extends LeafRunnableCommand {
+        |""".stripMargin
+    assert(dmlPlumbingCopies(Seq(shared)).isEmpty)
+    val mergeCopy = "MergeIntoViews.scala" ->
+      """  def mergeSql(s: SparkSession, sqlText: String): DataFrame = {
+        |      throw new IllegalArgumentException(
+        |        s"MERGE target ${parts.mkString(".")} must be a session-local " +
+        |final case class GraftMergeIntoViewCommand(merge: MergeIntoTable)
+        |    extends LeafRunnableCommand {
+        |""".stripMargin
+    val found = dmlPlumbingCopies(Seq(shared, mergeCopy))
+    assert(found.size == 3, found.mkString("\n"))
+    assert(found.forall(_.contains("MergeIntoViews.scala (1x)")),
+      found.mkString("\n"))
   }
 
   /** `graft.<Name>` references in the run instructions: every script,

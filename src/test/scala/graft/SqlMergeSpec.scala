@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.MergeIntoViews
+import graft.plans.DmlViews
 
 /** MERGE INTO over temp views (M11) — MergeIntoViews' ANSI-MERGE
   * semantics on golden micro-data, plus the pinned Spark refusal that
@@ -36,7 +36,7 @@ class SqlMergeSpec extends SparkSpec {
   test("mergeSql: all three clause groups, first-clause-wins ordering, " +
       "insert NULL-fill, and the target view re-point") {
     freshViews()
-    val out = MergeIntoViews.mergeSql(spark,
+    val out = DmlViews.sql(spark,
       """MERGE INTO mrg_tgt t USING mrg_src s ON t.k = s.k
         |WHEN MATCHED AND s.delta > 100.0 THEN DELETE
         |WHEN MATCHED THEN UPDATE SET v = t.v + s.delta, st = 'upd'
@@ -58,7 +58,7 @@ class SqlMergeSpec extends SparkSpec {
     // and the merge is re-runnable against the new state: nothing
     // matches the (already applied) source deltas' delete bar, k=2
     // updates again
-    val again = MergeIntoViews.mergeSql(spark,
+    val again = DmlViews.sql(spark,
       """MERGE INTO mrg_tgt t USING mrg_src s ON t.k = s.k
         |WHEN MATCHED AND s.delta > 100.0 THEN DELETE
         |WHEN MATCHED THEN UPDATE SET v = t.v + s.delta, st = 'upd'
@@ -76,7 +76,7 @@ class SqlMergeSpec extends SparkSpec {
       .toDF("k", "v", "st").createOrReplaceTempView("mrg_tgt2")
     Seq((2L, 99.0, "z"), (7L, 70.0, "n"))
       .toDF("k", "v", "st").createOrReplaceTempView("mrg_src2")
-    val out = MergeIntoViews.mergeSql(spark,
+    val out = DmlViews.sql(spark,
       """MERGE INTO mrg_tgt2 t USING mrg_src2 s ON t.k = s.k
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
@@ -90,7 +90,7 @@ class SqlMergeSpec extends SparkSpec {
       .toDF("k", "v").createOrReplaceTempView("mrg_tgt3")
     Seq((Some(1L), 100.0), (None, 200.0))
       .toDF("k", "delta").createOrReplaceTempView("mrg_src3")
-    val out = MergeIntoViews.mergeSql(spark,
+    val out = DmlViews.sql(spark,
       """MERGE INTO mrg_tgt3 t USING mrg_src3 s ON t.k = s.k
         |WHEN MATCHED THEN UPDATE SET v = s.delta
         |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.delta)
@@ -107,7 +107,7 @@ class SqlMergeSpec extends SparkSpec {
   test("assignment keys resolve case-insensitively, like the analyzer") {
     Seq((1L, 10.0)).toDF("k", "V_col").createOrReplaceTempView("mrg_tgt4")
     Seq((1L, 5.0)).toDF("k", "delta").createOrReplaceTempView("mrg_src4")
-    val out = MergeIntoViews.mergeSql(spark,
+    val out = DmlViews.sql(spark,
       """MERGE INTO mrg_tgt4 t USING mrg_src4 s ON t.k = s.k
         |WHEN MATCHED THEN UPDATE SET v_COL = s.delta""".stripMargin)
       .as[(Long, Double)].collect().toSeq
@@ -153,7 +153,7 @@ class SqlMergeSpec extends SparkSpec {
     Seq((1L, 1.0), (1L, 2.0))
       .toDF("k", "delta").createOrReplaceTempView("mrg_ne_src")
     val e = intercept[Exception] {
-      plans.MergeIntoViews.mergeSql(spark,
+      plans.DmlViews.sql(spark,
         """MERGE INTO mrg_ne_tgt t USING mrg_ne_src s
           |ON t.k = s.k AND s.delta > 0.0
           |WHEN MATCHED THEN UPDATE SET v = s.delta""".stripMargin)
@@ -162,7 +162,7 @@ class SqlMergeSpec extends SparkSpec {
       s"expected the cardinality error, got: ${messages(e).take(400)}")
     // and a residual condition that keeps matches unique succeeds
     Seq((1L, 10.0)).toDF("k", "v").createOrReplaceTempView("mrg_ne_tgt")
-    val out = plans.MergeIntoViews.mergeSql(spark,
+    val out = plans.DmlViews.sql(spark,
       """MERGE INTO mrg_ne_tgt t USING mrg_ne_src s
         |ON t.k = s.k AND s.delta > 1.5
         |WHEN MATCHED THEN UPDATE SET v = s.delta""".stripMargin)
@@ -184,7 +184,7 @@ class SqlMergeSpec extends SparkSpec {
     Seq((1L, 100.0), (1L, 200.0), (3L, 300.0))
       .toDF("k", "delta").createOrReplaceTempView("mrg_card_src")
     val e = intercept[Exception] {
-      plans.MergeIntoViews.mergeSql(spark,
+      plans.DmlViews.sql(spark,
         """MERGE INTO mrg_card_tgt t USING mrg_card_src s ON t.k = s.k
           |WHEN MATCHED THEN UPDATE SET v = s.delta""".stripMargin)
     }
@@ -199,7 +199,7 @@ class SqlMergeSpec extends SparkSpec {
       .toDF("k", "v").createOrReplaceTempView("mrg_io_tgt")
     Seq((1L, 100.0), (1L, 200.0), (3L, 300.0))
       .toDF("k", "delta").createOrReplaceTempView("mrg_io_src")
-    val out = plans.MergeIntoViews.mergeSql(spark,
+    val out = plans.DmlViews.sql(spark,
       """MERGE INTO mrg_io_tgt t USING mrg_io_src s ON t.k = s.k
         |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.delta)
         |""".stripMargin)
@@ -230,7 +230,7 @@ class SqlMergeSpec extends SparkSpec {
     Seq((1L, 10.0)).toDF("k", "v").createOrReplaceTempView("mrg_card2_tgt")
     Seq((9L, 90.0), (9L, 91.0), (1L, 11.0))
       .toDF("k", "delta").createOrReplaceTempView("mrg_card2_src")
-    val out = plans.MergeIntoViews.mergeSql(spark,
+    val out = plans.DmlViews.sql(spark,
       """MERGE INTO mrg_card2_tgt t USING mrg_card2_src s ON t.k = s.k
         |WHEN MATCHED THEN UPDATE SET v = s.delta
         |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.delta)
@@ -243,7 +243,7 @@ class SqlMergeSpec extends SparkSpec {
       "(a typo) throws naming the offender, never a silent no-op") {
     freshViews()
     val e = intercept[IllegalArgumentException] {
-      plans.MergeIntoViews.mergeSql(spark,
+      plans.DmlViews.sql(spark,
         """MERGE INTO mrg_tgt t USING mrg_src s ON t.k = s.k
           |WHEN MATCHED THEN UPDATE SET vv = s.delta""".stripMargin)
     }
@@ -251,7 +251,7 @@ class SqlMergeSpec extends SparkSpec {
       e.getMessage.contains("unknown target column"))
     // duplicate assignment to one column in one clause is also an error
     val e2 = intercept[IllegalArgumentException] {
-      plans.MergeIntoViews.mergeSql(spark,
+      plans.DmlViews.sql(spark,
         """MERGE INTO mrg_tgt t USING mrg_src s ON t.k = s.k
           |WHEN MATCHED THEN UPDATE SET v = s.delta, V = 0.0""".stripMargin)
     }
@@ -264,7 +264,7 @@ class SqlMergeSpec extends SparkSpec {
     Seq((2L, 20.0, "x"))
       .toDF("k", "v", "extra").createOrReplaceTempView("mrg_ev_src")
     val e = intercept[IllegalArgumentException] {
-      plans.MergeIntoViews.mergeSql(spark,
+      plans.DmlViews.sql(spark,
         """MERGE INTO mrg_ev_tgt t USING mrg_ev_src s ON t.k = s.k
           |WHEN NOT MATCHED THEN
           |  INSERT (k, v, extra) VALUES (s.k, s.v, s.extra)""".stripMargin)
@@ -274,7 +274,7 @@ class SqlMergeSpec extends SparkSpec {
     // the workaround the scaladoc names: widen the target, then merge
     spark.sql("""CREATE OR REPLACE TEMP VIEW mrg_ev_tgt2 AS
       |SELECT *, CAST(NULL AS STRING) AS extra FROM mrg_ev_tgt""".stripMargin)
-    val out = plans.MergeIntoViews.mergeSql(spark,
+    val out = plans.DmlViews.sql(spark,
       """MERGE INTO mrg_ev_tgt2 t USING mrg_ev_src s ON t.k = s.k
         |WHEN NOT MATCHED THEN
         |  INSERT (k, v, extra) VALUES (s.k, s.v, s.extra)""".stripMargin)
@@ -286,7 +286,7 @@ class SqlMergeSpec extends SparkSpec {
       "(the form dbt incremental compiles to); unaliased non-relation " +
       "sources are refused") {
     freshViews()
-    val out = plans.MergeIntoViews.mergeSql(spark,
+    val out = plans.DmlViews.sql(spark,
       """MERGE INTO mrg_tgt t
         |USING (SELECT k, delta * 2 AS d2 FROM mrg_src
         |       WHERE delta < 100.0) s
@@ -310,7 +310,7 @@ class SqlMergeSpec extends SparkSpec {
     try {
       Seq((1L, 9.0)).toDF("k", "v").createOrReplaceTempView("mrg_guard_src")
       val e = intercept[IllegalArgumentException] {
-        plans.MergeIntoViews.mergeSql(spark,
+        plans.DmlViews.sql(spark,
           s"""MERGE INTO $tbl t USING mrg_guard_src s ON t.k = s.k
              |WHEN MATCHED THEN UPDATE SET v = s.v""".stripMargin)
       }
@@ -321,7 +321,7 @@ class SqlMergeSpec extends SparkSpec {
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
     Seq((1L, 2.0)).toDF("k", "v").createOrReplaceGlobalTempView("mrg_gt")
     val eg = intercept[IllegalArgumentException] {
-      plans.MergeIntoViews.mergeSql(spark,
+      plans.DmlViews.sql(spark,
         """MERGE INTO global_temp.mrg_gt t USING mrg_guard_src s
           |ON t.k = s.k
           |WHEN MATCHED THEN UPDATE SET v = s.v""".stripMargin)
