@@ -1,9 +1,13 @@
 #!/usr/bin/env python3
-"""Local stand-in for the driver's t2 gate: run graft.Verify at a given SF,
-then compare each query's parquet output against DuckDB running the paired
-oracle SQL on the same tables. Not part of the engine — dev tooling only.
+"""Local stand-in for the driver's t2 gate: compare what graft.Verify wrote
+into an outdir (one parquet dir per query, plus oracle_sql.json) against
+DuckDB running the paired oracle SQL on the tables of the given SF.
 
-Usage: python3 scripts/check_oracle.py [sfdir] [outdir] [--skip-verify]
+This script does not run graft.Verify. Run Verify first, at the same SF,
+into a fresh outdir: an outdir left by an older build is compared as it
+stands. Not part of the engine — dev tooling only.
+
+Usage: python3 scripts/check_oracle.py [sfdir] [outdir]
 """
 import sys, os, json, glob
 import duckdb

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -36,10 +36,44 @@ import graft.Tables
   *    small-star contraction (Kiveris et al., "Connected Components in
   *    MapReduce and Beyond") takes over AUTOMATICALLY when propagation
   *    hits MaxIter (see [[starContract]]); dup graphs never trigger it.
+  *
+  * The graph_* queries over the customer–supplier graph all start from
+  * one edge base, [[edgeBase]], and its [[undirected]] form, mirrored in
+  * the DuckDB oracles by `dEdgeBase` and `dUndirected`.
   */
 object Graph {
 
   private val MaxIter = 20
+
+  /** Supplier node ids are offset by 10^9 so the customer and supplier
+    * id spaces of the bipartite graph stay disjoint. */
+  private val SupplierOffset = 1000000000L
+
+  /** The customer–supplier bipartite graph induced by orders⋈lineitem:
+    * an edge links a customer (src = o_custkey) to every supplier that
+    * shipped one of its orders (dst = SupplierOffset + l_suppkey), one
+    * row per distinct pair. Distinct here is what [[pageRank]] needs:
+    * symmetrizing distinct pairs of disjoint id spaces cannot introduce
+    * duplicates, so the undirected form never dedupes again (600k pairs
+    * deduped here instead of the 1.2M-row symmetric set, half the
+    * distinct shuffle). */
+  private[graft] def edgeBase(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d).select("o_orderkey", "o_custkey")
+      .join(Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
+        col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("src"),
+        (lit(SupplierOffset) + col("l_suppkey")).as("dst"))
+      .distinct()
+
+  /** Both orientations of every (src, dst) edge, as a UNION ALL. */
+  private[graft] def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
+      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+
+  /** A node's side of the bipartite graph, from its id. */
+  private def kind: Column =
+    when(col("id") >= SupplierOffset, "supplier").otherwise("customer")
+      .as("kind")
 
   /** Connected components of an undirected edge list. `edges` has columns
     * (src, dst); returns (doc_id, comp) where comp is the min vertex id in
@@ -50,9 +84,7 @@ object Graph {
     // Materialize the edge list ONCE — it is typically the output of a
     // whole candidate-generation pipeline (MinHash+LSH here); without this
     // checkpoint every iteration would recompute that upstream plan.
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false)
+    val sym = undirected(edges).localCheckpoint(false)
     // Propagate over EDGE-ENDPOINT vertices only: a vertex with no edges
     // is its own component and its label can never change, so it has no
     // business riding every iteration's shuffle. For dedup graphs the
@@ -220,43 +252,20 @@ object Graph {
     *
     * Scale: each iteration is one shuffle join of edges⋈ranks on src plus
     * one aggregation on dst — linear in |E|, the Pregel message-passing
-    * shape. Edges and degrees are computed once and localCheckpoint'ed
-    * (A/B-measured faster than a lineage-keeping persist here: the three
-    * chained iterations replan over the cached relation each time, and
-    * LogicalRDD leaves keep the plan small; reliable `checkpoint` on a
-    * cluster); N is a driver-side scalar (model parameter). Dangling
-    * nodes don't arise: symmetrized edges give every node out-degree ≥ 1.
+    * shape. N is a driver-side scalar (model parameter). Dangling nodes
+    * don't arise: symmetrized edges give every node out-degree ≥ 1.
+    * `edges0` must carry each undirected edge as ONE distinct (src, dst)
+    * pair, as [[edgeBase]] does.
     */
   private[graft] def pageRank(edges0: DataFrame, iters: Int): DataFrame = {
-    // Precondition: `edges0` carries each undirected edge as ONE distinct
-    // (src, dst) pair (callers dedupe where they know the structure — the
-    // bipartite query below dedupes 600k pairs instead of this helper
-    // re-deduping the 1.2M-row symmetrized set, halving the distinct
-    // shuffle). Symmetrizing distinct pairs of distinct endpoints cannot
-    // introduce duplicates.
-    val sym = edges0.select(col("src"), col("dst"))
-      .union(edges0.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false)
-    // deg is node-sized — cache it (and ride every later use through a
-    // broadcast) instead of materializing the edge×deg join: recomputing
-    // msgs per iteration is a map-side broadcast join over the
-    // checkpointed edges, strictly cheaper than writing/reading an
-    // edge-wide checkpoint.
-    val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
+    val (deg, msgs) = rankPrelude(edges0)
     // No broadcast() hints on deg/ranks: they are node-sized, small here
     // (AQE broadcasts them) but |V|-scale on a web graph, where these
     // joins must fall back to shuffles on src — still linear per iteration.
     val n = deg.count()
-    val msgs = sym.join(deg, "src")
     var ranks = deg.select(col("src").as("id"), lit(1.0 / n).as("pr"))
     for (_ <- 1 to iters) {
-      val contrib = msgs
-        .join(ranks.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"),
-          (col("pr") / col("deg"))
-            .cast(org.apache.spark.sql.types.DecimalType(30, 15)).as("c"))
-      ranks = contrib.groupBy("id")
+      ranks = contributions(msgs, ranks).groupBy("id")
         .agg((lit(0.15 / n) +
           lit(0.85) * sum("c").cast("double")).as("pr"))
     }
@@ -273,28 +282,18 @@ object Graph {
     * frame (broadcast at any scale). */
   private[graft] def personalizedPageRank(edges0: DataFrame,
       iters: Int): DataFrame = {
-    val sym = edges0.select(col("src"), col("dst"))
-      .union(edges0.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false)
-    val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
-    val seeds = deg.filter(col("src") < 1000000000L)
+    val (deg, msgs) = rankPrelude(edges0)
+    val seeds = deg.filter(col("src") < SupplierOffset)
       .select(col("src").as("id")).orderBy("id").limit(3)
       .withColumn("isSeed", lit(1))
       .localCheckpoint(false)
-    val msgs = sym.join(deg, "src")
     var ranks = deg.select(col("src").as("id"))
       .join(broadcast(seeds), Seq("id"), "left")
       .select(col("id"),
         when(col("isSeed").isNotNull, lit(1.0) / lit(3.0))
           .otherwise(lit(0.0)).as("pr"))
     for (_ <- 1 to iters) {
-      val contrib = msgs
-        .join(ranks.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"),
-          (col("pr") / col("deg"))
-            .cast(org.apache.spark.sql.types.DecimalType(30, 15)).as("c"))
-      ranks = contrib.groupBy("id")
+      ranks = contributions(msgs, ranks).groupBy("id")
         .agg(sum("c").cast("double").as("flow"))
         .join(broadcast(seeds), Seq("id"), "left")
         .select(col("id"),
@@ -303,6 +302,33 @@ object Graph {
     }
     ranks
   }
+
+  /** The set-up [[pageRank]] and [[personalizedPageRank]] share: the
+    * node-sized out-degree table `deg`, and `msgs`, the undirected edges
+    * each carrying its source's degree. Edges and degrees are computed
+    * once and localCheckpoint'ed (A/B-measured faster than a
+    * lineage-keeping persist here: the chained iterations replan over
+    * the cached relation each time, and LogicalRDD leaves keep the plan
+    * small; reliable `checkpoint` on a cluster). deg is cached and rides
+    * every later use through a broadcast instead of materializing the
+    * edge×deg join: recomputing msgs per iteration is a map-side
+    * broadcast join over the checkpointed edges, strictly cheaper than
+    * writing/reading an edge-wide checkpoint. */
+  private def rankPrelude(edges0: DataFrame): (DataFrame, DataFrame) = {
+    val sym = undirected(edges0).localCheckpoint(false)
+    val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
+      .localCheckpoint(false)
+    (deg, sym.join(deg, "src"))
+  }
+
+  /** One iteration's messages: each edge sends `pr/deg` of its source to
+    * its dst, quantized to DECIMAL(30,15) before any sum (the determinism
+    * contract of [[pageRank]]). Returns (id, c), one row per edge. */
+  private def contributions(msgs: DataFrame, ranks: DataFrame): DataFrame =
+    msgs.join(ranks.withColumnRenamed("id", "src"), "src")
+      .select(col("dst").as("id"),
+        (col("pr") / col("deg"))
+          .cast(org.apache.spark.sql.types.DecimalType(30, 15)).as("c"))
 
   /** Per-node triangle counts of an undirected graph given as CANONICAL
     * edges (a < b, one row per edge). The compact-forward algorithm as two
@@ -324,11 +350,28 @@ object Graph {
       .groupBy("doc_id").agg(count(lit(1)).as("n_tri"))
   }
 
+  /** DuckDB mirror of [[edgeBase]]: the CTE `e0`. */
+  private val dEdgeBase =
+    s"""e0 AS (SELECT DISTINCT o_custkey AS src,
+      |    $SupplierOffset + l_suppkey AS dst
+      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey)""".stripMargin
+
+  /** DuckDB mirror of [[undirected]] over the edge base: `e0` plus its
+    * symmetric form `e`. */
+  private val dUndirected =
+    s"""$dEdgeBase,
+      |e AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0)""".stripMargin
+
+  /** DuckDB mirror of [[kind]]. */
+  private val dKind =
+    s"""CASE WHEN id >= $SupplierOffset THEN 'supplier' ELSE 'customer' END
+      |    AS kind""".stripMargin
+
   /** Shared DuckDB CTE: the customer–supplier bipartite graph's symmetric
-    * edge list `e` and the 3-round unrolled synchronous LPA labels `l3`
-    * (most-frequent neighbor label, ties to the smallest) — the exact
-    * mirror of [[labelPropagate]] over the queries' edge base. Used by the
-    * graph_label_prop and graph_modularity oracles.
+    * edge list `e` ([[dUndirected]]) and the 3-round unrolled synchronous
+    * LPA labels `l3` (most-frequent neighbor label, ties to the smallest)
+    * — the exact mirror of [[labelPropagate]] over the queries' edge base.
+    * Used by the graph_label_prop and graph_modularity oracles.
     */
   private def dLpaCte: String = {
     def round(k: Int) =
@@ -338,10 +381,7 @@ object Graph {
         |      ORDER BY count(*) DESC, l.lbl) AS rn
         |  FROM e JOIN l${k - 1} l ON e.dst = l.id
         |  GROUP BY e.src, l.lbl) WHERE rn = 1)""".stripMargin
-    s"""e0 AS (SELECT DISTINCT o_custkey AS src,
-      |    1000000000 + l_suppkey AS dst
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-      |e AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
+    s"""$dUndirected,
       |l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM e),
       |${round(1)},
       |${round(2)},
@@ -433,23 +473,11 @@ object Graph {
     }),
 
     // PageRank (3 iterations, damping 0.85) over the bipartite
-    // customer–supplier graph induced by orders⋈lineitem: an edge links a
-    // customer to every supplier that shipped one of its orders. Supplier
-    // node ids are offset by 10^9 to keep the id spaces disjoint.
-    "graph_pagerank" -> ((s, d) => {
-      val edges = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-        .join(Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (lit(1000000000L) + col("l_suppkey")).as("dst"))
-        .distinct() // pageRank precondition: one row per undirected edge
-      pageRank(edges, 3)
-        .select(col("id"),
-          when(col("id") >= 1000000000L, "supplier").otherwise("customer")
-            .as("kind"),
-          round(col("pr"), 9).as("pr"))
-        .orderBy("id")
-    }),
+    // customer–supplier graph ([[edgeBase]]).
+    "graph_pagerank" -> ((s, d) =>
+      pageRank(edgeBase(s, d), 3)
+        .select(col("id"), kind, round(col("pr"), 9).as("pr"))
+        .orderBy("id")),
 
     // Personalized PageRank (3 iterations, damping 0.85, restart mass on
     // a 3-node seed set — the graph-RAG relevance primitive: "what is
@@ -462,20 +490,10 @@ object Graph {
     // as the DIVISION 0.15/3 in both engines, never a 0.05 literal (the
     // two doubles differ in the last ulp). Output is the top-50 shortlist
     // by rounded ppr — the retrieval answer shape, not a full node dump.
-    "graph_ppr" -> ((s, d) => {
-      val edges = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-        .join(Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (lit(1000000000L) + col("l_suppkey")).as("dst"))
-        .distinct()
-      personalizedPageRank(edges, 3)
-        .select(col("id"),
-          when(col("id") >= 1000000000L, "supplier").otherwise("customer")
-            .as("kind"),
-          round(col("pr"), 9).as("ppr"))
-        .orderBy(desc("ppr"), asc("id")).limit(50)
-    }),
+    "graph_ppr" -> ((s, d) =>
+      personalizedPageRank(edgeBase(s, d), 3)
+        .select(col("id"), kind, round(col("pr"), 9).as("ppr"))
+        .orderBy(desc("ppr"), asc("id")).limit(50)),
 
     // HITS hubs & authorities (L114; Kleinberg 1999), 2 synchronous
     // iterations with L1 normalization, over the DIRECTED bipartite
@@ -496,12 +514,7 @@ object Graph {
     // exactly like pageRank's N.
     "graph_hits" -> ((s, d) => {
       val dec = org.apache.spark.sql.types.DecimalType(30, 15)
-      val edges = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-        .join(Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (lit(1000000000L) + col("l_suppkey")).as("dst"))
-        .distinct().localCheckpoint(false)
+      val edges = edgeBase(s, d).localCheckpoint(false)
       val nC = edges.select("src").distinct().count()
       var hub = edges.select(col("src").as("id")).distinct()
         .select(col("id"), lit(1.0 / nC).as("h"))
@@ -669,25 +682,15 @@ object Graph {
     // per-node window over that node's distinct incoming labels (bounded
     // by its degree) — the Pregel message shape, linear in |E| per round.
     "graph_label_prop" -> ((s, d) => {
-      val edges0 = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-        .join(Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (lit(1000000000L) + col("l_suppkey")).as("dst"))
-        .distinct()
-      val sym = edges0
-        .union(edges0.select(col("dst").as("src"), col("src").as("dst")))
-        // edge base computed once, like pageRank's sym. Eager: with the
-        // lazy form one LPA join's broadcast choice varied between runs
-        // of a shared session (PlanSnapSpec's graph_label_prop entry).
-        .localCheckpoint()
+      // undirected edges computed once, like rankPrelude's sym. Eager:
+      // with the lazy form one LPA join's broadcast choice varied between
+      // runs of a shared session (PlanSnapSpec's graph_label_prop entry).
+      val sym = undirected(edgeBase(s, d)).localCheckpoint()
       labelPropagate(sym, 3)
         .withColumn("comm_size", count(lit(1)).over(
           Window.partitionBy("lbl")))
-        .select(col("id"),
-          when(col("id") >= 1000000000L, "supplier").otherwise("customer")
-            .as("kind"),
-          col("lbl").as("community"), col("comm_size"))
+        .select(col("id"), kind, col("lbl").as("community"),
+          col("comm_size"))
         .orderBy("id")
     }),
 
@@ -702,15 +705,7 @@ object Graph {
     // (linear in ¦E¦), a degree aggregate, and three 1-row scalars
     // crossed (the funnel shape).
     "graph_modularity" -> ((s, d) => {
-      val edges0 = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-        .join(Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (lit(1000000000L) + col("l_suppkey")).as("dst"))
-        .distinct()
-      val sym = edges0
-        .union(edges0.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(false)
+      val sym = undirected(edgeBase(s, d)).localCheckpoint(false)
       // labels are consumed four times below (both endpoint joins, the
       // degree-sum join, and the node count); the static plan replicates
       // the 3-round LPA chain per consumer (41 Exchanges / 18 scans), but
@@ -750,15 +745,7 @@ object Graph {
     // final ratio is IEEE. Shapes: one degree aggregate + two joins onto
     // the edge list, linear in ¦E¦.
     "graph_assortativity" -> ((s, d) => {
-      val edges0 = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-        .join(Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (lit(1000000000L) + col("l_suppkey")).as("dst"))
-        .distinct()
-      val sym = edges0
-        .union(edges0.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(false)
+      val sym = undirected(edgeBase(s, d)).localCheckpoint(false)
       val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
       val d19 = org.apache.spark.sql.types.DecimalType(19, 0)
       val d30 = org.apache.spark.sql.types.DecimalType(30, 0)
@@ -792,17 +779,9 @@ object Graph {
     // truncation); integer-only, so the oracle is an exact unrolled CTE.
     // Seeds: customers ≡ 0 (mod 100) — a deterministic sample of sources.
     "graph_bfs" -> ((s, d) => {
-      val edges0 = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-        .join(Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (lit(1000000000L) + col("l_suppkey")).as("dst"))
-        .distinct()
-      val sym = edges0
-        .union(edges0.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(false)
+      val sym = undirected(edgeBase(s, d)).localCheckpoint(false)
       val seeds = sym.select(col("src").as("id")).distinct()
-        .filter(col("id") % 100 === 0 && col("id") < 1000000000L)
+        .filter(col("id") % 100 === 0 && col("id") < SupplierOffset)
       var dist = seeds.select(col("id"), lit(0).as("dist"))
       for (_ <- 1 to 4) {
         val nbr = sym
@@ -812,12 +791,7 @@ object Graph {
           .groupBy("id").agg(min("nd").as("dist"))
           .localCheckpoint(false)
       }
-      dist
-        .select(col("id"),
-          when(col("id") >= 1000000000L, "supplier").otherwise("customer")
-            .as("kind"),
-          col("dist"))
-        .orderBy("id")
+      dist.select(col("id"), kind, col("dist")).orderBy("id")
     })
   )
 
@@ -968,10 +942,7 @@ object Graph {
           |  FROM e JOIN r${k - 1} r ON e.src = r.id
           |  JOIN deg ON e.src = deg.src, nn
           |  GROUP BY e.dst, nn.n)""".stripMargin
-      s"""WITH e0 AS (SELECT DISTINCT o_custkey AS src,
-        |    1000000000 + l_suppkey AS dst
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |e AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
+      s"""WITH $dUndirected,
         |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
         |nn AS (SELECT count(*) AS n FROM deg),
         |r0 AS (SELECT src AS id, CAST(1 AS DOUBLE)/nn.n AS pr FROM deg, nn),
@@ -979,8 +950,7 @@ object Graph {
         |${iter(2)},
         |${iter(3)}
         |SELECT id,
-        |  CASE WHEN id >= 1000000000 THEN 'supplier' ELSE 'customer' END
-        |    AS kind,
+        |  $dKind,
         |  round(pr, 9) AS pr
         |FROM r3 ORDER BY id""".stripMargin
     },
@@ -995,7 +965,8 @@ object Graph {
       // At the decade that ground >10 min and spilled ~70 GB of temp
       // ("No space left on device", the r11/r12 sweep's one infra FAIL);
       // materialized, the same query answers in ~18 s. A pure planner
-      // hint — values are untouched.
+      // hint — values are untouched. `e` wraps the shared edge base `e0`,
+      // which only `e` reads.
       def half(inRel: String, inScore: String, outScore: String,
           fromCol: String, toCol: String, alias: String) =
         s"""${alias}r AS MATERIALIZED (SELECT e.$toCol AS id,
@@ -1006,9 +977,8 @@ object Graph {
           |$alias AS MATERIALIZED (SELECT id,
           |    CAST(raw AS DOUBLE)/CAST(tot AS DOUBLE) AS $outScore
           |  FROM ${alias}r, ${alias}t)""".stripMargin
-      s"""WITH e AS MATERIALIZED (SELECT DISTINCT o_custkey AS src,
-        |    1000000000 + l_suppkey AS dst
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+      s"""WITH $dEdgeBase,
+        |e AS MATERIALIZED (SELECT src, dst FROM e0),
         |nc AS MATERIALIZED (SELECT count(DISTINCT src) AS n FROM e),
         |h0 AS MATERIALIZED (SELECT DISTINCT src AS id,
         |    CAST(1 AS DOUBLE)/nc.n AS h
@@ -1038,12 +1008,9 @@ object Graph {
           |    JOIN deg ON e.src = deg.src
           |    GROUP BY e.dst)
           |  LEFT JOIN sd ON id = sd.sid)""".stripMargin
-      s"""WITH e0 AS (SELECT DISTINCT o_custkey AS src,
-        |    1000000000 + l_suppkey AS dst
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |e AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
+      s"""WITH $dUndirected,
         |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-        |sd AS (SELECT src AS sid FROM deg WHERE src < 1000000000
+        |sd AS (SELECT src AS sid FROM deg WHERE src < $SupplierOffset
         |  ORDER BY src LIMIT 3),
         |r0 AS (SELECT deg.src AS id, CASE WHEN sd.sid IS NOT NULL
         |    THEN CAST(1 AS DOUBLE)/3 ELSE CAST(0 AS DOUBLE) END AS pr
@@ -1052,8 +1019,7 @@ object Graph {
         |${iter(2)},
         |${iter(3)}
         |SELECT id,
-        |  CASE WHEN id >= 1000000000 THEN 'supplier' ELSE 'customer' END
-        |    AS kind,
+        |  $dKind,
         |  round(pr, 9) AS ppr
         |FROM r3 ORDER BY ppr DESC, id LIMIT 50""".stripMargin
     },
@@ -1063,8 +1029,7 @@ object Graph {
     "graph_label_prop" ->
       s"""WITH $dLpaCte
         |SELECT id,
-        |  CASE WHEN id >= 1000000000 THEN 'supplier' ELSE 'customer' END
-        |    AS kind,
+        |  $dKind,
         |  lbl AS community,
         |  count(*) OVER (PARTITION BY lbl) AS comm_size
         |FROM l3 ORDER BY id""".stripMargin,
@@ -1089,13 +1054,12 @@ object Graph {
         |  CAST(intra2 AS DOUBLE) / m2 -
         |    CAST(sd2 AS DOUBLE) / (CAST(m2 AS DOUBLE) * m2) AS modularity
         |FROM tot, s2, n""".stripMargin,
-    // Exact-decimal moment mirror (the ts_acf closing form).
+    // Exact-decimal moment mirror (the ts_acf closing form). The shared
+    // `e` is a UNION, but its two orientations cannot overlap (src <
+    // SupplierOffset <= dst over distinct pairs), so it holds the same
+    // rows as the UNION ALL the Spark side builds.
     "graph_assortativity" ->
-      """WITH e0 AS (SELECT DISTINCT o_custkey AS src,
-        |    1000000000 + l_suppkey AS dst
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |e AS (SELECT src, dst FROM e0 UNION ALL
-        |  SELECT dst, src FROM e0),
+      s"""WITH $dUndirected,
         |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
         |g AS (
         |  SELECT count(*) AS n,
@@ -1123,19 +1087,15 @@ object Graph {
           |  UNION ALL
           |  SELECT e.dst AS id, d.dist + 1 AS nd
           |  FROM e JOIN d${k - 1} d ON e.src = d.id) GROUP BY id)""".stripMargin
-      s"""WITH e0 AS (SELECT DISTINCT o_custkey AS src,
-        |    1000000000 + l_suppkey AS dst
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |e AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
+      s"""WITH $dUndirected,
         |d0 AS (SELECT DISTINCT src AS id, 0 AS dist FROM e
-        |  WHERE src % 100 = 0 AND src < 1000000000),
+        |  WHERE src % 100 = 0 AND src < $SupplierOffset),
         |${round(1)},
         |${round(2)},
         |${round(3)},
         |${round(4)}
         |SELECT id,
-        |  CASE WHEN id >= 1000000000 THEN 'supplier' ELSE 'customer' END
-        |    AS kind,
+        |  $dKind,
         |  dist
         |FROM d4 ORDER BY id""".stripMargin
     }

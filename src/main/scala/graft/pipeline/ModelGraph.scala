@@ -274,7 +274,10 @@ object ModelGraph {
     val n = latestCommit(spark, name).map(_._1).getOrElse(0) + 1
     val tmp = new java.io.File(dir,
       s"commit_$n.build.${java.util.UUID.randomUUID()}")
-    df.write.mode("overwrite").parquet(tmp.getAbsolutePath)
+    // a failed write leaves tmp behind, and the prune below never
+    // matches its name
+    try df.write.mode("overwrite").parquet(tmp.getAbsolutePath)
+    catch { case t: Throwable => FileUtil.fullyDelete(tmp); throw t }
     val commit = new java.io.File(dir, s"commit_$n")
     if (!tmp.renameTo(commit)) {
       FileUtil.fullyDelete(tmp)

@@ -159,6 +159,30 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("edgeBase: the distinct customer–supplier pairs of orders⋈lineitem " +
+    "on either side of the supplier-id offset; undirected holds each " +
+    "pair once in each orientation") {
+    def keys(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
+      df.select(col(a).cast("long"), col(b).cast("long"))
+        .as[(Long, Long)].collect()
+    val custOf = keys(Tables.orders(spark, sf0001), "o_orderkey", "o_custkey")
+      .toMap
+    val want = keys(Tables.lineitem(spark, sf0001), "l_orderkey", "l_suppkey")
+      .flatMap { case (o, supp) =>
+        custOf.get(o).map(c => (c, 1000000000L + supp)) }.toSet
+    assert(want.nonEmpty)
+    val base = ops.Graph.edgeBase(spark, sf0001)
+    val got = base.as[(Long, Long)].collect()
+    assert(got.length === want.size, "each pair must appear once")
+    assert(got.toSet === want)
+    assert(got.forall { case (src, dst) =>
+      src < 1000000000L && dst >= 1000000000L })
+    val sym = ops.Graph.undirected(base).as[(Long, Long)].collect()
+    assert(sym.length === 2 * got.length)
+    assert(sym.distinct.length === sym.length)
+    assert(sym.toSet === want ++ want.map(_.swap))
+  }
+
   test("graph_jaccard: per-edge scores match brute-force neighborhood " +
     "set algebra, zero-common-neighbor edges survive (L76)") {
     val res = ops.Graph.queries("graph_jaccard")(spark, sf0001)

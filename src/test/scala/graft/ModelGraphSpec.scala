@@ -216,6 +216,37 @@ class ModelGraphSpec extends SparkSpec {
     } finally ModelGraph.reset(spark, name)
   }
 
+  test("a first-run stateful model whose SELECT fails at write time " +
+      "leaves no build dir and no _LATEST; the corrected model then " +
+      "commits commit_1") {
+    Seq("incremental", "snapshot").foreach { mat =>
+      val name = uniq(s"mg_wfail_$mat")
+      val dir = new java.io.File(ModelGraph.stateRoot(spark), name)
+      def entries = Option(dir.list()).getOrElse(Array.empty[String]).toSeq
+      ModelGraph.reset(spark, name)
+      try {
+        // range() runs in tasks, so the raise_error fires inside the
+        // parquet write, after the write has created its output dir
+        val bad = Model(name, "SELECT id AS k, CASE WHEN id = 2 THEN " +
+          "raise_error('bad row') ELSE 'x' END AS v FROM range(3)",
+          materialized = mat, uniqueKey = Seq("k"))
+        intercept[Exception] {
+          ModelGraph.run(spark, Seq(bad), snapshotAt = lit(10))
+        }
+        assert(!entries.exists(_.contains(".build.")),
+          s"$mat: failed write left its build dir: $entries")
+        assert(!entries.contains("_LATEST"), s"$mat: $entries")
+        ModelGraph.run(spark, Seq(bad.copy(
+          sql = "SELECT id AS k, 'x' AS v FROM range(3)")),
+          snapshotAt = lit(10))
+        assert(new java.io.File(dir, "commit_1").isDirectory,
+          s"$mat: $entries")
+        assert(java.nio.file.Files.readString(
+          new java.io.File(dir, "_LATEST").toPath).trim === "1")
+      } finally ModelGraph.reset(spark, name)
+    }
+  }
+
   test("schema tests: dbt's unique / not_null / accepted_values / " +
       "relationships with failure-count semantics; an unknown " +
       "relationships target is refused") {

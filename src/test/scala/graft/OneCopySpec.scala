@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-scan gate that keeps harness plumbing at one copy each:
   * [[Session]] builds every session and is the one reader of
   * `SPARK_GRAFT_CPUS`, Hadoop's `FileUtil.fullyDelete` does every
-  * recursive delete, and [[graft.plans.DmlViews]] holds the one entry
-  * point, target guard and parser command of the four DML verbs.
+  * recursive delete, [[graft.plans.DmlViews]] holds the one entry
+  * point, target guard and parser command of the four DML verbs, and
+  * [[graft.ops.Graph]] builds the customer–supplier graph and its
+  * undirected form once, in Spark and in the DuckDB oracle.
   * Copies drift apart (session confs did), so this spec fails when one
   * comes back, and when a script or run doc names a main
   * that no longer exists.
@@ -82,16 +84,21 @@ class OneCopySpec extends AnyFunSuite {
   private val targetGuard = """"[^"\n]*\bmust be a session-local\b""".r
   private val mergeSqlDef = """\bdef mergeSql\b""".r
 
+  /** A line naming where the copies are when `srcs` hold other than
+    * `want` matches of `re` in total. */
+  private def copies(srcs: Seq[(String, String)], re: Regex, want: Int,
+      what: String): Option[String] = {
+    val found = srcs.map { case (p, text) => p -> re.findAllMatchIn(text).size }
+      .filter(_._2 > 0)
+    if (found.map(_._2).sum == want) None
+    else Some(s"$what: want $want, found " +
+      found.map { case (p, n) => s"$p (${n}x)" }.mkString("[", ", ", "]"))
+  }
+
   /** One line per DML plumbing rule that `srcs` break, naming where the
     * copies are. */
   private def dmlPlumbingCopies(srcs: Seq[(String, String)]): Seq[String] = {
-    def rule(re: Regex, want: Int, what: String) = {
-      val found = srcs.map { case (p, text) => p -> re.findAllMatchIn(text).size }
-        .filter(_._2 > 0)
-      if (found.map(_._2).sum == want) None
-      else Some(s"$what: want $want, found " +
-        found.map { case (p, n) => s"$p (${n}x)" }.mkString("[", ", ", "]"))
-    }
+    def rule(re: Regex, want: Int, what: String) = copies(srcs, re, want, what)
     Seq(
       rule(commandLeaf, 1, "classes extending LeafRunnableCommand " +
         "(GraftDmlViewCommand carries every DML verb)"),
@@ -130,6 +137,49 @@ class OneCopySpec extends AnyFunSuite {
     assert(found.size == 3, found.mkString("\n"))
     assert(found.forall(_.contains("MergeIntoViews.scala (1x)")),
       found.mkString("\n"))
+  }
+
+  /** The customer–supplier graph's constructions, each of which
+    * [[graft.ops.Graph]] holds once: the edge base's supplier-id offset
+    * in Spark and in DuckDB, and the reversed orientation of the
+    * undirected form in each. */
+  private val graphConstructions = Seq(
+    "+ col(\"l_suppkey\")" -> "Spark edge bases (Graph.edgeBase)",
+    "+ l_suppkey AS dst" -> "DuckDB edge bases (Graph.dEdgeBase)",
+    "col(\"dst\").as(\"src\"), col(\"src\").as(\"dst\")" ->
+      "Spark undirected forms (Graph.undirected)",
+    "SELECT dst, src FROM e0" -> "DuckDB undirected forms (Graph.dUndirected)")
+
+  private def graphCopies(srcs: Seq[(String, String)]): Seq[String] =
+    graphConstructions.flatMap { case (needle, what) =>
+      copies(srcs, Regex.quote(needle).r, 1, what) }
+
+  test("src/main/scala builds the customer–supplier graph once: one " +
+      "edge base and one undirected form, in Spark and in DuckDB") {
+    val found = graphCopies(mainSources.map { case (p, text) =>
+      p.toString -> text })
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the graph scan has teeth: a query that builds its own edge base " +
+      "and undirected form beside the shared ones is flagged") {
+    val shared = "Graph.scala" ->
+      """        (lit(SupplierOffset) + col("l_suppkey")).as("dst"))
+        |      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+        |      |    $SupplierOffset + l_suppkey AS dst
+        |      |e AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0)
+        |""".stripMargin
+    assert(graphCopies(Seq(shared)).isEmpty)
+    val copy = "Other.scala" ->
+      """          (lit(1000000000L) + col("l_suppkey")).as("dst"))
+        |        .union(edges0.select(col("dst").as("src"), col("src").as("dst")))
+        |        |    1000000000 + l_suppkey AS dst
+        |        |e AS (SELECT src, dst FROM e0 UNION ALL
+        |        |  SELECT dst, src FROM e0),
+        |""".stripMargin
+    val found = graphCopies(Seq(shared, copy))
+    assert(found.size == 4, found.mkString("\n"))
+    assert(found.forall(_.contains("Other.scala (1x)")), found.mkString("\n"))
   }
 
   /** `graft.<Name>` references in the run instructions: every script,
