@@ -142,10 +142,7 @@ object Curation {
         "left_semi")
       .join(exactIds.withColumnRenamed("doc_id", "ib"), Seq("ib"),
         "left_semi")
-      .select(col("ia").as("src"), col("ib").as("dst"))
-    val kept = exact
-      .join(Graph.connectedComponents(exact.select("doc_id"), edges),
-        "doc_id")
+    val kept = exact.join(Graph.dupClusters(exact, edges), "doc_id")
       .filter(col("doc_id") === col("comp"))
     val train = pin(kept.filter(col("doc_id") >= 10))
     val evalG = grams(docs.filter(col("doc_id") < 10))
@@ -433,9 +430,7 @@ object Curation {
         .withColumn("rn", row_number().over(wEx))
         .filter(col("rn") === 1).drop("rn")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val edges = TextSim.minhashPairs(exact)
-        .select(col("ia").as("src"), col("ib").as("dst"))
-      val lab = Graph.connectedComponents(exact.select("doc_id"), edges)
+      val lab = Graph.dupClusters(exact, TextSim.minhashPairs(exact))
       val scored = exact.join(lab, "doc_id")
       val best = scored.groupBy("comp")
         .agg(max_by(col("doc_id"), struct(col("z"), -col("doc_id")))
@@ -474,8 +469,7 @@ object Curation {
     "mix_token_budget" -> ((s, d) => {
       val wAll = Window.partitionBy()
       Tables.documents(s, d)
-        .select(col("source"), size(split(lower(col("text")), " "))
-          .cast("long").as("t"))
+        .select(col("source"), size(toks).cast("long").as("t"))
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("t").as("n_tokens"))
         .withColumn("budget", min("n_tokens").over(wAll))
@@ -501,8 +495,7 @@ object Curation {
     "mix_epochs" -> ((s, d) => {
       val wAll = Window.partitionBy()
       Tables.documents(s, d)
-        .select(col("lang"), size(split(lower(col("text")), " "))
-          .cast("long").as("t"))
+        .select(col("lang"), size(toks).cast("long").as("t"))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum("t").as("n_tokens"))
         .withColumn("total", sum("n_tokens").over(wAll))
@@ -726,9 +719,7 @@ object Curation {
       val contam = grams(docs.filter(col("doc_id") >= 10))
         .join(broadcast(evalGrams), Seq("g"))
         .select(col("doc_id")).distinct().withColumn("ct", lit(true))
-      val comps = Graph.connectedComponents(docs.select("doc_id"),
-        TextSim.minhashPairs(docs)
-          .select(col("ia").as("src"), col("ib").as("dst")))
+      val comps = Graph.dupClusters(docs, TextSim.minhashPairs(docs))
       val flags = docs
         .select(col("doc_id"), (col("doc_id") >= 10).as("tr"),
           gKeep.as("gf"), (round(TextSim.classifierZ, 6) >= 0).as("cf"))
@@ -1052,15 +1043,7 @@ object Curation {
            |  CAST($b AS DOUBLE) / n0 AS cum_keep_rate FROM one""".stripMargin
       }.mkString("\n|UNION ALL\n|")
       s"""WITH RECURSIVE
-        |${TextSim.dMinhashCte},
-        |edges AS (SELECT ia AS src, ib AS dst FROM pairs
-        |  UNION SELECT ib, ia FROM pairs),
-        |reach AS (
-        |  SELECT doc_id, doc_id AS r FROM documents
-        |  UNION
-        |  SELECT w.doc_id, e.dst AS r FROM reach w
-        |  JOIN edges e ON w.r = e.src),
-        |lab AS (SELECT doc_id, min(r) AS comp FROM reach GROUP BY 1),
+        |${Graph.dDupClusters("documents")},
         |tk AS (SELECT doc_id, text, $dToks AS t FROM documents),
         |f0 AS (SELECT tk.doc_id, tk.doc_id >= 10 AS tr,
         |    ($dGopherKeep) AS gf,
@@ -1318,16 +1301,8 @@ object Curation {
         |x AS (SELECT *, row_number() OVER
         |  (PARTITION BY text ORDER BY doc_id) AS rn FROM g1),
         |ex AS (SELECT doc_id, text, source, z FROM x WHERE rn = 1),
-        |${TextSim.dMinhashCteFrom("ex")},
-        |edges AS (SELECT ia AS src, ib AS dst FROM pairs
-        |  UNION SELECT ib, ia FROM pairs),
-        |reach AS (
-        |  SELECT doc_id, doc_id AS r FROM ex
-        |  UNION
-        |  SELECT w.doc_id, e.dst AS r FROM reach w
-        |  JOIN edges e ON w.r = e.src),
-        |labv AS (SELECT doc_id, min(r) AS comp FROM reach GROUP BY 1),
-        |sc AS (SELECT e.*, labv.comp FROM ex e JOIN labv USING (doc_id)),
+        |${Graph.dDupClusters("ex")},
+        |sc AS (SELECT e.*, lab.comp FROM ex e JOIN lab USING (doc_id)),
         |rk AS (SELECT *, row_number() OVER
         |  (PARTITION BY comp ORDER BY z DESC, doc_id) AS krn FROM sc),
         |kept AS (SELECT doc_id, source, text FROM rk WHERE krn = 1),
@@ -1427,16 +1402,8 @@ object Curation {
         |x AS (SELECT *, row_number() OVER
         |  (PARTITION BY text ORDER BY doc_id) AS rn FROM q),
         |ex AS (SELECT doc_id, text, lang FROM x WHERE rn = 1),
-        |${TextSim.dMinhashCteFrom("ex")},
-        |edges AS (SELECT ia AS src, ib AS dst FROM pairs
-        |  UNION SELECT ib, ia FROM pairs),
-        |reach AS (
-        |  SELECT doc_id, doc_id AS r FROM ex
-        |  UNION
-        |  SELECT w.doc_id, e.dst AS r FROM reach w
-        |  JOIN edges e ON w.r = e.src),
-        |labv AS (SELECT doc_id, min(r) AS comp FROM reach GROUP BY 1),
-        |kept AS (SELECT e.* FROM ex e JOIN labv USING (doc_id)
+        |${Graph.dDupClusters("ex")},
+        |kept AS (SELECT e.* FROM ex e JOIN lab USING (doc_id)
         |  WHERE doc_id = comp),
         |train AS (SELECT * FROM kept WHERE doc_id >= 10),
         |evg AS (SELECT DISTINCT g FROM (SELECT

@@ -39,7 +39,9 @@ import graft.Tables
   *
   * The graph_* queries over the customer–supplier graph all start from
   * one edge base, [[edgeBase]], and its [[undirected]] form, mirrored in
-  * the DuckDB oracles by `dEdgeBase` and `dUndirected`.
+  * the DuckDB oracles by `dEdgeBase` and `dUndirected`. The dedup
+  * queries here and in Curation cluster near-dup pairs through one
+  * [[dupClusters]], mirrored by `dDupClusters`.
   */
 object Graph {
 
@@ -143,6 +145,29 @@ object Graph {
         .join(lab, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp"))
   }
+
+  /** Near-duplicate clusters: the connected components of the candidate
+    * pairs `pairs` (ia, ib) over the documents of `docs`, as
+    * (doc_id, comp). */
+  private[graft] def dupClusters(docs: DataFrame, pairs: DataFrame)
+      : DataFrame =
+    connectedComponents(docs.select("doc_id"),
+      pairs.select(col("ia").as("src"), col("ib").as("dst")))
+
+  /** DuckDB mirror of [[dupClusters]] over the MinHash/LSH pairs of the
+    * (doc_id, text) relation `rel`: `TextSim.dMinhashCteFrom(rel)`, then
+    * `lab` (doc_id, comp), the min id reachable through the pairs. Needs
+    * `WITH RECURSIVE`. */
+  private[ops] def dDupClusters(rel: String): String =
+    s"""${TextSim.dMinhashCteFrom(rel)},
+       |edges AS (SELECT ia AS src, ib AS dst FROM pairs
+       |  UNION SELECT ib, ia FROM pairs),
+       |reach AS (
+       |  SELECT doc_id, doc_id AS r FROM $rel
+       |  UNION
+       |  SELECT w.doc_id, e.dst AS r FROM reach w
+       |  JOIN edges e ON w.r = e.src),
+       |lab AS (SELECT doc_id, min(r) AS comp FROM reach GROUP BY 1)""".stripMargin
 
   /** Synchronous label-propagation rounds over a symmetrized edge list:
     * every node adopts its neighborhood's most frequent label, ties to
@@ -398,10 +423,7 @@ object Graph {
       val docs = Tables.documents(s, d)
       // r13: candidate edges read from the persisted edge store (written
       // once per corpus — see TextSim.ensureEdgeStore), not re-derived
-      val edges = TextSim.minhashEdges(s, d)
-        .select(col("ia").as("src"), col("ib").as("dst"))
-      val lab = connectedComponents(docs.select("doc_id"), edges)
-      lab
+      dupClusters(docs, TextSim.minhashEdges(s, d))
         .withColumn("comp_size",
           count(lit(1)).over(Window.partitionBy("comp")))
         .select(col("doc_id"), col("comp"), col("comp_size"),
@@ -423,9 +445,7 @@ object Graph {
       val docs = Tables.documents(s, d)
       // r13: candidate edges read from the persisted edge store (written
       // once per corpus — see TextSim.ensureEdgeStore), not re-derived
-      val edges = TextSim.minhashEdges(s, d)
-        .select(col("ia").as("src"), col("ib").as("dst"))
-      val sizes = connectedComponents(docs.select("doc_id"), edges)
+      val sizes = dupClusters(docs, TextSim.minhashEdges(s, d))
         .groupBy("comp").agg(count(lit(1)).as("comp_size"))
       val tot = docs.agg(count(lit(1)).as("n_total")).limit(1)
       sizes.groupBy("comp_size")
@@ -458,9 +478,7 @@ object Graph {
       val docs = Tables.documents(s, d)
       // r13: candidate edges read from the persisted edge store (written
       // once per corpus — see TextSim.ensureEdgeStore), not re-derived
-      val edges = TextSim.minhashEdges(s, d)
-        .select(col("ia").as("src"), col("ib").as("dst"))
-      connectedComponents(docs.select("doc_id"), edges)
+      dupClusters(docs, TextSim.minhashEdges(s, d))
         .withColumn("dup_count",
           count(lit(1)).over(Window.partitionBy("comp")))
         .filter(col("dup_count") > 1)
@@ -585,11 +603,8 @@ object Graph {
       val docs = Tables.documents(s, d)
       // r13: candidate edges read from the persisted edge store (written
       // once per corpus — see TextSim.ensureEdgeStore), not re-derived
-      val edges = TextSim.minhashEdges(s, d)
-        .select(col("ia").as("src"), col("ib").as("dst"))
-      val lab = connectedComponents(docs.select("doc_id"), edges)
-      val tk = split(lower(col("text")), " ")
-      val q = least(size(tk).cast("double") / 100.0, lit(1.0)) *
+      val lab = dupClusters(docs, TextSim.minhashEdges(s, d))
+      val q = least(size(toks).cast("double") / 100.0, lit(1.0)) *
         (lit(1.0) - regexp_count(lower(col("text")), lit("[^a-z0-9 ]"))
           .cast("double") / length(col("text")))
       val scored = docs.select(col("doc_id"), q.as("q"))
@@ -796,19 +811,11 @@ object Graph {
   )
 
   val oracles: Map[String, String] = Map(
-    // DuckDB mirror: same LSH candidate pairs (dMinhashCte), components via
-    // a recursive reachability walk, label = min reachable id.
+    // DuckDB mirror: dDupClusters' recursive reachability walk over the
+    // same LSH candidate pairs, label = min reachable id.
     "dedup_cc" ->
       s"""WITH RECURSIVE
-        |${TextSim.dMinhashCte},
-        |edges AS (SELECT ia AS src, ib AS dst FROM pairs
-        |  UNION SELECT ib, ia FROM pairs),
-        |reach AS (
-        |  SELECT doc_id, doc_id AS r FROM documents
-        |  UNION
-        |  SELECT w.doc_id, e.dst AS r FROM reach w
-        |  JOIN edges e ON w.r = e.src),
-        |lab AS (SELECT doc_id, min(r) AS comp FROM reach GROUP BY 1)
+        |${dDupClusters("documents")}
         |SELECT doc_id, comp,
         |  count(*) OVER (PARTITION BY comp) AS comp_size,
         |  CAST(doc_id = comp AS INT) AS kept
@@ -817,15 +824,7 @@ object Graph {
     // distribution); the share division runs on exact integers.
     "dedup_cluster_stats" ->
       s"""WITH RECURSIVE
-        |${TextSim.dMinhashCte},
-        |edges AS (SELECT ia AS src, ib AS dst FROM pairs
-        |  UNION SELECT ib, ia FROM pairs),
-        |reach AS (
-        |  SELECT doc_id, doc_id AS r FROM documents
-        |  UNION
-        |  SELECT w.doc_id, e.dst AS r FROM reach w
-        |  JOIN edges e ON w.r = e.src),
-        |lab AS (SELECT doc_id, min(r) AS comp FROM reach GROUP BY 1),
+        |${dDupClusters("documents")},
         |sz AS (SELECT comp, count(*) AS comp_size FROM lab GROUP BY 1),
         |tot AS (SELECT count(*) AS n_total FROM documents)
         |SELECT comp_size, count(*) AS n_clusters,
@@ -837,15 +836,7 @@ object Graph {
     // joined back for token length.
     "memorization_risk" ->
       s"""WITH RECURSIVE
-        |${TextSim.dMinhashCte},
-        |edges AS (SELECT ia AS src, ib AS dst FROM pairs
-        |  UNION SELECT ib, ia FROM pairs),
-        |reach AS (
-        |  SELECT doc_id, doc_id AS r FROM documents
-        |  UNION
-        |  SELECT w.doc_id, e.dst AS r FROM reach w
-        |  JOIN edges e ON w.r = e.src),
-        |lab AS (SELECT doc_id, min(r) AS comp FROM reach GROUP BY 1),
+        |${dDupClusters("documents")},
         |c AS (SELECT doc_id, comp,
         |    count(*) OVER (PARTITION BY comp) AS dup_count FROM lab)
         |SELECT c.doc_id, comp, dup_count,
@@ -859,15 +850,7 @@ object Graph {
     // the (q, −id) struct.
     "dedup_keep_best" ->
       s"""WITH RECURSIVE
-        |${TextSim.dMinhashCte},
-        |edges AS (SELECT ia AS src, ib AS dst FROM pairs
-        |  UNION SELECT ib, ia FROM pairs),
-        |reach AS (
-        |  SELECT doc_id, doc_id AS r FROM documents
-        |  UNION
-        |  SELECT w.doc_id, e.dst AS r FROM reach w
-        |  JOIN edges e ON w.r = e.src),
-        |lab AS (SELECT doc_id, min(r) AS comp FROM reach GROUP BY 1),
+        |${dDupClusters("documents")},
         |q AS (SELECT doc_id,
         |    least(CAST(len($dToks) AS DOUBLE) / 100.0, 1.0) *
         |    (1.0 - CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))

@@ -740,11 +740,7 @@ object Relational {
     // correctly-rounded-input accurate.
     "ts_acf" -> ((s, d) => {
       val dec19 = DecimalType(19, 0)
-      val daily = lineitem(s, d)
-        .groupBy(col("l_shipdate").cast("date").as("day"))
-        .agg(exactSum(col("l_extendedprice")).as("rev"))
-        .select(col("day"),
-          floor(col("rev").cast("double") * 100 + 0.5).cast("long").as("c"))
+      val daily = dailyCents(s, d)
       // lag alignment is CALENDAR-true, not row-true: each (x, y) pair
       // joins day to day − k DAYS, so on a spine with gap days "lag 7"
       // still means one week, where a ROW lag over the ordered spine
@@ -790,11 +786,7 @@ object Relational {
     // as ts_acf: facts collapse once to ≤|calendar| rows, every window
     // runs over that.
     "ts_changepoint" -> ((s, d) => {
-      val daily = lineitem(s, d)
-        .groupBy(col("l_shipdate").cast("date").as("day"))
-        .agg(exactSum(col("l_extendedprice")).as("rev"))
-        .select(col("day"),
-          floor(col("rev").cast("double") * 100 + 0.5).cast("long").as("c"))
+      val daily = dailyCents(s, d)
       val wCum = Window.orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wAll = Window.partitionBy()
@@ -824,11 +816,7 @@ object Relational {
     // partition-order-free. Same spine bound as ts_acf.
     "ts_forecast_naive" -> ((s, d) => {
       val dec = DecimalType(30, 8)
-      val daily = lineitem(s, d)
-        .groupBy(col("l_shipdate").cast("date").as("day"))
-        .agg(exactSum(col("l_extendedprice")).as("rev"))
-        .select(col("day"),
-          floor(col("rev").cast("double") * 100 + 0.5).cast("long").as("c"))
+      val daily = dailyCents(s, d)
       val cd = col("c").cast("double")
       val fd = col("f").cast("double")
       // the "same weekday last week" forecast joins day − 7 DAYS on the
@@ -865,11 +853,7 @@ object Relational {
     // collapse once to ≤|calendar| rows; windows touch only the spine.
     "ts_seasonal_decompose" -> ((s, d) => {
       val dec = DecimalType(30, 0)
-      val daily = lineitem(s, d)
-        .groupBy(col("l_shipdate").cast("date").as("day"))
-        .agg(exactSum(col("l_extendedprice")).as("rev"))
-        .select(col("day"),
-          floor(col("rev").cast("double") * 100 + 0.5).cast("long").as("c"))
+      val daily = dailyCents(s, d)
       val wC = Window.orderBy("day").rowsBetween(-3, 3)
       val full = daily
         .withColumn("sum7", sum("c").over(wC))
@@ -976,11 +960,7 @@ object Relational {
     // Argmax ties break to the EARLIEST day (first time the worst
     // drawdown is realized). Spine-bounded windows like ts_acf.
     "ts_drawdown" -> ((s, d) => {
-      val daily = lineitem(s, d)
-        .groupBy(col("l_shipdate").cast("date").as("day"))
-        .agg(exactSum(col("l_extendedprice")).as("rev"))
-        .select(col("day"),
-          floor(col("rev").cast("double") * 100 + 0.5).cast("long").as("c"))
+      val daily = dailyCents(s, d)
       val wCum = Window.orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       daily
@@ -1422,14 +1402,11 @@ object Relational {
     // in rows at any SF); the DOW moments are windows over that tiny
     // table — no second scan, no join, order-independent sums.
     "ts_anomaly" -> ((s, d) => {
-      val daily = lineitem(s, d)
-        .groupBy(col("l_shipdate").cast("date").as("ship_d"))
-        .agg(exactSum(col("l_extendedprice")).as("rev"))
-        .select(col("ship_d"),
-          pmod(datediff(col("ship_d"), to_date(lit("1970-01-05"))), lit(7))
+      val daily = dailyCents(s, d)
+        .select(col("day").as("ship_d"),
+          pmod(datediff(col("day"), to_date(lit("1970-01-05"))), lit(7))
             .as("dow"),
-          floor(col("rev").cast("double") * 100 + 0.5).cast("long")
-            .as("c"))
+          col("c"))
       val dec19 = org.apache.spark.sql.types.DecimalType(19, 0)
       val w = Window.partitionBy("dow")
       val n = count(lit(1)).over(w).cast("double")
@@ -2072,6 +2049,24 @@ object Relational {
       .orderBy("col_name")
   }
 
+  /** The daily-revenue spine the ts_* family reads: lineitem revenue
+    * per ship day, exactly summed, in whole cents (day, c). Integer cents
+    * keep every downstream moment exact in both engines. */
+  private def dailyCents(s: SparkSession, d: String): DataFrame =
+    lineitem(s, d)
+      .groupBy(col("l_shipdate").cast("date").as("day"))
+      .agg(exactSum(col("l_extendedprice")).as("rev"))
+      .select(col("day"),
+        floor(col("rev").cast("double") * 100 + 0.5).cast("long").as("c"))
+
+  /** DuckDB mirror of [[dailyCents]], the `daily` CTE. */
+  private val dDailyCents =
+    """daily AS (
+      |  SELECT CAST(l_shipdate AS DATE) AS day,
+      |    CAST(floor(CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,8)))
+      |      AS DOUBLE) * 100 + 0.5) AS BIGINT) AS c
+      |  FROM lineitem GROUP BY 1)""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "scan_parquet" ->
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_shipdate
@@ -2401,11 +2396,7 @@ object Relational {
         |SELECT n AS n_total, k AS n_groups, h, h / c AS h_tie_corrected
         |FROM z""".stripMargin,
     "ts_acf" ->
-      """WITH daily AS (
-        |  SELECT CAST(l_shipdate AS DATE) AS day,
-        |    CAST(floor(CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,8)))
-        |      AS DOUBLE) * 100 + 0.5) AS BIGINT) AS c
-        |  FROM lineitem GROUP BY 1),
+      s"""WITH $dDailyCents,
         |u AS (
         |  SELECT 1 AS lag, t.c AS x, p.c AS y FROM daily t
         |    JOIN daily p ON p.day = t.day - INTERVAL 1 DAY
@@ -2433,11 +2424,7 @@ object Relational {
         |    AS acf
         |FROM g ORDER BY lag""".stripMargin,
     "ts_changepoint" ->
-      """WITH daily AS (
-        |  SELECT CAST(l_shipdate AS DATE) AS day,
-        |    CAST(floor(CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,8)))
-        |      AS DOUBLE) * 100 + 0.5) AS BIGINT) AS c
-        |  FROM lineitem GROUP BY 1),
+      s"""WITH $dDailyCents,
         |w AS (
         |  SELECT day,
         |    count(*) OVER (ORDER BY day
@@ -2457,11 +2444,7 @@ object Relational {
         |  CAST(dev AS DOUBLE) / (CAST(n AS DOUBLE) * 100.0) AS cusum_dollars
         |FROM v ORDER BY abs(dev) DESC, day LIMIT 1""".stripMargin,
     "ts_forecast_naive" ->
-      """WITH daily AS (
-        |  SELECT CAST(l_shipdate AS DATE) AS day,
-        |    CAST(floor(CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,8)))
-        |      AS DOUBLE) * 100 + 0.5) AS BIGINT) AS c
-        |  FROM lineitem GROUP BY 1),
+      s"""WITH $dDailyCents,
         |l AS (SELECT t0.day, t0.c, p.c AS f FROM daily t0
         |  JOIN daily p ON p.day = t0.day - INTERVAL 7 DAY),
         |t AS (
@@ -2476,11 +2459,7 @@ object Relational {
         |  round(CAST(sum(pe) AS DOUBLE) / count(*), 6) AS bias
         |FROM t""".stripMargin,
     "ts_seasonal_decompose" ->
-      """WITH daily AS (
-        |  SELECT CAST(l_shipdate AS DATE) AS day,
-        |    CAST(floor(CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,8)))
-        |      AS DOUBLE) * 100 + 0.5) AS BIGINT) AS c
-        |  FROM lineitem GROUP BY 1),
+      s"""WITH $dDailyCents,
         |w AS (
         |  SELECT day, c,
         |    CAST(sum(c) OVER (ORDER BY day
@@ -2509,11 +2488,7 @@ object Relational {
         |    AS residual
         |FROM g ORDER BY day""".stripMargin,
     "ts_drawdown" ->
-      """WITH daily AS (
-        |  SELECT CAST(l_shipdate AS DATE) AS day,
-        |    CAST(floor(CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,8)))
-        |      AS DOUBLE) * 100 + 0.5) AS BIGINT) AS c
-        |  FROM lineitem GROUP BY 1),
+      s"""WITH $dDailyCents,
         |w AS (
         |  SELECT day,
         |    CAST(sum(c) OVER (ORDER BY day

@@ -52,6 +52,12 @@ import org.apache.spark.sql.functions._
   *  - dedup_embed: blocked on `label` (pre-assigned cluster/shard key), so
   *    pairs are generated per-block — the blocking pattern that keeps exact
   *    near-dup search feasible at scale.
+  *
+  * The near-dup family defines each relation it shares once per engine:
+  * the capped shingle overlap ([[shingleOverlap]] / `dShingleOverlap`),
+  * the Jaccard >= 0.5 truth ([[ngramJaccardOf]] / `dJaccardTruth`), the
+  * precision/recall tally ([[confusion]] and [[rates]] / `dRates`) and
+  * the dup clusters ([[Graph.dupClusters]] / `Graph.dDupClusters`).
   */
 object TextSim {
 
@@ -579,6 +585,20 @@ object TextSim {
     ngramJaccardOf(documents(s, d), tau)
 
   private[graft] def ngramJaccardOf(docs: org.apache.spark.sql.DataFrame,
+      tau: Int): org.apache.spark.sql.DataFrame =
+    shingleOverlap(docs, tau)
+      .withColumn("jaccard", round(col("inter").cast("double") /
+        (col("na") + col("nb") - col("inter")), 6))
+      .filter(col("jaccard") >= 0.5)
+      .select("ia", "ib", "inter", "jaccard")
+      .orderBy("ia", "ib")
+
+  /** The capped 3-gram shingle overlap of every document pair that shares
+    * a shingle: (ia < ib, inter = shared shingles, na, nb = each doc's
+    * shingle count), all over the universe of shingles with df <= tau.
+    * dedup_ngram_jaccard's Jaccard and dedup_containment's containment
+    * are both ratios of these counts. */
+  private def shingleOverlap(docs: org.apache.spark.sql.DataFrame,
       tau: Int): org.apache.spark.sql.DataFrame = {
     // Per-doc sizes join onto the PAIR AGGREGATE output, planned by stats
     // (no hint): the pair table is orders of magnitude smaller than the
@@ -604,14 +624,25 @@ object TextSim {
     // Measured (idle, median-of-7, sf0.1 isolated): dedup_ngram_jaccard
     // 2.33s -> 1.81s; the window form's decade cost was dominated by the
     // pair aggregate so the scale posture is unchanged.
-    val dfTab = shingleRows(docs, 3).groupBy("g")
+    val sh0 = shingleRows(docs, 3)
+    val dfTab = sh0.groupBy("g")
       .agg(count(lit(1)).as("df")).filter(col("df") <= tau)
-    val sh = shingleRows(docs, 3).join(dfTab, "g")
+    // persist(MEMORY_AND_DISK): the guarded shingle table feeds THREE
+    // consumers (doc sizes + both join sides); without it the
+    // scan→aggregate→join pipeline re-runs once per consumer. Persist —
+    // not localCheckpoint — because persist keeps the lineage: a lost
+    // executor recomputes its blocks from the scan, while localCheckpoint
+    // truncates lineage into non-reliable executor-local storage and makes
+    // any executor loss fatal at scale.
+    val sh = sh0.join(dfTab, "g")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Lifecycle: the blocks live until the caller's sweep-level
     // clearCache (Bench after each timed run, Verify after each query);
     // a long-lived session embedding this operator should unpersist the
     // returned plan's cached input after materialization.
+    // sz counts df = 1 shingles too (the "informative-shingle"
+    // denominator); only the join skips them, since a shingle in one
+    // doc can never produce an ia < ib pair.
     val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val joinable = sh.filter(col("df") >= 2)
     val a = joinable.select(col("doc_id").as("ia"), col("g"))
@@ -634,12 +665,40 @@ object TextSim {
         Seq("ia"))
       .join(sz.select(col("doc_id").as("ib"), col("n_sh").as("nb")),
         Seq("ib"))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")), 6))
-      .filter(col("jaccard") >= 0.5)
-      .select("ia", "ib", "inter", "jaccard")
-      .orderBy("ia", "ib")
   }
+
+  /** Grades a candidate pair set against a truth pair set, both keyed on
+    * `keys`: one full outer join on the pair key, collapsed to one
+    * confusion row (n_cand, n_truth, tp, fp, fn, precision, recall). Both
+    * sides are candidate-bounded, never all-pairs. */
+  private def confusion(cand: org.apache.spark.sql.DataFrame,
+      truth: org.apache.spark.sql.DataFrame,
+      keys: Seq[String]): org.apache.spark.sql.DataFrame =
+    cand.select(keys.map(col) :+ lit(1L).as("cin"): _*)
+      .join(truth.select(keys.map(col) :+ lit(1L).as("tin"): _*), keys,
+        "full_outer")
+      .agg(
+        sum(when(col("cin").isNotNull, 1L).otherwise(0L)).as("n_cand"),
+        sum(when(col("tin").isNotNull, 1L).otherwise(0L)).as("n_truth"),
+        sum(when(col("cin").isNotNull && col("tin").isNotNull, 1L)
+          .otherwise(0L)).as("tp"))
+      .select(Seq(col("n_cand"), col("n_truth"), col("tp")) ++ rates: _*)
+
+  /** fp, fn, precision and recall from n_cand, n_truth and tp. A ratio
+    * over an empty side is NULL (try_divide), as in DuckDB, instead of
+    * the ANSI divide-by-zero error a plain division raises. */
+  private def rates: Seq[Column] = Seq(
+    (col("n_cand") - col("tp")).as("fp"),
+    (col("n_truth") - col("tp")).as("fn"),
+    try_divide(col("tp").cast("double"), col("n_cand")).as("precision"),
+    try_divide(col("tp").cast("double"), col("n_truth")).as("recall"))
+
+  /** Precision/recall of the MinHash/LSH candidate pairs of `docs`
+    * against their exact n-gram-Jaccard >= 0.5 truth. */
+  private def minhashEval(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    confusion(minhashPairs(docs),
+      ngramJaccardOf(docs, StopShingleDfDefault), Seq("ia", "ib"))
 
   val queries: Map[String, Q] = Map(
     // U1: tokenize + explode (UDTF shape) with 1-based position.
@@ -776,23 +835,7 @@ object TextSim {
     // at 100 TB run the harness over a sample_hash slice of documents —
     // precision/recall are ratio estimates, and hash sampling keeps both
     // sides consistent on the same sub-corpus.
-    "dedup_minhash_eval" -> ((s, d) => {
-      val cand = minhashPairs(documents(s, d))
-        .select(col("ia"), col("ib"), lit(1L).as("cin"))
-      val truth = ngramJaccard(s, d, StopShingleDfDefault)
-        .select(col("ia"), col("ib"), lit(1L).as("tin"))
-      cand.join(truth, Seq("ia", "ib"), "full_outer")
-        .agg(
-          sum(when(col("cin").isNotNull, 1L).otherwise(0L)).as("n_cand"),
-          sum(when(col("tin").isNotNull, 1L).otherwise(0L)).as("n_truth"),
-          sum(when(col("cin").isNotNull && col("tin").isNotNull, 1L)
-            .otherwise(0L)).as("tp"))
-        .select(col("n_cand"), col("n_truth"), col("tp"),
-          (col("n_cand") - col("tp")).as("fp"),
-          (col("n_truth") - col("tp")).as("fn"),
-          (col("tp").cast("double") / col("n_cand")).as("precision"),
-          (col("tp").cast("double") / col("n_truth")).as("recall"))
-    }),
+    "dedup_minhash_eval" -> ((s, d) => minhashEval(documents(s, d))),
 
     // The eval harness's 100 TB form, executable: BOTH sides run over the
     // SAME hash-sampled sub-corpus (h60 mod 4 == 0, ~25%), so the exact
@@ -801,25 +844,9 @@ object TextSim {
     // Content-stable sampling (sample_hash's property) makes the estimate
     // reproducible run-to-run; candidate and truth stay consistent
     // because they see the identical documents.
-    "dedup_minhash_eval_sampled" -> ((s, d) => {
-      val sampled = documents(s, d)
-        .filter(pmod(h60(concat(lit("eval"), col("doc_id"))), lit(4)) === 0)
-      val cand = minhashPairs(sampled)
-        .select(col("ia"), col("ib"), lit(1L).as("cin"))
-      val truth = ngramJaccardOf(sampled, StopShingleDfDefault)
-        .select(col("ia"), col("ib"), lit(1L).as("tin"))
-      cand.join(truth, Seq("ia", "ib"), "full_outer")
-        .agg(
-          sum(when(col("cin").isNotNull, 1L).otherwise(0L)).as("n_cand"),
-          sum(when(col("tin").isNotNull, 1L).otherwise(0L)).as("n_truth"),
-          sum(when(col("cin").isNotNull && col("tin").isNotNull, 1L)
-            .otherwise(0L)).as("tp"))
-        .select(col("n_cand"), col("n_truth"), col("tp"),
-          (col("n_cand") - col("tp")).as("fp"),
-          (col("n_truth") - col("tp")).as("fn"),
-          (col("tp").cast("double") / col("n_cand")).as("precision"),
-          (col("tp").cast("double") / col("n_truth")).as("recall"))
-    }),
+    "dedup_minhash_eval_sampled" -> ((s, d) =>
+      minhashEval(documents(s, d)
+        .filter(pmod(h60(concat(lit("eval"), col("doc_id"))), lit(4)) === 0))),
 
     // LSH banding-config sweep (the MinHash analog of ivf_nprobe_sweep):
     // the SAME 16-perm signature table banded three ways — (bands, rows)
@@ -887,13 +914,9 @@ object TextSim {
           sum(when(col("est_sim") >= 0.5 && col("tin").isNotNull, 1L)
             .otherwise(0L)).as("tp"))
         .crossJoin(broadcast(nTruth))
-        .select(col("bands"),
+        .select(Seq(col("bands"),
           (lit(NumHashes) / col("bands")).cast("int").as("rows_per_band"),
-          col("n_coll"), col("n_cand"), col("tp"),
-          (col("n_cand") - col("tp")).as("fp"),
-          (col("n_truth") - col("tp")).as("fn"),
-          (col("tp").cast("double") / col("n_cand")).as("precision"),
-          (col("tp").cast("double") / col("n_truth")).as("recall"))
+          col("n_coll"), col("n_cand"), col("tp")) ++ rates: _*)
         .orderBy("bands")
     }),
 
@@ -1031,21 +1054,11 @@ object TextSim {
     // BEFORE the join (and from n_sh, so Jaccard is over the guarded
     // universe — the DuckDB oracle mirrors the identical filter, so parity
     // holds by construction). df comes from a map-side-combinable (g, df)
-    // aggregate joined back onto the postings (r18 — see ngramJaccardOf's
+    // aggregate joined back onto the postings (r18 — see shingleOverlap's
     // note; the earlier count-over-window pass and its WindowExec sort
     // are gone). df = 1 rows additionally skip the join: a shingle
     // in exactly one doc can never produce an ia < ib pair (result-neutral
     // prune that typically halves the join input).
-    //
-    // persist(MEMORY_AND_DISK): the guarded shingle table feeds THREE
-    // consumers (doc sizes + both join sides); without it the
-    // scan→aggregate→join pipeline re-runs once per consumer. Persist —
-    // not localCheckpoint — because persist keeps the lineage: a lost
-    // executor recomputes its blocks from the scan, while localCheckpoint
-    // truncates lineage into non-reliable executor-local storage and makes
-    // any executor loss fatal at scale. Blocks are reclaimed by the
-    // ContextCleaner once the plan is unreachable; Bench additionally
-    // clears the cache between timed runs so medians stay cold-path.
     "dedup_ngram_jaccard" -> (ngramJaccard(_, _, StopShingleDfDefault)),
 
     // SimHash near-dup: 60-bit fingerprints from token-frequency-weighted
@@ -1109,42 +1122,8 @@ object TextSim {
     // dedup_ngram_jaccard (Σ df(g)² bound, never all-pairs); emits pairs
     // where either direction's containment ≥ 0.8, with both directions
     // reported so the caller knows which side is the quoted one.
-    "dedup_containment" -> ((s, d) => {
-      // Same skinny-hot-path shape as ngramJaccard: the capped posting
-      // self-join shuffles only (doc_id, g); per-doc sizes (df=1 shingles
-      // included — the "informative-shingle" denominator) join onto the
-      // far smaller pair aggregate, planned by stats with no hint (the
-      // r8 broadcast(sz) pin and the first r9 cut's carry-n_sh-on-rows
-      // window were both scale bugs — see ngramJaccard's note).
-      // df via aggregate + join-back instead of a window — same r18
-      // rewrite as ngramJaccard (see its note): drops WindowExec's
-      // full-posting sort; AQE broadcasts the (g, df) build side at
-      // small SF and shuffle-joins at scale. Identical rows (inner join
-      // on g keeps exactly df <= tau).
-      val sh0 = shingleRows(documents(s, d), 3)
-      val dfT = sh0.groupBy("g").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= StopShingleDfDefault)
-      val sh = sh0.join(dfT, "g")
-        // persist, same rationale as ngramJaccard (:290): this subplan
-        // feeds both join sides and the size aggregate — without
-        // materializing it the shingle+df pass re-executes per
-        // consumer; blocks are dropped by Bench/Verify's clearCache
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-      val joinable = sh.filter(col("df") >= 2)
-      val a = joinable.select(col("doc_id").as("ia"), col("g"))
-      val b = joinable.select(col("doc_id").as("ib"), col("g"))
-      // packed single-long pair key (doc_id < 2^31 contract) — see
-      // ngramJaccard's note: 1.7× on the ~100M-group decade aggregate
-      a.join(b, Seq("g")).filter(col("ia") < col("ib"))
-        .select((shiftleft(col("ia"), 32).bitwiseOR(col("ib"))).as("pk"))
-        .groupBy("pk").agg(count(lit(1)).as("inter"))
-        .select(shiftright(col("pk"), 32).as("ia"),
-          col("pk").bitwiseAND(lit(4294967295L)).as("ib"), col("inter"))
-        .join(sz.select(col("doc_id").as("ia"), col("n_sh").as("na")),
-          Seq("ia"))
-        .join(sz.select(col("doc_id").as("ib"), col("n_sh").as("nb")),
-          Seq("ib"))
+    "dedup_containment" -> ((s, d) =>
+      shingleOverlap(documents(s, d), StopShingleDfDefault)
         // raw divisions (win_ntile dyadic-midpoint class): the 0.8
         // filter then compares bit-identical doubles in both engines
         .withColumn("c_ab",
@@ -1153,8 +1132,7 @@ object TextSim {
           col("inter").cast("double") / col("nb"))
         .filter(col("c_ab") >= 0.8 || col("c_ba") >= 0.8)
         .select("ia", "ib", "inter", "c_ab", "c_ba")
-        .orderBy("ia", "ib")
-    }),
+        .orderBy("ia", "ib")),
 
     // Span-level dedup (Lee et al., "Deduplicating Training Data Makes
     // Language Models Better", arXiv:2107.06499 — the ExactSubstr idea
@@ -1499,7 +1477,6 @@ object TextSim {
       val truth = ta.join(tb, Seq("label")).filter(col("ia") < col("ib"))
         .filter(dot(col("ea"), col("eb")) / (col("na") * col("nb"))
           >= EmbedDupTau)
-        .select(col("label"), col("ia"), col("ib"), lit(1L).as("tin"))
       val bl = e
         .withColumn("bits", bucketBits(col("cnt"), EmbedBlockCap))
         .select(col("label"), col("vec_id"),
@@ -1514,18 +1491,7 @@ object TextSim {
       val cand = ca.join(cb, Seq("label", "tbl", "key"))
         .filter(col("ia") < col("ib"))
         .dropDuplicates("label", "ia", "ib")
-        .select(col("label"), col("ia"), col("ib"), lit(1L).as("cin"))
-      cand.join(truth, Seq("label", "ia", "ib"), "full_outer")
-        .agg(
-          sum(when(col("cin").isNotNull, 1L).otherwise(0L)).as("n_cand"),
-          sum(when(col("tin").isNotNull, 1L).otherwise(0L)).as("n_truth"),
-          sum(when(col("cin").isNotNull && col("tin").isNotNull, 1L)
-            .otherwise(0L)).as("tp"))
-        .select(col("n_cand"), col("n_truth"), col("tp"),
-          (col("n_cand") - col("tp")).as("fp"),
-          (col("n_truth") - col("tp")).as("fn"),
-          (col("tp").cast("double") / col("n_cand")).as("precision"),
-          (col("tp").cast("double") / col("n_truth")).as("recall"))
+      confusion(cand, truth, Seq("label", "ia", "ib"))
     }),
 
     // PII class battery (r10): extends L11's email/phone `text_pii_redact`
@@ -1688,6 +1654,55 @@ object TextSim {
 
   private[ops] lazy val dMinhashCte: String = dMinhashCteFrom("documents")
 
+  /** DuckDB mirror of [[shingleOverlap]] over the shingle sets `s`
+    * (doc_id, sh): the capped postings `e`, the per-doc sizes `sz` and the
+    * per-pair overlap `inter` (ia, ib, inter). */
+  private lazy val dShingleOverlap: String =
+    s"""e0 AS (SELECT doc_id, unnest(sh) AS g FROM s),
+       |e AS (SELECT doc_id, g FROM (
+       |  SELECT doc_id, g, count(*) OVER (PARTITION BY g) AS df FROM e0)
+       |  WHERE df <= $StopShingleDfDefault),
+       |sz AS (SELECT doc_id, count(*) AS n_sh FROM e GROUP BY 1),
+       |inter AS (
+       |  SELECT a.doc_id AS ia, b.doc_id AS ib, COUNT(*) AS inter
+       |  FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id
+       |  GROUP BY 1,2)""".stripMargin
+
+  /** [[dShingleOverlap]] plus `truth` (ia, ib): the pairs whose n-gram
+    * Jaccard is >= 0.5, the DuckDB mirror of [[ngramJaccardOf]]'s pairs. */
+  private lazy val dJaccardTruth: String =
+    s"""$dShingleOverlap,
+       |truth AS (
+       |  SELECT ia, ib FROM inter
+       |  JOIN sz sa ON ia = sa.doc_id JOIN sz sb ON ib = sb.doc_id
+       |  WHERE round(CAST(inter AS DOUBLE) /
+       |    (sa.n_sh + sb.n_sh - inter), 6) >= 0.5)""".stripMargin
+
+  /** DuckDB mirror of [[rates]]; DuckDB's division by zero is NULL. */
+  private val dRates =
+    """n_cand - tp AS fp, n_truth - tp AS fn,
+      |  CAST(tp AS DOUBLE) / n_cand AS precision,
+      |  CAST(tp AS DOUBLE) / n_truth AS recall""".stripMargin
+
+  /** DuckDB mirror of [[minhashEval]] over the (doc_id, text) relation
+    * `rel`: the CTE chain and closing SELECT that follow `WITH`. */
+  private def dMinhashEval(rel: String): String =
+    s"""${dMinhashCteFrom(rel)},
+       |$dJaccardTruth,
+       |u AS (
+       |  SELECT p.ia IS NOT NULL AS cin, t.ia IS NOT NULL AS tin
+       |  FROM (SELECT ia, ib FROM pairs) p
+       |  FULL OUTER JOIN truth t ON p.ia = t.ia AND p.ib = t.ib),
+       |m AS (
+       |  SELECT CAST(sum(CASE WHEN cin THEN 1 ELSE 0 END) AS BIGINT)
+       |      AS n_cand,
+       |    CAST(sum(CASE WHEN tin THEN 1 ELSE 0 END) AS BIGINT) AS n_truth,
+       |    CAST(sum(CASE WHEN cin AND tin THEN 1 ELSE 0 END) AS BIGINT)
+       |      AS tp
+       |  FROM u)
+       |SELECT n_cand, n_truth, tp, $dRates
+       |FROM m""".stripMargin
+
   /** Oracle mirror of StreamOps.nearDupCollisions' BATCH form (kept here
     * so the signature/banding contract has one home): per (band, key)
     * bucket the reference is the min doc_id, and every other member
@@ -1841,72 +1856,13 @@ object TextSim {
         |  CAST(coalesce(h.n_hits, 0) AS DOUBLE) / b.n_toks > 0.05
         |    AS flagged
         |FROM base b LEFT JOIN h USING (doc_id) ORDER BY b.doc_id""".stripMargin,
-    "dedup_minhash_eval" ->
-      s"""WITH $dMinhashCte,
-        |e0 AS (SELECT doc_id, unnest(sh) AS g FROM s),
-        |e AS (SELECT doc_id, g FROM (
-        |  SELECT doc_id, g, count(*) OVER (PARTITION BY g) AS df FROM e0)
-        |  WHERE df <= $StopShingleDfDefault),
-        |sz AS (SELECT doc_id, count(*) AS n_sh FROM e GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, COUNT(*) AS inter
-        |  FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |truth AS (
-        |  SELECT ia, ib FROM inter
-        |  JOIN sz sa ON ia = sa.doc_id JOIN sz sb ON ib = sb.doc_id
-        |  WHERE round(CAST(inter AS DOUBLE) /
-        |    (sa.n_sh + sb.n_sh - inter), 6) >= 0.5),
-        |u AS (
-        |  SELECT p.ia IS NOT NULL AS cin, t.ia IS NOT NULL AS tin
-        |  FROM (SELECT ia, ib FROM pairs) p
-        |  FULL OUTER JOIN truth t ON p.ia = t.ia AND p.ib = t.ib),
-        |m AS (
-        |  SELECT CAST(sum(CASE WHEN cin THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_cand,
-        |    CAST(sum(CASE WHEN tin THEN 1 ELSE 0 END) AS BIGINT) AS n_truth,
-        |    CAST(sum(CASE WHEN cin AND tin THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS tp
-        |  FROM u)
-        |SELECT n_cand, n_truth, tp, n_cand - tp AS fp, n_truth - tp AS fn,
-        |  CAST(tp AS DOUBLE) / n_cand AS precision,
-        |  CAST(tp AS DOUBLE) / n_truth AS recall
-        |FROM m""".stripMargin,
+    "dedup_minhash_eval" -> s"WITH ${dMinhashEval("documents")}",
     // Same confusion mirror over the hash-sampled sub-corpus; h60 is
     // nonnegative so plain % mirrors Spark's pmod.
     "dedup_minhash_eval_sampled" ->
       s"""WITH sdocs AS (SELECT * FROM documents
         |  WHERE ${dH60("'eval' || CAST(doc_id AS VARCHAR)")} % 4 = 0),
-        |${dMinhashCteFrom("sdocs")},
-        |e0 AS (SELECT doc_id, unnest(sh) AS g FROM s),
-        |e AS (SELECT doc_id, g FROM (
-        |  SELECT doc_id, g, count(*) OVER (PARTITION BY g) AS df FROM e0)
-        |  WHERE df <= $StopShingleDfDefault),
-        |sz AS (SELECT doc_id, count(*) AS n_sh FROM e GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, COUNT(*) AS inter
-        |  FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |truth AS (
-        |  SELECT ia, ib FROM inter
-        |  JOIN sz sa ON ia = sa.doc_id JOIN sz sb ON ib = sb.doc_id
-        |  WHERE round(CAST(inter AS DOUBLE) /
-        |    (sa.n_sh + sb.n_sh - inter), 6) >= 0.5),
-        |u AS (
-        |  SELECT p.ia IS NOT NULL AS cin, t.ia IS NOT NULL AS tin
-        |  FROM (SELECT ia, ib FROM pairs) p
-        |  FULL OUTER JOIN truth t ON p.ia = t.ia AND p.ib = t.ib),
-        |m AS (
-        |  SELECT CAST(sum(CASE WHEN cin THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_cand,
-        |    CAST(sum(CASE WHEN tin THEN 1 ELSE 0 END) AS BIGINT) AS n_truth,
-        |    CAST(sum(CASE WHEN cin AND tin THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS tp
-        |  FROM u)
-        |SELECT n_cand, n_truth, tp, n_cand - tp AS fp, n_truth - tp AS fn,
-        |  CAST(tp AS DOUBLE) / n_cand AS precision,
-        |  CAST(tp AS DOUBLE) / n_truth AS recall
-        |FROM m""".stripMargin,
+        |${dMinhashEval("sdocs")}""".stripMargin,
     "text_boilerplate" ->
       s"""WITH sh AS (SELECT doc_id, unnest(${dShingles(3)}) AS g
         |  FROM documents),
@@ -1918,7 +1874,7 @@ object TextSim {
         |  CAST(df AS DOUBLE) / n_docs > 0.05 AS flagged
         |FROM top, t ORDER BY df DESC, shingle""".stripMargin,
     // Per-config banding replayed from the ONE sig CTE (same (a_j, b_j)
-    // constants); truth chain is dedup_minhash_eval's mirror verbatim.
+    // constants); the truth is dedup_minhash_eval's dJaccardTruth.
     "dedup_band_sweep" -> {
       val cfgCtes = BandSweepCfgs.map { case (b, r) =>
         s"""bands_$b AS (
@@ -1943,20 +1899,7 @@ object TextSim {
         |    CAST(len(list_filter(list_zip(sa, sb), x -> x[1] = x[2]))
         |      AS DOUBLE)/$NumHashes AS est_sim
         |  FROM ($unionColl)),
-        |e0 AS (SELECT doc_id, unnest(sh) AS g FROM s),
-        |e AS (SELECT doc_id, g FROM (
-        |  SELECT doc_id, g, count(*) OVER (PARTITION BY g) AS df FROM e0)
-        |  WHERE df <= $StopShingleDfDefault),
-        |sz AS (SELECT doc_id, count(*) AS n_sh FROM e GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, COUNT(*) AS inter
-        |  FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |truth AS (
-        |  SELECT ia, ib FROM inter
-        |  JOIN sz sa ON ia = sa.doc_id JOIN sz sb ON ib = sb.doc_id
-        |  WHERE round(CAST(inter AS DOUBLE) /
-        |    (sa.n_sh + sb.n_sh - inter), 6) >= 0.5),
+        |$dJaccardTruth,
         |nt AS (SELECT count(*) AS n_truth FROM truth),
         |per AS (
         |  SELECT bands, count(*) AS n_coll,
@@ -1967,9 +1910,7 @@ object TextSim {
         |  FROM coll c LEFT JOIN truth t ON c.ia = t.ia AND c.ib = t.ib
         |  GROUP BY 1)
         |SELECT bands, CAST($NumHashes / bands AS INTEGER) AS rows_per_band,
-        |  n_coll, n_cand, tp, n_cand - tp AS fp, n_truth - tp AS fn,
-        |  CAST(tp AS DOUBLE) / n_cand AS precision,
-        |  CAST(tp AS DOUBLE) / n_truth AS recall
+        |  n_coll, n_cand, tp, $dRates
         |FROM per, nt ORDER BY bands""".stripMargin
     },
     "curate_classifier" -> {
@@ -2047,15 +1988,7 @@ object TextSim {
     // engines — parity by construction at any scale factor.
     "dedup_ngram_jaccard" ->
       s"""WITH s AS (SELECT doc_id, ${dShingles(3)} AS sh FROM documents),
-        |e0 AS (SELECT doc_id, unnest(sh) AS g FROM s),
-        |e AS (SELECT doc_id, g FROM (
-        |  SELECT doc_id, g, count(*) OVER (PARTITION BY g) AS df FROM e0)
-        |  WHERE df <= $StopShingleDfDefault),
-        |sz AS (SELECT doc_id, count(*) AS n_sh FROM e GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, COUNT(*) AS inter
-        |  FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1,2)
+        |$dShingleOverlap
         |SELECT ia, ib, inter,
         |round(CAST(inter AS DOUBLE)/(sa.n_sh + sb.n_sh - inter), 6) AS jaccard
         |FROM inter JOIN sz sa ON ia = sa.doc_id JOIN sz sb ON ib = sb.doc_id
@@ -2063,16 +1996,7 @@ object TextSim {
         |ORDER BY ia, ib""".stripMargin,
     "dedup_containment" ->
       s"""WITH s AS (SELECT doc_id, ${dShingles(3)} AS sh FROM documents),
-        |e0 AS (SELECT doc_id, unnest(sh) AS g FROM s),
-        |e AS (SELECT doc_id, g, df FROM (
-        |  SELECT doc_id, g, count(*) OVER (PARTITION BY g) AS df FROM e0)
-        |  WHERE df <= $StopShingleDfDefault),
-        |sz AS (SELECT doc_id, count(*) AS n_sh FROM e GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib, COUNT(*) AS inter
-        |  FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  WHERE a.df >= 2
-        |  GROUP BY 1,2)
+        |$dShingleOverlap
         |SELECT ia, ib, inter,
         |  CAST(inter AS DOUBLE) / sa.n_sh AS c_ab,
         |  CAST(inter AS DOUBLE) / sb.n_sh AS c_ba
@@ -2345,9 +2269,7 @@ object TextSim {
         |  (SELECT count(*) FROM cd) AS n_cand,
         |  (SELECT count(*) FROM tr) AS n_truth,
         |  (SELECT count(*) FROM cd JOIN tr USING (label, ia, ib)) AS tp)
-        |SELECT n_cand, n_truth, tp, n_cand - tp AS fp, n_truth - tp AS fn,
-        |  CAST(tp AS DOUBLE) / n_cand AS precision,
-        |  CAST(tp AS DOUBLE) / n_truth AS recall
+        |SELECT n_cand, n_truth, tp, $dRates
         |FROM agg""".stripMargin
     },
     "udaf_minhash_lang" ->

@@ -11,7 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * recursive delete, [[graft.plans.DmlViews]] holds the one entry
   * point, target guard and parser command of the four DML verbs, and
   * [[graft.ops.Graph]] builds the customer–supplier graph and its
-  * undirected form once, in Spark and in the DuckDB oracle.
+  * undirected form once, in Spark and in the DuckDB oracle, and the
+  * near-dup family ([[graft.ops.TextSim]], Graph) and the ts_* queries
+  * ([[graft.ops.Relational]]) define each relation they share once
+  * per engine.
   * Copies drift apart (session confs did), so this spec fails when one
   * comes back, and when a script or run doc names a main
   * that no longer exists.
@@ -179,6 +182,68 @@ class OneCopySpec extends AnyFunSuite {
         |""".stripMargin
     val found = graphCopies(Seq(shared, copy))
     assert(found.size == 4, found.mkString("\n"))
+    assert(found.forall(_.contains("Other.scala (1x)")), found.mkString("\n"))
+  }
+
+  /** The near-duplicate family's shared relations and the ts_* family's
+    * daily spine, each held once per engine: the shingle overlap, the
+    * Jaccard truth, the confusion tally and its rates, the dup clusters
+    * and the daily revenue in cents. */
+  private val sharedRelations = Seq(
+    "shiftleft(col(\"ia\"), 32)" ->
+      "Spark shingle overlaps (TextSim.shingleOverlap)",
+    "e0 AS (SELECT doc_id, unnest(sh) AS g FROM s)" ->
+      "DuckDB shingle overlaps (TextSim.dShingleOverlap)",
+    "(col(\"na\") + col(\"nb\") - col(\"inter\"))" ->
+      "Spark Jaccard truths (TextSim.ngramJaccardOf)",
+    "WHERE round(CAST(inter AS DOUBLE) /" ->
+      "DuckDB Jaccard truths (TextSim.dJaccardTruth)",
+    "sum(when(col(\"cin\").isNotNull, 1L)" ->
+      "Spark confusion tallies (TextSim.confusion)",
+    "FULL OUTER JOIN truth t ON p.ia = t.ia" ->
+      "DuckDB confusion tallies (TextSim.dMinhashEval)",
+    "(col(\"n_cand\") - col(\"tp\")).as(\"fp\")" ->
+      "Spark precision/recall columns (TextSim.rates)",
+    "n_cand - tp AS fp" -> "DuckDB precision/recall columns (TextSim.dRates)",
+    "col(\"ia\").as(\"src\"), col(\"ib\").as(\"dst\")" ->
+      "Spark dup clusters (Graph.dupClusters)",
+    "JOIN edges e ON w.r = e.src" -> "DuckDB dup clusters (Graph.dDupClusters)",
+    "floor(col(\"rev\").cast(\"double\") * 100 + 0.5)" ->
+      "Spark daily-cents spines (Relational.dailyCents)",
+    "SELECT CAST(l_shipdate AS DATE) AS day," ->
+      "DuckDB daily-cents spines (Relational.dDailyCents)")
+
+  private def sharedRelationCopies(srcs: Seq[(String, String)]): Seq[String] =
+    sharedRelations.flatMap { case (needle, what) =>
+      copies(srcs, Regex.quote(needle).r, 1, what) }
+
+  test("src/main/scala defines the near-dup family's overlap, truth, " +
+      "tally and clusters and the ts_* daily spine once per engine") {
+    val found = sharedRelationCopies(mainSources.map { case (p, text) =>
+      p.toString -> text })
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the shared-relation scan has teeth: a query that spells its own " +
+      "copy of each beside the shared ones is flagged") {
+    val shared = "TextSim.scala" -> sharedRelations.map(_._1).mkString("\n")
+    assert(sharedRelationCopies(Seq(shared)).isEmpty)
+    val copy = "Other.scala" ->
+      """      .select((shiftleft(col("ia"), 32).bitwiseOR(col("ib"))).as("pk"))
+        |        |e0 AS (SELECT doc_id, unnest(sh) AS g FROM s),
+        |        (col("na") + col("nb") - col("inter")), 6))
+        |        |  WHERE round(CAST(inter AS DOUBLE) /
+        |          sum(when(col("cin").isNotNull, 1L).otherwise(0L)).as("n_cand"),
+        |        |  FULL OUTER JOIN truth t ON p.ia = t.ia AND p.ib = t.ib),
+        |          (col("n_cand") - col("tp")).as("fp"),
+        |        |SELECT n_cand, n_truth, tp, n_cand - tp AS fp, n_truth - tp AS fn,
+        |        .select(col("ia").as("src"), col("ib").as("dst"))
+        |        |  JOIN edges e ON w.r = e.src),
+        |          floor(col("rev").cast("double") * 100 + 0.5).cast("long").as("c"))
+        |        |  SELECT CAST(l_shipdate AS DATE) AS day,
+        |""".stripMargin
+    val found = sharedRelationCopies(Seq(shared, copy))
+    assert(found.size == sharedRelations.size, found.mkString("\n"))
     assert(found.forall(_.contains("Other.scala (1x)")), found.mkString("\n"))
   }
 

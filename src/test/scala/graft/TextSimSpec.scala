@@ -436,6 +436,34 @@ class TextSimSpec extends SparkSpec {
       assert(inSample(a) && inSample(b)) }
   }
 
+  test("dedup_minhash_eval: a slice where LSH proposes no pair grades " +
+    "precision NULL and recall 0 instead of failing on 0/0") {
+    // One true near-dup pair (one word of 14 changed: 9 of the 15
+    // distinct 3-gram shingles shared, J = 0.6) whose signatures agree
+    // on no whole 4-row band, so the 4x4 banding never proposes it.
+    val docs = Seq(
+      (1L, "every nightly load lands one parquet file per day under the " +
+        "raw table folder"),
+      (2L, "every nightly load drops one parquet file per day under the " +
+        "raw table folder"))
+    val dir = java.nio.file.Files.createTempDirectory("eval_no_cand").toString
+    docs.toDF("doc_id", "text").write.mode("overwrite")
+      .parquet(s"$dir/documents.parquet")
+    val truth = ops.TextSim.queries("dedup_ngram_jaccard")(spark, dir)
+      .select("ia", "ib", "jaccard").as[(Long, Long, Double)].collect()
+    assert(truth.toSeq === Seq((1L, 2L, 0.6)))
+    assert(ops.TextSim.minhashPairs(Tables.documents(spark, dir)).isEmpty,
+      "precondition: the banding must miss the pair")
+    val rows = ops.TextSim.queries("dedup_minhash_eval")(spark, dir).collect()
+    assert(rows.length === 1)
+    val r = rows.head
+    assert((r.getAs[Long]("n_cand"), r.getAs[Long]("n_truth"),
+      r.getAs[Long]("tp"), r.getAs[Long]("fp"), r.getAs[Long]("fn")) ===
+      ((0L, 1L, 0L, 0L, 1L)))
+    assert(r.isNullAt(r.fieldIndex("precision")))
+    assert(r.getAs[Double]("recall") === 0.0)
+  }
+
   test("text_pii_redact positive path: injected PII is counted and " +
     "rewritten, clean text passes through untouched") {
     import spark.implicits._
