@@ -44,6 +44,34 @@ object Corpus {
   private def tokenRows(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
 
+  /** BM25 per-term scores (doc_id, sc) against the doc-0 probe, each
+    * rounded to 6 before any sum, for the (doc, probe term) tf rows
+    * that `scored` keeps — text_bm25's and retrieval_rrf's lexical arm.
+    * ONE corpus-wide explode: tfAll's groupBy yields tf directly, and
+    * dl / the query-term list derive from it — the tokenizer (the
+    * dominant cost at scale) runs once, not once per statistic. */
+  private def bm25Terms(s: SparkSession, d: String,
+      scored: DataFrame => DataFrame): DataFrame = {
+    val tfAll = tokenRows(Tables.documents(s, d))
+      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
+    val dl = tfAll.groupBy("doc_id").agg(sum("tf").as("dl"))
+    val stats = dl.agg(count(lit(1)).as("n_docs"),
+      (sum("dl").cast("double") / count(lit(1))).as("avgdl"))
+    val q = tfAll.filter(col("doc_id") === 0).select("tok")
+    val tf = tfAll.join(q, "tok")
+    val df = tf.groupBy("tok").agg(count(lit(1)).as("df"))
+    scored(tf).join(df, "tok").join(dl, "doc_id").crossJoin(stats)
+      .select(col("doc_id"),
+        round(
+          log((col("n_docs").cast("double") - col("df") + lit(0.5)) /
+              (col("df") + lit(0.5)) + lit(1.0)) *
+          (col("tf").cast("double") * lit(2.2)) /
+          (col("tf").cast("double") + lit(1.2) *
+            (lit(0.25) + lit(0.75) * col("dl").cast("double") /
+              col("avgdl"))),
+          6).as("sc"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Gopher-style repetition signals: distinct-token ratio, most-frequent-
@@ -324,32 +352,11 @@ object Corpus {
     // tokenizer is |q|-bounded, not vocabulary-bounded; (n_docs, avgdl)
     // is a 1-row broadcast stat; the final top-20 is TakeOrderedAndProject
     // (never a global sort).
-    "text_bm25" -> ((s, d) => {
-      // ONE corpus-wide explode: tfAll's groupBy yields tf directly, and
-      // dl / the query-term list derive from it — the tokenizer (the
-      // dominant cost at scale) runs once, not once per statistic.
-      val tfAll = tokenRows(Tables.documents(s, d))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      val dl = tfAll.groupBy("doc_id").agg(sum("tf").as("dl"))
-      val stats = dl.agg(count(lit(1)).as("n_docs"),
-        (sum("dl").cast("double") / count(lit(1))).as("avgdl"))
-      val q = tfAll.filter(col("doc_id") === 0).select("tok")
-      val tf = tfAll.join(q, "tok")
-      val df = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-      tf.join(df, "tok").join(dl, "doc_id").crossJoin(stats)
-        .select(col("doc_id"),
-          round(
-            log((col("n_docs").cast("double") - col("df") + lit(0.5)) /
-                (col("df") + lit(0.5)) + lit(1.0)) *
-            (col("tf").cast("double") * lit(2.2)) /
-            (col("tf").cast("double") + lit(1.2) *
-              (lit(0.25) + lit(0.75) * col("dl").cast("double") /
-                col("avgdl"))),
-            6).as("sc"))
+    "text_bm25" -> ((s, d) =>
+      bm25Terms(s, d, identity)
         .groupBy("doc_id")
         .agg(dsum(col("sc"), 6).as("score"), count(lit(1)).as("n_terms"))
-        .orderBy(desc("score"), asc("doc_id")).limit(20)
-    }),
+        .orderBy(desc("score"), asc("doc_id")).limit(20)),
 
     // Hybrid retrieval via reciprocal-rank fusion (RRF, Cormack et al.
     // SIGIR 2009): the standard way deployed search fuses a lexical
@@ -370,27 +377,9 @@ object Corpus {
     // prune over ≤50 rows (the text_vocab pattern). Fusion itself is a
     // 50×50 full-outer join — constant-sized at any corpus scale.
     "retrieval_rrf" -> ((s, d) => {
-      val tfAll = tokenRows(Tables.documents(s, d))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      val dl = tfAll.groupBy("doc_id").agg(sum("tf").as("dl"))
-      val stats = dl.agg(count(lit(1)).as("n_docs"),
-        (sum("dl").cast("double") / count(lit(1))).as("avgdl"))
-      val q = tfAll.filter(col("doc_id") === 0).select("tok")
-      val tf = tfAll.join(q, "tok")
       // df is corpus-true (doc 0 included, as in text_bm25); only the
       // SCORED set excludes the probe doc itself.
-      val df = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-      val lexScore = tf.filter(col("doc_id") =!= 0)
-        .join(df, "tok").join(dl, "doc_id").crossJoin(stats)
-        .select(col("doc_id"),
-          round(
-            log((col("n_docs").cast("double") - col("df") + lit(0.5)) /
-                (col("df") + lit(0.5)) + lit(1.0)) *
-            (col("tf").cast("double") * lit(2.2)) /
-            (col("tf").cast("double") + lit(1.2) *
-              (lit(0.25) + lit(0.75) * col("dl").cast("double") /
-                col("avgdl"))),
-            6).as("sc"))
+      val lexScore = bm25Terms(s, d, _.filter(col("doc_id") =!= 0))
         .groupBy("doc_id").agg(dsum(col("sc"), 6).as("score"))
       val lex = lexScore
         .orderBy(desc("score"), asc("doc_id")).limit(50)
@@ -877,6 +866,45 @@ object Corpus {
     })
   )
 
+  /** The winnowing selection both text_winnow and dedup_substring read:
+    * token rows `t`, positional trigrams `g3`, their hashes `h3`, and
+    * `sel` (doc_id, pos, fp, is_fullw) — the min hash of each 4-trigram
+    * window, full windows flagged. */
+  private lazy val dWinnowSel: String =
+    s"""t AS ($dTokRows),
+      |g3 AS (SELECT doc_id, pos,
+      |    tok || ' ' || lead(tok, 1) OVER w || ' ' ||
+      |      lead(tok, 2) OVER w AS g,
+      |    lead(tok, 2) OVER w IS NOT NULL AS is_full
+      |  FROM t WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
+      |h3 AS (SELECT doc_id, pos, ${dH60("g")} AS h
+      |  FROM g3 WHERE is_full),
+      |sel AS (SELECT doc_id, pos,
+      |    min(h) OVER (PARTITION BY doc_id ORDER BY pos
+      |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
+      |    lead(h, 3) OVER (PARTITION BY doc_id ORDER BY pos)
+      |      IS NOT NULL AS is_fullw
+      |  FROM h3)""".stripMargin
+
+  /** DuckDB mirror of [[bm25Terms]] over every doc: the `t`…`sc` CTE
+    * chain text_bm25 sums and retrieval_rrf's lexical arm ranks. */
+  private lazy val dBm25Terms: String =
+    s"""t AS ($dTokRows),
+      |dl AS (SELECT doc_id, count(*) AS dl FROM t GROUP BY 1),
+      |st AS (SELECT count(*) AS n_docs,
+      |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
+      |q AS (SELECT DISTINCT tok FROM t WHERE doc_id = 0),
+      |tf AS (SELECT doc_id, tok, count(*) AS tf
+      |  FROM t JOIN q USING (tok) GROUP BY 1, 2),
+      |df AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
+      |sc AS (SELECT doc_id,
+      |    round(ln((CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5)
+      |        + 1.0) *
+      |      (CAST(tf AS DOUBLE) * 2.2) /
+      |      (CAST(tf AS DOUBLE) + 1.2 *
+      |        (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl)), 6) AS sc
+      |  FROM tf JOIN df USING (tok) JOIN dl USING (doc_id), st)""".stripMargin
+
   /** text_lm_score's full oracle, factored so curate_ccnet_buckets can
     * nest it verbatim — one SQL text, two rows, zero drift (the engine
     * side shares the declared lambda the same way). */
@@ -984,42 +1012,16 @@ object Corpus {
         |FROM documents GROUP BY ROLLUP(source, lang)
         |ORDER BY g_src, g_lang, source, lang""".stripMargin,
     "text_winnow" ->
-      s"""WITH t AS ($dTokRows),
-        |g3 AS (SELECT doc_id, pos,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' ||
-        |      lead(tok, 2) OVER w AS g,
-        |    lead(tok, 2) OVER w IS NOT NULL AS is_full
-        |  FROM t WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-        |h3 AS (SELECT doc_id, pos, ${dH60("g")} AS h
-        |  FROM g3 WHERE is_full),
-        |sel AS (SELECT doc_id,
-        |    min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-        |    lead(h, 3) OVER (PARTITION BY doc_id ORDER BY pos)
-        |      IS NOT NULL AS is_fullw
-        |  FROM h3),
+      s"""WITH $dWinnowSel,
         |fps AS (SELECT DISTINCT doc_id, fp FROM sel WHERE is_fullw)
         |SELECT doc_id, count(*) AS n_fp, min(fp) AS min_fp,
         |  max(fp) AS max_fp
         |FROM fps GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // the text_winnow chain with positions kept; pos is 1-based here vs
-    // the Generator's 0-based — interval LENGTHS are shift-invariant, so
-    // every emitted number is identical
+    // the text_winnow chain; pos is 1-based here vs the Generator's
+    // 0-based — interval LENGTHS are shift-invariant, so every emitted
+    // number is identical
     "dedup_substring" ->
-      s"""WITH t AS ($dTokRows),
-        |g3 AS (SELECT doc_id, pos,
-        |    tok || ' ' || lead(tok, 1) OVER w || ' ' ||
-        |      lead(tok, 2) OVER w AS g,
-        |    lead(tok, 2) OVER w IS NOT NULL AS is_full
-        |  FROM t WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-        |h3 AS (SELECT doc_id, pos, ${dH60("g")} AS h
-        |  FROM g3 WHERE is_full),
-        |sel AS (SELECT doc_id, pos,
-        |    min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-        |    lead(h, 3) OVER (PARTITION BY doc_id ORDER BY pos)
-        |      IS NOT NULL AS is_fullw
-        |  FROM h3),
+      s"""WITH $dWinnowSel,
         |fps AS (SELECT doc_id, pos, fp FROM sel WHERE is_fullw),
         |shared AS (SELECT fp FROM fps GROUP BY fp
         |  HAVING count(DISTINCT doc_id) >= 2),
@@ -1048,21 +1050,7 @@ object Corpus {
         |FROM documents d LEFT JOIN per p USING (doc_id)
         |ORDER BY d.doc_id""".stripMargin,
     "text_bm25" ->
-      s"""WITH t AS ($dTokRows),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM t GROUP BY 1),
-        |st AS (SELECT count(*) AS n_docs,
-        |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |q AS (SELECT DISTINCT tok FROM t WHERE doc_id = 0),
-        |tf AS (SELECT doc_id, tok, count(*) AS tf
-        |  FROM t JOIN q USING (tok) GROUP BY 1, 2),
-        |df AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-        |sc AS (SELECT doc_id,
-        |    round(ln((CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5)
-        |        + 1.0) *
-        |      (CAST(tf AS DOUBLE) * 2.2) /
-        |      (CAST(tf AS DOUBLE) + 1.2 *
-        |        (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl)), 6) AS sc
-        |  FROM tf JOIN df USING (tok) JOIN dl USING (doc_id), st)
+      s"""WITH $dBm25Terms
         |SELECT doc_id,
         |  CAST(round(SUM(CAST(sc AS DECIMAL(30,8))), 6) AS DOUBLE)
         |    AS score,
@@ -1075,26 +1063,11 @@ object Corpus {
     // on the ROUNDED rrf + doc_id in both engines (the sim_topk_pq
     // ordering convention).
     "retrieval_rrf" ->
-      s"""WITH t AS ($dTokRows),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM t GROUP BY 1),
-        |st AS (SELECT count(*) AS n_docs,
-        |    CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |q AS (SELECT DISTINCT tok FROM t WHERE doc_id = 0),
-        |tf AS (SELECT doc_id, tok, count(*) AS tf
-        |  FROM t JOIN q USING (tok) GROUP BY 1, 2),
-        |df AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-        |sc AS (SELECT doc_id,
-        |    round(ln((CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5)
-        |        + 1.0) *
-        |      (CAST(tf AS DOUBLE) * 2.2) /
-        |      (CAST(tf AS DOUBLE) + 1.2 *
-        |        (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl)), 6) AS sc
-        |  FROM tf JOIN df USING (tok) JOIN dl USING (doc_id), st
-        |  WHERE doc_id <> 0),
+      s"""WITH $dBm25Terms,
         |ls AS (SELECT doc_id,
         |    CAST(round(SUM(CAST(sc AS DECIMAL(30,8))), 6) AS DOUBLE)
         |      AS score
-        |  FROM sc GROUP BY doc_id),
+        |  FROM sc WHERE doc_id <> 0 GROUP BY doc_id),
         |lex AS (SELECT doc_id, lr FROM (SELECT doc_id, row_number()
         |    OVER (ORDER BY score DESC, doc_id) AS lr FROM ls)
         |  WHERE lr <= 50),

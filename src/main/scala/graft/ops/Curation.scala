@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
+import graft.ops.TextSim.dStopwords
 
 /** Dataset-curation operators: deterministic sampling and splits, mixture
   * rebalancing, eval-set decontamination, and sliding-window chunking.
@@ -996,15 +997,31 @@ object Curation {
       |FROM g JOIN ev USING (g) WHERE g.doc_id >= 10
       |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin
 
+  /** DuckDB mirror of [[packManifest]]: one (shard, seq, n_docs,
+    * seq_tok, first_doc, last_doc) row per packed sequence. */
+  private lazy val dPackManifest: String =
+    s"""WITH t AS (SELECT doc_id,
+       |  CAST(len($dToks) AS BIGINT) AS n_tok,
+       |  ${dH60("'pck' || CAST(doc_id AS VARCHAR)")} % $PackShards AS shard
+       |  FROM documents),
+       |c AS (SELECT doc_id, n_tok, shard,
+       |  CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |    AS BIGINT) AS cum0
+       |  FROM t)
+       |SELECT shard, cum0 // $PackBudget AS seq, count(*) AS n_docs,
+       |  CAST(sum(n_tok) AS BIGINT) AS seq_tok,
+       |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
+       |FROM c GROUP BY 1, 2""".stripMargin
+
   /** DuckDB mirror of round(TextSim.classifierZ, 6) in a context where
     * `t` holds the token list and `text` the raw text — the same
     * interpolation curation_card's card oracle spells (one more consumer
     * of the classifier contract: quantize at 6dp BEFORE any gate). */
   private lazy val dZRound6: String = {
-    val stop = TextSim.stopwords.map(w => s"'$w'").mkString("[", ",", "]")
     s"""round(
        |      -1.0 + 2.5 * least(CAST(len(t) AS DOUBLE) / 100.0, 1.0) +
-       |      3.0 * (CAST(len(list_filter(t, x -> list_contains($stop, x)))
+       |      3.0 * (CAST(len(list_filter(t, x -> list_contains($dStopwords, x)))
        |        AS DOUBLE) / len(t)) -
        |      4.0 * (CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
        |        AS DOUBLE) / length(text)) +
@@ -1015,13 +1032,12 @@ object Curation {
   /** DuckDB mirror of gopherRules' conjunction over the same `t`/`text`
     * context (the card oracle's gk CASE, factored for curate_funnel). */
   private lazy val dGopherKeep: String = {
-    val stop = TextSim.stopwords.map(w => s"'$w'").mkString("[", ",", "]")
     s"""(len(t) >= 10 AND len(t) <= 1000) AND
        |      (CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE)
        |        / len(t) >= 3.0 AND
        |       CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE)
        |        / len(t) <= 10.0) AND
-       |      (len(list_filter(t, x -> list_contains($stop, x))) >= 2) AND
+       |      (len(list_filter(t, x -> list_contains($dStopwords, x))) >= 2) AND
        |      (round(CAST(len(list_distinct(t)) AS DOUBLE) / len(t), 6)
        |        >= 0.5)""".stripMargin
   }
@@ -1076,7 +1092,6 @@ object Curation {
         |ORDER BY stage_id""".stripMargin
     },
     "curation_card" -> {
-      val stop = TextSim.stopwords.map(w => s"'$w'").mkString("[", ",", "]")
       val piiAny = TextSim.PiiPatterns.map { case (_, p, _) =>
         s"len(regexp_extract_all(text, '$p')) > 0"
       }.mkString(" OR ")
@@ -1084,23 +1099,9 @@ object Curation {
         |  FROM documents),
         |base AS (SELECT doc_id, source, lang,
         |    CAST(len(t) AS BIGINT) AS n_tok,
-        |    CAST(round(
-        |      -1.0 + 2.5 * least(CAST(len(t) AS DOUBLE) / 100.0, 1.0) +
-        |      3.0 * (CAST(len(list_filter(t, x -> list_contains($stop, x)))
-        |        AS DOUBLE) / len(t)) -
-        |      4.0 * (CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
-        |        AS DOUBLE) / length(text)) +
-        |      0.8 * (CAST(list_sum(list_transform(t, x -> length(x)))
-        |        AS DOUBLE) / len(t) / 10.0), 6) AS DECIMAL(30,8)) AS z,
+        |    CAST($dZRound6 AS DECIMAL(30,8)) AS z,
         |    CASE WHEN $piiAny THEN 1 ELSE 0 END AS pii,
-        |    CASE WHEN (len(t) >= 10 AND len(t) <= 1000) AND
-        |      (CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE)
-        |        / len(t) >= 3.0 AND
-        |       CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE)
-        |        / len(t) <= 10.0) AND
-        |      (len(list_filter(t, x -> list_contains($stop, x))) >= 2) AND
-        |      (round(CAST(len(list_distinct(t)) AS DOUBLE) / len(t), 6)
-        |        >= 0.5) THEN 1 ELSE 0 END AS gk,
+        |    CASE WHEN $dGopherKeep THEN 1 ELSE 0 END AS gk,
         |    sha256(text) AS h
         |  FROM tk),
         |ps AS (SELECT source, count(*) AS n_docs,
@@ -1139,7 +1140,6 @@ object Curation {
         |ORDER BY source""".stripMargin
     },
     "curate_gopher_rules" -> {
-      val stop = TextSim.stopwords.map(w => s"'$w'").mkString("[", ",", "]")
       s"""WITH t AS (SELECT doc_id, $dToks AS tk FROM documents)
         |SELECT doc_id,
         |  len(tk) >= 10 AND len(tk) <= 1000 AS r_len,
@@ -1147,7 +1147,7 @@ object Curation {
         |    / len(tk) >= 3.0 AND
         |  CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE)
         |    / len(tk) <= 10.0 AS r_word_len,
-        |  len(list_filter(tk, x -> list_contains($stop, x))) >= 2 AS r_stop,
+        |  len(list_filter(tk, x -> list_contains($dStopwords, x))) >= 2 AS r_stop,
         |  round(CAST(len(list_distinct(tk)) AS DOUBLE) / len(tk), 6)
         |    >= 0.5 AS r_unique,
         |  (len(tk) >= 10 AND len(tk) <= 1000) AND
@@ -1155,7 +1155,7 @@ object Curation {
         |    / len(tk) >= 3.0 AND
         |   CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE)
         |    / len(tk) <= 10.0) AND
-        |  (len(list_filter(tk, x -> list_contains($stop, x))) >= 2) AND
+        |  (len(list_filter(tk, x -> list_contains($dStopwords, x))) >= 2) AND
         |  (round(CAST(len(list_distinct(tk)) AS DOUBLE) / len(tk), 6)
         |    >= 0.5) AS keep
         |FROM t ORDER BY doc_id""".stripMargin
@@ -1285,13 +1285,12 @@ object Curation {
         |  CAST(floor(sq / z * total + 0.5) AS BIGINT) AS n_target
         |FROM z ORDER BY source""".stripMargin,
     "pipeline_curate2" -> {
-      val stop = TextSim.stopwords.map(w => s"'$w'").mkString("[", ",", "]")
       s"""WITH RECURSIVE
         |f AS (SELECT doc_id, text, source,
         |    round(
         |    -1.0 + 2.5 * least(CAST(len($dToks) AS DOUBLE) / 100.0, 1.0) +
         |    3.0 * (CAST(len(list_filter($dToks,
-        |      t -> list_contains($stop, t))) AS DOUBLE) / len($dToks)) -
+        |      t -> list_contains($dStopwords, t))) AS DOUBLE) / len($dToks)) -
         |    4.0 * (CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
         |      AS DOUBLE) / length(text)) +
         |    0.8 * (CAST(list_sum(list_transform($dToks, t -> length(t)))
@@ -1434,33 +1433,9 @@ object Curation {
         |  substr(sha256(string_agg(tok, ' ' ORDER BY p)), 1, 16)
         |    AS chunk_hash
         |FROM c GROUP BY doc_id, chunk ORDER BY doc_id, chunk""".stripMargin,
-    "pack_sequences" ->
-      s"""WITH t AS (SELECT doc_id,
-        |  CAST(len($dToks) AS BIGINT) AS n_tok,
-        |  ${dH60("'pck' || CAST(doc_id AS VARCHAR)")} % $PackShards AS shard
-        |  FROM documents),
-        |c AS (SELECT doc_id, n_tok, shard,
-        |  CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    AS BIGINT) AS cum0
-        |  FROM t)
-        |SELECT shard, cum0 // $PackBudget AS seq, count(*) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS seq_tok,
-        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+    "pack_sequences" -> s"$dPackManifest\nORDER BY 1, 2",
     "pack_efficiency" ->
-      s"""WITH t AS (SELECT doc_id,
-        |  CAST(len($dToks) AS BIGINT) AS n_tok,
-        |  ${dH60("'pck' || CAST(doc_id AS VARCHAR)")} % $PackShards AS shard
-        |  FROM documents),
-        |c AS (SELECT doc_id, n_tok, shard,
-        |  CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    AS BIGINT) AS cum0
-        |  FROM t),
-        |m AS (SELECT shard, cum0 // $PackBudget AS seq,
-        |    count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS seq_tok
-        |  FROM c GROUP BY 1, 2)
+      s"""WITH m AS ($dPackManifest)
         |SELECT shard, count(*) AS n_seqs,
         |  CAST(sum(n_docs) AS BIGINT) AS n_docs,
         |  CAST(sum(seq_tok) AS BIGINT) AS n_tokens,

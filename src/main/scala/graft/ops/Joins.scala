@@ -47,6 +47,22 @@ object Joins {
     c.hint("merge").join(o, c("c_custkey") === o("o_custkey"))
   }
 
+  /** The as-of joins' one event stream: errors (typ 0, err_id) and
+    * clicks (typ 1, clk_ts) of `events`, ms-truncated to `tsm`, unioned
+    * by name under the per-user key `u`. */
+  private def asofEvents(s: SparkSession, d: String): DataFrame = {
+    val e = events(s, d)
+      .withColumn("tsm", date_trunc("MILLISECOND", col("ts")))
+    val err = e.filter(col("event_type") === "error")
+      .select(col("user_id").as("u"), col("tsm"), lit(0).as("typ"),
+        col("event_id").as("err_id"),
+        lit(null).cast("timestamp").as("clk_ts"))
+    val clk = e.filter(col("event_type") === "click")
+      .select(col("user_id").as("u"), col("tsm"), lit(1).as("typ"),
+        lit(null).cast("long").as("err_id"), col("tsm").as("clk_ts"))
+    err.unionByName(clk)
+  }
+
   val queries: Map[String, Q] = Map(
     // C1 broadcast: fact × 3 broadcast dims, revenue per region.
     "join_broadcast" -> ((s, d) => {
@@ -131,20 +147,11 @@ object Joins {
     // (tsm, typ) with errors(0) before clicks(1) makes an equal-timestamp
     // click fall OUTSIDE the error's frame => strictly-before semantics.
     "join_asof" -> ((s, d) => {
-      val e = events(s, d)
-        .withColumn("tsm", date_trunc("MILLISECOND", col("ts")))
-      val err = e.filter(col("event_type") === "error")
-        .select(col("user_id").as("u"), col("tsm"), lit(0).as("typ"),
-          col("event_id").as("err_id"),
-          lit(null).cast("timestamp").as("clk_ts"))
-      val clk = e.filter(col("event_type") === "click")
-        .select(col("user_id").as("u"), col("tsm"), lit(1).as("typ"),
-          lit(null).cast("long").as("err_id"), col("tsm").as("clk_ts"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("u").orderBy(col("tsm"), col("typ"))
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
           org.apache.spark.sql.expressions.Window.currentRow)
-      err.unionByName(clk)
+      asofEvents(s, d)
         .withColumn("last_clk", last(col("clk_ts"), ignoreNulls = true).over(w))
         .filter(col("typ") === 0)
         .select(col("err_id"), col("u").as("user_id"),
@@ -185,16 +192,7 @@ object Joins {
     // density (a pair range-join degrades with clicks-per-user).
     "join_asof_nearest" -> ((s, d) => {
       val TolUs = 600000000L
-      val e = events(s, d)
-        .withColumn("tsm", date_trunc("MILLISECOND", col("ts")))
-      val err = e.filter(col("event_type") === "error")
-        .select(col("user_id").as("u"), col("tsm"), lit(0).as("typ"),
-          col("event_id").as("err_id"),
-          lit(null).cast("timestamp").as("clk_ts"))
-      val clk = e.filter(col("event_type") === "click")
-        .select(col("user_id").as("u"), col("tsm"), lit(1).as("typ"),
-          lit(null).cast("long").as("err_id"), col("tsm").as("clk_ts"))
-      val uni = err.unionByName(clk)
+      val uni = asofEvents(s, d)
       val wB = Window.partitionBy("u").orderBy(col("tsm"), col("typ"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       // reverse scan: at equal tsm the error (typ 0) sorts FIRST under

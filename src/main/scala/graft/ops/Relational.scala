@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.Q
 import graft.Tables._
+import graft.streaming.StreamOps.ohlcBar
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1166,21 +1167,8 @@ object Relational {
     // production boundary pass is the declared `agg_histogram_eqdepth_approx`
     // twin below (GK sketch, mergeable, map-side combined); this exact
     // form stays as the oracle row that pins the semantics.
-    "agg_histogram_eqdepth" -> ((s, d) => {
-      val o = orders(s, d)
-      val bounds = o.agg(expr(
-        "transform(percentile(o_totalprice, " +
-          "array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9)), b -> round(b, 2))")
-        .as("bs"))
-      o.crossJoin(broadcast(bounds))
-        .select(expr("size(filter(bs, b -> o_totalprice > b))")
-          .cast("int").as("bucket"), col("o_totalprice"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"),
-          round(min("o_totalprice"), 2).as("lo"),
-          round(max("o_totalprice"), 2).as("hi"))
-        .orderBy("bucket")
-    }),
+    "agg_histogram_eqdepth" -> ((s, d) =>
+      eqDepthHistogram(s, d, exactPercentile)),
 
     // The 100 TB boundary pass for the equi-depth histogram: identical
     // plan shape, but decile boundaries come from approx_percentile
@@ -1191,21 +1179,8 @@ object Relational {
     // free. Rows-only at the driver (sketch outputs differ across
     // engines); ApproxAccuracySpec pins per-bucket mass within 2% of the
     // ideal n/10 against the exact oracle form.
-    "agg_histogram_eqdepth_approx" -> ((s, d) => {
-      val o = orders(s, d)
-      val bounds = o.agg(expr(
-        "transform(approx_percentile(o_totalprice, " +
-          "array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9), 10000), " +
-          "b -> round(b, 2))").as("bs"))
-      o.crossJoin(broadcast(bounds))
-        .select(expr("size(filter(bs, b -> o_totalprice > b))")
-          .cast("int").as("bucket"), col("o_totalprice"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"),
-          round(min("o_totalprice"), 2).as("lo"),
-          round(max("o_totalprice"), 2).as("hi"))
-        .orderBy("bucket")
-    }),
+    "agg_histogram_eqdepth_approx" -> ((s, d) =>
+      eqDepthHistogram(s, d, approxPercentile)),
 
     // Customer RFM segmentation (recency / frequency / monetary quintile
     // scores) — the classic CRM dashboard analytic. Deliberately NOT the
@@ -1219,28 +1194,7 @@ object Relational {
     // Recency scores INVERTED (recent = high score, the RFM convention).
     // Like agg_histogram_eqdepth, the exact boundary pass is the oracle
     // form only — `customer_rfm_approx` below is the wired 100 TB path.
-    "customer_rfm" -> ((s, d) => {
-      val o = orders(s, d)
-      val today = o.agg(max(col("o_orderdate").cast("date")).as("today"))
-      val base = o.groupBy("o_custkey")
-        .agg(max(col("o_orderdate").cast("date")).as("last_d"),
-          count(lit(1)).as("f"),
-          round(exactSum(col("o_totalprice")), 2).cast("double").as("m"))
-        .crossJoin(broadcast(today))
-        .select(col("o_custkey"),
-          datediff(col("today"), col("last_d")).as("r"),
-          col("f"), col("m"))
-      def quintiles(c: String) = expr(
-        s"transform(percentile($c, array(0.2,0.4,0.6,0.8)), " +
-          "b -> round(b, 2))").as(c + "b")
-      val bounds = base.agg(quintiles("r"), quintiles("f"), quintiles("m"))
-      base.crossJoin(broadcast(bounds))
-        .select(col("o_custkey"), col("r"), col("f"), col("m"),
-          (lit(5) - expr("size(filter(rb, b -> r > b))")).as("r_score"),
-          (lit(1) + expr("size(filter(fb, b -> f > b))")).as("f_score"),
-          (lit(1) + expr("size(filter(mb, b -> m > b))")).as("m_score"))
-        .orderBy("o_custkey")
-    }),
+    "customer_rfm" -> ((s, d) => rfm(s, d, exactPercentile)),
 
     // The 100 TB boundary pass for RFM: same per-customer base aggregate
     // and broadcast-boundary scoring, but quintile boundaries from
@@ -1250,28 +1204,7 @@ object Relational {
     // distributed; only the boundary pass changes. Rows-only at the
     // driver; ApproxAccuracySpec pins score drift ≤1 quintile and
     // fraction-of-customers-drifted against the exact oracle form.
-    "customer_rfm_approx" -> ((s, d) => {
-      val o = orders(s, d)
-      val today = o.agg(max(col("o_orderdate").cast("date")).as("today"))
-      val base = o.groupBy("o_custkey")
-        .agg(max(col("o_orderdate").cast("date")).as("last_d"),
-          count(lit(1)).as("f"),
-          round(exactSum(col("o_totalprice")), 2).cast("double").as("m"))
-        .crossJoin(broadcast(today))
-        .select(col("o_custkey"),
-          datediff(col("today"), col("last_d")).as("r"),
-          col("f"), col("m"))
-      def quintiles(c: String) = expr(
-        s"transform(approx_percentile($c, array(0.2,0.4,0.6,0.8), 10000), " +
-          "b -> round(b, 2))").as(c + "b")
-      val bounds = base.agg(quintiles("r"), quintiles("f"), quintiles("m"))
-      base.crossJoin(broadcast(bounds))
-        .select(col("o_custkey"), col("r"), col("f"), col("m"),
-          (lit(5) - expr("size(filter(rb, b -> r > b))")).as("r_score"),
-          (lit(1) + expr("size(filter(fb, b -> f > b))")).as("f_score"),
-          (lit(1) + expr("size(filter(mb, b -> m > b))")).as("m_score"))
-        .orderBy("o_custkey")
-    }),
+    "customer_rfm_approx" -> ((s, d) => rfm(s, d, approxPercentile)),
 
     // D10 extension: Deequ-style CONSTRAINT SUITE — the pass/fail data
     // contract a pipeline gates ingest on, as one single-scan aggregate
@@ -1469,12 +1402,7 @@ object Relational {
     "ts_ohlc" -> ((s, d) =>
       events(s, d)
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bar_ts"))
-        .agg(
-          min_by(col("value"), struct(col("ts"), col("event_id"))).as("open"),
-          max(col("value")).as("high"),
-          min(col("value")).as("low"),
-          max_by(col("value"), struct(col("ts"), col("event_id"))).as("close"),
-          count(lit(1)).as("n"))
+        .agg(ohlcBar.head, ohlcBar.tail: _*)
         .orderBy("event_type", "bar_ts")),
 
     // Higher moments (D6 extension): population skewness and excess
@@ -1928,12 +1856,72 @@ object Relational {
     //    pins every estimate within 5% of the exact profile.
     // min/max reprs go through type-stable casts (decimal for doubles,
     // date for timestamps) so the stringification is engine-independent.
-    "dq_profile" -> (dqProfile(_, _, exact = true)),
-    "dq_profile_approx" -> (dqProfile(_, _, exact = false))
+    "dq_profile" -> (dqProfile(_, _, countDistinct(_))),
+    // rsd 0.02 (not the 0.05 default): rsd is a standard deviation, not a
+    // bound — at 0.05 a 6-column profile routinely throws a >5% estimate
+    // (observed at sf0.01). 0.02 keeps the spec's 5% gate at 2.5σ while
+    // the sketch stays ~2.5 KB/column — still mergeable, map-side, no
+    // Expand.
+    "dq_profile_approx" -> (dqProfile(_, _, approx_count_distinct(_, 0.02)))
   )
 
-  /** Shared plan for dq_profile / dq_profile_approx (see the queries-map
-    * comment for the exact-vs-approx 100 TB tradeoff). */
+  /** The boundary pass the exact/approx twins share: the exact
+    * percentile of column `c` at the fractions array `ps` (one buffer
+    * holds every value — the oracle-checked form)… */
+  private def exactPercentile(c: String, ps: String): String =
+    s"percentile($c, $ps)"
+
+  /** …and the mergeable GK sketch (accuracy 10000) the 100 TB path runs. */
+  private def approxPercentile(c: String, ps: String): String =
+    s"approx_percentile($c, $ps, 10000)"
+
+  /** agg_histogram_eqdepth's body: decile boundaries of o_totalprice from
+    * `pct`, rounded to the price grain, broadcast as one row; each
+    * order's bucket is the count of boundaries below it. */
+  private def eqDepthHistogram(s: SparkSession, d: String,
+      pct: (String, String) => String): DataFrame = {
+    val o = orders(s, d)
+    val bounds = o.agg(expr(
+      s"transform(${pct("o_totalprice",
+        "array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9)")}, b -> round(b, 2))")
+      .as("bs"))
+    o.crossJoin(broadcast(bounds))
+      .select(expr("size(filter(bs, b -> o_totalprice > b))")
+        .cast("int").as("bucket"), col("o_totalprice"))
+      .groupBy("bucket")
+      .agg(count(lit(1)).as("n"),
+        round(min("o_totalprice"), 2).as("lo"),
+        round(max("o_totalprice"), 2).as("hi"))
+      .orderBy("bucket")
+  }
+
+  /** customer_rfm's body: per-customer recency (days before the latest
+    * order), frequency and exact monetary total, scored 1–5 against
+    * quintile boundaries from `pct` (recency inverted). */
+  private def rfm(s: SparkSession, d: String,
+      pct: (String, String) => String): DataFrame = {
+    val o = orders(s, d)
+    val today = o.agg(max(col("o_orderdate").cast("date")).as("today"))
+    val base = o.groupBy("o_custkey")
+      .agg(max(col("o_orderdate").cast("date")).as("last_d"),
+        count(lit(1)).as("f"),
+        round(exactSum(col("o_totalprice")), 2).cast("double").as("m"))
+      .crossJoin(broadcast(today))
+      .select(col("o_custkey"),
+        datediff(col("today"), col("last_d")).as("r"),
+        col("f"), col("m"))
+    def quintiles(c: String) = expr(
+      s"transform(${pct(c, "array(0.2,0.4,0.6,0.8)")}, " +
+        "b -> round(b, 2))").as(c + "b")
+    val bounds = base.agg(quintiles("r"), quintiles("f"), quintiles("m"))
+    base.crossJoin(broadcast(bounds))
+      .select(col("o_custkey"), col("r"), col("f"), col("m"),
+        (lit(5) - expr("size(filter(rb, b -> r > b))")).as("r_score"),
+        (lit(1) + expr("size(filter(fb, b -> f > b))")).as("f_score"),
+        (lit(1) + expr("size(filter(mb, b -> m > b))")).as("m_score"))
+      .orderBy("o_custkey")
+  }
+
   /** Deterministic synthetic CDC changelog derived from orders: every key
     * inserts (seq 1), keys ≡0 (mod 3) update to 2× price (seq 2), keys ≡0
     * (mod 7) delete (seq 3). Shared by the batch compaction (`cdc_apply`)
@@ -1998,7 +1986,11 @@ object Relational {
       .select(col("o_orderkey"), col("seq"), col("op"), col("price"))
   }
 
-  private def dqProfile(s: SparkSession, d: String, exact: Boolean): DataFrame = {
+  /** Shared plan for dq_profile / dq_profile_approx, each column's
+    * distinct count taken by `distinct` (see the queries-map comment for
+    * the exact-vs-approx 100 TB tradeoff). */
+  private def dqProfile(s: SparkSession, d: String,
+      distinct: Column => Column): DataFrame = {
     // testdata artifact guard (same as Tables.documents): orders ships as
     // ONE parquet file = one input split, which would run the Expand +
     // partial aggregate on a single task; round-robin the rows across the
@@ -2022,16 +2014,9 @@ object Relational {
         c.cast("date").cast("string")),
       ("o_priority_nullif", (c: org.apache.spark.sql.Column) => c)
     )
-    def distinctAgg(n: String) =
-      // rsd 0.02 (not the 0.05 default): rsd is a standard deviation, not a
-      // bound — at 0.05 a 6-column profile routinely throws a >5% estimate
-      // (observed at sf0.01). 0.02 keeps the spec's 5% gate at 2.5σ while
-      // the sketch stays ~2.5 KB/column — still mergeable, map-side, no
-      // Expand.
-      if (exact) countDistinct(col(n)) else approx_count_distinct(col(n), 0.02)
     val aggs = count(lit(1)).as("n_rows") +: profiled.flatMap { case (n, repr) =>
       Seq(count(col(n)).as(s"nn_$n"),
-        distinctAgg(n).as(s"nd_$n"),
+        distinct(col(n)).as(s"nd_$n"),
         repr(min(col(n))).as(s"mn_$n"),
         repr(max(col(n))).as(s"mx_$n"))
     }
@@ -2058,6 +2043,17 @@ object Relational {
       .agg(exactSum(col("l_extendedprice")).as("rev"))
       .select(col("day"),
         floor(col("rev").cast("double") * 100 + 0.5).cast("long").as("c"))
+
+  /** DuckDB mirror of [[cdcLog]], the `log` CTE every CDC and snapshot
+    * oracle (and `stream_cdc_apply`'s) compacts or replays. */
+  private val dCdcLog =
+    """log AS (
+      |  SELECT o_orderkey, 1 AS seq, 'I' AS op, o_totalprice AS price
+      |    FROM orders
+      |  UNION ALL SELECT o_orderkey, 2, 'U', o_totalprice * 2
+      |    FROM orders WHERE o_orderkey % 3 = 0
+      |  UNION ALL SELECT o_orderkey, 3, 'D', NULL
+      |    FROM orders WHERE o_orderkey % 7 = 0)""".stripMargin
 
   /** DuckDB mirror of [[dailyCents]], the `daily` CTE. */
   private val dDailyCents =
@@ -2859,13 +2855,7 @@ object Relational {
     // Same deterministic changelog; latest-wins spelled as a window here —
     // the contract is the compacted state, not the plan shape.
     "cdc_apply" ->
-      """WITH log AS (
-        |  SELECT o_orderkey, 1 AS seq, 'I' AS op, o_totalprice AS price
-        |    FROM orders
-        |  UNION ALL SELECT o_orderkey, 2, 'U', o_totalprice * 2
-        |    FROM orders WHERE o_orderkey % 3 = 0
-        |  UNION ALL SELECT o_orderkey, 3, 'D', NULL
-        |    FROM orders WHERE o_orderkey % 7 = 0),
+      s"""WITH $dCdcLog,
         |latest AS (SELECT *, row_number() OVER
         |    (PARTITION BY o_orderkey ORDER BY seq DESC) AS rn FROM log)
         |SELECT o_orderkey, op AS last_op, price
@@ -2874,13 +2864,7 @@ object Relational {
     // Same synthetic log with the version horizon applied BEFORE
     // compaction — the AS OF read contract.
     "snapshot_asof" ->
-      """WITH log AS (
-        |  SELECT o_orderkey, 1 AS seq, 'I' AS op, o_totalprice AS price
-        |    FROM orders
-        |  UNION ALL SELECT o_orderkey, 2, 'U', o_totalprice * 2
-        |    FROM orders WHERE o_orderkey % 3 = 0
-        |  UNION ALL SELECT o_orderkey, 3, 'D', NULL
-        |    FROM orders WHERE o_orderkey % 7 = 0),
+      s"""WITH $dCdcLog,
         |latest AS (SELECT *, row_number() OVER
         |    (PARTITION BY o_orderkey ORDER BY seq DESC) AS rn
         |  FROM log WHERE seq <= 2)
@@ -2890,13 +2874,7 @@ object Relational {
     // Same log; visibility intervals via lead(), exploded per version —
     // the same single-shuffle shape the Spark plan runs.
     "snapshot_history" ->
-      """WITH log AS (
-        |  SELECT o_orderkey, 1 AS seq, 'I' AS op, o_totalprice AS price
-        |    FROM orders
-        |  UNION ALL SELECT o_orderkey, 2, 'U', o_totalprice * 2
-        |    FROM orders WHERE o_orderkey % 3 = 0
-        |  UNION ALL SELECT o_orderkey, 3, 'D', NULL
-        |    FROM orders WHERE o_orderkey % 7 = 0),
+      s"""WITH $dCdcLog,
         |iv AS (SELECT o_orderkey, seq, op, price,
         |    coalesce(lead(seq) OVER
         |      (PARTITION BY o_orderkey ORDER BY seq) - 1, 3) AS v_to
@@ -2923,13 +2901,7 @@ object Relational {
     // its successor is ≤ 2 (the conservative retention rule — mirrors
     // the Spark side's explicit op <> 'D' guard).
     "snapshot_vacuum" ->
-      """WITH log AS (
-        |  SELECT o_orderkey, 1 AS seq, 'I' AS op, o_totalprice AS price
-        |    FROM orders
-        |  UNION ALL SELECT o_orderkey, 2, 'U', o_totalprice * 2
-        |    FROM orders WHERE o_orderkey % 3 = 0
-        |  UNION ALL SELECT o_orderkey, 3, 'D', NULL
-        |    FROM orders WHERE o_orderkey % 7 = 0),
+      s"""WITH $dCdcLog,
         |nx AS (SELECT seq, op, lead(seq) OVER
         |    (PARTITION BY o_orderkey ORDER BY seq) AS next_seq FROM log)
         |SELECT CAST(seq AS INT) AS version, count(*) AS n_entries,
@@ -2939,13 +2911,7 @@ object Relational {
     // Same log; pre-images via lag over each key's history, one change
     // row per image — the same single-shuffle shape the Spark plan runs.
     "snapshot_changes" ->
-      """WITH log AS (
-        |  SELECT o_orderkey, 1 AS seq, 'I' AS op, o_totalprice AS price
-        |    FROM orders
-        |  UNION ALL SELECT o_orderkey, 2, 'U', o_totalprice * 2
-        |    FROM orders WHERE o_orderkey % 3 = 0
-        |  UNION ALL SELECT o_orderkey, 3, 'D', NULL
-        |    FROM orders WHERE o_orderkey % 7 = 0),
+      s"""WITH $dCdcLog,
         |p AS (SELECT o_orderkey, seq, op, price, lag(price) OVER
         |    (PARTITION BY o_orderkey ORDER BY seq) AS prev FROM log),
         |feed AS (

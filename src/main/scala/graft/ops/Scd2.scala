@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.Q
 import graft.Tables.customer
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Slowly-changing-dimension type 2 maintenance (dbt SNAPSHOTS — the
@@ -146,6 +146,21 @@ object Scd2 {
     hist.select(advanced.columns.map(col).toSeq: _*).unionAll(advanced)
   }
 
+  /** The three batches of the customer dimension's market-segment
+    * drift that `scd2_apply` applies and `stream_scd2` replays: every
+    * key at its own segment, keys ≡0 (mod 3) restated as SEG2, keys
+    * ≡0 (mod 2) restated as SEG3 when ≡0 (mod 4) else SEG2. */
+  private def segmentBatches(s: SparkSession, d: String): Seq[DataFrame] = {
+    val cust = customer(s, d)
+      .select(col("c_custkey"), col("c_mktsegment").as("seg"))
+    Seq(cust,
+      cust.filter(col("c_custkey") % 3 === 0)
+        .withColumn("seg", lit("SEG2")),
+      cust.filter(col("c_custkey") % 2 === 0)
+        .withColumn("seg",
+          when(col("c_custkey") % 4 === 0, lit("SEG3")).otherwise(lit("SEG2"))))
+  }
+
   val queries: Map[String, Q] = Map(
     // dbt snapshots at board scale (the reference's missing verb): a
     // three-batch replay of the customer dimension's market-segment
@@ -163,14 +178,8 @@ object Scd2 {
     // whole-history reconstruction the incremental operator must agree
     // with batch by batch.
     "scd2_apply" -> ((s, d) => {
-      val cust = customer(s, d)
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"))
-      val b2 = cust.filter(col("c_custkey") % 3 === 0)
-        .withColumn("seg", lit("SEG2"))
-      val b3 = cust.filter(col("c_custkey") % 2 === 0)
-        .withColumn("seg",
-          when(col("c_custkey") % 4 === 0, lit("SEG3")).otherwise(lit("SEG2")))
-      val s1 = init(cust, lit(1))
+      val Seq(b1, b2, b3) = segmentBatches(s, d)
+      val s1 = init(b1, lit(1))
       val s2 = apply(s1, b2, Seq("c_custkey"), Seq("seg"), lit(2))
       val s3 = apply(s2, b3, Seq("c_custkey"), Seq("seg"), lit(3))
       s3.orderBy("c_custkey", "valid_from")
@@ -190,66 +199,43 @@ object Scd2 {
     // batch. The batch operator and the stateful stream MUST
     // materialize the same table — that agreement is the claim.
     "stream_scd2" -> ((s, d) => {
-      val cust = customer(s, d)
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"))
-      val log = cust.withColumn("ts", lit(1))
-        .unionAll(cust.filter(col("c_custkey") % 3 === 0)
-          .withColumn("seg", lit("SEG2")).withColumn("ts", lit(2)))
-        .unionAll(cust.filter(col("c_custkey") % 2 === 0)
-          .withColumn("seg", when(col("c_custkey") % 4 === 0, lit("SEG3"))
-            .otherwise(lit("SEG2")))
-          .withColumn("ts", lit(3)))
+      val log = segmentBatches(s, d).zipWithIndex
+        .map { case (b, i) => b.withColumn("ts", lit(i + 1)) }
+        .reduce(_ unionAll _)
       graft.streaming.StreamOps.scd2Versions(log)
         .toDF().orderBy("c_custkey", "valid_from")
     })
   )
 
+  /** The window-over-history reconstruction of [[segmentBatches]]: both
+    * `scd2_apply`'s and `stream_scd2`'s oracle. */
+  private val dSegmentHistory =
+    """WITH u AS (
+      |  SELECT c_custkey, c_mktsegment AS seg, 1 AS ts FROM customer
+      |  UNION ALL
+      |  SELECT c_custkey, 'SEG2', 2 FROM customer WHERE c_custkey % 3 = 0
+      |  UNION ALL
+      |  SELECT c_custkey,
+      |    CASE WHEN c_custkey % 4 = 0 THEN 'SEG3' ELSE 'SEG2' END, 3
+      |  FROM customer WHERE c_custkey % 2 = 0),
+      |v AS (
+      |  SELECT c_custkey, seg, ts,
+      |    lag(seg) OVER (PARTITION BY c_custkey ORDER BY ts) AS prev
+      |  FROM u),
+      |chg AS (
+      |  SELECT c_custkey, seg, ts FROM v
+      |  WHERE prev IS NULL OR seg IS DISTINCT FROM prev)
+      |SELECT c_custkey, seg, ts AS valid_from,
+      |  lead(ts) OVER (PARTITION BY c_custkey ORDER BY ts) AS valid_to,
+      |  lead(ts) OVER (PARTITION BY c_custkey ORDER BY ts) IS NULL
+      |    AS is_current
+      |FROM chg
+      |ORDER BY c_custkey, valid_from""".stripMargin
+
   val oracles: Map[String, String] = Map(
-    "scd2_apply" ->
-      """WITH u AS (
-        |  SELECT c_custkey, c_mktsegment AS seg, 1 AS ts FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey, 'SEG2', 2 FROM customer WHERE c_custkey % 3 = 0
-        |  UNION ALL
-        |  SELECT c_custkey,
-        |    CASE WHEN c_custkey % 4 = 0 THEN 'SEG3' ELSE 'SEG2' END, 3
-        |  FROM customer WHERE c_custkey % 2 = 0),
-        |v AS (
-        |  SELECT c_custkey, seg, ts,
-        |    lag(seg) OVER (PARTITION BY c_custkey ORDER BY ts) AS prev
-        |  FROM u),
-        |chg AS (
-        |  SELECT c_custkey, seg, ts FROM v
-        |  WHERE prev IS NULL OR seg IS DISTINCT FROM prev)
-        |SELECT c_custkey, seg, ts AS valid_from,
-        |  lead(ts) OVER (PARTITION BY c_custkey ORDER BY ts) AS valid_to,
-        |  lead(ts) OVER (PARTITION BY c_custkey ORDER BY ts) IS NULL
-        |    AS is_current
-        |FROM chg
-        |ORDER BY c_custkey, valid_from""".stripMargin,
+    "scd2_apply" -> dSegmentHistory,
     // Identical contract to scd2_apply: the incremental batch operator
     // and the stateful stream must materialize the same history.
-    "stream_scd2" ->
-      """WITH u AS (
-        |  SELECT c_custkey, c_mktsegment AS seg, 1 AS ts FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey, 'SEG2', 2 FROM customer WHERE c_custkey % 3 = 0
-        |  UNION ALL
-        |  SELECT c_custkey,
-        |    CASE WHEN c_custkey % 4 = 0 THEN 'SEG3' ELSE 'SEG2' END, 3
-        |  FROM customer WHERE c_custkey % 2 = 0),
-        |v AS (
-        |  SELECT c_custkey, seg, ts,
-        |    lag(seg) OVER (PARTITION BY c_custkey ORDER BY ts) AS prev
-        |  FROM u),
-        |chg AS (
-        |  SELECT c_custkey, seg, ts FROM v
-        |  WHERE prev IS NULL OR seg IS DISTINCT FROM prev)
-        |SELECT c_custkey, seg, ts AS valid_from,
-        |  lead(ts) OVER (PARTITION BY c_custkey ORDER BY ts) AS valid_to,
-        |  lead(ts) OVER (PARTITION BY c_custkey ORDER BY ts) IS NULL
-        |    AS is_current
-        |FROM chg
-        |ORDER BY c_custkey, valid_from""".stripMargin
+    "stream_scd2" -> dSegmentHistory
   )
 }

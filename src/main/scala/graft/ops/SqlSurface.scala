@@ -3,6 +3,7 @@ package graft.ops
 import graft.Q
 import graft.Tables.{customer, documents, embeddings, nation, orders}
 import graft.plans.GraftExtensions
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SQL-TEXT entry path (SURVEY §2 growth axis, r13): the board is built
   * with the DataFrame API, but the reference's transform layer is dbt —
@@ -50,6 +51,32 @@ object SqlSurface {
       |  JOIN sqv_nation n ON c.c_nationkey = n.n_nationkey
       |  GROUP BY n_name)
       |ORDER BY n_name""".stripMargin
+
+  /** The two-batch incremental history model_graph_incremental and
+    * model_graph_delete_insert advance under `strategy`: state `name` is
+    * reset, batch 1 loads the even-keyed orders' yearly revenue up to
+    * 1996, batch 2 ALL orders' from 1996 on, keyed on yr. */
+  private def yearlyRevenueTwoBatches(s: SparkSession, d: String,
+      name: String, strategy: String): DataFrame = {
+    orders(s, d).createOrReplaceTempView("sqv_orders")
+    import graft.pipeline.ModelGraph
+    import graft.pipeline.ModelGraph.Model
+    ModelGraph.reset(s, name)
+    val agg =
+      """SELECT date_format(o_orderdate, 'yyyy') AS yr, COUNT(*) AS n,
+        |  CAST(round(SUM(CAST(o_totalprice AS DECIMAL(30,8))), 2)
+        |    AS DOUBLE) AS rev
+        |FROM sqv_orders WHERE %s
+        |GROUP BY date_format(o_orderdate, 'yyyy')""".stripMargin
+    val model = Model(name, agg.format(
+      "o_orderkey % 2 = 0 AND date_format(o_orderdate, 'yyyy') <= '1996'"),
+      materialized = "incremental", uniqueKey = Seq("yr"),
+      incrementalStrategy = strategy)
+    ModelGraph.run(s, Seq(model))
+    ModelGraph.run(s, Seq(model.copy(sql =
+      agg.format("date_format(o_orderdate, 'yyyy') >= '1996'"))))
+    s.table(name).orderBy("yr")
+  }
 
   val queries: Map[String, Q] = Map(
 
@@ -435,25 +462,8 @@ object SqlSurface {
     // two-batch history. Scale: each batch is one map-side-combined
     // aggregate; the merge is the M11 join shape (equi fast-path
     // guard) on a |years|-sized state.
-    "model_graph_incremental" -> ((s, d) => {
-      orders(s, d).createOrReplaceTempView("sqv_orders")
-      import graft.pipeline.ModelGraph
-      import graft.pipeline.ModelGraph.Model
-      ModelGraph.reset(s, "mgi_rev")
-      val agg =
-        """SELECT date_format(o_orderdate, 'yyyy') AS yr, COUNT(*) AS n,
-          |  CAST(round(SUM(CAST(o_totalprice AS DECIMAL(30,8))), 2)
-          |    AS DOUBLE) AS rev
-          |FROM sqv_orders WHERE %s
-          |GROUP BY date_format(o_orderdate, 'yyyy')""".stripMargin
-      val model = Model("mgi_rev", agg.format(
-        "o_orderkey % 2 = 0 AND date_format(o_orderdate, 'yyyy') <= '1996'"),
-        materialized = "incremental", uniqueKey = Seq("yr"))
-      ModelGraph.run(s, Seq(model))
-      ModelGraph.run(s, Seq(model.copy(sql =
-        agg.format("date_format(o_orderdate, 'yyyy') >= '1996'"))))
-      s.table("mgi_rev").orderBy("yr")
-    }),
+    "model_graph_incremental" -> ((s, d) =>
+      yearlyRevenueTwoBatches(s, d, "mgi_rev", "merge")),
 
     // dbt's DELETE+INSERT incremental strategy (r18 — its DEFAULT on
     // Redshift, the reference's warehouse): the same two-batch history
@@ -468,26 +478,8 @@ object SqlSurface {
     // spec-pinned). The DELETE's IN-subquery runs through the M12
     // interpreter's expression path at board scale. State resets up
     // front so every invocation replays the same history.
-    "model_graph_delete_insert" -> ((s, d) => {
-      orders(s, d).createOrReplaceTempView("sqv_orders")
-      import graft.pipeline.ModelGraph
-      import graft.pipeline.ModelGraph.Model
-      ModelGraph.reset(s, "mgd_rev")
-      val agg =
-        """SELECT date_format(o_orderdate, 'yyyy') AS yr, COUNT(*) AS n,
-          |  CAST(round(SUM(CAST(o_totalprice AS DECIMAL(30,8))), 2)
-          |    AS DOUBLE) AS rev
-          |FROM sqv_orders WHERE %s
-          |GROUP BY date_format(o_orderdate, 'yyyy')""".stripMargin
-      val model = Model("mgd_rev", agg.format(
-        "o_orderkey % 2 = 0 AND date_format(o_orderdate, 'yyyy') <= '1996'"),
-        materialized = "incremental", uniqueKey = Seq("yr"),
-        incrementalStrategy = "delete+insert")
-      ModelGraph.run(s, Seq(model))
-      ModelGraph.run(s, Seq(model.copy(sql =
-        agg.format("date_format(o_orderdate, 'yyyy') >= '1996'"))))
-      s.table("mgd_rev").orderBy("yr")
-    }),
+    "model_graph_delete_insert" -> ((s, d) =>
+      yearlyRevenueTwoBatches(s, d, "mgd_rev", "delete+insert")),
 
     // dbt's SNAPSHOT verb through the runner (r18, the last dbt
     // materialization): a status→label dimension snapshotted twice
@@ -560,6 +552,28 @@ object SqlSurface {
     })
   )
 
+  /** Both incremental batches of [[yearlyRevenueTwoBatches]] as CTEs,
+    * unioned by recency: batch 2 (years >= 1996, all rows) wins where it
+    * matched, batch 1's partial history survives below it. */
+  private val dYearlyRevenueTwoBatches =
+    """WITH f AS (
+      |  SELECT strftime(o_orderdate, '%Y') AS yr, COUNT(*) AS n,
+      |    CAST(round(SUM(CAST(o_totalprice AS DECIMAL(30,8))), 2)
+      |      AS DOUBLE) AS rev
+      |  FROM orders WHERE strftime(o_orderdate, '%Y') >= '1996'
+      |  GROUP BY 1),
+      |h AS (
+      |  SELECT strftime(o_orderdate, '%Y') AS yr, COUNT(*) AS n,
+      |    CAST(round(SUM(CAST(o_totalprice AS DECIMAL(30,8))), 2)
+      |      AS DOUBLE) AS rev
+      |  FROM orders
+      |  WHERE o_orderkey % 2 = 0 AND strftime(o_orderdate, '%Y') <= '1996'
+      |  GROUP BY 1)
+      |SELECT yr, n, rev FROM f
+      |UNION ALL
+      |SELECT yr, n, rev FROM h WHERE yr < '1996'
+      |ORDER BY yr""".stripMargin
+
   val oracles: Map[String, String] = Map(
     // The hint-free text on the base tables: hints affect only the
     // physical plan, so the hinted Spark run must match this exactly.
@@ -607,10 +621,7 @@ object SqlSurface {
         |  w_range AS (PARTITION BY o_custkey ORDER BY o_orderkey
         |             RANGE BETWEEN 1000 PRECEDING AND CURRENT ROW)
         |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "sql_lateral_view" ->
-      s"""SELECT tok, COUNT(*) AS n FROM
-        |(SELECT unnest($dToks) AS tok FROM documents)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+    "sql_lateral_view" -> TextSim.oracles("text_wordcount"),
     "sql_values_inline" ->
       """WITH season(m, season) AS (VALUES
         |    (1,'winter'),(2,'winter'),(3,'spring'),(4,'spring'),
@@ -736,47 +747,10 @@ object SqlSurface {
         |  FROM mg_daily GROUP BY 1)
         |SELECT mon, days, rev FROM mg_monthly ORDER BY mon""".stripMargin,
 
-    // Both incremental batches as CTEs, unioned by recency: batch 2
-    // (years >= 1996, all rows) wins where it matched, batch 1's
-    // partial history survives below it.
-    "model_graph_incremental" ->
-      """WITH f AS (
-        |  SELECT strftime(o_orderdate, '%Y') AS yr, COUNT(*) AS n,
-        |    CAST(round(SUM(CAST(o_totalprice AS DECIMAL(30,8))), 2)
-        |      AS DOUBLE) AS rev
-        |  FROM orders WHERE strftime(o_orderdate, '%Y') >= '1996'
-        |  GROUP BY 1),
-        |h AS (
-        |  SELECT strftime(o_orderdate, '%Y') AS yr, COUNT(*) AS n,
-        |    CAST(round(SUM(CAST(o_totalprice AS DECIMAL(30,8))), 2)
-        |      AS DOUBLE) AS rev
-        |  FROM orders
-        |  WHERE o_orderkey % 2 = 0 AND strftime(o_orderdate, '%Y') <= '1996'
-        |  GROUP BY 1)
-        |SELECT yr, n, rev FROM f
-        |UNION ALL
-        |SELECT yr, n, rev FROM h WHERE yr < '1996'
-        |ORDER BY yr""".stripMargin,
+    "model_graph_incremental" -> dYearlyRevenueTwoBatches,
     // delete+insert over clean batches must land exactly where merge
     // does — the same recency-union reconstruction.
-    "model_graph_delete_insert" ->
-      """WITH f AS (
-        |  SELECT strftime(o_orderdate, '%Y') AS yr, COUNT(*) AS n,
-        |    CAST(round(SUM(CAST(o_totalprice AS DECIMAL(30,8))), 2)
-        |      AS DOUBLE) AS rev
-        |  FROM orders WHERE strftime(o_orderdate, '%Y') >= '1996'
-        |  GROUP BY 1),
-        |h AS (
-        |  SELECT strftime(o_orderdate, '%Y') AS yr, COUNT(*) AS n,
-        |    CAST(round(SUM(CAST(o_totalprice AS DECIMAL(30,8))), 2)
-        |      AS DOUBLE) AS rev
-        |  FROM orders
-        |  WHERE o_orderkey % 2 = 0 AND strftime(o_orderdate, '%Y') <= '1996'
-        |  GROUP BY 1)
-        |SELECT yr, n, rev FROM f
-        |UNION ALL
-        |SELECT yr, n, rev FROM h WHERE yr < '1996'
-        |ORDER BY yr""".stripMargin,
+    "model_graph_delete_insert" -> dYearlyRevenueTwoBatches,
 
     // the window-over-history SCD2 reconstruction: union the batches
     // with their stamps, keep rows whose tracked value IS DISTINCT

@@ -243,23 +243,9 @@ object Streaming {
     "stream_dedup_watermark" ->
       """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value
         |FROM events ORDER BY event_id""".stripMargin,
-    // Hour windows start epoch-aligned == date_trunc('hour'); same bars
-    // and tie-broken endpoints as the batch ts_ohlc oracle.
-    "stream_ohlc" ->
-      """WITH e AS (SELECT event_type, date_trunc('hour', ts) AS bar_ts,
-        |    ts, event_id, value FROM events),
-        |r AS (SELECT *,
-        |  row_number() OVER (PARTITION BY event_type, bar_ts
-        |    ORDER BY ts, event_id) AS rf,
-        |  row_number() OVER (PARTITION BY event_type, bar_ts
-        |    ORDER BY ts DESC, event_id DESC) AS rl
-        |  FROM e)
-        |SELECT event_type, bar_ts,
-        |  max(CASE WHEN rf = 1 THEN value END) AS open,
-        |  max(value) AS high, min(value) AS low,
-        |  max(CASE WHEN rl = 1 THEN value END) AS close,
-        |  count(*) AS n
-        |FROM r GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
+    // Hour windows start epoch-aligned == date_trunc('hour'): the same
+    // bars and tie-broken endpoints, so the batch ts_ohlc oracle itself.
+    "stream_ohlc" -> Relational.oracles("ts_ohlc"),
     // Stream–static LEFT enrichment == plain left join on the dimension.
     "stream_enrich" ->
       """SELECT event_id, epoch_us(ts) AS ts_us, user_id,
@@ -268,18 +254,6 @@ object Streaming {
         |ORDER BY event_id""".stripMargin,
     // Identical contract to cdc_apply: the stateful stream and the batch
     // hash aggregation must materialize the same compacted state.
-    "stream_cdc_apply" ->
-      """WITH log AS (
-        |  SELECT o_orderkey, 1 AS seq, 'I' AS op, o_totalprice AS price
-        |    FROM orders
-        |  UNION ALL SELECT o_orderkey, 2, 'U', o_totalprice * 2
-        |    FROM orders WHERE o_orderkey % 3 = 0
-        |  UNION ALL SELECT o_orderkey, 3, 'D', NULL
-        |    FROM orders WHERE o_orderkey % 7 = 0),
-        |latest AS (SELECT *, row_number() OVER
-        |    (PARTITION BY o_orderkey ORDER BY seq DESC) AS rn FROM log)
-        |SELECT o_orderkey, op AS last_op, price
-        |FROM latest WHERE rn = 1 AND op <> 'D'
-        |ORDER BY o_orderkey""".stripMargin
+    "stream_cdc_apply" -> Relational.oracles("cdc_apply")
   )
 }

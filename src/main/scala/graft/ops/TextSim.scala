@@ -191,9 +191,33 @@ object TextSim {
   }
 
   private[graft] def perRowBandKeys(sig: Column): Column =
-    transform(sequence(lit(0), lit(Bands - 1)),
-      bd => concat_ws(",", slice(sig,
-        bd * (NumHashes / Bands) + 1, lit(NumHashes / Bands))))
+    bandKeys(sig, Bands, NumHashes / Bands)
+
+  /** The LSH band keys of signature `sig` cut into `b` bands of `r`
+    * rows: band i's key is its r slots joined by ','. */
+  private def bandKeys(sig: Column, b: Int, r: Int): Column =
+    transform(sequence(lit(0), lit(b - 1)),
+      bd => concat_ws(",", slice(sig, bd * r + 1, lit(r))))
+
+  /** Signature-overlap estimate of two signature columns — the Column
+    * form of [[sigEst]]. */
+  private def estSim(a: Column, b: Column): Column =
+    size(filter(zip_with(a, b, (x, y) => x === y), v => v))
+      .cast("double") / NumHashes
+
+  /** (ia, ib, est_sim) of band collisions `coll` (ia, sa, ib, sb) that
+    * clear the 0.5 floor. est_sim is computed per COLLISION ROW (cheap
+    * 16-slot zip) and the floor applied BEFORE the distinct, so the
+    * dedup shuffle carries only surviving pairs and three scalar
+    * columns — not the two 16-long signature arrays, and not the
+    * sub-threshold collisions that used to ride the exchange just to be
+    * filtered after it (guide §2.3). Same rows: est_sim is a pure
+    * function of (ia, ib), so filter∘distinct and distinct∘filter
+    * agree, and per-pair rows collapse identically. */
+  private def gatedPairs(coll: org.apache.spark.sql.DataFrame) =
+    coll.withColumn("est_sim", estSim(col("sa"), col("sb")))
+      .filter(col("est_sim") >= 0.5)
+      .select("ia", "ib", "est_sim").distinct()
 
   /** Signature-overlap similarity estimate — matches/NumHashes, exact in
     * binary (NumHashes is a power of two), shared by the streaming
@@ -208,29 +232,10 @@ object TextSim {
     * read them.
     */
   private[graft] def minhashPairs(docs: org.apache.spark.sql.DataFrame) = {
-    val sig = sigTable(shingleRows(docs, 3))
-    val bands = sig.select(col("doc_id"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(Bands - 1)),
-        bd => concat_ws(",", slice(col("sig"),
-          bd * (NumHashes / Bands) + 1,
-          lit(NumHashes / Bands))))).as(Seq("band", "key")))
-    val l = bands.select(col("doc_id").as("ia"), col("sig").as("sa"),
-      col("band"), col("key"))
-    val r = bands.select(col("doc_id").as("ib"), col("sig").as("sb"),
-      col("band"), col("key"))
-    // est_sim is computed per COLLISION ROW (cheap 16-slot zip) and the
-    // 0.5 floor applied BEFORE the distinct, so the dedup shuffle carries
-    // only surviving pairs and three scalar columns — not the two 16-long
-    // signature arrays, and not the sub-threshold collisions that used to
-    // ride the exchange just to be filtered after it (guide §2.3). Same
-    // rows: est_sim is a pure function of (ia, ib), so filter∘distinct
-    // and distinct∘filter agree, and per-pair rows collapse identically.
-    l.join(r, Seq("band", "key")).filter(col("ia") < col("ib"))
-      .withColumn("est_sim",
-        size(filter(zip_with(col("sa"), col("sb"), (x, y) => x === y),
-          v => v)).cast("double") / NumHashes)
-      .filter(col("est_sim") >= 0.5)
-      .select("ia", "ib", "est_sim").distinct()
+    val bands = bandRowsFromSigs(sigTable(shingleRows(docs, 3)))
+    gatedPairs(bandSide(bands, "ia", "sa")
+      .join(bandSide(bands, "ib", "sb"), Seq("band", "key"))
+      .filter(col("ia") < col("ib")))
   }
 
   /** Where the near-dup candidate EDGE store lives for a dataset dir —
@@ -328,10 +333,13 @@ object TextSim {
     * from the snapshot store instead of re-shingling corpus text. */
   private[ops] def bandRowsFromSigs(sigs: org.apache.spark.sql.DataFrame) =
     sigs.select(col("doc_id"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(Bands - 1)),
-        bd => concat_ws(",", slice(col("sig"),
-          bd * (NumHashes / Bands) + 1,
-          lit(NumHashes / Bands))))).as(Seq("band", "key")))
+      posexplode(perRowBandKeys(col("sig"))).as(Seq("band", "key")))
+
+  /** One join side of band rows: doc_id as `id`, sig as `sig`. */
+  private def bandSide(bands: org.apache.spark.sql.DataFrame, id: String,
+      sig: String) =
+    bands.select(col("doc_id").as(id), col("sig").as(sig), col("band"),
+      col("key"))
 
   private[graft] def minhashPairsBetween(
       index: org.apache.spark.sql.DataFrame,
@@ -341,21 +349,26 @@ object TextSim {
 
   private[graft] def minhashPairsBetweenSigs(
       indexSigs: org.apache.spark.sql.DataFrame,
-      batchSigs: org.apache.spark.sql.DataFrame) = {
-    val l = bandRowsFromSigs(indexSigs).select(col("doc_id").as("ia"),
-      col("sig").as("sa"), col("band"), col("key"))
-    val r = bandRowsFromSigs(batchSigs).select(col("doc_id").as("ib"),
-      col("sig").as("sb"), col("band"), col("key"))
-    // same estimate-filter-then-distinct reorder as [[minhashPairs]]:
-    // the distinct exchange carries scalars, not signature arrays, and
-    // never carries sub-threshold collisions. Same rows (est_sim is a
-    // pure function of the pair).
-    l.join(r, Seq("band", "key"))
-      .withColumn("est_sim",
-        size(filter(zip_with(col("sa"), col("sb"), (x, y) => x === y),
-          v => v)).cast("double") / NumHashes)
-      .filter(col("est_sim") >= 0.5)
-      .select("ia", "ib", "est_sim").distinct()
+      batchSigs: org.apache.spark.sql.DataFrame) =
+    gatedPairs(bandSide(bandRowsFromSigs(indexSigs), "ia", "sa")
+      .join(bandSide(bandRowsFromSigs(batchSigs), "ib", "sb"),
+        Seq("band", "key")))
+
+  /** Every occurrence of a span that >= 2 DISTINCT docs share, from
+    * `spans` (doc_id, span_idx, span): each occurrence reduces to its
+    * [[h60]] hash map-side, so the span TEXT never shuffles — the
+    * groupBy shuffles (hash, doc_id) only and the flag joins back on
+    * the hash. dedup_span_flag's and dedup_span_sliding's shared tail. */
+  private def flagRepeatedSpans(spans: org.apache.spark.sql.DataFrame) = {
+    val hashed = spans
+      .select(col("doc_id"), col("span_idx").cast("long").as("span_idx"),
+        h60(col("span")).as("hs"))
+    val repeated = hashed.groupBy("hs")
+      .agg(countDistinct("doc_id").as("n_docs"))
+      .filter(col("n_docs") >= 2)
+    hashed.join(repeated, "hs")
+      .select("doc_id", "span_idx", "hs", "n_docs")
+      .orderBy("doc_id", "span_idx")
   }
 
   /** Full cosine — only for shapes where each vector appears once. In pair
@@ -573,6 +586,46 @@ object TextSim {
   }
 
   private[graft] val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "it")
+
+  /** DuckDB list literal of [[stopwords]]. */
+  private[ops] lazy val dStopwords: String =
+    stopwords.map(w => s"'$w'").mkString("[", ",", "]")
+
+  /** text_langid's marker lexicons, in priority (tiebreak) order. */
+  private val LangMarkers = Seq(
+    "en" -> Seq("the", "a", "and", "query"),
+    "de" -> Seq("der", "die", "das", "batch"),
+    "es" -> Seq("el", "la", "los", "data"),
+    "fr" -> Seq("le", "les", "et", "table"))
+
+  /** Per-language marker counts s_<lang> over exploded `tok` rows — one
+    * codegen'd conditional sum each, so one aggregation pass counts all
+    * four. */
+  private def langScores: Seq[Column] = LangMarkers.map { case (l, ms) =>
+    sum(when(col("tok").isin(ms: _*), 1).otherwise(0)).cast("long")
+      .as(s"s_$l")
+  }
+
+  /** The argmax language over s_en..s_fr, ties to the earlier one. */
+  private def langPred: Column =
+    when(col("s_en") >= col("s_de") && col("s_en") >= col("s_es") &&
+      col("s_en") >= col("s_fr"), "en")
+      .when(col("s_de") >= col("s_es") && col("s_de") >= col("s_fr"), "de")
+      .when(col("s_es") >= col("s_fr"), "es")
+      .otherwise("fr").as("lang_pred")
+
+  /** DuckDB mirror of [[langScores]]: (doc_id, lang, s_en..s_fr). */
+  private lazy val dLangScores: String =
+    "SELECT doc_id, lang, " + LangMarkers.map { case (l, ms) =>
+      s"len(list_filter($dToks, t -> list_contains(" +
+        ms.map(w => s"'$w'").mkString("[", ",", "]") + s", t))) AS s_$l"
+    }.mkString(", ") + " FROM documents"
+
+  /** DuckDB mirror of [[langPred]]. */
+  private val dLangPred =
+    """CASE WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en'
+      |    WHEN s_de >= s_es AND s_de >= s_fr THEN 'de'
+      |    WHEN s_es >= s_fr THEN 'es' ELSE 'fr' END""".stripMargin
 
   /** Inverted-index 3-gram Jaccard with an explicit stop-shingle cap.
     * The declared `dedup_ngram_jaccard` query pins tau =
@@ -874,9 +927,7 @@ object TextSim {
       val sig = sigTable(shingleRows(docs, 3))
       val bandRows = BandSweepCfgs.map { case (b, r) =>
         sig.select(lit(b).as("bands"), col("doc_id"), col("sig"),
-          posexplode(transform(sequence(lit(0), lit(b - 1)),
-            bd => concat_ws(",", slice(col("sig"), bd * r + 1, lit(r)))))
-            .as(Seq("band", "key")))
+          posexplode(bandKeys(col("sig"), b, r)).as(Seq("band", "key")))
       }.reduce(_ union _)
       val l = bandRows.select(col("bands"), col("band"), col("key"),
         col("doc_id").as("ia"), col("sig").as("sa"))
@@ -888,9 +939,7 @@ object TextSim {
       // sweep counts sub-0.5 collisions (n_coll) by design. Same rows.
       val coll = l.join(r, Seq("bands", "band", "key"))
         .filter(col("ia") < col("ib"))
-        .withColumn("est_sim",
-          size(filter(zip_with(col("sa"), col("sb"), (x, y) => x === y),
-            v => v)).cast("double") / NumHashes)
+        .withColumn("est_sim", estSim(col("sa"), col("sb")))
         .select("bands", "ia", "ib", "est_sim").distinct()
       // PROBED AND REVERTED (r19, the graph_modularity discipline): the
       // r18 verdict suggested hoisting this config-independent truth
@@ -955,8 +1004,6 @@ object TextSim {
       // aggregated COLUMNS. Spelling the scores as per-doc array HOFs
       // instead re-inlines the tokenizer into every score reference after
       // projection collapse (~5x the work, interpreted).
-      def cnt(markers: Seq[String]): Column =
-        sum(when(col("tok").isin(markers: _*), 1).otherwise(0)).cast("long")
       val docs = documents(s, d)
       // `lang` rides the exploded rows into the groupBy key (functionally
       // dependent on doc_id, so zero extra groups) — annotating the result
@@ -966,18 +1013,10 @@ object TextSim {
       val scores = docs
         .select(col("doc_id"), col("lang"), explode(toks).as("tok"))
         .groupBy("doc_id", "lang")
-        .agg(cnt(Seq("the", "a", "and", "query")).as("s_en"),
-          cnt(Seq("der", "die", "das", "batch")).as("s_de"),
-          cnt(Seq("el", "la", "los", "data")).as("s_es"),
-          cnt(Seq("le", "les", "et", "table")).as("s_fr"))
+        .agg(langScores.head, langScores.tail: _*)
       scores
         .select(col("doc_id"), col("lang"),
-          col("s_en"), col("s_de"), col("s_es"), col("s_fr"),
-          when(col("s_en") >= col("s_de") && col("s_en") >= col("s_es") &&
-            col("s_en") >= col("s_fr"), "en")
-            .when(col("s_de") >= col("s_es") && col("s_de") >= col("s_fr"), "de")
-            .when(col("s_es") >= col("s_fr"), "es")
-            .otherwise("fr").as("lang_pred"))
+          col("s_en"), col("s_de"), col("s_es"), col("s_fr"), langPred)
         .orderBy("doc_id")
     }),
 
@@ -993,25 +1032,14 @@ object TextSim {
     // exploded-token aggregation, map-side combinable; the top-2 runs
     // over a 4-element array per ROW, not a window.
     "text_langid_margin" -> ((s, d) => {
-      def cnt(markers: Seq[String]): Column =
-        sum(when(col("tok").isin(markers: _*), 1).otherwise(0)).cast("long")
       val scores = documents(s, d)
         .select(col("doc_id"), explode(toks).as("tok"))
         .groupBy("doc_id")
-        .agg(cnt(Seq("the", "a", "and", "query")).as("s_en"),
-          cnt(Seq("der", "die", "das", "batch")).as("s_de"),
-          cnt(Seq("el", "la", "los", "data")).as("s_es"),
-          cnt(Seq("le", "les", "et", "table")).as("s_fr"))
+        .agg(langScores.head, langScores.tail: _*)
       val sorted = reverse(sort_array(
         array(col("s_en"), col("s_de"), col("s_es"), col("s_fr"))))
       scores
-        .select(col("doc_id"),
-          when(col("s_en") >= col("s_de") && col("s_en") >= col("s_es") &&
-            col("s_en") >= col("s_fr"), "en")
-            .when(col("s_de") >= col("s_es") && col("s_de") >= col("s_fr"),
-              "de")
-            .when(col("s_es") >= col("s_fr"), "es")
-            .otherwise("fr").as("lang_pred"),
+        .select(col("doc_id"), langPred,
           sorted.getItem(0).as("top1"),
           sorted.getItem(1).as("top2"),
           (sorted.getItem(0) - sorted.getItem(1)).as("margin"),
@@ -1141,11 +1169,9 @@ object TextSim {
     // occurrence — the sub-document repetition (licenses, boilerplate,
     // quoted passages) that whole-doc hashing can never see and MinHash
     // underweights. Cutting (not sliding) windows keep the blowup at
-    // n_tokens/10 rows per doc instead of n_tokens. Scale: the span TEXT
-    // never shuffles — each occurrence reduces to its portable 60-bit
-    // hash [[h60]] map-side, the groupBy shuffles (hash, doc_id) only,
-    // and the flag joins back on the hash. Collisions at 60 bits are
-    // ~2^-60 per pair — the dedup_hash argument.
+    // n_tokens/10 rows per doc instead of n_tokens. Scale: see
+    // flagRepeatedSpans; collisions at 60 bits are ~2^-60 per pair — the
+    // dedup_hash argument.
     "dedup_span_flag" -> ((s, d) => {
       val k = 10
       val spans = documents(s, d)
@@ -1156,14 +1182,7 @@ object TextSim {
           transform(sequence(lit(0), col("n_spans") - 1),
             i => array_join(slice(col("tk"), i * k + 1, lit(k)), " ")))
           .as(Seq("span_idx", "span")))
-        .select(col("doc_id"), col("span_idx").cast("long").as("span_idx"),
-          h60(col("span")).as("hs"))
-      val repeated = spans.groupBy("hs")
-        .agg(countDistinct("doc_id").as("n_docs"))
-        .filter(col("n_docs") >= 2)
-      spans.join(repeated, "hs")
-        .select("doc_id", "span_idx", "hs", "n_docs")
-        .orderBy("doc_id", "span_idx")
+      flagRepeatedSpans(spans)
     }),
 
     // Sliding twin of dedup_span: a window at EVERY token position, so a
@@ -1184,14 +1203,7 @@ object TextSim {
           transform(sequence(lit(0), size(col("tk")) - k),
             i => array_join(slice(col("tk"), i + 1, lit(k)), " ")))
           .as(Seq("span_idx", "span")))
-        .select(col("doc_id"), col("span_idx").cast("long").as("span_idx"),
-          h60(col("span")).as("hs"))
-      val repeated = spans.groupBy("hs")
-        .agg(countDistinct("doc_id").as("n_docs"))
-        .filter(col("n_docs") >= 2)
-      spans.join(repeated, "hs")
-        .select("doc_id", "span_idx", "hs", "n_docs")
-        .orderBy("doc_id", "span_idx")
+      flagRepeatedSpans(spans)
     }),
 
     // Cross-source near-dup overlap matrix: the dataset-card analytic a
@@ -1306,13 +1318,7 @@ object TextSim {
           .partitionBy("probe_id", "part")
           .orderBy(col("cos").desc, col("cand_id"))))
         .filter(col("lrn") <= 5)
-      local
-        .withColumn("rk", row_number().over(Window
-          .partitionBy("probe_id").orderBy(col("cos").desc, col("cand_id"))))
-        .filter(col("rk") <= 5)
-        .select(col("probe_id"), col("rk"), col("cand_id"),
-          round(col("cos"), 6).as("cos_sim"))
-        .orderBy("probe_id", "rk")
+      Ivf.rankCandidates(local, 5)
     }),
 
     // ANN variant: sign-random-projection LSH (8 tables x 4 bits) prunes the
@@ -1335,15 +1341,8 @@ object TextSim {
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("p"), col("vec_id").as("cand_id"),
           col("embedding")).distinct()
-      cands
-        .select(col("probe_id"), col("cand_id"),
-          cosine(col("embedding"), col("p")).as("cos"))
-        .withColumn("rk", row_number().over(Window
-          .partitionBy("probe_id").orderBy(col("cos").desc, col("cand_id"))))
-        .filter(col("rk") <= 5)
-        .select(col("probe_id"), col("rk"), col("cand_id"),
-          round(col("cos"), 6).as("cos_sim"))
-        .orderBy("probe_id", "rk")
+      Ivf.rankCandidates(cands.select(col("probe_id"), col("cand_id"),
+        cosine(col("embedding"), col("p")).as("cos")), 5)
     }),
 
     // IVF ANN variant: data-adaptive coarse quantizer (DataFrame-native
@@ -1573,8 +1572,13 @@ object TextSim {
     * round(z, 6) before any decision surface (ADVICE r9). */
   private[ops] def classifierZ: Column = {
     val nTok = size(toks).cast("double")
-    val punct = regexp_count(lower(col("text")), lit("[^a-z0-9 ]"))
-      .cast("double") / length(col("text"))
+    // try_divide: an empty text has no characters, so its punctuation
+    // ratio (and z) is NULL — what the DuckDB mirrors' division gives —
+    // instead of an ANSI DIVIDE_BY_ZERO that fails the whole query.
+    // size(toks) is never 0 (split yields [""]), so the others are safe.
+    val punct = try_divide(
+      regexp_count(lower(col("text")), lit("[^a-z0-9 ]")).cast("double"),
+      length(col("text")))
     val stopR = size(filter(toks,
       t => array_contains(typedlit(stopwords), t))).cast("double") / size(toks)
     val avgLen = aggregate(transform(toks, t => length(t)),
@@ -1631,26 +1635,35 @@ object TextSim {
   private val dSig = "list_value(" + hashAB.map { case (a, b) =>
     s"list_min(list_transform(sh, g -> ($a*(${dH60("g")}%$MinHashP)+$b)%$MinHashP))"
   }.mkString(",") + ")"
+  /** DuckDB mirror of [[bandRowsFromSigs]] over `sig` (doc_id, sig),
+    * cut into `b` bands of `r` rows: one (doc_id, sig, band, key) row
+    * per band. */
+  private def dBandRows(b: Int, r: Int): String =
+    s"""SELECT doc_id, sig, unnest(generate_series(0,${b - 1})) AS band,
+       |  unnest(list_transform(generate_series(0,${b - 1}), bd ->
+       |    array_to_string(sig[bd*$r+1 : bd*$r+$r], ','))) AS key
+       |  FROM sig""".stripMargin
+
+  /** DuckDB mirror of [[estSim]]; the /$NumHashes division is exact in
+    * binary. */
+  private def dEstSim(a: String, b: String): String =
+    s"CAST(len(list_filter(list_zip($a, $b), x -> x[1] = x[2])) AS DOUBLE)" +
+      s"/$NumHashes"
+
   /** Shared CTE chain producing `pairs(ia, ib, est_sim)` — the DuckDB
     * mirror of `minhashPairs`, over any relation with (doc_id, text). */
   private[ops] def dMinhashCteFrom(rel: String): String =
     s"""s AS (SELECT doc_id, ${dShingles(3)} AS sh FROM $rel),
        |sig AS (SELECT doc_id, $dSig AS sig FROM s),
-       |bands AS (
-       |  SELECT doc_id, sig, unnest(generate_series(0,${Bands - 1})) AS band,
-       |  unnest(list_transform(generate_series(0,${Bands - 1}), b ->
-       |    array_to_string(sig[b*${NumHashes / Bands}+1 : b*${NumHashes / Bands}+${NumHashes / Bands}], ','))) AS key
-       |  FROM sig),
+       |bands AS (${dBandRows(Bands, NumHashes / Bands)}),
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib,
        |         a.sig AS sa, b.sig AS sb
        |  FROM bands a JOIN bands b
        |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
        |pairs AS (
-       |  SELECT ia, ib,
-       |  CAST(len(list_filter(list_zip(sa, sb), x -> x[1] = x[2])) AS DOUBLE)/$NumHashes AS est_sim
-       |  FROM cand
-       |  WHERE CAST(len(list_filter(list_zip(sa, sb), x -> x[1] = x[2])) AS DOUBLE)/$NumHashes >= 0.5)""".stripMargin
+       |  SELECT ia, ib, ${dEstSim("sa", "sb")} AS est_sim
+       |  FROM cand WHERE ${dEstSim("sa", "sb")} >= 0.5)""".stripMargin
 
   private[ops] lazy val dMinhashCte: String = dMinhashCteFrom("documents")
 
@@ -1707,25 +1720,39 @@ object TextSim {
     * so the signature/banding contract has one home): per (band, key)
     * bucket the reference is the min doc_id, and every other member
     * emits one row per colliding band with the signature-overlap
-    * estimate. The /$NumHashes division is exact in binary. */
+    * estimate. */
   private[ops] lazy val dStreamNearDup: String =
     s"""WITH s0 AS (SELECT doc_id, ${dShingles(3)} AS sh FROM documents),
        |s AS (SELECT * FROM s0 WHERE len(sh) > 0),
        |sig AS (SELECT doc_id, $dSig AS sig FROM s),
-       |bands AS (
-       |  SELECT doc_id, sig, unnest(generate_series(0,${Bands - 1})) AS band,
-       |  unnest(list_transform(generate_series(0,${Bands - 1}), b ->
-       |    array_to_string(sig[b*${NumHashes / Bands}+1 : b*${NumHashes / Bands}+${NumHashes / Bands}], ','))) AS key
-       |  FROM sig),
+       |bands AS (${dBandRows(Bands, NumHashes / Bands)}),
        |m AS (SELECT band, key, min(doc_id) AS ref_id FROM bands
        |  GROUP BY 1, 2)
        |SELECT b.doc_id, CAST(b.band AS INTEGER) AS band, m.ref_id,
-       |  CAST(len(list_filter(list_zip(b.sig, r.sig), x -> x[1] = x[2]))
-       |    AS DOUBLE)/$NumHashes AS est_sim
+       |  ${dEstSim("b.sig", "r.sig")} AS est_sim
        |FROM bands b JOIN m ON b.band = m.band AND b.key = m.key
        |JOIN sig r ON r.doc_id = m.ref_id
        |WHERE b.doc_id > m.ref_id
        |ORDER BY b.doc_id, b.band""".stripMargin
+
+  /** The embedding-dedup oracles' `e` (vec_id, label, embedding, nrm,
+    * cnt = label size) and `bk`: the 8 sign-LSH (label, vec_id, key,
+    * tbl) tables, masked per label size, of the `e` rows `where` keeps. */
+  private def dEmbedBuckets(where: String): String = {
+    val bits = dBucketBits("cnt", EmbedBlockCap)
+    val bk = (0 until 8).map(t =>
+      s"SELECT label, vec_id, " +
+        s"${dSignBucketMasked(t, "embedding", bits)} AS key, " +
+        s"$t AS tbl FROM e $where")
+      .mkString("\n  UNION ALL\n  ")
+    s"""e AS (
+       |  SELECT vec_id, label, embedding,
+       |    sqrt(${dDot("embedding", "embedding")}) AS nrm,
+       |    count(*) OVER (PARTITION BY label) AS cnt
+       |  FROM embeddings),
+       |bk AS (
+       |  $bk)""".stripMargin
+  }
 
   private def dCos(a: String, b: String): String =
     s"${dDot(a, b)} / (sqrt(${dDot(a, a)}) * sqrt(${dDot(b, b)}))"
@@ -1833,9 +1860,8 @@ object TextSim {
         |len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9 ]')) AS n_bpe
         |FROM documents ORDER BY doc_id""".stripMargin,
     "text_quality" -> {
-      val stop = stopwords.map(w => s"'$w'").mkString("[", ",", "]")
       s"""SELECT doc_id, length(text) AS n_chars_m, len($dToks) AS n_tok,
-        |CAST(len(list_filter($dToks, t -> list_contains($stop, t))) AS DOUBLE) / len($dToks) AS stop_ratio,
+        |CAST(len(list_filter($dToks, t -> list_contains($dStopwords, t))) AS DOUBLE) / len($dToks) AS stop_ratio,
         |CAST(len(regexp_extract_all(lower(text),'[^a-z0-9 ]')) AS DOUBLE) / length(text) AS punct_ratio,
         |CAST(list_sum(list_transform($dToks, t -> length(t))) AS DOUBLE) / len($dToks) AS avg_tok_len,
         |least(CAST(len($dToks) AS DOUBLE)/100.0, 1.0) *
@@ -1877,11 +1903,7 @@ object TextSim {
     // constants); the truth is dedup_minhash_eval's dJaccardTruth.
     "dedup_band_sweep" -> {
       val cfgCtes = BandSweepCfgs.map { case (b, r) =>
-        s"""bands_$b AS (
-           |  SELECT doc_id, sig, unnest(generate_series(0,${b - 1})) AS band,
-           |  unnest(list_transform(generate_series(0,${b - 1}), bd ->
-           |    array_to_string(sig[bd*$r+1 : bd*$r+$r], ','))) AS key
-           |  FROM sig),
+        s"""bands_$b AS (${dBandRows(b, r)}),
            |coll_$b AS (
            |  SELECT DISTINCT $b AS bands, a.doc_id AS ia, b.doc_id AS ib,
            |         a.sig AS sa, b.sig AS sb
@@ -1895,9 +1917,7 @@ object TextSim {
       s"""WITH s AS (SELECT doc_id, ${dShingles(3)} AS sh FROM documents),
         |sig AS (SELECT doc_id, $dSig AS sig FROM s),
         |$cfgCtes,
-        |coll AS (SELECT bands, ia, ib,
-        |    CAST(len(list_filter(list_zip(sa, sb), x -> x[1] = x[2]))
-        |      AS DOUBLE)/$NumHashes AS est_sim
+        |coll AS (SELECT bands, ia, ib, ${dEstSim("sa", "sb")} AS est_sim
         |  FROM ($unionColl)),
         |$dJaccardTruth,
         |nt AS (SELECT count(*) AS n_truth FROM truth),
@@ -1914,12 +1934,11 @@ object TextSim {
         |FROM per, nt ORDER BY bands""".stripMargin
     },
     "curate_classifier" -> {
-      val stop = stopwords.map(w => s"'$w'").mkString("[", ",", "]")
       s"""WITH f AS (SELECT doc_id,
         |    CAST(len($dToks) AS DOUBLE) AS n_tok,
         |    CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
         |      AS DOUBLE) / length(text) AS punct,
-        |    CAST(len(list_filter($dToks, t -> list_contains($stop, t)))
+        |    CAST(len(list_filter($dToks, t -> list_contains($dStopwords, t)))
         |      AS DOUBLE) / len($dToks) AS stop_r,
         |    CAST(list_sum(list_transform($dToks, t -> length(t)))
         |      AS DOUBLE) / len($dToks) AS avg_len
@@ -1933,48 +1952,25 @@ object TextSim {
         |  round(z, 6) >= 0 AS keep
         |FROM z ORDER BY doc_id""".stripMargin
     },
-    "text_langid" -> {
-      def sc(ms: Seq[String]) =
-        s"len(list_filter($dToks, t -> list_contains(" +
-          ms.map(w => s"'$w'").mkString("[", ",", "]") + ", t)))"
-      val (en, de, es, fr) = (sc(Seq("the", "a", "and", "query")),
-        sc(Seq("der", "die", "das", "batch")),
-        sc(Seq("el", "la", "los", "data")),
-        sc(Seq("le", "les", "et", "table")))
-      s"""SELECT doc_id, lang, $en AS s_en, $de AS s_de, $es AS s_es, $fr AS s_fr,
-        |CASE WHEN $en >= $de AND $en >= $es AND $en >= $fr THEN 'en'
-        |WHEN $de >= $es AND $de >= $fr THEN 'de'
-        |WHEN $es >= $fr THEN 'es' ELSE 'fr' END AS lang_pred
-        |FROM documents ORDER BY doc_id""".stripMargin
-    },
+    "text_langid" ->
+      s"""WITH s0 AS ($dLangScores)
+        |SELECT doc_id, lang, s_en, s_de, s_es, s_fr, $dLangPred AS lang_pred
+        |FROM s0 ORDER BY doc_id""".stripMargin,
     // Same marker counts; top-2 via a per-row descending list sort
     // (list_reverse_sort ≡ reverse(sort_array)) — integer-only, no float
     // contract anywhere.
-    "text_langid_margin" -> {
-      def sc(ms: Seq[String]) =
-        s"len(list_filter($dToks, t -> list_contains(" +
-          ms.map(w => s"'$w'").mkString("[", ",", "]") + ", t)))"
-      val (en, de, es, fr) = (sc(Seq("the", "a", "and", "query")),
-        sc(Seq("der", "die", "das", "batch")),
-        sc(Seq("el", "la", "los", "data")),
-        sc(Seq("le", "les", "et", "table")))
-      s"""WITH s0 AS (SELECT doc_id, $en AS s_en, $de AS s_de,
-        |    $es AS s_es, $fr AS s_fr FROM documents),
+    "text_langid_margin" ->
+      s"""WITH s0 AS ($dLangScores),
         |t AS (SELECT *, list_reverse_sort([s_en, s_de, s_es, s_fr]) AS srt
         |  FROM s0)
-        |SELECT doc_id,
-        |  CASE WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr
-        |      THEN 'en'
-        |    WHEN s_de >= s_es AND s_de >= s_fr THEN 'de'
-        |    WHEN s_es >= s_fr THEN 'es' ELSE 'fr' END AS lang_pred,
+        |SELECT doc_id, $dLangPred AS lang_pred,
         |  CAST(srt[1] AS BIGINT) AS top1,
         |  CAST(srt[2] AS BIGINT) AS top2,
         |  CAST(srt[1] - srt[2] AS BIGINT) AS margin,
         |  CAST(s_en + s_de + s_es + s_fr AS BIGINT) AS evidence,
         |  CAST(srt[1] - srt[2] <= 1 OR s_en + s_de + s_es + s_fr < 3
         |    AS INT) AS ambiguous
-        |FROM t ORDER BY doc_id""".stripMargin
-    },
+        |FROM t ORDER BY doc_id""".stripMargin,
     "text_fingerprint" ->
       s"""SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT),
         |list_transform($dToks, t -> CAST(length(t)*31 + ascii(t) AS BIGINT))),
@@ -2112,25 +2108,13 @@ object TextSim {
     // plane literals (dSignBucket ≡ signBucket bit-for-bit). Candidates
     // are cosine-verified in both engines, and the >= filter runs on the
     // unrounded cosine (round only for display), exactly as the plan does.
-    "dedup_embed" -> {
-      val bits = dBucketBits("cnt", EmbedBlockCap)
-      val bk = (0 until 8).map(t =>
-        s"SELECT label, vec_id, " +
-          s"${dSignBucketMasked(t, "embedding", bits)} AS key, " +
-          s"$t AS tbl FROM e WHERE cnt > $EmbedBlockCap")
-        .mkString("\n  UNION ALL\n  ")
-      s"""WITH e AS (
-        |  SELECT vec_id, label, embedding,
-        |    sqrt(${dDot("embedding", "embedding")}) AS nrm,
-        |    count(*) OVER (PARTITION BY label) AS cnt
-        |  FROM embeddings),
+    "dedup_embed" ->
+      s"""WITH ${dEmbedBuckets(s"WHERE cnt > $EmbedBlockCap")},
         |sp AS (
         |  SELECT a.label AS label, a.vec_id AS ia, b.vec_id AS ib,
         |    ${dDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos
         |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
         |  WHERE a.cnt <= $EmbedBlockCap),
-        |bk AS (
-        |  $bk),
         |bp AS (
         |  SELECT DISTINCT a.label AS label, a.vec_id AS ia, b.vec_id AS ib
         |  FROM bk a JOIN bk b
@@ -2143,8 +2127,7 @@ object TextSim {
         |SELECT label, ia, ib, round(cos, 6) AS cos_sim
         |FROM (SELECT * FROM sp UNION ALL SELECT * FROM bc)
         |WHERE cos >= $EmbedDupTau
-        |ORDER BY label, ia, ib""".stripMargin
-    },
+        |ORDER BY label, ia, ib""".stripMargin,
     // r11: sim_topk_ivf promoted from rows-only to an EXACT oracle row —
     // the oracle replays the WHOLE IVF pipeline as chained CTEs: lowest-8
     // seeds (cell = rank by vec_id), two Lloyd iterations (argmin by
@@ -2241,25 +2224,13 @@ object TextSim {
     // the same plane literals); tr ≡ the exact truth. Counts via scalar
     // subqueries — pairs are unique within each side, so the inner join
     // counts tp exactly like the engine's full-outer tally.
-    "dedup_embed_eval" -> {
-      val bits = dBucketBits("cnt", EmbedBlockCap)
-      val bk = (0 until 8).map(t =>
-        s"SELECT label, vec_id, " +
-          s"${dSignBucketMasked(t, "embedding", bits)} AS key, " +
-          s"$t AS tbl FROM e")
-        .mkString("\n  UNION ALL\n  ")
-      s"""WITH e AS (
-        |  SELECT vec_id, label, embedding,
-        |    sqrt(${dDot("embedding", "embedding")}) AS nrm,
-        |    count(*) OVER (PARTITION BY label) AS cnt
-        |  FROM embeddings),
+    "dedup_embed_eval" ->
+      s"""WITH ${dEmbedBuckets("")},
         |tr AS (
         |  SELECT a.label AS label, a.vec_id AS ia, b.vec_id AS ib
         |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
         |  WHERE ${dDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm)
         |    >= $EmbedDupTau),
-        |bk AS (
-        |  $bk),
         |cd AS (
         |  SELECT DISTINCT a.label AS label, a.vec_id AS ia, b.vec_id AS ib
         |  FROM bk a JOIN bk b
@@ -2270,8 +2241,7 @@ object TextSim {
         |  (SELECT count(*) FROM tr) AS n_truth,
         |  (SELECT count(*) FROM cd JOIN tr USING (label, ia, ib)) AS tp)
         |SELECT n_cand, n_truth, tp, $dRates
-        |FROM agg""".stripMargin
-    },
+        |FROM agg""".stripMargin,
     "udaf_minhash_lang" ->
       s"""WITH s AS (SELECT doc_id, lang, ${dShingles(3)} AS sh FROM documents),
         |sig AS (SELECT doc_id, lang, $dSig AS sig FROM s),

@@ -277,7 +277,7 @@ object ModelGraph {
     // a failed write leaves tmp behind, and the prune below never
     // matches its name
     try df.write.mode("overwrite").parquet(tmp.getAbsolutePath)
-    catch { case t: Throwable => FileUtil.fullyDelete(tmp); throw t }
+    catch { case t: Throwable => discardBuild(spark, tmp); throw t }
     val commit = new java.io.File(dir, s"commit_$n")
     if (!tmp.renameTo(commit)) {
       FileUtil.fullyDelete(tmp)
@@ -297,6 +297,24 @@ object ModelGraph {
       if (m.exists(_.group(1).toInt < n)) FileUtil.fullyDelete(f)
     }
     spark.read.parquet(commit.getAbsolutePath)
+  }
+
+  /** Deletes a failed write's build dir for good. The job fails on its
+    * first failed task while its other tasks may still be running, and a
+    * straggler that writes after the delete re-creates the dir; so delete
+    * until no task is running and the dir has stayed gone for 0.5 s,
+    * giving up after 10 s (a busy sibling model can keep tasks running). */
+  private def discardBuild(spark: SparkSession, tmp: java.io.File): Unit = {
+    def running = spark.sparkContext.statusTracker.getExecutorInfos
+      .map(_.numRunningTasks).sum
+    val deadline = System.nanoTime() + 10000000000L
+    var quiet = 0
+    while (quiet < 5 && System.nanoTime() < deadline) {
+      if (tmp.exists()) { FileUtil.fullyDelete(tmp); quiet = 0 }
+      else if (running == 0) quiet += 1
+      Thread.sleep(100)
+    }
+    FileUtil.fullyDelete(tmp): Unit
   }
 
   /** dbt's `--full-refresh`: drop a stateful model's durable state (and

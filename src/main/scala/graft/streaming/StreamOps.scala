@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.FileUtil
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ops.dsum
 
@@ -62,6 +62,15 @@ object StreamOps {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("win_start"), col("n"))
 
+  /** One bar's open/high/low/close/n over (ts, event_id)-ordered ticks:
+    * the aggregate list of [[ohlcHourly]] and of the batch `ts_ohlc`. */
+  def ohlcBar: Seq[Column] = Seq(
+    min_by(col("value"), struct(col("ts"), col("event_id"))).as("open"),
+    max(col("value")).as("high"),
+    min(col("value")).as("low"),
+    max_by(col("value"), struct(col("ts"), col("event_id"))).as("close"),
+    count(lit(1)).as("n"))
+
   /** T2 extension (r9): hourly OHLC bars over the tick stream — the
     * streaming twin of the batch `ts_ohlc` query (same (ts, event_id)
     * tie-broken open/close, same oracle). min_by/max_by/min/max/count are
@@ -75,12 +84,7 @@ object StreamOps {
     events
       .withWatermark("ts", "1 hour")
       .groupBy(col("event_type"), window(col("ts"), "1 hour"))
-      .agg(
-        min_by(col("value"), struct(col("ts"), col("event_id"))).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), struct(col("ts"), col("event_id"))).as("close"),
-        count(lit(1)).as("n"))
+      .agg(ohlcBar.head, ohlcBar.tail: _*)
       .select(col("event_type"), col("window.start").as("bar_ts"),
         col("open"), col("high"), col("low"), col("close"), col("n"))
 

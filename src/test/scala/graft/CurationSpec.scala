@@ -394,4 +394,26 @@ class CurationSpec extends SparkSpec {
     assert(rows.map(_.getAs[Long]("n_gram_leak")).sum > 0)
   }
 
+  test("an empty-text doc gets a NULL z: curate_classifier and " +
+    "curation_card complete instead of dividing by its zero length") {
+    val docs = Seq(
+      (0L, "the data of the batch is in the table and it is a query",
+        "web", "en"),
+      (11L, "", "web", "en"),
+      (12L, "the query is a batch of data and the table is in it",
+        "wiki", "en"))
+    val dir = java.nio.file.Files.createTempDirectory("empty_text").toString
+    docs.toDF("doc_id", "text", "source", "lang").write.mode("overwrite")
+      .parquet(s"$dir/documents.parquet")
+    val z = ops.TextSim.queries("curate_classifier")(spark, dir)
+      .select("doc_id", "z").collect()
+      .map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    assert(z.keySet === Set(0L, 11L, 12L))
+    assert(z(11L).isEmpty, s"the empty doc's z must be NULL: $z")
+    assert(z(0L).nonEmpty && z(12L).nonEmpty)
+    val card = ops.Curation.queries("curation_card")(spark, dir)
+      .select("source", "n_docs").as[(String, Long)].collect().toMap
+    assert(card === Map("web" -> 2L, "wiki" -> 1L))
+  }
+
 }

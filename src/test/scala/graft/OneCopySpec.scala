@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * undirected form once, in Spark and in the DuckDB oracle, and the
   * near-dup family ([[graft.ops.TextSim]], Graph) and the ts_* queries
   * ([[graft.ops.Relational]]) define each relation they share once
-  * per engine.
+  * per engine. Board-wide, a clone ratchet caps the 6-line windows that
+  * repeat anywhere in src/main/scala, and every oracle text two keys
+  * share is one instance.
   * Copies drift apart (session confs did), so this spec fails when one
   * comes back, and when a script or run doc names a main
   * that no longer exists.
@@ -245,6 +247,104 @@ class OneCopySpec extends AnyFunSuite {
     val found = sharedRelationCopies(Seq(shared, copy))
     assert(found.size == sharedRelations.size, found.mkString("\n"))
     assert(found.forall(_.contains("Other.scala (1x)")), found.mkString("\n"))
+  }
+
+  /** Repeated windows the clone scan may still find in src/main/scala.
+    * Each fold lowers it (the scan found 105 before the twin-query
+    * folds). What stays, and why:
+    *  - 5: sql_ctas's Spark SQL text and its own DuckDB oracle spell one
+    *    pivot SELECT — an operator never shares text with its oracle.
+    *  - 1: Multimodal's decodeGifFrames and gifFrameCount open the same
+    *    ImageIO reader; decodeGifFrames returns from inside it, so a
+    *    shared loan helper would change its control flow.
+    *  - 1: StreamOps' sessionizeStateful and sessionizeStatefulTimeout
+    *    share their typed groupByKey prelude; each needs its own
+    *    session's implicits in scope. */
+  private val CloneCeiling = 7
+
+  /** Lines per clone-scan window. */
+  private val CloneWindow = 6
+
+  /** A line as the clone scan sees it: whitespace runs collapsed;
+    * blank, comment and import lines drop out. */
+  private def scanned(line: String): Option[String] = {
+    val t = line.trim.split("\\s+").mkString(" ")
+    val skip = t.isEmpty || t.startsWith("//") || t.startsWith("/*") ||
+      t.startsWith("*") || t.startsWith("import ")
+    if (skip) None else Some(t)
+  }
+
+  /** Each window of [[CloneWindow]] scanned lines that starts more than
+    * once in `srcs` (path, text), as its `path:line` starts. */
+  private def repeatedWindows(srcs: Seq[(String, String)]): Seq[Seq[String]] =
+    srcs.flatMap { case (p, text) =>
+      val lines = text.split("\n", -1).toSeq.zipWithIndex
+        .flatMap { case (l, i) => scanned(l).map(i + 1 -> _) }
+      lines.sliding(CloneWindow).filter(_.size == CloneWindow)
+        .map(w => w.map(_._2).mkString("\n") -> s"$p:${w.head._1}")
+    }.groupMap(_._1)(_._2).values.filter(_.size > 1).toSeq.sortBy(_.head)
+
+  test("src/main/scala repeats no more 6-line windows than the clone " +
+      "ceiling allows") {
+    val found = repeatedWindows(mainSources.map { case (p, text) =>
+      p.toString -> text })
+    val where = found.map(_.mkString("  ", ", ", "")).mkString("\n")
+    assert(found.size <= CloneCeiling,
+      s"${found.size} repeated windows, ceiling $CloneCeiling — define " +
+        s"the copied relation once and reference it; repeats at:\n$where")
+    assert(found.size == CloneCeiling,
+      s"only ${found.size} repeated windows now: lower CloneCeiling to " +
+        s"${found.size} (and drop the reasons that no longer hold)")
+  }
+
+  test("the clone scan has teeth: one copied 6-line block across a " +
+      "source pair is one repeated window; comments, imports and " +
+      "indentation do not hide it") {
+    val block = Seq("val a = x.select(col(\"k\"))", ".groupBy(\"k\")",
+      ".agg(count(lit(1)).as(\"n\"))", ".filter(col(\"n\") > 1)",
+      ".orderBy(\"k\")", ".limit(20)")
+    val one = "One.scala" -> ("import x.y\n" +
+      block.mkString("\n") + "\nval b = 1\n")
+    val other = "Other.scala" -> ("val c = 2\n// a comment\n" +
+      block.map("      " + _).mkString("\n\n") + "\nval d = 3\n")
+    assert(repeatedWindows(Seq(one)).isEmpty)
+    assert(repeatedWindows(Seq(one, other)) ===
+      Seq(Seq("One.scala:2", "Other.scala:3")))
+    val edited = "Other.scala" -> other._2.replace(".limit(20)", ".limit(5)")
+    assert(repeatedWindows(Seq(one, edited)).isEmpty)
+  }
+
+  /** Keys whose oracle text equals another key's but was built
+    * separately (equal, not the same instance), and keys that hold
+    * null — a twin read from an object still initializing. */
+  private def oracleCopies(oracles: Map[String, String]): Seq[String] = {
+    val nulls = oracles.collect { case (k, null) => s"$k: null" }
+    val copies = oracles.toSeq.filter(_._2 != null).groupBy(_._2).values
+      .flatMap { keyed =>
+        val first = keyed.minBy(_._1)._2
+        keyed.collect { case (k, v) if !(v eq first) => k }
+      }
+      .map(k => s"$k: equal to another key's text but built separately")
+    (nulls ++ copies).toSeq.sorted
+  }
+
+  test("every oracle text that two keys share is one instance: a twin " +
+      "references its sibling's text instead of spelling it again") {
+    val found = oracleCopies(SparkEntry.oracleSql)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the oracle-copy gate has teeth: two separately built equal " +
+      "texts are flagged, one text under two keys is not") {
+    val sql = "SELECT 1 AS x"
+    val shared = Map("a" -> sql, "b" -> sql, "c" -> "SELECT 2 AS x")
+    assert(oracleCopies(shared).isEmpty)
+    val built = Map("a" -> sql,
+      "b" -> new StringBuilder("SELECT 1").append(" AS x").toString)
+    assert(built("a") == built("b") && !(built("a") eq built("b")))
+    assert(oracleCopies(built) ===
+      Seq("b: equal to another key's text but built separately"))
+    assert(oracleCopies(Map("a" -> sql, "b" -> null)) === Seq("b: null"))
   }
 
   /** `graft.<Name>` references in the run instructions: every script,
