@@ -242,40 +242,46 @@ object Multimodal {
     * in, k frame-features out.
     */
   def decodeGifFrames(bytes: Array[Byte], everyN: Int = 1)
-      : Seq[Array[Float]] = {
+      : Seq[Array[Float]] = withImageReader(bytes) { r =>
+    val n = r.getNumImages(true)
+    if (!r.getFormatName.equalsIgnoreCase("gif"))
+      (0 until n by everyN).map(i => lumaHist(r.read(i)))
+    else {
+      val (cw, ch) = gifCanvasSize(r)
+        .getOrElse((r.getWidth(0), r.getHeight(0)))
+      val canvas = new java.awt.image.BufferedImage(
+        cw, ch, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val g = canvas.createGraphics()
+      try {
+        val out = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
+        var i = 0
+        while (i < n) {
+          val frame = r.read(i)
+          val (x, y, disposal) = gifFrameInfo(r, i)
+          g.drawImage(frame, x, y, null)
+          if (i % everyN == 0) out += lumaHist(canvas)
+          if (disposal == "restoreToBackgroundColor") {
+            g.setColor(java.awt.Color.BLACK)
+            g.fillRect(x, y, frame.getWidth, frame.getHeight)
+          }
+          i += 1
+        }
+        out.toSeq
+      } finally g.dispose()
+    }
+  }
+
+  /** Lends `f` the ImageIO reader for `bytes`, input already set; the
+    * reader and its stream are closed when `f` returns. */
+  private def withImageReader[A](bytes: Array[Byte])(
+      f: javax.imageio.ImageReader => A): A = {
     val in = javax.imageio.ImageIO.createImageInputStream(
       new java.io.ByteArrayInputStream(bytes))
     try {
       val readers = javax.imageio.ImageIO.getImageReaders(in)
       require(readers.hasNext, "payload is not a decodable image container")
       val r = readers.next()
-      try {
-        r.setInput(in)
-        val n = r.getNumImages(true)
-        if (!r.getFormatName.equalsIgnoreCase("gif"))
-          return (0 until n by everyN).map(i => lumaHist(r.read(i)))
-        val (cw, ch) = gifCanvasSize(r)
-          .getOrElse((r.getWidth(0), r.getHeight(0)))
-        val canvas = new java.awt.image.BufferedImage(
-          cw, ch, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = canvas.createGraphics()
-        try {
-          val out = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
-          var i = 0
-          while (i < n) {
-            val frame = r.read(i)
-            val (x, y, disposal) = gifFrameInfo(r, i)
-            g.drawImage(frame, x, y, null)
-            if (i % everyN == 0) out += lumaHist(canvas)
-            if (disposal == "restoreToBackgroundColor") {
-              g.setColor(java.awt.Color.BLACK)
-              g.fillRect(x, y, frame.getWidth, frame.getHeight)
-            }
-            i += 1
-          }
-          out.toSeq
-        } finally g.dispose()
-      } finally r.dispose()
+      try { r.setInput(in); f(r) } finally r.dispose()
     } finally in.close()
   }
 
@@ -321,16 +327,8 @@ object Multimodal {
   } catch { case _: Exception => None }
 
   /** Frame count from the GIF container (decodes structure, not pixels). */
-  def gifFrameCount(bytes: Array[Byte]): Int = {
-    val in = javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    try {
-      val readers = javax.imageio.ImageIO.getImageReaders(in)
-      require(readers.hasNext, "payload is not a decodable image container")
-      val r = readers.next()
-      try { r.setInput(in); r.getNumImages(true) } finally r.dispose()
-    } finally in.close()
-  }
+  def gifFrameCount(bytes: Array[Byte]): Int =
+    withImageReader(bytes)(_.getNumImages(true))
 
   /** REAL video pixel decode #2 (after GIF): MJPEG-in-AVI. The AVI RIFF
     * container needs only a chunk walk, and every MJPEG frame is a plain

@@ -90,76 +90,6 @@ object Curation {
        |       THEN 'val'
        |     ELSE 'test' END""".stripMargin
 
-  /** The capstone pipeline's intermediate frames, exposed so
-    * [[graft.CurateProfile]] can time each stage and A/B the pin
-    * strategy without duplicating the logic the declared query runs. */
-  private[graft] case class CurateFrames(
-      exact: DataFrame, edges: DataFrame, kept: DataFrame,
-      train: DataFrame, contam: DataFrame, result: DataFrame)
-
-  /** Body of `pipeline_curate`, parameterized over how the two
-    * multiply-consumed frames are pinned.
-    *
-    * pin = persist(MEMORY_AND_DISK), not localCheckpoint, on the declared
-    * path: `exact` feeds four consumers (candidate pairs, CC vertices,
-    * the representative join, train shingles) — without materializing it
-    * each consumer would replay the dedup. persist keeps the lineage, so
-    * a lost executor recomputes its blocks from the scan; localCheckpoint
-    * discards it and makes executor loss fatal at cluster scale (same
-    * rationale as TextSim.ngramJaccard's shingle table). Blocks are
-    * dropped by Bench/Verify's clearCache after materialization.
-    * CurateProfile measures the persist-vs-localCheckpoint delta and
-    * BASELINE.md records the per-stage cost table.
-    *
-    * row_number window, NOT min_by-over-groupBy: A/B-measured at sf0.1
-    * (median-of-5, back-to-back) the window wins 5.6s vs 6.5s for the
-    * whole capstone — with mostly-unique texts the aggregate's map-side
-    * combine saves almost nothing, while its two-phase hash map pays
-    * full-text key hashing twice; the window shuffles once and does one
-    * partition-local sort. The window partitions on (h60(text), text):
-    * same groups as raw text, but exchange comparisons are 8-byte
-    * hashes in the common case. Both formulations scale linearly. */
-  private[graft] def curateStages(
-      s: SparkSession, d: String,
-      pin: DataFrame => DataFrame): CurateFrames = {
-    val docs = Tables.documents(s, d)
-    val w = Window.partitionBy(h60(col("text")), col("text"))
-      .orderBy("doc_id")
-    val exact = pin(docs.filter(size(toks) >= 30)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn"))
-    // r13 — restriction identity: MinHash signatures are per-doc
-    // deterministic (sigTable has no corpus-dependent df filtering), so
-    // candidate pairs over any SUBSET of the corpus are exactly the
-    // corpus-wide edge store restricted to pairs with both endpoints
-    // surviving. Two semi joins against the kept-id set replace a full
-    // re-shingle + re-sign + re-band of the filtered corpus — at 100 TB
-    // the difference between REUSING the curation index and rebuilding
-    // it mid-pipeline. The oracle keeps deriving pairs from the filtered
-    // set in SQL; the identity makes the two spellings value-equal.
-    val exactIds = exact.select(col("doc_id"))
-    val edges = TextSim.minhashEdges(s, d)
-      .join(exactIds.withColumnRenamed("doc_id", "ia"), Seq("ia"),
-        "left_semi")
-      .join(exactIds.withColumnRenamed("doc_id", "ib"), Seq("ib"),
-        "left_semi")
-    val kept = exact.join(Graph.dupClusters(exact, edges), "doc_id")
-      .filter(col("doc_id") === col("comp"))
-    val train = pin(kept.filter(col("doc_id") >= 10))
-    val evalG = grams(docs.filter(col("doc_id") < 10))
-      .select("g").distinct()
-    val contam = grams(train)
-      .join(broadcast(evalG), Seq("g"))
-      .select("doc_id").distinct()
-    val result = train.join(contam, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("lang"), splitCol.as("split"))
-      .groupBy("split", "lang")
-      .agg(count(lit(1)).as("n"), min("doc_id").as("min_id"),
-        max("doc_id").as("max_id"))
-      .orderBy("split", "lang")
-    CurateFrames(exact, edges, kept, train, contam, result)
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Deterministic stratified sampling: per-language keep rates applied
@@ -427,19 +357,19 @@ object Curation {
       val gated = docs.withColumn("z", round(z, 6)).filter(col("z") >= 0)
       val wEx = Window.partitionBy(h60(col("text")), col("text"))
         .orderBy("doc_id")
-      val exact = gated
+      // read by the candidate pairs, the clusters and the keeper join
+      val exact = reuse(gated
         .withColumn("rn", row_number().over(wEx))
-        .filter(col("rn") === 1).drop("rn")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .filter(col("rn") === 1).drop("rn"))
       val lab = Graph.dupClusters(exact, TextSim.minhashPairs(exact))
       val scored = exact.join(lab, "doc_id")
       val best = scored.groupBy("comp")
         .agg(max_by(col("doc_id"), struct(col("z"), -col("doc_id")))
           .as("best_id"))
-      val kept = scored.join(best, Seq("comp"))
+      // read by the token budget and the mixture join
+      val kept = reuse(scored.join(best, Seq("comp"))
         .filter(col("doc_id") === col("best_id"))
-        .select(col("doc_id"), col("source"), col("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("doc_id"), col("source"), col("text")))
       val st = kept.groupBy("source")
         .agg(sum(size(toks).cast("long")).as("n_tokens"))
         .withColumn("budget",
@@ -804,9 +734,55 @@ object Curation {
     // Output: per (split, lang) survivor counts — the dataset card. Every
     // stage is the same shuffle shape it has standalone; nothing here is
     // more than linear + the CC loop.
-    "pipeline_curate" -> ((s, d) => curateStages(s, d,
-      df => df.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)).result),
+    //
+    // Exact dedup is a row_number window, NOT min_by-over-groupBy:
+    // A/B-measured at sf0.1 (median-of-5, back-to-back) the window wins
+    // 5.6s vs 6.5s for the whole capstone — with mostly-unique texts the
+    // aggregate's map-side combine saves almost nothing, while its
+    // two-phase hash map pays full-text key hashing twice; the window
+    // shuffles once and does one partition-local sort. The window
+    // partitions on (h60(text), text): same groups as raw text, but
+    // exchange comparisons are 8-byte hashes in the common case. Both
+    // formulations scale linearly.
+    "pipeline_curate" -> ((s, d) => {
+      val docs = Tables.documents(s, d)
+      val w = Window.partitionBy(h60(col("text")), col("text"))
+        .orderBy("doc_id")
+      // read by both edge semi joins, the clusters and the keeper join
+      val exact = reuse(docs.filter(size(toks) >= 30)
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).drop("rn"))
+      // r13 — restriction identity: MinHash signatures are per-doc
+      // deterministic (sigTable has no corpus-dependent df filtering), so
+      // candidate pairs over any SUBSET of the corpus are exactly the
+      // corpus-wide edge store restricted to pairs with both endpoints
+      // surviving. Two semi joins against the kept-id set replace a full
+      // re-shingle + re-sign + re-band of the filtered corpus — at 100 TB
+      // the difference between REUSING the curation index and rebuilding
+      // it mid-pipeline. The oracle keeps deriving pairs from the filtered
+      // set in SQL; the identity makes the two spellings value-equal.
+      val exactIds = exact.select(col("doc_id"))
+      val edges = TextSim.minhashEdges(s, d)
+        .join(exactIds.withColumnRenamed("doc_id", "ia"), Seq("ia"),
+          "left_semi")
+        .join(exactIds.withColumnRenamed("doc_id", "ib"), Seq("ib"),
+          "left_semi")
+      val kept = exact.join(Graph.dupClusters(exact, edges), "doc_id")
+        .filter(col("doc_id") === col("comp"))
+      // read by the decontamination grams and the anti join
+      val train = reuse(kept.filter(col("doc_id") >= 10))
+      val evalG = grams(docs.filter(col("doc_id") < 10))
+        .select("g").distinct()
+      val contam = grams(train)
+        .join(broadcast(evalG), Seq("g"))
+        .select("doc_id").distinct()
+      train.join(contam, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("lang"), splitCol.as("split"))
+        .groupBy("split", "lang")
+        .agg(count(lit(1)).as("n"), min("doc_id").as("min_id"),
+          max("doc_id").as("max_id"))
+        .orderBy("split", "lang")
+    }),
 
     // Sliding-window chunking (32-token windows, stride 24): the training
     // prep / RAG shape. A token at 0-based pos p lands in chunks
@@ -1014,20 +990,11 @@ object Curation {
        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
        |FROM c GROUP BY 1, 2""".stripMargin
 
-  /** DuckDB mirror of round(TextSim.classifierZ, 6) in a context where
-    * `t` holds the token list and `text` the raw text — the same
-    * interpolation curation_card's card oracle spells (one more consumer
-    * of the classifier contract: quantize at 6dp BEFORE any gate). */
-  private lazy val dZRound6: String = {
-    s"""round(
-       |      -1.0 + 2.5 * least(CAST(len(t) AS DOUBLE) / 100.0, 1.0) +
-       |      3.0 * (CAST(len(list_filter(t, x -> list_contains($dStopwords, x)))
-       |        AS DOUBLE) / len(t)) -
-       |      4.0 * (CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
-       |        AS DOUBLE) / length(text)) +
-       |      0.8 * (CAST(list_sum(list_transform(t, x -> length(x)))
-       |        AS DOUBLE) / len(t) / 10.0), 6)""".stripMargin
-  }
+  /** DuckDB mirror of round(TextSim.classifierZ, 6) over the token list
+    * expression `t` and the raw `text` column (the classifier contract:
+    * quantize at 6dp BEFORE any gate). */
+  private def dZRound6(t: String): String =
+    s"round(${TextSim.dClassifierZ(t)}, 6)"
 
   /** DuckDB mirror of gopherRules' conjunction over the same `t`/`text`
     * context (the card oracle's gk CASE, factored for curate_funnel). */
@@ -1063,7 +1030,7 @@ object Curation {
         |tk AS (SELECT doc_id, text, $dToks AS t FROM documents),
         |f0 AS (SELECT tk.doc_id, tk.doc_id >= 10 AS tr,
         |    ($dGopherKeep) AS gf,
-        |    $dZRound6 >= 0 AS cf,
+        |    ${dZRound6("t")} >= 0 AS cf,
         |    comp
         |  FROM tk JOIN lab ON tk.doc_id = lab.doc_id),
         |f1 AS (SELECT doc_id, tr, gf, cf,
@@ -1099,7 +1066,7 @@ object Curation {
         |  FROM documents),
         |base AS (SELECT doc_id, source, lang,
         |    CAST(len(t) AS BIGINT) AS n_tok,
-        |    CAST($dZRound6 AS DECIMAL(30,8)) AS z,
+        |    CAST(${dZRound6("t")} AS DECIMAL(30,8)) AS z,
         |    CASE WHEN $piiAny THEN 1 ELSE 0 END AS pii,
         |    CASE WHEN $dGopherKeep THEN 1 ELSE 0 END AS gk,
         |    sha256(text) AS h
@@ -1287,14 +1254,7 @@ object Curation {
     "pipeline_curate2" -> {
       s"""WITH RECURSIVE
         |f AS (SELECT doc_id, text, source,
-        |    round(
-        |    -1.0 + 2.5 * least(CAST(len($dToks) AS DOUBLE) / 100.0, 1.0) +
-        |    3.0 * (CAST(len(list_filter($dToks,
-        |      t -> list_contains($dStopwords, t))) AS DOUBLE) / len($dToks)) -
-        |    4.0 * (CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
-        |      AS DOUBLE) / length(text)) +
-        |    0.8 * (CAST(list_sum(list_transform($dToks, t -> length(t)))
-        |      AS DOUBLE) / len($dToks) / 10.0), 6) AS z
+        |    ${dZRound6(dToks)} AS z
         |  FROM documents),
         |g1 AS (SELECT * FROM f WHERE z >= 0),
         |x AS (SELECT *, row_number() OVER

@@ -92,18 +92,14 @@ object Embeddings {
     // keep the expected cell-bucket population ≤ cap at any skew, so the
     // over-cap pair stage is linear in the cell, not 0.4·n² (the 8-table
     // union loses most of a fixed 4-bit split; see bucketBits scaladoc)
-    val bl = big
+    // both self-join sides read the plane bucketing once
+    val bl = materialize(big
       .withColumn("bits", TextSim.bucketBits(col("cnt"), cap))
       .select(col("cid"), col("vec_id"), col("embedding"),
         col("nrm"),
         posexplode(array((0 until 8).map(t =>
           TextSim.signBucketMasked(t, col("embedding"), col("bits"))): _*))
-          .as(Seq("tbl", "key")))
-      // lineage cut: both self-join sides read the bucketing once, not
-      // twice (128 dim-sized plane dots per vector otherwise recompute).
-      // Eager, deliberately — lazy measured equal-or-worse at both
-      // scales (see embedNearDupPairs' adjudication note, TextSim)
-      .localCheckpoint(true)
+          .as(Seq("tbl", "key"))))
     val ba = bl.select(col("cid"), col("tbl"), col("key"),
       col("vec_id").as("i"), col("embedding").as("ea"), col("nrm").as("na"))
     val bb = bl.select(col("cid"), col("tbl"), col("key"),
@@ -204,8 +200,8 @@ object Embeddings {
     (mu, powerIterate(cloud, mu.length))
   }
 
-  /** Exact-decimal per-dimension means + the centered cloud,
-    * localCheckpoint'ed once (each power round otherwise re-derives it
+  /** Exact-decimal per-dimension means + the centered cloud, cut once
+    * (each power round otherwise re-derives it
     * from the parquet scan, tripling the fit's scan cost; a lineage cut
     * changes no values — the per-element x − m arithmetic runs
     * identically either way). Aggregate-shape history: the r16 probe's
@@ -255,7 +251,7 @@ object Embeddings {
       }.sortBy(_._1).map(_._2)
     val centered = zip_with(col("embedding"), typedlit(mu),
       (x, m) => x.cast("double") - m)
-    (mu, emb.select(centered.as("ce")).localCheckpoint(false))
+    (mu, cut(emb.select(centered.as("ce"))))
   }
 
   /** PowerIters rounds of v ← normalize(Σ rows ce·(ce·v)) over a
@@ -329,11 +325,10 @@ object Embeddings {
     // deflate FROM the checkpointed centered cloud (r16; previously a
     // fresh parquet scan re-derived x − m) — the per-element arithmetic
     // (x − m) − c₁·v₁ is unchanged, only its input's lineage is shorter
-    val deflated = cloud
+    val deflated = cut(cloud
       .select(col("ce").as("ce0"), dotD(col("ce"), typedlit(v1)).as("c1"))
       .select(zip_with(col("ce0"), typedlit(v1),
-        (x, vv) => x - col("c1") * vv).as("ce"))
-      .localCheckpoint(false)
+        (x, vv) => x - col("c1") * vv).as("ce")))
     (mu, v1, powerIterate(deflated, mu.length))
   }
 
@@ -720,9 +715,9 @@ object Embeddings {
     // 400 rows) — corpus cost is one broadcast-probe scan regardless of N.
     // Each round's score is a multiply-add chain, so it is round(…,6)-
     // quantized BEFORE the argmax in both engines (the classifier-z FMA
-    // contract); ties break on vec_id. localCheckpoint truncates the
-    // selected-set lineage between rounds (the graph-family convention) —
-    // 5 tiny jobs, not a 3^k plan tree.
+    // contract); ties break on vec_id. Each round's selected set is a
+    // `cut` (the graph-family convention) — 5 tiny jobs, not a 3^k plan
+    // tree.
     "sim_mmr" -> ((s, d) =>
       mmrSelect(Tables.embeddings(s, d), MmrK, MmrPool)),
 
@@ -740,7 +735,7 @@ object Embeddings {
     // constant-sized metric algebra.
     "sim_rank_metrics" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val truth = exactTop5(emb, 10).localCheckpoint(false)
+      val truth = cut(exactTop5(emb, 10))
       val trSet = truth.select(col("probe_id"), col("cand_id"))
       val tr1 = truth.filter(col("rk") === 1)
         .select(col("probe_id"), col("cand_id"))
@@ -752,16 +747,11 @@ object Embeddings {
             .orderBy(desc("cos"), asc("cand_id"))))
           .filter(col("rk") <= 5)
           .select(col("probe_id"), col("cand_id"), col("rk"))
-      // Each method's top-5 list is consumed by THREE aggregates below
-      // (ndcg, rr, hits), each re-deriving the full corpus scan + ranking
-      // window — the static plan carried ~30 parquet scans for what is
-      // 5 corpus passes. The list is k·probes rows (50), so truncating it
-      // to a LogicalRDD leaf costs nothing and guarantees each method
-      // scans the corpus exactly once. Same rows by construction.
+      // each 50-row list feeds three aggregates: cut, one corpus scan each
       val lists: Seq[(String, DataFrame)] =
         (MrlWidths.map(w => s"mrl$w" -> mrlTop5(w)) :+
           ("int8" -> int8Top5(emb, 10)))
-          .map { case (n, df) => n -> df.localCheckpoint(false) }
+          .map { case (n, df) => n -> cut(df) }
       val wCase = when(col("rk") === 1, lit(NdcgW(0)))
         .when(col("rk") === 2, lit(NdcgW(1)))
         .when(col("rk") === 3, lit(NdcgW(2)))
@@ -807,25 +797,22 @@ object Embeddings {
       poolN: Int): DataFrame = {
     val rel = probeCos(emb, 1, None)
       .select(col("cand_id").as("vec_id"), col("cos").as("rel"))
-    val pool = rel.orderBy(desc("rel"), asc("vec_id")).limit(poolN)
+    val pool = cut(rel.orderBy(desc("rel"), asc("vec_id")).limit(poolN)
       .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
       .select(col("vec_id"), col("rel"), col("embedding"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
-      .localCheckpoint(false)
+        sqrt(dot(col("embedding"), col("embedding"))).as("nrm")))
     val a = pool.select(col("vec_id").as("ai"),
       col("embedding").as("ea"), col("nrm").as("na"))
     val b = pool.select(col("vec_id").as("bi"),
       col("embedding").as("eb"), col("nrm").as("nb"))
-    val pairs = a.crossJoin(broadcast(b)).filter(col("ai") =!= col("bi"))
+    val pairs = cut(a.crossJoin(broadcast(b)).filter(col("ai") =!= col("bi"))
       .select(col("ai"), col("bi"),
-        (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("pc"))
-      .localCheckpoint(false)
-    var selected = pool
+        (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("pc")))
+    var selected = cut(pool
       .select(col("vec_id"), round(lit(MmrLambda) * col("rel"), 6)
         .as("score"))
       .orderBy(desc("score"), asc("vec_id")).limit(1)
-      .select(lit(1).as("pick_round"), col("vec_id"), col("score"))
-      .localCheckpoint(false)
+      .select(lit(1).as("pick_round"), col("vec_id"), col("score")))
     for (r <- 2 to k) {
       val pen = pairs
         .join(selected.select(col("vec_id").as("bi")), "bi")
@@ -839,7 +826,7 @@ object Embeddings {
             lit(MmrMu) * col("pen"), 6).as("score"))
         .orderBy(desc("score"), asc("vec_id")).limit(1)
         .select(lit(r).as("pick_round"), col("vec_id"), col("score"))
-      selected = selected.unionByName(pick).localCheckpoint(false)
+      selected = cut(selected.unionByName(pick))
     }
     selected.orderBy("pick_round")
   }

@@ -23,12 +23,8 @@ import graft.Tables
   * caps pathological chains.
   *
   * Scale notes (100 TB):
-  *  - `localCheckpoint` truncates plan lineage each iteration — without it
-  *    the plan doubles per round (labels feed the next round through TWO
-  *    paths) and analysis blows up long before data does; measured as an
-  *    OOM at diameter > 20 under a lineage-keeping persist. On a real
-  *    cluster use reliable `checkpoint` for the same truncation without
-  *    losing executor-failure recovery.
+  *  - Each round is a `cut` (ops/package.scala): labels feed the next
+  *    round through TWO paths, so an uncut plan doubles per round.
   *  - Each iteration shuffles edges on `dst` and labels on `doc_id` —
   *    linear in |E|, and |E| out of LSH banding is near-linear in corpus
   *    size (collision pairs only, est_sim >= 0.5 filtered).
@@ -83,10 +79,8 @@ object Graph {
     */
   private[graft] def connectedComponents(
       vertices: DataFrame, edges: DataFrame): DataFrame = {
-    // Materialize the edge list ONCE — it is typically the output of a
-    // whole candidate-generation pipeline (MinHash+LSH here); without this
-    // checkpoint every iteration would recompute that upstream plan.
-    val sym = undirected(edges).localCheckpoint(false)
+    // read by every round; uncut, each round replays the MinHash/LSH plan
+    val sym = cut(undirected(edges))
     // Propagate over EDGE-ENDPOINT vertices only: a vertex with no edges
     // is its own component and its label can never change, so it has no
     // business riding every iteration's shuffle. For dedup graphs the
@@ -102,31 +96,10 @@ object Graph {
       val nbrMin = sym
         .join(lab.select(col("doc_id").as("dst"), col("comp")), "dst")
         .groupBy(col("src").as("doc_id")).agg(min("comp").as("nc"))
-      // One join per iteration: keep old and new labels side by side in
-      // the checkpointed result so the convergence count is a scan of it,
-      // not a second join against the previous labels.
-      // localCheckpoint here is LOAD-BEARING, not a tuning choice: `merged`
-      // references `lab` twice (through nbrMin and through the join), so a
-      // lineage-keeping persist doubles the LOGICAL plan every iteration —
-      // 2^20 nodes by MaxIter (measured: OOM composing the explain string
-      // on a diameter-20+ graph). Truncating to a LogicalRDD leaf per
-      // iteration keeps the plan O(1); on a real cluster use reliable
-      // `checkpoint` for the same truncation with executor-loss safety.
-      // LAZY (r19, the whole graph/eval family): localCheckpoint(false)
-      // returns the same LogicalRDD-truncated Dataset — the plan cut is
-      // identical — but materialization rides the NEXT action (here the
-      // convergence count, which must run anyway) instead of an eager
-      // per-round job barrier. The family A/B (isolated median-of-5,
-      // idle): 28.8 → 26.5s over 14 queries, graph_hits −16%,
-      // ivf_nprobe_sweep −21%, label_prop −12%, no real regressions.
-      // The r13 eager adjudication for embedNearDupPairs' bl stands —
-      // CORPUS-sized frames feeding two CONCURRENT self-join sides
-      // contend on block locks under lazy — but these fixpoint frames
-      // are node-sized and their consumers are sequential stages.
-      val merged = lab.join(nbrMin, Seq("doc_id"), "left")
+      // reads lab twice; old and new labels side by side for the count
+      val merged = cut(lab.join(nbrMin, Seq("doc_id"), "left")
         .select(col("doc_id"), col("comp"),
-          least(col("comp"), coalesce(col("nc"), col("comp"))).as("nxt"))
-        .localCheckpoint(false)
+          least(col("comp"), coalesce(col("nc"), col("comp"))).as("nxt")))
       changed = merged.filter(col("nxt") < col("comp")).count()
       lab = merged.select(col("doc_id"), col("nxt").as("comp"))
       i += 1
@@ -208,11 +181,10 @@ object Graph {
     */
   private def starContract(vertices: DataFrame, sym: DataFrame): DataFrame = {
     // canonical undirected form (lo < hi), deduped once up front
-    var e = sym
+    var e = cut(sym
       .select(least(col("src"), col("dst")).as("lo"),
         greatest(col("src"), col("dst")).as("hi"))
-      .filter(col("lo") =!= col("hi")).distinct()
-      .localCheckpoint(false)
+      .filter(col("lo") =!= col("hi")).distinct())
     var eCnt = e.count()
     var converged = false
     var i = 0
@@ -225,21 +197,19 @@ object Graph {
         .union(e.select(col("hi").as("u"), col("lo").as("v")))
       val mL = both.groupBy("u").agg(min("v").as("mn"))
         .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val ls = both.join(mL, "u")
+      val ls = cut(both.join(mL, "u")
         .filter(col("v") > col("u"))
         .select(col("m").as("lo"), col("v").as("hi"))
-        .filter(col("lo") =!= col("hi")).distinct()
-        .localCheckpoint(false)
+        .filter(col("lo") =!= col("hi")).distinct())
       val lsCnt = ls.count()
       // small-star: on the hi→lo orientation, node u=hi attaches each
       // smaller neighbor (and itself) to m = min of its smaller neighbors.
       val mS = ls.groupBy("hi").agg(min("lo").as("m"))
-      val ss = ls.join(mS, "hi")
+      val ss = cut(ls.join(mS, "hi")
         .filter(col("lo") =!= col("m"))
         .select(col("m").as("lo"), col("lo").as("hi"))
         .union(mS.select(col("m").as("lo"), col("hi")))
-        .distinct()
-        .localCheckpoint(false)
+        .distinct())
       val ssCnt = ss.count()
       // converged iff the edge set is fixed under BOTH operations: equal
       // sizes and an empty one-sided difference ⇒ set equality.
@@ -308,10 +278,9 @@ object Graph {
   private[graft] def personalizedPageRank(edges0: DataFrame,
       iters: Int): DataFrame = {
     val (deg, msgs) = rankPrelude(edges0)
-    val seeds = deg.filter(col("src") < SupplierOffset)
+    val seeds = cut(deg.filter(col("src") < SupplierOffset)
       .select(col("src").as("id")).orderBy("id").limit(3)
-      .withColumn("isSeed", lit(1))
-      .localCheckpoint(false)
+      .withColumn("isSeed", lit(1)))
     var ranks = deg.select(col("src").as("id"))
       .join(broadcast(seeds), Seq("id"), "left")
       .select(col("id"),
@@ -330,19 +299,14 @@ object Graph {
 
   /** The set-up [[pageRank]] and [[personalizedPageRank]] share: the
     * node-sized out-degree table `deg`, and `msgs`, the undirected edges
-    * each carrying its source's degree. Edges and degrees are computed
-    * once and localCheckpoint'ed (A/B-measured faster than a
-    * lineage-keeping persist here: the chained iterations replan over
-    * the cached relation each time, and LogicalRDD leaves keep the plan
-    * small; reliable `checkpoint` on a cluster). deg is cached and rides
-    * every later use through a broadcast instead of materializing the
-    * edge×deg join: recomputing msgs per iteration is a map-side
-    * broadcast join over the checkpointed edges, strictly cheaper than
-    * writing/reading an edge-wide checkpoint. */
+    * each carrying its source's degree. Edges and degrees are each cut
+    * once (A/B-measured faster than a lineage-keeping persist here: the
+    * chained iterations replan over them every round). msgs is not cut:
+    * recomputing it per iteration is a map-side broadcast join of deg
+    * over the cut edges, cheaper than writing an edge-wide checkpoint. */
   private def rankPrelude(edges0: DataFrame): (DataFrame, DataFrame) = {
-    val sym = undirected(edges0).localCheckpoint(false)
-    val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
+    val sym = cut(undirected(edges0))
+    val deg = cut(sym.groupBy("src").agg(count(lit(1)).as("deg")))
     (deg, sym.join(deg, "src"))
   }
 
@@ -367,7 +331,7 @@ object Graph {
     * callers.
     */
   private[graft] def triangleCounts(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("a"), col("b")).localCheckpoint()
+    val e = materialize(edges.select(col("a"), col("b"))) // 3 join sides
     val wedges = e.join(e.select(col("a").as("b"), col("b").as("c")), "b")
     val tri = wedges.join(
       e.select(col("a"), col("b").as("c")), Seq("a", "c"))
@@ -532,37 +496,26 @@ object Graph {
     // exactly like pageRank's N.
     "graph_hits" -> ((s, d) => {
       val dec = org.apache.spark.sql.types.DecimalType(30, 15)
-      val edges = edgeBase(s, d).localCheckpoint(false)
+      val edges = cut(edgeBase(s, d))
       val nC = edges.select("src").distinct().count()
       var hub = edges.select(col("src").as("id")).distinct()
         .select(col("id"), lit(1.0 / nC).as("h"))
       var auth: DataFrame = hub // placeholder, overwritten in round 1
       for (_ <- 1 to 2) {
-        // Each half-round's raw score frame feeds BOTH the L1 normalizer
-        // aggregate and the normalized scores (and the final union reads
-        // hub AND auth), so a lineage-keeping plan doubles per half-round —
-        // the static plan hit 135 Exchanges / 68 scans by round 2. Runtime
-        // exchange reuse dedupes the identical subtrees, but planning,
-        // codegen and AQE re-optimization still walk the full doubled tree;
-        // truncating each NODE-SIZED aggregate to a LogicalRDD leaf keeps
-        // the plan O(1) per half-round (isolated median-of-7: 3.26 → 3.02s
-        // and 2.53 → 2.42s across two idle A/B pairs). Same rows by
-        // construction.
-        val aRaw = edges
+        // read by its normalizer and the scores: uncut, the plan doubles
+        val aRaw = cut(edges
           .join(hub.select(col("id").as("src"), col("h")), "src")
           .select(col("dst").as("id"), col("h").cast(dec).as("c"))
-          .groupBy("id").agg(sum("c").as("raw"))
-          .localCheckpoint(false)
+          .groupBy("id").agg(sum("c").as("raw")))
         val aTot = aRaw.agg(sum("raw").as("tot")).limit(1)
         auth = aRaw.crossJoin(broadcast(aTot))
           .select(col("id"),
             (col("raw").cast("double") / col("tot").cast("double"))
               .as("a"))
-        val hRaw = edges
+        val hRaw = cut(edges
           .join(auth.select(col("id").as("dst"), col("a")), "dst")
           .select(col("src").as("id"), col("a").cast(dec).as("c"))
-          .groupBy("id").agg(sum("c").as("raw"))
-          .localCheckpoint(false)
+          .groupBy("id").agg(sum("c").as("raw")))
         val hTot = hRaw.agg(sum("raw").as("tot")).limit(1)
         hub = hRaw.crossJoin(broadcast(hTot))
           .select(col("id"),
@@ -627,22 +580,20 @@ object Graph {
     // full core-number sort. Fixed round count = deterministic snapshot
     // (the graph_label_prop convention, and what the unrolled oracle
     // mirrors); each round is one semi join of edges against surviving
-    // vertices + one degree count — linear in |E|, localCheckpoint
-    // truncating lineage exactly like connectedComponents. Integer-only.
+    // vertices + one degree count — linear in |E|, each round a `cut`
+    // exactly like connectedComponents. Integer-only.
     "graph_core" -> ((s, d) => {
       val k = 2
       val e0 = TextSim.minhashEdges(s, d)
         .select(col("ia").as("a"), col("ib").as("b"))
-      var sym = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-        .localCheckpoint(false)
+      var sym = cut(e0.union(e0.select(col("b").as("a"), col("a").as("b"))))
       for (_ <- 1 to 3) {
         val alive = sym.groupBy("a").agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= k).select("a")
-        sym = sym
+        sym = cut(sym
           .join(alive, Seq("a"), "left_semi")
           .join(alive.select(col("a").as("b")), Seq("b"), "left_semi")
-          .select("a", "b")
-          .localCheckpoint(false)
+          .select("a", "b"))
       }
       sym.groupBy(col("a").as("doc_id")).agg(count(lit(1)).as("core_deg"))
         .filter(col("core_deg") >= k)
@@ -663,8 +614,9 @@ object Graph {
     "graph_jaccard" -> ((s, d) => {
       val e0 = TextSim.minhashEdges(s, d)
         .select(col("ia").as("a"), col("ib").as("b"))
-      val sym = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-        .localCheckpoint() // adjacency reused three times below
+      // adjacency consumed three times below
+      val sym = materialize(
+        e0.union(e0.select(col("b").as("a"), col("a").as("b"))))
       val deg = sym.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
       val viaA = e0
         .join(sym.select(col("a").as("ja"), col("b").as("x")),
@@ -697,10 +649,8 @@ object Graph {
     // per-node window over that node's distinct incoming labels (bounded
     // by its degree) — the Pregel message shape, linear in |E| per round.
     "graph_label_prop" -> ((s, d) => {
-      // undirected edges computed once, like rankPrelude's sym. Eager:
-      // with the lazy form one LPA join's broadcast choice varied between
-      // runs of a shared session (PlanSnapSpec's graph_label_prop entry).
-      val sym = undirected(edgeBase(s, d)).localCheckpoint()
+      // eager: lazy let an LPA join's broadcast choice vary (PlanSnapSpec)
+      val sym = materialize(undirected(edgeBase(s, d)))
       labelPropagate(sym, 3)
         .withColumn("comm_size", count(lit(1)).over(
           Window.partitionBy("lbl")))
@@ -720,12 +670,12 @@ object Graph {
     // (linear in ¦E¦), a degree aggregate, and three 1-row scalars
     // crossed (the funnel shape).
     "graph_modularity" -> ((s, d) => {
-      val sym = undirected(edgeBase(s, d)).localCheckpoint(false)
+      val sym = cut(undirected(edgeBase(s, d)))
       // labels are consumed four times below (both endpoint joins, the
       // degree-sum join, and the node count); the static plan replicates
       // the 3-round LPA chain per consumer (41 Exchanges / 18 scans), but
       // runtime exchange reuse dedupes the identical subtrees, so the
-      // chain executes ONCE as-is. A localCheckpoint here was A/B-measured
+      // chain executes ONCE as-is. A checkpoint here was A/B-measured
       // SLOWER (2.16 → 2.55s isolated median-of-7: four eager job barriers
       // against a reuse that already works) — deliberately not truncated.
       val lab = labelPropagate(sym, 3)
@@ -760,7 +710,7 @@ object Graph {
     // final ratio is IEEE. Shapes: one degree aggregate + two joins onto
     // the edge list, linear in ¦E¦.
     "graph_assortativity" -> ((s, d) => {
-      val sym = undirected(edgeBase(s, d)).localCheckpoint(false)
+      val sym = cut(undirected(edgeBase(s, d)))
       val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
       val d19 = org.apache.spark.sql.types.DecimalType(19, 0)
       val d30 = org.apache.spark.sql.types.DecimalType(30, 0)
@@ -790,11 +740,11 @@ object Graph {
     // rounds — the reachability primitive behind "everything within k
     // links of a flagged account" investigations and neighborhood-bounded
     // graph features. Same Pregel shape as pageRank/labelPropagate (one
-    // edge join + one min-aggregation per round, localCheckpoint lineage
-    // truncation); integer-only, so the oracle is an exact unrolled CTE.
+    // edge join + one min-aggregation per round, each round a `cut`);
+    // integer-only, so the oracle is an exact unrolled CTE.
     // Seeds: customers ≡ 0 (mod 100) — a deterministic sample of sources.
     "graph_bfs" -> ((s, d) => {
-      val sym = undirected(edgeBase(s, d)).localCheckpoint(false)
+      val sym = cut(undirected(edgeBase(s, d)))
       val seeds = sym.select(col("src").as("id")).distinct()
         .filter(col("id") % 100 === 0 && col("id") < SupplierOffset)
       var dist = seeds.select(col("id"), lit(0).as("dist"))
@@ -802,9 +752,8 @@ object Graph {
         val nbr = sym
           .join(dist.select(col("id").as("src"), col("dist")), "src")
           .select(col("dst").as("id"), (col("dist") + 1).as("nd"))
-        dist = dist.select(col("id"), col("dist").as("nd")).union(nbr)
-          .groupBy("id").agg(min("nd").as("dist"))
-          .localCheckpoint(false)
+        dist = cut(dist.select(col("id"), col("dist").as("nd")).union(nbr)
+          .groupBy("id").agg(min("nd").as("dist")))
       }
       dist.select(col("id"), kind, col("dist")).orderBy("id")
     })

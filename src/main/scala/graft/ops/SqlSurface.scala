@@ -217,7 +217,7 @@ object SqlSurface {
     // JVMs sharing the warehouse dir can never delete/overwrite each
     // other's location mid-read — there is no shared state to lock, and
     // the r14 JVM-global `synchronized` is gone with it. The read-back
-    // is eagerly materialized (localCheckpoint) and the managed table
+    // is eagerly materialized (`materialize`) and the managed table
     // then DROPPED, purging its warehouse directory, so repeated runs
     // leave nothing behind (a crash between CTAS and DROP strands one
     // uniquely-named directory — swept by the next tmp cleanup, never
@@ -242,8 +242,8 @@ object SqlSurface {
         |      AS DOUBLE) AS sales
         |  FROM sqv_orders GROUP BY o_orderpriority, o_orderstatus)
         |GROUP BY o_orderpriority""".stripMargin)
-      // catalog read-back (the M8 pin), pinned in memory before the drop
-      val out = s.table(tbl).localCheckpoint(true)
+      // catalog read-back (the M8 pin), materialized before the drop
+      val out = materialize(s.table(tbl))
       s.sql(s"DROP TABLE $tbl") // managed: drop purges the location
       out
     }),

@@ -544,29 +544,14 @@ object TextSim {
     // LINEAR in block size (see bucketBits' scaladoc for the union-of-8
     // math that fixed 4 bits loses). bits is constant within a label, so
     // keys never mix widths across the (label, tbl, key) join.
-    // localCheckpoint: bl feeds BOTH sides of the candidate self-join —
-    // without the lineage cut the 8-table bucketing (≥4 dim-sized dots
-    // per table at the clamp floor; planes 4..15 evaluate lazily under a
-    // bits>b guard since r12, so 32–128 dots per vector depending on
-    // width) recomputes once per side. EAGER, deliberately (r13
-    // adjudication of the r12 verdict's size-gate suggestion): a lazy
-    // checkpoint measured EQUAL-OR-WORSE at both scales (decade
-    // dedup_embed 17.1s lazy vs 15.7s eager; concurrent self-join map
-    // stages contend on block locks instead of reading a completed
-    // materialization), and a count-based gate would spend an extra
-    // full pass at exactly the over-cap scale where the checkpoint
-    // engages anyway. The cost this accepts: ~0.3s/query at sf0.1 where
-    // no label exceeds the cap and the materialized bl is empty (r11
-    // 0.43s → r12 0.73s in-suite) — the documented small-scale trade
-    // for a 2.4–3.7× decade win (no-ckpt 40.6s vs 15.7s, same host).
-    val bl = big
+    // both self-join sides read the 32–128 plane dots per vector once
+    val bl = materialize(big
       .withColumn("bits", bucketBits(col("cnt"), blockCap))
       .select(col("label"), col("vec_id"), col("embedding"),
         col("nrm"),
         posexplode(array((0 until 8).map(t =>
           signBucketMasked(t, col("embedding"), col("bits"))): _*))
-          .as(Seq("tbl", "key")))
-      .localCheckpoint(true)
+          .as(Seq("tbl", "key"))))
     val ba = bl.select(col("label"), col("tbl"), col("key"),
       col("vec_id").as("ia"), col("embedding").as("ea"), col("nrm").as("na"))
     val bb = bl.select(col("label"), col("tbl"), col("key"),
@@ -680,19 +665,8 @@ object TextSim {
     val sh0 = shingleRows(docs, 3)
     val dfTab = sh0.groupBy("g")
       .agg(count(lit(1)).as("df")).filter(col("df") <= tau)
-    // persist(MEMORY_AND_DISK): the guarded shingle table feeds THREE
-    // consumers (doc sizes + both join sides); without it the
-    // scan→aggregate→join pipeline re-runs once per consumer. Persist —
-    // not localCheckpoint — because persist keeps the lineage: a lost
-    // executor recomputes its blocks from the scan, while localCheckpoint
-    // truncates lineage into non-reliable executor-local storage and makes
-    // any executor loss fatal at scale.
-    val sh = sh0.join(dfTab, "g")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Lifecycle: the blocks live until the caller's sweep-level
-    // clearCache (Bench after each timed run, Verify after each query);
-    // a long-lived session embedding this operator should unpersist the
-    // returned plan's cached input after materialization.
+    // corpus-sized, consumed three times (doc sizes + both join sides)
+    val sh = reuse(sh0.join(dfTab, "g"))
     // sz counts df = 1 shingles too (the "informative-shingle"
     // denominator); only the join skips them, since a shingle in one
     // doc can never produce an ia < ib pair.
@@ -945,8 +919,8 @@ object TextSim {
       // r18 verdict suggested hoisting this config-independent truth
       // table behind one bounded checkpoint shared by the grade join and
       // the n_truth scalar. Measured isolated median-of-7 at sf0.1 on an
-      // idle host: no checkpoint 3.49s, lazy localCheckpoint 4.43s,
-      // eager 5.49s — the checkpoint LOSES ~1-2s. Why: (a) the truth
+      // idle host: no checkpoint 3.49s, `cut` 4.43s, `materialize`
+      // 5.49s — the checkpoint LOSES ~1-2s. Why: (a) the truth
       // subtree is already executed once — ngramJaccard's persisted
       // shingle table plus runtime exchange reuse share the derivation
       // between both consumers (the committed plan shows one subtree
@@ -1378,8 +1352,7 @@ object TextSim {
     "ivf_nprobe_sweep" -> ((s, d) => {
       val emb = embeddings(s, d)
       val centroids = Ivf.fitCentroids(emb, k = 8, iters = 2)
-      val truth = queries("sim_topk")(s, d).select("probe_id", "cand_id")
-        .localCheckpoint(false)
+      val truth = cut(queries("sim_topk")(s, d).select("probe_id", "cand_id"))
       val tn = truth.agg(count(lit(1)).as("n_truth")).limit(1)
       // ONE E-step, checkpointed, probed by all three configs (r18
       // optimization round — previously each config ran assign twice,
@@ -1391,23 +1364,14 @@ object TextSim {
       // computed once, checkpointed, and BOTH the scored-count and the
       // ranked top-5 read them — same rows, same (cos desc, cand_id)
       // order keys, so n_scored/recall are unchanged by construction.
-      // SCALE NOTE (r18 verdict): `indexed` is CORPUS-sized — unlike the
-      // node-sized graph checkpoints, localCheckpoint here puts the full
-      // (id, embedding, cell) assignment on executor-local storage with
-      // its lineage truncated, so an executor loss under the sweep is
-      // fatal. On a cluster use reliable `checkpoint` (or persist the
-      // assignment as the IVF index table it stands in for — a deployed
-      // IVF stores exactly this frame); locally the trade (one E-step
-      // instead of six) is the measured win and executor loss cannot
-      // happen in local mode.
-      val indexed = Ivf.index(emb, centroids).localCheckpoint(false)
+      // corpus-sized: on a cluster, the stored IVF index table it stands for
+      val indexed = cut(Ivf.index(emb, centroids))
       val probes = indexed.filter(col("cand_id") < 10)
         .select(col("cand_id").as("vec_id"), col("e").as("embedding"))
       val nc = indexed.agg(count(lit(1)).as("n_corpus")).limit(1)
       Seq(1, 2, 4).map { np =>
-        val cand = Ivf
-          .candidatesFromIndex(indexed, centroids, probes, nprobe = np)
-          .localCheckpoint(false)
+        val cand = cut(Ivf
+          .candidatesFromIndex(indexed, centroids, probes, nprobe = np))
         val hits = Ivf.rankCandidates(cand, k = 5)
           .join(truth, Seq("probe_id", "cand_id"), "left_semi")
           .agg(count(lit(1)).as("hits")).limit(1)
@@ -1458,17 +1422,10 @@ object TextSim {
     // 100 TB run both sides over the same hash-sampled sub-corpus
     // exactly as dedup_minhash_eval_sampled prescribes.
     "dedup_embed_eval" -> ((s, d) => {
-      // e feeds the truth's two join sides AND the candidate bucketing;
-      // bl feeds both candidate sides — localCheckpoint both so the
-      // window count / norm / plane bucketing each compute ONCE
-      // (lineage cuts, values unchanged; r12: 3.9s → ~1.9s at sf0.1).
-      // Eager, deliberately — the r13 lazy-vs-eager A/B measured lazy
-      // equal-or-worse at both scales (decade 7.1s lazy vs 6.5s eager;
-      // see embedNearDupPairs' adjudication note).
-      val e = embeddings(s, d).select(col("vec_id"), col("label"),
-        col("embedding"), normOf(col("embedding")).as("nrm"),
-        count(lit(1)).over(Window.partitionBy("label")).as("cnt"))
-        .localCheckpoint(true)
+      // e: both truth sides and the bucketing; bl: both candidate sides
+      val e = materialize(embeddings(s, d).select(col("vec_id"),
+        col("label"), col("embedding"), normOf(col("embedding")).as("nrm"),
+        count(lit(1)).over(Window.partitionBy("label")).as("cnt")))
       val ta = e.select(col("label"), col("vec_id").as("ia"),
         col("embedding").as("ea"), col("nrm").as("na"))
       val tb = e.select(col("label"), col("vec_id").as("ib"),
@@ -1476,13 +1433,12 @@ object TextSim {
       val truth = ta.join(tb, Seq("label")).filter(col("ia") < col("ib"))
         .filter(dot(col("ea"), col("eb")) / (col("na") * col("nb"))
           >= EmbedDupTau)
-      val bl = e
+      val bl = materialize(e
         .withColumn("bits", bucketBits(col("cnt"), EmbedBlockCap))
         .select(col("label"), col("vec_id"),
           posexplode(array((0 until 8).map(t =>
             signBucketMasked(t, col("embedding"), col("bits"))): _*))
-            .as(Seq("tbl", "key")))
-        .localCheckpoint(true)
+            .as(Seq("tbl", "key"))))
       val ca = bl.select(col("label"), col("tbl"), col("key"),
         col("vec_id").as("ia"))
       val cb = bl.select(col("label"), col("tbl"), col("key"),
@@ -1567,9 +1523,9 @@ object TextSim {
     * `pipeline_curate2`'s gate AND keeper argmax, and `curation_card`'s
     * mean_z (the r10 review found three hand-copies accumulating: a
     * weight change that missed one site would silently make the card
-    * disagree with the gate it summarizes). The DuckDB mirrors
-    * interpolate the same weights; every consumer quantizes with
-    * round(z, 6) before any decision surface (ADVICE r9). */
+    * disagree with the gate it summarizes). Its DuckDB mirror is
+    * [[dClassifierZ]]; every consumer quantizes with round(z, 6) before
+    * any decision surface (ADVICE r9). */
   private[ops] def classifierZ: Column = {
     val nTok = size(toks).cast("double")
     // try_divide: an empty text has no characters, so its punctuation
@@ -1586,6 +1542,18 @@ object TextSim {
     lit(-1.0) + lit(2.5) * least(nTok / 100.0, lit(1.0)) +
       lit(3.0) * stopR - lit(4.0) * punct + lit(0.8) * (avgLen / 10.0)
   }
+
+  /** DuckDB mirror of [[classifierZ]], unrounded, over the token list
+    * expression `t` and the raw `text` column — the one DuckDB copy of
+    * the weights. */
+  private[ops] def dClassifierZ(t: String): String =
+    s"""-1.0 + 2.5 * least(CAST(len($t) AS DOUBLE) / 100.0, 1.0) +
+       |      3.0 * (CAST(len(list_filter($t, x -> list_contains($dStopwords, x)))
+       |        AS DOUBLE) / len($t)) -
+       |      4.0 * (CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
+       |        AS DOUBLE) / length(text)) +
+       |      0.8 * (CAST(list_sum(list_transform($t, x -> length(x)))
+       |        AS DOUBLE) / len($t) / 10.0)""".stripMargin
 
   /** PII detector classes, ordered: (name, pattern, placeholder). The
     * REPLACEMENT order is part of the contract (SSN's dashed groups must
@@ -1934,19 +1902,9 @@ object TextSim {
         |FROM per, nt ORDER BY bands""".stripMargin
     },
     "curate_classifier" -> {
-      s"""WITH f AS (SELECT doc_id,
-        |    CAST(len($dToks) AS DOUBLE) AS n_tok,
-        |    CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]'))
-        |      AS DOUBLE) / length(text) AS punct,
-        |    CAST(len(list_filter($dToks, t -> list_contains($dStopwords, t)))
-        |      AS DOUBLE) / len($dToks) AS stop_r,
-        |    CAST(list_sum(list_transform($dToks, t -> length(t)))
-        |      AS DOUBLE) / len($dToks) AS avg_len
-        |  FROM documents),
-        |z AS (SELECT doc_id,
-        |    -1.0 + 2.5 * least(n_tok / 100.0, 1.0) + 3.0 * stop_r -
-        |      4.0 * punct + 0.8 * (avg_len / 10.0) AS z
-        |  FROM f)
+      s"""WITH z AS (SELECT doc_id,
+        |    ${dClassifierZ(dToks)} AS z
+        |  FROM documents)
         |SELECT doc_id, round(z, 6) AS z,
         |  round(1.0 / (1.0 + exp(-z)), 6) AS score,
         |  round(z, 6) >= 0 AS keep

@@ -498,7 +498,8 @@ object ModelGraph {
                 // dup-key model dbt ships with this strategy), where
                 // merge raises. Clean batches converge (spec-pinned).
                 val bv = s"__graft_mg_batch_${m.name}"
-                spark.sql(body).localCheckpoint(true)
+                // body may read the model's own view; the DELETE re-points it
+                graft.ops.materialize(spark.sql(body))
                   .createOrReplaceTempView(bv)
                 val keys = m.uniqueKey.map(k => s"`$k`").mkString(", ")
                 graft.plans.DmlViews.sql(spark,

@@ -43,7 +43,7 @@ import org.apache.spark.sql.types.StructType
   * untouched to Spark's native paths.
   *
   * The "table mutation" is a temp-view re-point: the new table value is
-  * eagerly materialized (`localCheckpoint`, same discipline as
+  * eagerly materialized (`graft.ops.materialize`, same discipline as
   * sql_ctas's read-back) and `createOrReplaceTempView`d over the target
   * name — the lazy-view equivalent of an atomic table swap.
   *
@@ -123,7 +123,8 @@ object DmlViews {
           "temp-view re-point (catalog tables take Spark's native v2 " +
           "row-level-operation path), and a global temp view cannot be " +
           "re-pointed by createOrReplaceTempView")
-    interpret().localCheckpoint(true).createOrReplaceTempView(parts.head)
+    // the new rows may read the target itself: materialize before re-point
+    graft.ops.materialize(interpret()).createOrReplaceTempView(parts.head)
     parts.head
   }
 
@@ -216,7 +217,7 @@ object DmlViews {
     * NULL survive — one codegen'd filter, no shuffle. No trailing
     * re-alias projection, deliberately: a filter preserves the schema,
     * and re-aliasing columns to their own names makes the subsequent
-    * localCheckpoint capture a filter-derived constraint on the
+    * materialize capture a filter-derived constraint on the
     * PRE-projection attribute ids (`NOT (k#old = 3)` alongside output
     * ids k#new) — a stale set Union.rewriteConstraints later hits with
     * an unguarded AttributeMap lookup (key-not-found on a chained

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.FileUtil
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import graft.ops.dsum
 
@@ -541,9 +541,7 @@ object StreamOps {
     val spark = events.sparkSession
     import spark.implicits._
     val gapMs = gapMinutes * 60000L
-    events.select(col("user_id"), col("ts"))
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
+    eventsByUser(events)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (user: Long, rows: Iterator[(Long, java.sql.Timestamp)],
          state: org.apache.spark.sql.streaming.GroupState[SessState]) =>
@@ -555,6 +553,17 @@ object StreamOps {
           merged.tail.reverse.iterator.map(s =>
             SessionOut(user, s.startMs * 1000, s.lastMs * 1000, s.n))
       }
+  }
+
+  /** The (user_id, ts) events as typed rows grouped by user: the input
+    * both stateful sessionizers fold. */
+  private def eventsByUser(events: DataFrame)
+      : KeyValueGroupedDataset[Long, (Long, java.sql.Timestamp)] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events.select(col("user_id"), col("ts"))
+      .as[(Long, java.sql.Timestamp)]
+      .groupByKey(_._1)
   }
 
   /** Gaps-and-islands over the batch events PLUS the open session (as an
@@ -700,9 +709,7 @@ object StreamOps {
     val spark = events.sparkSession
     import spark.implicits._
     val gapMs = gapMinutes * 60000L
-    events.select(col("user_id"), col("ts"))
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
+    eventsByUser(events)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout) {
         (user: Long, rows: Iterator[(Long, java.sql.Timestamp)],

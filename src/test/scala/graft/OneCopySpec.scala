@@ -14,9 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * undirected form once, in Spark and in the DuckDB oracle, and the
   * near-dup family ([[graft.ops.TextSim]], Graph) and the ts_* queries
   * ([[graft.ops.Relational]]) define each relation they share once
-  * per engine. Board-wide, a clone ratchet caps the 6-line windows that
-  * repeat anywhere in src/main/scala, and every oracle text two keys
-  * share is one instance.
+  * per engine. Every reused intermediate frame goes through one of the
+  * three reuse helpers in ops/package.scala. Board-wide, a clone ratchet
+  * caps the 6-line windows that repeat anywhere in src/main/scala, and
+  * every oracle text two keys share is one instance.
   * Copies drift apart (session confs did), so this spec fails when one
   * comes back, and when a script or run doc names a main
   * that no longer exists.
@@ -213,7 +214,8 @@ class OneCopySpec extends AnyFunSuite {
     "floor(col(\"rev\").cast(\"double\") * 100 + 0.5)" ->
       "Spark daily-cents spines (Relational.dailyCents)",
     "SELECT CAST(l_shipdate AS DATE) AS day," ->
-      "DuckDB daily-cents spines (Relational.dDailyCents)")
+      "DuckDB daily-cents spines (Relational.dDailyCents)",
+    "-1.0 + 2.5 * least(" -> "DuckDB classifier weights (TextSim.dClassifierZ)")
 
   private def sharedRelationCopies(srcs: Seq[(String, String)]): Seq[String] =
     sharedRelations.flatMap { case (needle, what) =>
@@ -243,6 +245,7 @@ class OneCopySpec extends AnyFunSuite {
         |        |  JOIN edges e ON w.r = e.src),
         |          floor(col("rev").cast("double") * 100 + 0.5).cast("long").as("c"))
         |        |  SELECT CAST(l_shipdate AS DATE) AS day,
+        |        |    -1.0 + 2.5 * least(n_tok / 100.0, 1.0) + 3.0 * stop_r -
         |""".stripMargin
     val found = sharedRelationCopies(Seq(shared, copy))
     assert(found.size == sharedRelations.size, found.mkString("\n"))
@@ -253,25 +256,79 @@ class OneCopySpec extends AnyFunSuite {
     * Each fold lowers it (the scan found 105 before the twin-query
     * folds). What stays, and why:
     *  - 5: sql_ctas's Spark SQL text and its own DuckDB oracle spell one
-    *    pivot SELECT — an operator never shares text with its oracle.
-    *  - 1: Multimodal's decodeGifFrames and gifFrameCount open the same
-    *    ImageIO reader; decodeGifFrames returns from inside it, so a
-    *    shared loan helper would change its control flow.
-    *  - 1: StreamOps' sessionizeStateful and sessionizeStatefulTimeout
-    *    share their typed groupByKey prelude; each needs its own
-    *    session's implicits in scope. */
-  private val CloneCeiling = 7
+    *    pivot SELECT — an operator never shares text with its oracle. */
+  private val CloneCeiling = 5
 
   /** Lines per clone-scan window. */
   private val CloneWindow = 6
+
+  /** A trimmed line that opens with a comment marker. */
+  private def isComment(t: String): Boolean =
+    t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
 
   /** A line as the clone scan sees it: whitespace runs collapsed;
     * blank, comment and import lines drop out. */
   private def scanned(line: String): Option[String] = {
     val t = line.trim.split("\\s+").mkString(" ")
-    val skip = t.isEmpty || t.startsWith("//") || t.startsWith("/*") ||
-      t.startsWith("*") || t.startsWith("import ")
+    val skip = t.isEmpty || isComment(t) || t.startsWith("import ")
     if (skip) None else Some(t)
+  }
+
+  /** The one file allowed to checkpoint or persist: it holds `cut`,
+    * `materialize` and `reuse`, the reuse policy for intermediate
+    * frames. */
+  private val ReuseHome = "src/main/scala/graft/ops/package.scala"
+
+  /** Calls that choose a frame's reuse policy by hand. */
+  private val rawReuse = Seq(
+    ".localCheckpoint(" -> "localCheckpoint calls (use cut or materialize)",
+    ".persist(" -> "persist calls (use reuse)",
+    "StorageLevel" -> "StorageLevel references (use reuse)")
+
+  /** One line per raw reuse call kind found outside [[ReuseHome]] on a
+    * non-comment line of `srcs`, with its count and `path:line` sites. */
+  private def rawReuseCalls(srcs: Seq[(String, String)]): Seq[String] =
+    rawReuse.flatMap { case (needle, what) =>
+      val sites = srcs.filter(_._1 != ReuseHome).flatMap { case (p, text) =>
+        text.split("\n", -1).toSeq.zipWithIndex.collect {
+          case (l, i) if !isComment(l.trim) && l.contains(needle) =>
+            s"$p:${i + 1}"
+        }
+      }
+      if (sites.isEmpty) None
+      else Some(s"${sites.size} $what: ${sites.mkString(", ")}")
+    }
+
+  test("src/main/scala sets every frame's reuse policy through cut, " +
+      "materialize or reuse: no raw localCheckpoint, persist or " +
+      "StorageLevel outside ops/package.scala") {
+    val found = rawReuseCalls(mainSources.map { case (p, text) =>
+      p.toString -> text })
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the raw-reuse scan has teeth: a raw lazy checkpoint and a " +
+      "persist are flagged, the same text in a comment or in the " +
+      "helpers' home is not") {
+    val helpers = ReuseHome ->
+      """  def cut(df: DataFrame): DataFrame = df.localCheckpoint(false)
+        |    df.persist(StorageLevel.MEMORY_AND_DISK)
+        |""".stripMargin
+    val commented = "Graph.scala" ->
+      """    // was: val sym = undirected(edges).localCheckpoint(false)
+        |    * a persist(...) keeps lineage; .persist(StorageLevel.DISK_ONLY)
+        |    val sym = cut(undirected(edges))
+        |""".stripMargin
+    assert(rawReuseCalls(Seq(helpers, commented)).isEmpty)
+    val raw = "Graph.scala" ->
+      """    val sym = cut(undirected(edges))
+        |    val lab = undirected(edges).localCheckpoint(false)
+        |      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        |""".stripMargin
+    assert(rawReuseCalls(Seq(helpers, raw)) === Seq(
+      "1 localCheckpoint calls (use cut or materialize): Graph.scala:2",
+      "1 persist calls (use reuse): Graph.scala:3",
+      "1 StorageLevel references (use reuse): Graph.scala:3"))
   }
 
   /** Each window of [[CloneWindow]] scanned lines that starts more than

@@ -506,4 +506,62 @@ class PlanAuditSpec extends SparkSpec {
       assert(hinted.collect().toSeq === bare.collect().toSeq)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
+
+  test("reuse helpers: materialize runs a job before it returns; cut " +
+      "runs none until an action and leaves a LogicalRDD leaf; reuse " +
+      "caches MEMORY_AND_DISK and keeps the source in its lineage") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.storage.StorageLevel
+    val sc = spark.sparkContext
+    val tag = "graft.spec.reusePhase"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty(tag))).getOrElse("")): Unit
+    }
+    def phase[A](name: String)(f: => A): A = {
+      sc.setLocalProperty(tag, name)
+      try f finally sc.setLocalProperty(tag, null)
+    }
+    // The bus delivers events in order, so once a later marker job is
+    // seen, every job the phase submitted has been seen too.
+    def jobsIn(name: String): Int = {
+      val marker = s"marker-$name"
+      phase(marker)(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(marker), "listener never saw the marker job")
+      seen.toArray.count(_ == name)
+    }
+    // no exchange: a lazy checkpoint of a shuffle still runs its map
+    // stages when AQE plans it, so only a shuffle-free source shows
+    // the lazy/eager split whole
+    def src = spark.range(0, 1000, 1, 4).selectExpr("id", "id % 7 AS k")
+    sc.addSparkListener(listener)
+    try {
+      val m = phase("materialize")(ops.materialize(src))
+      assert(jobsIn("materialize") >= 1)
+      assert(m.queryExecution.logical.collectLeaves()
+        .forall(_.isInstanceOf[LogicalRDD]))
+
+      val c = phase("cut")(ops.cut(src))
+      assert(jobsIn("cut") === 0, "cut ran a job before any action")
+      val leaves = c.queryExecution.optimizedPlan.collectLeaves()
+      assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LogicalRDD]),
+        leaves.map(_.nodeName))
+      assert(phase("cut-action")(c.count()) === 1000L)
+      assert(jobsIn("cut-action") >= 1)
+
+      val r = ops.reuse(src)
+      try {
+        assert(r.storageLevel === StorageLevel.MEMORY_AND_DISK)
+        val rl = r.queryExecution.logical.collectLeaves()
+        assert(rl.map(_.nodeName) === Seq("Range"), rl.map(_.nodeName))
+        assert(r.count() === 1000L)
+      } finally r.unpersist(blocking = true)
+    } finally sc.removeSparkListener(listener)
+  }
 }
