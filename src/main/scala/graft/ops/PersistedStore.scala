@@ -1,36 +1,42 @@
 package graft.ops
 
+import java.nio.file.{Files, StandardCopyOption}
 import org.apache.hadoop.fs.FileUtil
+import org.apache.spark.sql.SparkSession
 
-/** Shared commit protocol for the engine's persisted derived stores —
-  * the near-dup candidate edge list (TextSim.ensureEdgeStore), the
-  * snapshot dedup index (TextSim.ensureSnapshotStore) and the CDC
-  * changelog (Relational.ensureChangelogStore). Each is a
-  * derive-once / read-many parquet directory under java.io.tmpdir that
-  * stands in for the production metadata location next to the corpus
-  * (the testdata dir is read-only in this sandbox).
+/** The one publish protocol of the engine's durable stores: the
+  * persisted derived stores (the near-dup candidate edge list
+  * TextSim.ensureEdgeStore, the snapshot dedup index
+  * TextSim.ensureSnapshotStore and the CDC changelog
+  * Relational.ensureChangelogStore — derive-once / read-many parquet
+  * directories under java.io.tmpdir standing in for the production
+  * metadata location next to the corpus), ModelGraph's per-model
+  * `commit_N` state, and the exactly-once sink's epoch ledger
+  * (StreamOps). Nothing else in src/main/scala renames or moves a file
+  * (OneCopySpec).
   *
-  * Two contracts, both previously hand-rolled per store (r13) and since
-  * the r13 review required to be cross-process safe:
+  * VERSIONED KEY — [[dir]] hashes the dataset path TOGETHER WITH every
+  * contract constant the build depends on plus an explicit version
+  * token, so a semantics change lands in a FRESH directory instead of
+  * silently reading a stale store out of the persistent tmpdir.
   *
-  * 1. VERSIONED KEY — [[dir]] hashes the dataset path TOGETHER WITH
-  *    every contract constant the build depends on (banding constants,
-  *    snapshot boundary, changelog derivation rules) plus an explicit
-  *    version token. A semantics change therefore lands in a FRESH
-  *    directory instead of silently reading a stale store from a
-  *    previous build out of the persistent tmpdir.
+  * DIRECTORY PUBLISH — [[publishDir]] builds into a unique
+  * `<target>.build.<uuid>` sibling (same parent, so same filesystem)
+  * that no reader ever resolves, then `rename`s it into place: the
+  * rename is the publish, so the directory appears whole or not at
+  * all, and when two writers race the one whose rename lands wins
+  * while the other discards its build. A build that fails is discarded
+  * by [[discardBuild]]: a Spark job fails on its first failed task
+  * while its other tasks may still be running, and a straggler that
+  * writes after a single delete re-creates the build dir, where nothing
+  * would ever remove it (measured for ModelGraph at 3 of 80 runs).
   *
-  * 2. ATOMIC PUBLISH — [[ensure]] builds into a unique sibling temp
-  *    directory (same parent, so same filesystem), stamps the `_DONE`
-  *    marker INSIDE it, and then atomically `rename`s it into place:
-  *    the store directory and its marker appear together or not at all.
-  *    A crash mid-build leaves only an unpublished `*.build.*` temp dir
-  *    that no reader ever resolves; concurrent JVMs (the workflow runs
-  *    sbt test, Verify and Bench processes against the same tmpdir) race
-  *    the rename, the loser discards its build and waits for the
-  *    winner's marker. This closes the r13 gap where two processes could
-  *    both pass `!done.exists()` and the second's torn overwrite could
-  *    coexist with the first's `_DONE`.
+  * FILE PUBLISH — [[publishFile]] writes a hidden dot-prefixed temp in
+  * the target's directory and moves it into place with `ATOMIC_MOVE`,
+  * which THROWS on failure instead of silently losing the publish (the
+  * caller's micro-batch fails and is replayed). The dot prefix keeps
+  * the temp out of every Spark file-source listing, so a crash
+  * mid-publish leaves nothing a reader can see.
   *
   * In production the same protocol is the object-store variant: write
   * under a staging prefix, commit by publishing a manifest/marker last —
@@ -70,6 +76,44 @@ private[graft] object PersistedStore {
     s"${System.getProperty("java.io.tmpdir")}/graft_${name}_store_$key"
   }
 
+  /** Build a directory with `build(tmpPath)` and rename it to `target`.
+    * Returns whether this call's rename won; a losing build is deleted
+    * and `target` keeps the winner's contents. A throwing build is
+    * discarded and the error rethrown. */
+  def publishDir(spark: SparkSession, target: java.io.File)(
+      build: String => Unit): Boolean = {
+    target.getParentFile.mkdirs()
+    val tmp = new java.io.File(target.getParentFile,
+      s"${target.getName}.build.${java.util.UUID.randomUUID()}")
+    try build(tmp.getAbsolutePath)
+    catch { case t: Throwable => discardBuild(spark, tmp); throw t }
+    tmp.renameTo(target) || { FileUtil.fullyDelete(tmp); false }
+  }
+
+  /** Deletes a failed build's dir for good: delete until no task is
+    * running and the dir has stayed gone for 0.5 s, giving up after 10 s
+    * (a busy sibling job can keep tasks running). */
+  private def discardBuild(spark: SparkSession, tmp: java.io.File): Unit = {
+    def running = spark.sparkContext.statusTracker.getExecutorInfos
+      .map(_.numRunningTasks).sum
+    val deadline = System.nanoTime() + 10000000000L
+    var quiet = 0
+    while (quiet < 5 && System.nanoTime() < deadline) {
+      if (tmp.exists()) { FileUtil.fullyDelete(tmp); quiet = 0 }
+      else if (running == 0) quiet += 1
+      Thread.sleep(100)
+    }
+    FileUtil.fullyDelete(tmp): Unit
+  }
+
+  /** Replace `target`'s content with `text`, atomically. */
+  def publishFile(target: java.io.File, text: String): Unit = {
+    val tmp = new java.io.File(target.getParentFile, s".${target.getName}.tmp")
+    Files.write(tmp.toPath, text.getBytes("UTF-8"))
+    Files.move(tmp.toPath, target.toPath, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING): Unit
+  }
+
   /** Per-storeDir lock objects: unrelated stores (edge, snapshot,
     * changelog) must not serialize behind each other's Spark builds —
     * an object-wide lock here would also let one store's lose-race wait
@@ -80,31 +124,29 @@ private[graft] object PersistedStore {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Idempotently materialize `storeDir`: if its `_DONE` marker exists
-    * the store is complete and nothing runs; otherwise `build` writes
-    * into a fresh temp directory which is atomically renamed into place
-    * (marker already inside). Returns `storeDir`. The JVM-local lock is
+    * the store is complete and nothing runs; otherwise [[publishDir]]
+    * builds it with the marker stamped inside, so the store and its
+    * marker appear together. Returns `storeDir`. The JVM-local lock is
     * STRIPED PER STORE PATH and only prevents duplicate builds of the
     * same store between threads of one process; the rename is what makes
-    * concurrent PROCESSES safe. The lose-race marker-wait runs OUTSIDE
-    * the lock, so a stalled foreign publisher never blocks other threads
-    * — at worst a same-store thread entering during the wait runs one
-    * redundant build and discards it on its own failed rename. */
-  def ensure(storeDir: String)(build: String => Unit): String = {
+    * concurrent PROCESSES safe (the workflow runs sbt test, Verify and
+    * Bench processes against the same tmpdir). The lose-race marker-wait
+    * runs OUTSIDE the lock, so a stalled foreign publisher never blocks
+    * other threads — at worst a same-store thread entering during the
+    * wait runs one redundant build and discards it on its own failed
+    * rename. */
+  def ensure(spark: SparkSession, storeDir: String)(
+      build: String => Unit): String = {
     val dirF = new java.io.File(storeDir)
     val done = new java.io.File(dirF, "_DONE")
     if (done.exists()) return storeDir
     val lock = locks.computeIfAbsent(storeDir, _ => new Object)
     val published = lock.synchronized {
-      if (done.exists()) true // built by another thread while we queued
-      else {
-        val tmp = new java.io.File(dirF.getParentFile,
-          s"${dirF.getName}.build.${java.util.UUID.randomUUID()}")
-        try build(tmp.getAbsolutePath)
-        catch { case t: Throwable => FileUtil.fullyDelete(tmp); throw t }
-        new java.io.File(tmp, "_DONE").createNewFile()
-        if (tmp.renameTo(dirF)) true
-        else { FileUtil.fullyDelete(tmp); false }
-      }
+      done.exists() || // built by another thread while we queued
+        publishDir(spark, dirF) { tmp =>
+          build(tmp)
+          new java.io.File(tmp, "_DONE").createNewFile(): Unit
+        }
     }
     if (!published) {
       // another PROCESS published first: our build is discarded; wait

@@ -1970,7 +1970,7 @@ object Relational {
     * (versioned key + atomic temp-dir publish, cross-process safe) is
     * [[PersistedStore.ensure]]. */
   private[graft] def ensureChangelogStore(s: SparkSession, d: String): String =
-    PersistedStore.ensure(changelogStoreDir(d)) { tmp =>
+    PersistedStore.ensure(s, changelogStoreDir(d)) { tmp =>
       cdcLog(s, d)
         .write.mode("overwrite").partitionBy("seq")
         .parquet(s"$tmp/log.parquet")

@@ -264,7 +264,7 @@ object TextSim {
     * [[PersistedStore.ensure]]. */
   private[graft] def ensureEdgeStore(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    PersistedStore.ensure(edgeStoreDir(d)) { tmp =>
+    PersistedStore.ensure(s, edgeStoreDir(d)) { tmp =>
       minhashPairs(documents(s, d)).select(col("ia"), col("ib"))
         .write.mode("overwrite").parquet(s"$tmp/edges.parquet")
     }
@@ -309,7 +309,7 @@ object TextSim {
     * [[PersistedStore.ensure]]. */
   private[graft] def ensureSnapshotStore(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    PersistedStore.ensure(snapshotStoreDir(d)) { tmp =>
+    PersistedStore.ensure(s, snapshotStoreDir(d)) { tmp =>
       val index = documents(s, d).filter(col("doc_id") < SnapshotBoundary)
       sigTable(shingleRows(index, 3))
         .write.mode("overwrite").parquet(s"$tmp/sigs.parquet")

@@ -46,20 +46,17 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * STATE DURABILITY (r18): `incremental` and `snapshot` state lives in
   * a parquet commit store under [[stateRoot]] — per model a directory
-  * of numbered `commit_N` parquet dirs plus a `_LATEST` pointer file,
-  * each commit written to a temp sibling then renamed in, the pointer
-  * (re)written by atomic file rename LAST, so readers only ever see
-  * complete commits (the PersistedStore publish discipline; a crash
-  * mid-commit leaves an orphan build dir no pointer names). A fresh
+  * of numbered `commit_N` parquet dirs, each published whole by
+  * [[graft.ops.PersistedStore.publishDir]]; the newest `commit_N` is
+  * the state and a run commits N+1, then prunes older commits. A fresh
   * session therefore RESUMES the upsert/snapshot history exactly where
   * the last one left it, like dbt's warehouse-table state — first-run
-  * detection keys on the store, never on temp-view existence, so an
-  * unrelated same-name temp view can no longer be adopted as state
-  * (r17 ADVICE). On resume the persisted schema is validated against
-  * the model SELECT (names+types, order-insensitive) and a mismatch
-  * throws naming both — the refused alternative is dbt's
-  * `--full-refresh`, spelled [[reset]]. Single-writer per model, like
-  * dbt's one-process run; older commits are pruned after publish.
+  * detection keys on the store, never on temp-view existence (r17
+  * ADVICE). On resume the persisted schema is validated against the
+  * model SELECT (names+types, order-insensitive) and a mismatch throws
+  * naming both — the refused alternative is dbt's `--full-refresh`,
+  * spelled [[reset]]. Single-writer per model, like dbt's one-process
+  * run.
   *
   * SCHEMA TESTS (r18): dbt's built-in `tests:` battery — `unique`,
   * `not_null`, `accepted_values`, `relationships` — declared per model
@@ -249,72 +246,40 @@ object ModelGraph {
   private def stateDir(spark: SparkSession, name: String) =
     new java.io.File(stateRoot(spark), name)
 
-  /** The committed state's parquet path, if any commit was published. */
-  private def latestCommit(spark: SparkSession, name: String)
-      : Option[(Int, java.io.File)] = {
-    val dir = stateDir(spark, name)
-    val ptr = new java.io.File(dir, "_LATEST")
-    if (!ptr.exists()) None
-    else {
-      val n = new String(java.nio.file.Files.readAllBytes(ptr.toPath),
-        "UTF-8").trim.toInt
-      Some((n, new java.io.File(dir, s"commit_$n")))
-    }
-  }
+  private val Commit = "commit_(\\d+)".r
 
-  /** Publish `df` as the model's next commit: write parquet to a temp
-    * sibling, rename it to `commit_N`, then atomically re-point
-    * `_LATEST` (pointer LAST — readers never see a half-written
-    * commit). Prunes commits older than the new one after publish.
-    * Returns the committed parquet read back. */
+  /** The model's published commits: each `commit_N` dir with its N. */
+  private def commits(spark: SparkSession, name: String)
+      : Seq[(Int, java.io.File)] =
+    Option(stateDir(spark, name).listFiles()).getOrElse(Array.empty).toSeq
+      .flatMap(f => f.getName match {
+        case Commit(n) => Some(n.toInt -> f)
+        case _ => None
+      })
+
+  /** The committed state: the newest `commit_N`, if any was published. */
+  private def latestCommit(spark: SparkSession, name: String)
+      : Option[(Int, java.io.File)] = commits(spark, name).maxByOption(_._1)
+
+  /** Publish `df` as the model's next commit `commit_N` through
+    * [[graft.ops.PersistedStore.publishDir]], then prune the commits
+    * older than N. Returns the committed parquet read back. */
   private def commitState(spark: SparkSession, name: String,
       df: DataFrame): DataFrame = {
-    val dir = stateDir(spark, name)
-    dir.mkdirs()
     val n = latestCommit(spark, name).map(_._1).getOrElse(0) + 1
-    val tmp = new java.io.File(dir,
-      s"commit_$n.build.${java.util.UUID.randomUUID()}")
-    // a failed write leaves tmp behind, and the prune below never
-    // matches its name
-    try df.write.mode("overwrite").parquet(tmp.getAbsolutePath)
-    catch { case t: Throwable => discardBuild(spark, tmp); throw t }
-    val commit = new java.io.File(dir, s"commit_$n")
-    if (!tmp.renameTo(commit)) {
-      FileUtil.fullyDelete(tmp)
+    val commit = new java.io.File(stateDir(spark, name), s"commit_$n")
+    val won = graft.ops.PersistedStore.publishDir(spark, commit) { tmp =>
+      df.write.mode("overwrite").parquet(tmp)
+    }
+    if (!won)
       throw new IllegalStateException(
         s"model $name: commit_$n already exists — the state store is " +
           "single-writer per model (concurrent runs are a config error)")
-    }
-    val ptrTmp = new java.io.File(dir,
-      s"_LATEST.tmp.${java.util.UUID.randomUUID()}")
-    java.nio.file.Files.write(ptrTmp.toPath, n.toString.getBytes("UTF-8"))
-    if (!ptrTmp.renameTo(new java.io.File(dir, "_LATEST")))
-      throw new IllegalStateException(
-        s"model $name: could not publish the _LATEST pointer")
-    // prune superseded commits (best-effort; the pointer already moved)
-    Option(dir.listFiles()).getOrElse(Array.empty).foreach { f =>
-      val m = "commit_(\\d+)$".r.findFirstMatchIn(f.getName)
-      if (m.exists(_.group(1).toInt < n)) FileUtil.fullyDelete(f)
+    // prune superseded commits (best-effort; commit_N already rules)
+    commits(spark, name).foreach { case (k, f) =>
+      if (k < n) FileUtil.fullyDelete(f)
     }
     spark.read.parquet(commit.getAbsolutePath)
-  }
-
-  /** Deletes a failed write's build dir for good. The job fails on its
-    * first failed task while its other tasks may still be running, and a
-    * straggler that writes after the delete re-creates the dir; so delete
-    * until no task is running and the dir has stayed gone for 0.5 s,
-    * giving up after 10 s (a busy sibling model can keep tasks running). */
-  private def discardBuild(spark: SparkSession, tmp: java.io.File): Unit = {
-    def running = spark.sparkContext.statusTracker.getExecutorInfos
-      .map(_.numRunningTasks).sum
-    val deadline = System.nanoTime() + 10000000000L
-    var quiet = 0
-    while (quiet < 5 && System.nanoTime() < deadline) {
-      if (tmp.exists()) { FileUtil.fullyDelete(tmp); quiet = 0 }
-      else if (running == 0) quiet += 1
-      Thread.sleep(100)
-    }
-    FileUtil.fullyDelete(tmp): Unit
   }
 
   /** dbt's `--full-refresh`: drop a stateful model's durable state (and

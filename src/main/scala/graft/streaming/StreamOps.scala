@@ -280,17 +280,11 @@ object StreamOps {
     * posture Spark documents for any table compacted while scanned.
     *
     * Marker format (r15): markers carry their batchId as content and are
-    * published by write-to-hidden-temp + atomic move (same directory,
-    * same filesystem — `Files.move(…, ATOMIC_MOVE)`, which THROWS on
-    * failure instead of silently losing the publish, so a marker that
-    * cannot land fails the micro-batch and Structured Streaming replays
-    * it; r15's boolean-discarding `renameTo` could leave a fully-written
-    * epoch invisible forever). Markers are NON-EMPTY, because the reader
-    * lists the ledger through Spark's file source and file scans skip
-    * zero-length files (probed: a binaryFile load of touch'd markers
-    * returns no rows). The hidden `.N.tmp` staging name is doubly safe:
-    * the move is atomic AND the file source ignores dot-files, so a
-    * crash mid-publish leaves nothing a reader can ever see.
+    * published by [[graft.ops.PersistedStore.publishFile]], whose failed
+    * move fails the micro-batch so Structured Streaming replays it.
+    * Markers are NON-EMPTY, because the reader lists the ledger through
+    * Spark's file source and file scans skip zero-length files (probed:
+    * a binaryFile load of touch'd markers returns no rows).
     *
     * LEDGER COMPACTION (r16): once the marker-file count reaches
     * `compactEvery`, the sink rolls every committed epoch — tail marker
@@ -321,11 +315,7 @@ object StreamOps {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("epoch").parquet(s"$path/data")
       ledger.mkdirs()
-      val tmp = new java.io.File(ledger, s".$batchId.tmp")
-      java.nio.file.Files.write(tmp.toPath,
-        batchId.toString.getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp.toPath, marker.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
+      graft.ops.PersistedStore.publishFile(marker, batchId.toString)
       compactLedger(ledger, compactEvery)
     }
   }
@@ -356,26 +346,29 @@ object StreamOps {
           .filter(_.nonEmpty).map(_.toLong).toSet
     }
 
+  /** Publish `epochs` as the ledger's manifest `manifest-<top>`, then
+    * delete the `tail` markers it holds and every superseded manifest —
+    * the crash-window order of [[exactlyOnceSink]]'s scaladoc: failures
+    * after the publish only leave redundant files the reader dedups or
+    * supersedes, never lost commits. */
+  private def rewriteManifest(ledger: java.io.File, top: Long,
+      epochs: Seq[Long], tail: Seq[java.io.File]): Unit = {
+    val prev = manifestFiles(ledger)
+    val out = new java.io.File(ledger, s"manifest-$top")
+    graft.ops.PersistedStore.publishFile(out,
+      epochs.mkString("", "\n", "\n"))
+    tail.foreach(_.delete())
+    prev.filter(_.getName != out.getName).foreach(_.delete())
+  }
+
   /** Roll tail markers + previous manifest into one new manifest once
-    * the tail reaches `compactEvery` files — see [[exactlyOnceSink]]'s
-    * scaladoc for the crash-window argument. */
+    * the tail reaches `compactEvery` files. */
   private def compactLedger(ledger: java.io.File, compactEvery: Int): Unit = {
     val tail = tailMarkers(ledger)
     if (tail.size >= compactEvery.max(1)) {
       val epochs = (manifestEpochs(ledger) ++
         tail.map(_.getName.toLong)).toSeq.sorted
-      val prev = manifestFiles(ledger)
-      val out = new java.io.File(ledger, s"manifest-${epochs.max}")
-      val tmp = new java.io.File(ledger, ".manifest.tmp")
-      java.nio.file.Files.write(tmp.toPath,
-        epochs.mkString("", "\n", "\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp.toPath, out.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-      // windows (2) and (3): failures here only leave redundant files
-      // the reader dedups/supersedes — never lost commits
-      tail.foreach(_.delete())
-      prev.filter(_.getName != out.getName).foreach(_.delete())
+      rewriteManifest(ledger, epochs.max, epochs, tail)
     }
   }
 
@@ -414,19 +407,9 @@ object StreamOps {
     if (drop.nonEmpty) {
       // step 1: ledger forgets first (manifest name stays monotonic —
       // max over ALL epochs including dropped — so newest-name-wins
-      // reader selection is preserved; REPLACE_EXISTING covers the
-      // same-name case)
-      val prev = manifestFiles(ledger)
-      val out = new java.io.File(ledger, s"manifest-${all.max}")
-      val tmp = new java.io.File(ledger, ".manifest.tmp")
-      java.nio.file.Files.write(tmp.toPath,
-        keep.mkString("", "\n", "\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp.toPath, out.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-      tailMarkers(ledger).filter(f => drop.contains(f.getName.toLong))
-        .foreach(_.delete())
-      prev.filter(_.getName != out.getName).foreach(_.delete())
+      // reader selection is preserved)
+      rewriteManifest(ledger, all.max, keep,
+        tailMarkers(ledger).filter(f => drop.contains(f.getName.toLong)))
     }
     // step 2: the now-unobservable data — swept BY HORIZON over the
     // partition directories, not by the drop list, so orphans from a

@@ -217,7 +217,7 @@ class ModelGraphSpec extends SparkSpec {
   }
 
   test("a first-run stateful model whose SELECT fails at write time " +
-      "leaves no build dir and no _LATEST; the corrected model then " +
+      "leaves no build dir and no commit; the corrected model then " +
       "commits commit_1") {
     Seq("incremental", "snapshot").foreach { mat =>
       val name = uniq(s"mg_wfail_$mat")
@@ -235,16 +235,42 @@ class ModelGraphSpec extends SparkSpec {
         }
         assert(!entries.exists(_.contains(".build.")),
           s"$mat: failed write left its build dir: $entries")
-        assert(!entries.contains("_LATEST"), s"$mat: $entries")
+        assert(!entries.exists(_.startsWith("commit_")), s"$mat: $entries")
         ModelGraph.run(spark, Seq(bad.copy(
           sql = "SELECT id AS k, 'x' AS v FROM range(3)")),
           snapshotAt = lit(10))
         assert(new java.io.File(dir, "commit_1").isDirectory,
           s"$mat: $entries")
-        assert(java.nio.file.Files.readString(
-          new java.io.File(dir, "_LATEST").toPath).trim === "1")
       } finally ModelGraph.reset(spark, name)
     }
+  }
+
+  test("a run resumes from the newest commit_N: a crash right after " +
+      "a commit's rename, before the prune, does not wedge the model") {
+    val name = uniq("mg_wedge")
+    val dir = new java.io.File(ModelGraph.stateRoot(spark), name)
+    ModelGraph.reset(spark, name)
+    try {
+      Seq((1L, 1.0), (2L, 2.0))
+        .toDF("k", "v").createOrReplaceTempView("mg_wedge_src")
+      val inc = Model(name, "SELECT k, v FROM mg_wedge_src",
+        materialized = "incremental", uniqueKey = Seq("k"))
+      ModelGraph.run(spark, Seq(inc))
+      // the crash state: commit_2 renamed in, commit_1 still there
+      val c1 = new java.io.File(dir, "commit_1").toPath
+      val c2 = new java.io.File(dir, "commit_2").toPath
+      val walk = java.nio.file.Files.walk(c1)
+      try walk.forEach(p =>
+        java.nio.file.Files.copy(p, c2.resolve(c1.relativize(p))): Unit)
+      finally walk.close()
+      Seq((2L, 20.0), (3L, 3.0))
+        .toDF("k", "v").createOrReplaceTempView("mg_wedge_src")
+      val out = ModelGraph.run(spark, Seq(inc))(name)
+        .orderBy("k").as[(Long, Double)].collect().toSeq
+      assert(out === Seq((1L, 1.0), (2L, 20.0), (3L, 3.0)))
+      assert(dir.list().toSeq.filter(_.startsWith("commit_")) ===
+        Seq("commit_3"))
+    } finally ModelGraph.reset(spark, name)
   }
 
   test("schema tests: dbt's unique / not_null / accepted_values / " +

@@ -15,9 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * near-dup family ([[graft.ops.TextSim]], Graph) and the ts_* queries
   * ([[graft.ops.Relational]]) define each relation they share once
   * per engine. Every reused intermediate frame goes through one of the
-  * three reuse helpers in ops/package.scala. Board-wide, a clone ratchet
-  * caps the 6-line windows that repeat anywhere in src/main/scala, and
-  * every oracle text two keys share is one instance.
+  * three reuse helpers in ops/package.scala, and every durable store
+  * publishes through [[graft.ops.PersistedStore]]. Board-wide, a clone
+  * ratchet caps the 6-line windows that repeat anywhere in
+  * src/main/scala, and every oracle text two keys share is one instance.
   * Copies drift apart (session confs did), so this spec fails when one
   * comes back, and when a script or run doc names a main
   * that no longer exists.
@@ -285,11 +286,12 @@ class OneCopySpec extends AnyFunSuite {
     ".persist(" -> "persist calls (use reuse)",
     "StorageLevel" -> "StorageLevel references (use reuse)")
 
-  /** One line per raw reuse call kind found outside [[ReuseHome]] on a
+  /** One line per needle of `needles` found outside `home` on a
     * non-comment line of `srcs`, with its count and `path:line` sites. */
-  private def rawReuseCalls(srcs: Seq[(String, String)]): Seq[String] =
-    rawReuse.flatMap { case (needle, what) =>
-      val sites = srcs.filter(_._1 != ReuseHome).flatMap { case (p, text) =>
+  private def rawCalls(home: String, needles: Seq[(String, String)])(
+      srcs: Seq[(String, String)]): Seq[String] =
+    needles.flatMap { case (needle, what) =>
+      val sites = srcs.filter(_._1 != home).flatMap { case (p, text) =>
         text.split("\n", -1).toSeq.zipWithIndex.collect {
           case (l, i) if !isComment(l.trim) && l.contains(needle) =>
             s"$p:${i + 1}"
@@ -298,6 +300,9 @@ class OneCopySpec extends AnyFunSuite {
       if (sites.isEmpty) None
       else Some(s"${sites.size} $what: ${sites.mkString(", ")}")
     }
+
+  private def rawReuseCalls(srcs: Seq[(String, String)]): Seq[String] =
+    rawCalls(ReuseHome, rawReuse)(srcs)
 
   test("src/main/scala sets every frame's reuse policy through cut, " +
       "materialize or reuse: no raw localCheckpoint, persist or " +
@@ -329,6 +334,45 @@ class OneCopySpec extends AnyFunSuite {
       "1 localCheckpoint calls (use cut or materialize): Graph.scala:2",
       "1 persist calls (use reuse): Graph.scala:3",
       "1 StorageLevel references (use reuse): Graph.scala:3"))
+  }
+
+  /** The one file allowed to rename or move a file: it holds
+    * `publishDir` and `publishFile`, the publish protocol of the
+    * engine's durable stores. */
+  private val PublishHome = "src/main/scala/graft/ops/PersistedStore.scala"
+
+  /** Calls that publish a file or directory by hand. */
+  private val rawPublish = Seq(
+    "renameTo(" -> "renameTo calls (use PersistedStore.publishDir)",
+    "Files.move(" -> "Files.move calls (use PersistedStore.publishFile)",
+    "ATOMIC_MOVE" ->
+      "ATOMIC_MOVE references (use PersistedStore.publishFile)")
+
+  private def rawPublishCalls(srcs: Seq[(String, String)]): Seq[String] =
+    rawCalls(PublishHome, rawPublish)(srcs)
+
+  test("src/main/scala publishes every durable store through " +
+      "PersistedStore: no raw renameTo, Files.move or ATOMIC_MOVE " +
+      "outside ops/PersistedStore.scala") {
+    val found = rawPublishCalls(mainSources.map { case (p, text) =>
+      p.toString -> text })
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the raw-publish scan has teeth: a raw renameTo is flagged, the " +
+      "same text in a comment or in the protocol's home is not") {
+    val home = PublishHome -> "    if (!tmp.renameTo(dir)) throw e\n"
+    val commented = "ModelGraph.scala" ->
+      """    // was: if (!tmp.renameTo(dir)) throw e
+        |    * a Files.move(tmp, out, ATOMIC_MOVE) publish
+        |""".stripMargin
+    assert(rawPublishCalls(Seq(home, commented)).isEmpty)
+    val raw = "ModelGraph.scala" ->
+      """    val ok = publishDir(spark, dir)(build)
+        |    if (!tmp.renameTo(dir)) throw e
+        |""".stripMargin
+    assert(rawPublishCalls(Seq(home, raw)) === Seq(
+      "1 renameTo calls (use PersistedStore.publishDir): ModelGraph.scala:2"))
   }
 
   /** Each window of [[CloneWindow]] scanned lines that starts more than

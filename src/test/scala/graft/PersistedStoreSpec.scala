@@ -1,14 +1,13 @@
 package graft.ops
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** The shared commit protocol behind the three persisted derived stores
-  * (edge list, snapshot index, CDC changelog): versioned contract keys
-  * and the atomic temp-dir publish. Pure filesystem — no SparkSession;
-  * the build functions here write plain files, which is all the protocol
-  * sees (the real stores hand it parquet writers).
+/** The publish protocol behind the persisted derived stores (edge
+  * list, snapshot index, CDC changelog): versioned contract keys and the
+  * atomic temp-dir publish. Most build functions here write plain
+  * files, which is all the protocol sees (the real stores hand it
+  * parquet writers); the session only serves a failed build's discard,
+  * and one case fails a real parquet write inside a task.
   */
-class PersistedStoreSpec extends AnyFunSuite {
+class PersistedStoreSpec extends graft.SparkSpec {
 
   private def freshName() = s"spec${java.util.UUID.randomUUID().toString.take(8)}"
 
@@ -69,7 +68,7 @@ class PersistedStoreSpec extends AnyFunSuite {
     val slowEntered = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
     val t = new Thread(() => {
-      PersistedStore.ensure(slow) { tmp =>
+      PersistedStore.ensure(spark, slow) { tmp =>
         slowEntered.countDown()
         assert(release.await(30, java.util.concurrent.TimeUnit.SECONDS))
         write(tmp, "payload", "s")
@@ -82,7 +81,9 @@ class PersistedStoreSpec extends AnyFunSuite {
       // unrelated store must build immediately (the r14 object-wide
       // lock serialized exactly this sequence)
       val t0 = System.nanoTime()
-      PersistedStore.ensure(fast) { tmp => write(tmp, "payload", "f") }
+      PersistedStore.ensure(spark, fast) { tmp =>
+        write(tmp, "payload", "f")
+      }
       val waitedMs = (System.nanoTime() - t0) / 1e6
       assert(waitedMs < 5000,
         s"unrelated ensure waited ${waitedMs}ms behind a foreign build")
@@ -98,7 +99,7 @@ class PersistedStoreSpec extends AnyFunSuite {
       "dir appears with _DONE inside, and a second call never rebuilds") {
     val dir = PersistedStore.dir(freshName(), Seq("a", 1))
     var builds = 0
-    val got = PersistedStore.ensure(dir) { tmp =>
+    val got = PersistedStore.ensure(spark, dir) { tmp =>
       builds += 1
       assert(tmp !== dir, "build must not write the final path directly")
       assert(!new java.io.File(dir).exists(),
@@ -108,7 +109,7 @@ class PersistedStoreSpec extends AnyFunSuite {
     assert(got === dir && builds === 1)
     assert(new java.io.File(dir, "_DONE").exists())
     assert(read(dir, "payload") === "v")
-    PersistedStore.ensure(dir) { _ => builds += 1 }
+    PersistedStore.ensure(spark, dir) { _ => builds += 1 }
     assert(builds === 1, "second ensure must be a no-op")
   }
 
@@ -116,7 +117,7 @@ class PersistedStoreSpec extends AnyFunSuite {
       "builds cleanly") {
     val dir = PersistedStore.dir(freshName(), Seq("b", 2))
     intercept[RuntimeException] {
-      PersistedStore.ensure(dir) { tmp =>
+      PersistedStore.ensure(spark, dir) { tmp =>
         write(tmp, "torn", "x")
         throw new RuntimeException("simulated crash mid-build")
       }
@@ -124,7 +125,7 @@ class PersistedStoreSpec extends AnyFunSuite {
     assert(!new java.io.File(dir).exists(),
       "a torn build must never be visible at the store path")
     assert(!new java.io.File(dir, "_DONE").exists())
-    PersistedStore.ensure(dir) { tmp => write(tmp, "payload", "ok") }
+    PersistedStore.ensure(spark, dir) { tmp => write(tmp, "payload", "ok") }
     assert(read(dir, "payload") === "ok")
   }
 
@@ -134,7 +135,7 @@ class PersistedStoreSpec extends AnyFunSuite {
     val parent = new java.io.File(dir).getParentFile
     def tempDirs() = Option(parent.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith(s"${new java.io.File(dir).getName}.build."))
-    PersistedStore.ensure(dir) { tmp =>
+    PersistedStore.ensure(spark, dir) { tmp =>
       write(tmp, "payload", "LOSER")
       // simulate another process publishing first, mid-way through our
       // build: the final dir (with its marker) appears before our rename
@@ -144,5 +145,29 @@ class PersistedStoreSpec extends AnyFunSuite {
     assert(read(dir, "payload") === "WINNER",
       "the loser's rename must not clobber the published store")
     assert(tempDirs().isEmpty, "the loser's temp build dir must be removed")
+  }
+
+  test("a build whose Spark write fails inside a task leaves no build " +
+      "sibling behind, and the next ensure publishes") {
+    val dir = PersistedStore.dir(freshName(), Seq("d", 4))
+    val store = new java.io.File(dir)
+    def builds() = Option(store.getParentFile.list()).getOrElse(Array.empty)
+      .filter(_.startsWith(s"${store.getName}.build.")).toSeq
+    // range() runs in tasks, so the raise_error fires inside the
+    // parquet write, after the write has created its output dir
+    intercept[Exception] {
+      PersistedStore.ensure(spark, dir) { tmp =>
+        spark.sql("SELECT id AS k, CASE WHEN id = 2 THEN " +
+          "raise_error('bad row') ELSE 'x' END AS v FROM range(3)")
+          .write.parquet(tmp)
+      }
+    }
+    assert(builds().isEmpty, s"failed build left its sibling: ${builds()}")
+    assert(!store.exists())
+    PersistedStore.ensure(spark, dir) { tmp =>
+      spark.range(3).write.parquet(tmp)
+    }
+    assert(new java.io.File(store, "_DONE").exists())
+    assert(spark.read.parquet(dir).count() === 3)
   }
 }
